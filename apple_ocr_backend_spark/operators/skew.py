@@ -28,7 +28,12 @@ def explode_salted(docs: DataFrame,
                    cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     """docs(doc_id, spans) -> span rows with spans-size-aware salt.
 
-    Output: ``doc_id, salt, span_pos, kind, text, media_ref, offset``.
+    Output: ``doc_id, salt, span_pos, kind, text, media_ref, offset`` — one
+    row per span, plus ONE row for each doc whose ``spans`` is empty or
+    null: salt 0, every other column null.  That placeholder carries the
+    doc through the kernel exchange, so the partial merge
+    (``plans.pipeline.reassemble_partials``) sees every doc; no kernel
+    takes it (its ``kind`` matches no branch).
     """
     n_salts = F.greatest(
         F.lit(1),
@@ -36,10 +41,11 @@ def explode_salted(docs: DataFrame,
     rows = (docs
             .withColumn("n_salts", n_salts)
             .select("doc_id", "n_salts",
-                    F.posexplode("spans").alias("span_pos", "span"))
+                    F.posexplode_outer("spans").alias("span_pos", "span"))
             .select(
                 "doc_id",
-                F.pmod("span_pos", "n_salts").cast("int").alias("salt"),
+                F.coalesce(F.pmod("span_pos", "n_salts"), F.lit(0))
+                 .cast("int").alias("salt"),
                 F.col("span_pos").cast("int").alias("span_pos"),
                 F.col("span.kind").alias("kind"),
                 F.col("span.text").alias("text"),
@@ -62,7 +68,17 @@ def repartition_salted(rows: DataFrame, num_partitions: int | None = None) -> Da
     half the cores idle in the tail wave (kernel stage 25.6 s; 32 explicit
     partitions = 4 waves: 18.8 s, BENCH.md round-5 wave-balance study).
     Pinning an explicit count disables AQE coalescing for exactly this one
-    exchange; byte-cost exchanges elsewhere keep the advisory behavior."""
+    exchange; byte-cost exchanges elsewhere keep the advisory behavior.
+
+    Every kernel task also pays a fixed cost whatever its size: pyspark's
+    worker calls ``importlib.invalidate_caches()`` per task, which on
+    CPython 3.11 re-reads the 3.5 MB ``pyspark.zip`` directory once per
+    cached zip importer.  On a 4-vCPU host that is about 0.3 s per task:
+    a no-op ``mapInArrow`` over 100k rows took 0.45 s at 4 partitions and
+    4.9-5.5 s at 64.  So a caller that splits one input into several jobs
+    divides the task budget among them: ``plans.checkpoint.run_resumable``
+    gives each of its ``n_buckets`` jobs ``max(defaultParallelism,
+    ceil(4 x defaultParallelism / n_buckets))`` partitions."""
     if not num_partitions:
         num_partitions = 4 * rows.sparkSession.sparkContext.defaultParallelism
     return rows.repartition(num_partitions, "doc_id", "salt")

@@ -20,6 +20,7 @@ commit carries
 
 from __future__ import annotations
 
+import math
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -41,12 +42,19 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     """Extract ``docs`` into the icelite table at ``table_dir``, one commit
     per doc bucket; skips buckets already committed (resume).
 
-    The default mode is **fused** — the scaling path (BENCH.md: ~0.96 N→4N
-    efficiency vs staged's serialized per-pass barriers), with per-bucket
-    commit granularity and per-partition lineage on the extract output.
+    The default mode is **fused** — the scaling path (staged pays
+    serialized per-pass barriers), with per-bucket commit granularity and
+    per-partition lineage on the extract output.
     ``mode="staged"`` additionally records per-OCR-pass lineage rows
     (semantic-fidelity path: the reference's progressive stages as
     anti-joins) at the cost of per-pass barrier jobs.
+
+    Each bucket's kernel exchange gets ``max(defaultParallelism,
+    ceil(4 x defaultParallelism / n_buckets))`` partitions: the whole run
+    spends the kernel-task budget of one unbucketed job (4 waves,
+    ``operators.skew.repartition_salted``), with at least one task per
+    core per bucket, instead of ``n_buckets`` times that budget — every
+    task pays a fixed Python-worker cost whatever its size.
 
     ``fail_after`` (tests only): raise after committing that many buckets,
     simulating a kill between stage commits (forces serial execution).
@@ -65,6 +73,8 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     docs_b = docs_b.persist()
     skipped = [b for b in range(n_buckets) if b in done]
     todo = [b for b in range(n_buckets) if b not in done]
+    cores = spark.sparkContext.defaultParallelism
+    num_partitions = max(cores, math.ceil(4 * cores / n_buckets))
     processed: list[int] = []
 
     def work(b: int) -> None:
@@ -101,7 +111,7 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
             return a1
 
         extracted = extract_docs(
-            sub, cfg, mode=mode,
+            sub, cfg, mode=mode, num_partitions=num_partitions,
             on_stage=on_stage if mode == "staged" else None
         ).persist()  # lineage collect + table append = ONE execution
         # per-partition lineage + per-kind metrics in ONE pass over the output

@@ -4,11 +4,16 @@ Two topologies (SURVEY.md §3.2/§3.3 re-expression):
 
 **fused** (flagship, the throughput path — BENCH.md):
 
-    docs ──explode_salted──> span rows ──repartition(doc_id, salt)
-         ──ONE mapInPandas (text/html/pdf/ocr kernels dispatched per Arrow
-           batch; per-(doc,salt) sorted partial span arrays emitted)
+    docs ──explode_salted──> span rows (+1 placeholder row per span-less
+         doc) ──repartition(doc_id, salt)
+         ──ONE mapInArrow (text/html/pdf/ocr kernels dispatched per Arrow
+           batch; one sorted partial span array per input (doc,salt)
+           group, empty when nothing survives)
          ──groupBy(doc_id): flatten + array_sort (one compact payload
-           shuffle) ──broadcast spine join──> extracted docs
+           shuffle) ──> extracted docs
+
+    One ``documents`` scan and two exchanges: every doc reaches the merge
+    through its own (possibly empty) partials.
 
 **staged** (semantic-fidelity path — the reference's progressive early-stop
 as data flow, powering per-pass checkpoint lineage):
@@ -22,7 +27,8 @@ as data flow, powering per-pass checkpoint lineage):
                            ocr_adapter_improved.py:1432-1456);
                            A1 ranking + A2 merge as JVM window functions
     unionByName ── two-phase reassembly (partial arrays per (doc_id,salt),
-    flatten+array_sort per doc) ──> extracted docs
+    flatten+array_sort per doc; span-less docs via a doc-id spine join)
+    ──> extracted docs
 
 Everything relational (A1, A2, early-stop sets, ordering, reassembly) runs
 JVM-side; Python only touches Arrow batches inside the extraction kernels —
@@ -108,8 +114,9 @@ def _ocr_pass_kernel(cfg_dict: dict):
 
 
 def _mono_kernel(cfg_dict: dict, image_branch=None):
-    """Fused mode: ONE mapInPandas pass over all span rows, dispatching to the
-    four kernels inside the batch (exactly the oracle's per-batch shape).
+    """Fused mode: ONE pass over all span rows (run per Arrow batch by
+    ``_mono_partial_kernel``), dispatching to the four kernels inside the
+    batch (exactly the oracle's per-batch shape).
 
     One UDF stage instead of a 4-branch union: measured on this box, three
     concurrent UDF stages + a JVM branch union ran at ~0.5 scaling efficiency
@@ -211,6 +218,8 @@ def _mono_kernel_pixels(cfg_dict: dict):
 PARTIAL_SCHEMA = ("doc_id string, partial array<struct<offset:int,"
                   "span_pos:int,out_rank:int,kind:string,text:string,"
                   "media_ref:string>>")
+_PARTIAL_FIELDS = ["offset", "span_pos", "out_rank", "kind", "text",
+                   "media_ref"]
 
 
 def _mono_partial_kernel(cfg_dict: dict, mono_factory=None):
@@ -224,6 +233,11 @@ def _mono_partial_kernel(cfg_dict: dict, mono_factory=None):
     (offset, span_pos, out_rank) is unique per doc (span_pos is the array
     position, out_rank dense within a span), so the pandas sort and the JVM
     array_sort agree with no tie-break ambiguity.
+
+    Every input (doc_id, salt) group gets a partial, EMPTY when no span of
+    it survives extraction — including the span-less placeholder row
+    ``explode_salted`` emits (null ``kind``, so no kernel takes it).
+    So the partial merge sees every input doc.
 
     Streaming per Arrow batch (round-2 verdict #1): each input batch is
     kerneled, group-sorted, and emitted as its own RecordBatch — the kernel
@@ -244,38 +258,41 @@ def _mono_partial_kernel(cfg_dict: dict, mono_factory=None):
     """
     import numpy as np
     mono = (mono_factory or _mono_kernel)(cfg_dict)
+    key = ["doc_id", "salt"]
+    empty = pd.DataFrame(columns=key + _PARTIAL_FIELDS)
 
     def fn(batches):
         import pyarrow as pa
         for batch in batches:
-            for d in mono(iter([batch.to_pandas()])):
-                if d.empty:
-                    continue
-                d = d.sort_values(
-                    ["doc_id", "salt", "offset", "span_pos", "out_rank"],
-                    kind="stable", ignore_index=True)
-                doc = d["doc_id"].to_numpy()
-                salt = d["salt"].to_numpy()
-                n = len(d)
-                is_start = np.empty(n, dtype=bool)
-                is_start[0] = True
-                is_start[1:] = (doc[1:] != doc[:-1]) | (salt[1:] != salt[:-1])
-                starts = np.flatnonzero(is_start)
-                offsets = np.append(starts, n).astype(np.int32)
-                struct = pa.StructArray.from_arrays(
-                    [pa.array(d["offset"].to_numpy(dtype=np.int32)),
-                     pa.array(d["span_pos"].to_numpy(dtype=np.int32)),
-                     pa.array(d["out_rank"].to_numpy(dtype=np.int32)),
-                     pa.array(d["kind"], type=pa.string()),
-                     pa.array(d["text"], type=pa.string()),
-                     pa.array(d["media_ref"], type=pa.string())],
-                    names=["offset", "span_pos", "out_rank", "kind", "text",
-                           "media_ref"])
-                partial = pa.ListArray.from_arrays(
-                    pa.array(offsets, pa.int32()), struct)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(doc[starts], type=pa.string()), partial],
-                    names=["doc_id", "partial"])
+            if batch.num_rows == 0:
+                continue
+            # a span-less placeholder row turns span_pos/offset into floats
+            # for its batch; the kernels only carry them through
+            b = batch.to_pandas()
+            groups = (b[key].drop_duplicates()
+                      .sort_values(key, ignore_index=True))
+            d = next(mono(iter([b])), empty)
+            d = d.sort_values(key + ["offset", "span_pos", "out_rank"],
+                              kind="stable", ignore_index=True)
+            # d is sorted like `groups`, so each row's group index ascends
+            # and the per-group counts are the list offsets
+            gi = pd.MultiIndex.from_frame(groups).get_indexer(
+                pd.MultiIndex.from_frame(d[key]))
+            offsets = np.concatenate(
+                [[0], np.cumsum(np.bincount(gi, minlength=len(groups)))])
+            struct = pa.StructArray.from_arrays(
+                [pa.array(d["offset"].to_numpy(dtype=np.int32)),
+                 pa.array(d["span_pos"].to_numpy(dtype=np.int32)),
+                 pa.array(d["out_rank"].to_numpy(dtype=np.int32)),
+                 pa.array(d["kind"], type=pa.string()),
+                 pa.array(d["text"], type=pa.string()),
+                 pa.array(d["media_ref"], type=pa.string())],
+                names=_PARTIAL_FIELDS)
+            partial = pa.ListArray.from_arrays(
+                pa.array(offsets, pa.int32()), struct)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(groups["doc_id"], type=pa.string()), partial],
+                names=["doc_id", "partial"])
     return fn
 
 
@@ -421,11 +438,13 @@ def ocr_branch_staged(rows: DataFrame, cfg: ExtractConfig,
 # --------------------------------------------------------------------------- #
 
 def reassemble(extracted_rows: DataFrame, doc_spine: DataFrame) -> DataFrame:
-    """Two-phase ordered reassembly (skew-safe, SURVEY.md §7 hard part (a)).
+    """Two-phase ordered reassembly for staged mode (skew-safe, SURVEY.md §7
+    hard part (a)).
 
     Phase 1 aggregates per (doc_id, salt) into sorted partial arrays; phase 2
-    flattens+sorts per doc and assigns the dense ``order``.  Docs with no
-    output get an empty spans array (spine join).
+    is ``reassemble_partials``.  The branch outputs hold only surviving
+    spans, so docs with no output get an empty spans array from a doc-id
+    spine join.
     """
     key = F.struct(
         F.col("offset").alias("offset"),
@@ -437,50 +456,29 @@ def reassemble(extracted_rows: DataFrame, doc_spine: DataFrame) -> DataFrame:
     partial = (extracted_rows
                .groupBy("doc_id", "salt")
                .agg(F.sort_array(F.collect_list(key)).alias("partial")))
-    assembled = (partial
-                 .groupBy("doc_id")
-                 .agg(F.array_sort(F.flatten(F.collect_list("partial")))
-                      .alias("ordered"))
-                 .select(
-                     "doc_id",
-                     F.transform(
-                         "ordered",
-                         lambda s, i: F.struct(
-                             s["kind"].alias("kind"),
-                             s["text"].alias("text"),
-                             s["media_ref"].alias("media_ref"),
-                             i.cast("int").alias("order"))).alias("spans")))
     empty = F.array().cast(
         "array<struct<kind:string,text:string,media_ref:string,order:int>>")
     return (doc_spine.select("doc_id").distinct()
-            .join(assembled, "doc_id", "left")
+            .join(reassemble_partials(partial), "doc_id", "left")
             .select("doc_id", F.coalesce("spans", empty).alias("spans")))
 
 
 def extract_rows(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
-                 mode: str = "staged", num_partitions: int | None = None,
+                 num_partitions: int | None = None,
                  on_stage=None) -> DataFrame:
-    """docs -> flat extracted rows (pre-assembly).
+    """Staged mode: docs -> flat extracted rows (pre-assembly).
 
     The salted span rows are cached ONCE (lazy persist) before the branch
     plans fork: without this, every branch (and the reassembly spine)
     re-plans its own scan+explode+shuffle subtree — `.explain` showed 10
-    parquet scans / 14 exchanges / 0 reused for one fused query.  One shared
+    parquet scans / 14 exchanges / 0 reused for one query.  One shared
     in-memory relation, four cheap filtered reads, all inside one job.  On a
     cluster the durable analog is a stage commit (plans.checkpoint).
     """
     rows = repartition_salted(explode_salted(docs, cfg), num_partitions)
-    if mode == "fused":
-        # single consumer -> no materialization needed; one shuffle feeds the
-        # one-pass kernel directly
-        return rows.select("doc_id", "salt", "span_pos", "offset", "kind",
-                           "media_ref", "text").mapInPandas(
-            _mono_kernel(cfg.as_dict()), schema=ROW_SCHEMA)
-    # staged mode forks 4 branch plans off `rows` — persist so every branch
-    # reads one shared InMemoryRelation (without this, every branch re-plans
-    # its own scan+explode+shuffle subtree: `.explain` showed 10 parquet
-    # scans / 14 exchanges / 0 reused); lazy persist keeps the whole staged
-    # topology one job instead of an eager materialization barrier
+    # the 4 branch plans fork off `rows` — persist so every branch reads one
+    # shared InMemoryRelation; lazy persist keeps the whole staged topology
+    # one job instead of an eager materialization barrier
     rows = rows.persist()
     branches = [
         text_branch(rows),
@@ -494,28 +492,27 @@ def extract_rows(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     return out
 
 
-def reassemble_partials(partials: DataFrame, doc_spine: DataFrame) -> DataFrame:
+def reassemble_partials(partials: DataFrame) -> DataFrame:
     """Merge kernel-emitted partial arrays: one groupBy(doc_id) over compact
     arrays (most docs have exactly one partial), flatten + array_sort by the
-    (offset, span_pos, out_rank) prefix, assign dense order."""
-    assembled = (partials
-                 .groupBy("doc_id")
-                 .agg(F.array_sort(F.flatten(F.collect_list("partial")))
-                      .alias("ordered"))
-                 .select(
-                     "doc_id",
-                     F.transform(
-                         "ordered",
-                         lambda s, i: F.struct(
-                             s["kind"].alias("kind"),
-                             s["text"].alias("text"),
-                             s["media_ref"].alias("media_ref"),
-                             i.cast("int").alias("order"))).alias("spans")))
-    empty = F.array().cast(
-        "array<struct<kind:string,text:string,media_ref:string,order:int>>")
-    return (doc_spine.select("doc_id").distinct()
-            .join(assembled, "doc_id", "left")
-            .select("doc_id", F.coalesce("spans", empty).alias("spans")))
+    (offset, span_pos, out_rank) prefix, assign dense order.
+
+    The kernel emits a partial for every input (doc_id, salt) group, empty
+    when nothing survives, so every input doc is already a group here and a
+    span-less doc comes out once with ``spans = []``."""
+    return (partials
+            .groupBy("doc_id")
+            .agg(F.array_sort(F.flatten(F.collect_list("partial")))
+                 .alias("ordered"))
+            .select(
+                "doc_id",
+                F.transform(
+                    "ordered",
+                    lambda s, i: F.struct(
+                        s["kind"].alias("kind"),
+                        s["text"].alias("text"),
+                        s["media_ref"].alias("media_ref"),
+                        i.cast("int").alias("order"))).alias("spans")))
 
 
 def extract_docs(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
@@ -534,9 +531,9 @@ def extract_docs(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
             "doc_id", "salt", "span_pos", "offset", "kind", "media_ref",
             "text").mapInArrow(_mono_partial_kernel(cfg.as_dict()),
                                schema=PARTIAL_SCHEMA)
-        return reassemble_partials(partials, docs)
+        return reassemble_partials(partials)
     return reassemble(
-        extract_rows(docs, cfg, mode, num_partitions, on_stage), docs)
+        extract_rows(docs, cfg, num_partitions, on_stage), docs)
 
 
 def extract_docs_pixels(docs: DataFrame, media: DataFrame,
@@ -548,12 +545,16 @@ def extract_docs_pixels(docs: DataFrame, media: DataFrame,
     serial off the decoded PNG instead of a token stream — the north rule's
     "OCR-text span recovery for image media_refs" as an actual pixel path.
 
-    Topology = fused + one payload equi-join:
+    Topology = fused + one payload left equi-join:
 
-        docs ──explode_salted──┬─ image rows ──join(media, media_ref)──┐
-                               └─ other rows (payload null) ──────────┤
-        unionByName ──repartition(doc_id, salt)──ONE mapInArrow
-        (text/html/pdf kernels + pixel OCR) ──reassemble_partials
+        docs ──explode_salted──join(media, media_ref)  (non-image and
+        placeholder rows: null payload) ──repartition(doc_id, salt)
+        ──ONE mapInArrow (text/html/pdf kernels + pixel OCR)
+        ──reassemble_partials
+
+    One ``documents`` scan: a span-less doc rides its ``explode_salted``
+    placeholder row through the join and the kernel, and comes out once
+    with ``spans = []``.
 
     Scale: the join is 1 image row per doc against a same-cardinality store
     — an equi-join that AQE plans as shuffle-hash; at 100 TB co-bucket both
@@ -588,4 +589,4 @@ def extract_docs_pixels(docs: DataFrame, media: DataFrame,
     partials = salted.mapInArrow(
         _mono_partial_kernel(cfg.as_dict(), mono_factory=_mono_kernel_pixels),
         schema=PARTIAL_SCHEMA)
-    return reassemble_partials(partials, docs)
+    return reassemble_partials(partials)

@@ -44,7 +44,8 @@ def audit(spark, name: str, df, patterns: tuple[str, ...] = ()) -> str:
         print(f"   pushedFilters: {nonempty}")
     if widths:
         print(f"   readSchema cols: {widths}")
-    print(f"   broadcastJoins={s.count('BroadcastHashJoin')} "
+    scans = len(re.findall(r"^\(\d+\) Scan ", s, re.M))
+    print(f"   scans={scans} broadcastJoins={s.count('BroadcastHashJoin')} "
           f"sortMergeJoins={s.count('SortMergeJoin')} "
           f"exchanges={s.count('Exchange')} "
           f"(reused {s.count('ReusedExchange')})")

@@ -14,7 +14,9 @@ The job is resumable: each doc bucket commits one icelite snapshot with
 per-partition lineage + metrics; re-running with the same --output skips
 committed buckets (plans/checkpoint.py).  On a real cluster, point --output
 at shared storage and raise --buckets so each commit unit fits executor
-memory at the target scale.
+memory at the target scale.  Raising --buckets does not multiply kernel
+tasks: the run shares one job's kernel-task budget across its buckets, with
+at least one task per core per bucket (``run_resumable``).
 """
 
 from __future__ import annotations

@@ -95,7 +95,28 @@ def test_missing_media_drops_span_not_doc(spark, small_docs, media):
     kinds = {r.kind: r["count"] for r in rows}
     assert "ocr_text" not in kinds
     assert kinds.get("main_text", 0) > 0
-    assert out.count() == 40  # spine join keeps every doc
+    assert out.count() == 40  # every doc comes out, spans or not
+
+
+def test_span_less_docs_come_out_empty(spark, small_docs, media):
+    """Docs with nothing to extract (empty or null spans, every span
+    filtered out, image refs with no payload) come out once each with
+    ``spans = []``, matching the oracle, and leave the other docs'
+    output unchanged."""
+    from apple_ocr_backend_spark.sources.corpus import extract_docs_oracle
+    from tests.test_pipeline_parity import (_spans_map, _to_spark_docs,
+                                            assert_edge_docs_empty,
+                                            edge_docs)
+    edge = edge_docs()
+    mixed = small_docs.unionByName(_to_spark_docs(spark, edge))
+    got = extract_docs_pixels(mixed, media).toPandas()
+    assert len(got) == 40 + len(edge)
+    assert_edge_docs_empty(got)
+    have = _spans_map(got)
+    assert {k: have[k] for k in edge["doc_id"]} \
+        == _spans_map(extract_docs_oracle(edge))
+    base = _spans_map(extract_docs_pixels(small_docs, media).toPandas())
+    assert {k: v for k, v in have.items() if k in base} == base
 
 
 def test_shuffle_join_regime_matches_broadcast_plan(spark, small_docs, media):

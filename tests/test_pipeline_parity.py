@@ -30,15 +30,51 @@ def _spans_map(df: pd.DataFrame) -> dict[str, list[tuple]]:
 
 
 def _to_spark_docs(spark, docs: pd.DataFrame):
-    rows = [(d, [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                 for s in spans])
+    rows = [(d, None if spans is None else
+             [(s["kind"], s["text"], s["media_ref"], s["offset"])
+              for s in spans])
             for d, spans in zip(docs["doc_id"], docs["spans"])]
     return spark.createDataFrame(rows, schema=docs_spark_schema())
 
 
+def _span(kind, text, offset, media_ref=None):
+    return {"kind": kind, "text": text, "media_ref": media_ref,
+            "offset": offset}
+
+
+def edge_docs() -> pd.DataFrame:
+    """Docs with nothing to extract: empty and null ``spans``, and docs
+    whose every span filters out (boilerplate-only html, whitespace-only
+    text, an OCR token stream with no valid serial).  Each must come out
+    exactly once with ``spans = []``."""
+    return pd.DataFrame({
+        "doc_id": ["edge_empty", "edge_null", "edge_html", "edge_ws",
+                   "edge_ocr", "edge_all"],
+        "spans": [
+            [], None,
+            [_span("html", "<nav><a>home</a></nav><footer>(c)</footer>", 0)],
+            [_span("text", "  \n\t ", 0)],
+            [_span("image", "XX GARBAGE@0.01|??@0.2", 0, "media://none/1")],
+            [_span("text", " ", 0),
+             _span("html", "<header>h</header><aside>a</aside>", 3),
+             _span("image", "", 7, "media://none/2"),
+             _span("pdf", "", 9)]]})
+
+
+EDGE_IDS = set(edge_docs()["doc_id"])
+
+
+def assert_edge_docs_empty(got: pd.DataFrame) -> None:
+    """Every edge doc appears exactly once, with an empty spans array."""
+    edge = got[got["doc_id"].isin(EDGE_IDS)]
+    assert sorted(edge["doc_id"]) == sorted(EDGE_IDS)
+    assert all(len(s) == 0 for s in edge["spans"])
+
+
 @pytest.fixture(scope="module")
 def corpus():
-    docs = make_corpus(150, seed=42)
+    docs = pd.concat([make_corpus(150, seed=42), edge_docs()],
+                     ignore_index=True)
     golden = extract_docs_oracle(docs, CFG)
     return docs, golden
 
@@ -48,6 +84,7 @@ def test_spark_matches_oracle(spark, corpus, mode):
     docs, golden = corpus
     sdf = _to_spark_docs(spark, docs)
     got = extract_docs(sdf, CFG, mode=mode).toPandas()
+    assert_edge_docs_empty(got)
     want = _spans_map(golden)
     have = _spans_map(got)
     assert set(have) == set(want)
@@ -60,11 +97,29 @@ def test_spark_matches_oracle(spark, corpus, mode):
 
 def test_partitioning_invariance(spark, corpus):
     """Same result under a different partition count (shuffle-order
-    independence — the determinism the quantized A1 score buys)."""
+    independence — the determinism the quantized A1 score buys), down to a
+    single kernel partition in fused mode."""
     docs, golden = corpus
     sdf = _to_spark_docs(spark, docs).repartition(13)
-    got = extract_docs(sdf, CFG, mode="staged", num_partitions=7).toPandas()
-    assert _spans_map(got) == _spans_map(golden)
+    for mode, num_partitions in (("staged", 7), ("fused", 1), ("fused", 7)):
+        got = extract_docs(sdf, CFG, mode=mode,
+                           num_partitions=num_partitions).toPandas()
+        assert _spans_map(got) == _spans_map(golden), (mode, num_partitions)
+
+
+def test_fused_plan_scans_documents_once(spark, corpus, tmp_path):
+    """The fused plan over a parquet docs table reads it once and has no
+    doc-id spine: no broadcast exchange, no broadcast join."""
+    import re
+    path = str(tmp_path / "docs.parquet")
+    _to_spark_docs(spark, corpus[0]).write.parquet(path)
+    out = extract_docs(spark.read.parquet(path), CFG, mode="fused")
+    plan = out._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("formatted"))
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1
+    assert "BroadcastExchange" not in plan
+    assert "BroadcastHashJoin" not in plan
 
 
 def test_fused_kernel_streams_per_batch(spark, corpus):
@@ -104,6 +159,32 @@ def test_fused_kernel_streams_per_batch(spark, corpus):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert _spans_map(got) == _spans_map(golden)
+
+
+def test_kernel_emits_every_group():
+    """The fused kernel emits one partial per input (doc_id, salt) group —
+    empty for a span-less placeholder row (null span_pos) and for a group
+    whose every span filters out — so the merge needs no doc-id spine."""
+    import pyarrow as pa
+    from apple_ocr_backend_spark.plans.pipeline import _mono_partial_kernel
+
+    schema = pa.schema([("doc_id", pa.string()), ("salt", pa.int32()),
+                        ("span_pos", pa.int32()), ("offset", pa.int32()),
+                        ("kind", pa.string()), ("media_ref", pa.string()),
+                        ("text", pa.string())])
+    batch = pa.RecordBatch.from_pylist([
+        {"doc_id": "c", "salt": 1, "span_pos": 1, "offset": 4,
+         "kind": "text", "media_ref": None, "text": " kept  text "},
+        {"doc_id": "a", "salt": 0, "span_pos": None, "offset": None,
+         "kind": None, "media_ref": None, "text": None},
+        {"doc_id": "b", "salt": 0, "span_pos": 0, "offset": 0,
+         "kind": "text", "media_ref": None, "text": " \t "}], schema=schema)
+    kernel = _mono_partial_kernel(CFG.as_dict())
+    out = [b.to_pydict() for b in kernel(iter([batch, batch.slice(1, 2)]))]
+    assert out[0]["doc_id"] == ["a", "b", "c"]
+    assert out[0]["partial"][:2] == [[], []]
+    assert [s["text"] for s in out[0]["partial"][2]] == ["kept text"]
+    assert out[1] == {"doc_id": ["a", "b"], "partial": [[], []]}
 
 
 def test_giant_doc_salting(spark):

@@ -4,18 +4,21 @@ result equals the single-run golden exactly."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from apple_ocr_backend_spark.config import ExtractConfig
 from apple_ocr_backend_spark.sources.corpus import make_corpus, extract_docs_oracle
 from apple_ocr_backend_spark.plans.checkpoint import run_resumable
-from tests.test_pipeline_parity import _to_spark_docs, _spans_map
+from tests.test_pipeline_parity import (_to_spark_docs, _spans_map,
+                                        assert_edge_docs_empty, edge_docs)
 
 CFG = ExtractConfig()
 
 
 def test_kill_and_resume(spark, tmp_path):
-    docs = make_corpus(60, seed=5)
+    docs = pd.concat([make_corpus(60, seed=5), edge_docs()],
+                     ignore_index=True)
     golden = _spans_map(extract_docs_oracle(docs, CFG))
     sdf = _to_spark_docs(spark, docs)
     tdir = str(tmp_path / "extracted")
@@ -35,6 +38,7 @@ def test_kill_and_resume(spark, tmp_path):
     # committed result equals the golden, no dupes / no loss
     out = res["table"].read(spark).toPandas()
     assert len(out) == len(docs)
+    assert_edge_docs_empty(out)
     assert _spans_map(out) == golden
 
     # run 3: everything committed -> full skip, zero reprocessing
@@ -51,6 +55,33 @@ def test_kill_and_resume(spark, tmp_path):
         for row in s["lineage"]:
             assert {"run_id", "stage", "bucket", "partition_id", "doc_count",
                     "span_count", "bytes", "wall_ms"} <= set(row)
+
+
+def test_bucket_kernel_partitions(spark, tmp_path, monkeypatch):
+    """Each bucket job gets max(cores, ceil(4 x cores / n_buckets)) kernel
+    partitions: the run as a whole keeps one unbucketed job's 4-wave task
+    budget, and no bucket drops below one task per core."""
+    from apple_ocr_backend_spark.plans import checkpoint
+
+    class Captured(Exception):
+        pass
+
+    seen = []
+
+    def capture(*args, **kwargs):
+        seen.append(kwargs["num_partitions"])
+        raise Captured
+
+    monkeypatch.setattr(checkpoint, "extract_docs", capture)
+    sdf = _to_spark_docs(spark, make_corpus(8, seed=3))
+    cores = spark.sparkContext.defaultParallelism
+    want = {1: 4 * cores, 3: -(-4 * cores // 3), 4: cores, 8: cores}
+    for n_buckets in want:
+        with pytest.raises(Captured):
+            run_resumable(spark, sdf, str(tmp_path / f"t{n_buckets}"), CFG,
+                          n_buckets=n_buckets)
+    assert seen == list(want.values())
+    assert cores < want[3] < 4 * cores
 
 
 def test_staged_run_commits_per_pass_lineage(spark, tmp_path):
