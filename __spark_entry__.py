@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: batch main-content extraction over interleaved text+media
     docs built from /root/testdata/sf0.001 (html strip + pdf layout parse +
-    OCR serial recovery, staged early-stop, skew-aware salting)."""
+    OCR serial recovery with per-span early stop, skew-aware salting)."""
     from apple_ocr_backend_spark.plans.catalog import _q_extract_fused
     return _q_extract_fused(spark, "/root/testdata/sf0.001")
 

@@ -17,8 +17,9 @@ operators   extraction operators (HTML strip, PDF layout, OCR recovery),
             span assembly, skew-aware repartitioning, dedup, ANN search
 sources     deterministic corpus synthesizer, testdata loaders, snapshot-log
             table layer ("icelite") for checkpoint/resume
-plans       end-to-end pipeline composition (staged early-stop anti-joins,
-            checkpoint commits) and the query/oracle catalog
+plans       end-to-end pipeline composition (one extraction plan: a single
+            Arrow kernel pass with per-span OCR early stop; checkpoint
+            commits) and the query/oracle catalog
 streaming   Structured Streaming ingestion variant
 
 Nothing here is a port: the reference is a per-request FastAPI/OpenCV/EasyOCR

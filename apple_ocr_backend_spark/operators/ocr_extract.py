@@ -31,8 +31,9 @@ best candidate reaches ``early_stop_confidence`` (ocr_adapter_improved.py:
 (ocr_adapter_improved.py:1310-1343).
 
 The per-pass kernel (`pass_candidates`) emits the normalized key alongside
-each candidate so the Spark pipeline can run A1/A2/early-stop entirely
-JVM-side (groupBy / window / anti-join) — the pandas surface stays minimal.
+each candidate; `recover_ocr` runs A1/A2 and the per-span early stop over
+it inside the Spark pipeline's one extraction kernel (and in the pandas
+oracle), so both paths share the exact same code.
 """
 
 from __future__ import annotations
@@ -142,8 +143,9 @@ def recover_ocr(df: pd.DataFrame,
     Output columns: ``doc_id, span_pos, offset, out_rank, kind, text, media_ref``
     (kind='ocr_text', text=serial, ordered by final A2 rank).
 
-    Processes passes progressively with per-span early stop, exactly the
-    topology the Spark pipeline realizes with staged anti-joins.
+    Processes passes progressively with per-span early stop (reference P9):
+    pass k+1 runs only on spans no earlier pass resolved.  The Spark
+    pipeline calls this per Arrow batch inside its one extraction kernel.
     """
     if df.empty:
         return _empty_out()

@@ -1866,16 +1866,10 @@ def _flatten(extracted: DataFrame) -> DataFrame:
             .orderBy("doc_id", "ord"))
 
 
-def _q_extract_staged(spark, sf):
-    from .pipeline import extract_docs
-    docs = docs_from_documents(spark, sf)
-    return _flatten(extract_docs(docs, mode="staged"))
-
-
 def _q_extract_fused(spark, sf):
     from .pipeline import extract_docs
     docs = docs_from_documents(spark, sf)
-    return _flatten(extract_docs(docs, mode="fused"))
+    return _flatten(extract_docs(docs))
 
 
 def _extract_oracle() -> str:
@@ -1883,21 +1877,20 @@ def _extract_oracle() -> str:
     return extract_oracle_sql()
 
 
-_register("extract_pipeline_staged", _q_extract_staged, _extract_oracle())
 _register("extract_pipeline_fused", _q_extract_fused, _extract_oracle())
 
 
 def _q_extract_pixels(spark, sf):
-    """Fused extraction with the image branch on REAL pixels: image spans
-    join the binary media store on media_ref and the kernel OCRs the serial
-    off the decoded PNG plate (decode -> adaptive threshold -> glyph
+    """The extraction plan with the image branch on REAL pixels: image
+    spans join the binary media store on media_ref and the kernel OCRs the
+    serial off the decoded PNG plate (decode -> adaptive threshold -> glyph
     segmentation -> template match) instead of parsing a token stream —
     the north rule's "OCR-text span recovery for image media_refs"."""
-    from .pipeline import extract_docs_pixels
+    from .pipeline import extract_docs
     from ..sources.derived import media_from_documents
     docs = docs_from_documents(spark, sf)
     media = media_from_documents(spark, sf)
-    return _flatten(extract_docs_pixels(docs, media))
+    return _flatten(extract_docs(docs, media=media))
 
 
 def _pixels_oracle() -> str:
@@ -2769,11 +2762,11 @@ def _q_training_mix(spark, sf):
     quality_keep = ((TX.token_count(F.col("text")) >= 10)
                     & (TX.quality_score_q(F.col("text")) >= 300_000))
     rates = {"en": 0.9, "de": 0.5, "fr": 0.5, "es": 0.5}
-    staged = split_assign(
+    assigned = split_assign(
         sample_stratified(d.filter(quality_keep), rates,
                           stratum_col="lang", default_rate=0.1),
         train=0.9, val=0.05)
-    train = staged.filter(F.col("sampled") & (F.col("split") == "train"))
+    train = assigned.filter(F.col("sampled") & (F.col("split") == "train"))
     return (pack_sequences(train, budget_tokens=512, n_shards=8)
             .orderBy("shard", "bin"))
 
@@ -2799,7 +2792,7 @@ quality AS (
                + (length(regexp_replace(text,'[^A-Za-z]','','g'))
                   / GREATEST(length(text),1))*0.2) * 1000000) >= 300000
 ),
-staged AS (
+assigned AS (
   SELECT q.doc_id, len(q.tk) AS n_tok,
          substring(md5('rate' || CAST(q.doc_id AS VARCHAR)), 1, 8)
            < COALESCE(r.thresh, '{rate_to_hex(0.1)}') AS sampled,
@@ -2808,7 +2801,7 @@ staged AS (
   FROM quality q LEFT JOIN rates r ON q.lang = r.lang
 ),
 train AS (SELECT doc_id AS id, doc_id % 8 AS shard, n_tok
-          FROM staged WHERE sampled AND is_train),
+          FROM assigned WHERE sampled AND is_train),
 binned AS (
   SELECT id, shard, n_tok,
          CAST(FLOOR(COALESCE(SUM(n_tok) OVER (
@@ -2850,8 +2843,8 @@ _register("training_mix", _q_training_mix, _training_mix_sql())
 # training_mix, then the round-5 approx siblings, then every entry whose
 # CODE changed this round (an r04 green row doesn't cover changed code:
 # the map-only lang-ID rewrite, the decontaminate sub-n-gram fix, and the
-# quantized embedding-dedup kernels), then the flagship extraction pair
-# (never displaced).  With 74 entries and a 50-row cap the 24 displaced
+# quantized embedding-dedup kernels), then the flagship extraction entry
+# (never displaced).  With 73 entries and a 50-row cap the 23 displaced
 # are then all unchanged-since-r04 green entries.
 _FRONT = ["audio_decode_stats", "video_frame_stats", "video_ocr_tta",
           "image_rois", "image_rois_nms", "image_orientation",
@@ -2866,7 +2859,7 @@ _FRONT = ["audio_decode_stats", "video_frame_stats", "video_ocr_tta",
           "lang_id_multi", "decontaminate", "quality_perplexity",
           "dedup_spans", "dedup_spans_clean",
           "dedup_embedding", "dedup_embedding_fitted",
-          "extract_pipeline_fused", "extract_pipeline_staged"]
+          "extract_pipeline_fused"]
 
 
 def catalog() -> dict[str, dict]:

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
 from ..sources.icelite import Table
-from .pipeline import extract_docs
+from .pipeline import check_mode, extract_docs
 
 
 def bucket_of(doc_id_col, n_buckets: int):
@@ -42,12 +42,10 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     """Extract ``docs`` into the icelite table at ``table_dir``, one commit
     per doc bucket; skips buckets already committed (resume).
 
-    The default mode is **fused** — the scaling path (staged pays
-    serialized per-pass barriers), with per-bucket commit granularity and
-    per-partition lineage on the extract output.
-    ``mode="staged"`` additionally records per-OCR-pass lineage rows
-    (semantic-fidelity path: the reference's progressive stages as
-    anti-joins) at the cost of per-pass barrier jobs.
+    Each bucket runs the one extraction plan (``plans.pipeline.
+    extract_docs``) and commits per-partition lineage on its output.
+    ``mode`` accepts only ``"fused"`` and is kept for callers that still
+    pass it.
 
     Each bucket's kernel exchange gets ``max(defaultParallelism,
     ceil(4 x defaultParallelism / n_buckets))`` partitions: the whole run
@@ -67,6 +65,7 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     Returns {"processed": [bucket ids worked this run], "skipped": [...],
     "table": Table}.
     """
+    check_mode(mode)
     table = Table(table_dir)
     done = table.committed_units("bucket")
     docs_b = docs.withColumn("_bucket", bucket_of(F.col("doc_id"), n_buckets))
@@ -80,39 +79,8 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     def work(b: int) -> None:
         t0 = time.time()
         sub = docs_b.filter(F.col("_bucket") == b).drop("_bucket")
-
-        # staged mode: per-pass, per-partition lineage (north_rule: "every
-        # stage writes per-partition lineage + extraction metrics").  The
-        # per-pass A1 frames are persist()-ed by the staged plan, so these
-        # counts are cheap reads of cached blocks.
-        stage_rows: list[dict] = []
-
-        def on_stage(p: int, a1):
-            t_collect = time.time()
-            rows_ = (a1.groupBy(F.spark_partition_id().alias("partition_id"))
-                     .agg(F.count("*").alias("candidates"),
-                          F.countDistinct("doc_id").alias("docs_active"),
-                          F.countDistinct("doc_id", "span_pos")
-                          .alias("spans_active"),
-                          F.floor(F.avg("conf") * 1_000_000).cast("long")
-                          .alias("avg_conf_q"))
-                     .collect())
-            stage_rows.extend(
-                {"run_id": run_id, "stage": f"ocr_pass_{p}", "bucket": b,
-                 "partition_id": r["partition_id"],
-                 "doc_count": int(r["docs_active"]),
-                 "span_group_count": int(r["spans_active"]),
-                 "span_count": int(r["candidates"]),
-                 "bytes": 0, "avg_conf_q": int(r["avg_conf_q"] or 0),
-                 # times the lineage collect only — the pass itself runs
-                 # inside the bucket job, whose wall time the extract row has
-                 "collect_ms": (time.time() - t_collect) * 1000.0}
-                for r in rows_)
-            return a1
-
         extracted = extract_docs(
-            sub, cfg, mode=mode, num_partitions=num_partitions,
-            on_stage=on_stage if mode == "staged" else None
+            sub, cfg, num_partitions=num_partitions
         ).persist()  # lineage collect + table append = ONE execution
         # per-partition lineage + per-kind metrics in ONE pass over the output
         flat = extracted.select(
@@ -142,11 +110,9 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
             "span_count": sum(int(r["span_count"] or 0) for r in lineage_rows),
             "wall_ms": wall_ms,
         }
-        if stage_rows:
-            summary["n_pass_stages"] = len({r["stage"] for r in stage_rows})
         try:
             table.append(extracted, operation=f"extract/bucket={b}",
-                         summary=summary, lineage=lineage + stage_rows)
+                         summary=summary, lineage=lineage)
         finally:
             extracted.unpersist()
         processed.append(b)

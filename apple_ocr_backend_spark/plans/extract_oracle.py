@@ -3,8 +3,8 @@
 The driver-path corpus (`sources.derived.docs_from_documents`) is closed-form:
 every span of every document is a deterministic JVM expression over
 ``documents(doc_id, text)``.  That makes the end-to-end extraction result
-SQL-expressible, so the two flagship entries (`extract_pipeline_{staged,fused}`)
-get a real machine-checked oracle instead of a rows-only check:
+SQL-expressible, so the flagship entry (`extract_pipeline_fused`) gets a real
+machine-checked oracle instead of a rows-only check:
 
 * **html span** — the corpus wraps ``text`` in one ``<p>`` block inside
   boilerplate ``<nav>``/``<footer>`` zones; the kernel

@@ -1,178 +1,59 @@
-"""End-to-end extraction pipeline — idiomatic Spark composition.
-
-Two topologies (SURVEY.md §3.2/§3.3 re-expression):
-
-**fused** (flagship, the throughput path — BENCH.md):
+"""End-to-end extraction pipeline — one topology (SURVEY.md §3.2/§3.3
+re-expression):
 
     docs ──explode_salted──> span rows (+1 placeholder row per span-less
-         doc) ──repartition(doc_id, salt)
-         ──ONE mapInArrow (text/html/pdf/ocr kernels dispatched per Arrow
+         doc)
+         [──left join media(media_ref -> payload), when a media store is
+           given]
+         ──repartition(doc_id, salt)
+         ──ONE mapInArrow (text/html/pdf/image kernels dispatched per Arrow
            batch; one sorted partial span array per input (doc,salt)
            group, empty when nothing survives)
          ──groupBy(doc_id): flatten + array_sort (one compact payload
            shuffle) ──> extracted docs
 
-    One ``documents`` scan and two exchanges: every doc reaches the merge
-    through its own (possibly empty) partials.
+One ``documents`` scan: every doc reaches the merge through its own
+(possibly empty) partials.  The plan picks the image branch: with a media
+store the kernel OCRs the decoded PNG payload (``_pixel_ocr``); without
+one it resolves the span's token stream (``operators.ocr_extract.
+recover_ocr``), whose progressive passes stop per span once a pass's best
+candidate is confident enough (reference P9, early stop inside the kernel).
 
-**staged** (semantic-fidelity path — the reference's progressive early-stop
-as data flow, powering per-pass checkpoint lineage):
-
-    span rows ──┬─ text  : pure Catalyst (regexp_replace/trim/filter)
-                ├─ html  : mapInPandas(extract_html)
-                ├─ pdf   : mapInPandas(extract_pdf)
-                └─ image : progressive passes 1..K; pass k runs only on
-                           spans STILL UNRESOLVED after pass k-1
-                           (left-anti join on resolved ids,
-                           ocr_adapter_improved.py:1432-1456);
-                           A1 ranking + A2 merge as JVM window functions
-    unionByName ── two-phase reassembly (partial arrays per (doc_id,salt),
-    flatten+array_sort per doc; span-less docs via a doc-id spine join)
-    ──> extracted docs
-
-Everything relational (A1, A2, early-stop sets, ordering, reassembly) runs
-JVM-side; Python only touches Arrow batches inside the extraction kernels —
-no per-row Python anywhere (north_rule).
+Everything relational (salting, ordering, reassembly) runs JVM-side;
+Python only touches Arrow batches inside the kernel — no per-row Python
+anywhere (north_rule).
 
 The per-doc output is bit-identical to the pandas oracle
-(`sources.corpus.extract_docs_oracle`): the only floating-point values that
-cross a shuffle (A1 scores) are summed as 1e-9 integer micro-units, so no
-result depends on partitioning or addition order.
+(`sources.corpus.extract_docs_oracle`): every doc's spans are sorted by the
+unique integer key (offset, span_pos, out_rank), so no result depends on
+partitioning, Arrow batch size or shuffle order.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
-
-
-from pyspark.sql import DataFrame, functions as F, Window as W
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
 from ..operators.skew import explode_salted, repartition_salted
 
-ROW_SCHEMA = ("doc_id string, salt int, span_pos int, offset int, "
-              "out_rank int, kind string, text string, media_ref string")
-
-CAND_SCHEMA = ("doc_id string, salt int, span_pos int, offset int, "
-               "media_ref string, seq long, serial string, norm string, "
-               "conf double")
-
-
-# --------------------------------------------------------------------------- #
-# Arrow-batch kernel wrappers
-# --------------------------------------------------------------------------- #
-
-def _wrap_block_kernel(kernel, cfg_dict: dict):
-    """mapInPandas wrapper for the html/pdf kernels (span rows in,
-    extracted rows out, salt carried through)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..config import ExtractConfig
-        cfg = ExtractConfig(**cfg_dict)
-        for b in batches:
-            if b.empty:
-                continue
-            out = kernel(b[["doc_id", "span_pos", "offset", "text"]], cfg)
-            out = out.merge(
-                b[["doc_id", "span_pos", "salt"]].drop_duplicates(),
-                on=["doc_id", "span_pos"], how="left")
-            yield out[["doc_id", "salt", "span_pos", "offset", "out_rank",
-                       "kind", "text", "media_ref"]]
-    return fn
-
-
-def _ocr_pass_kernel(cfg_dict: dict):
-    """mapInPandas wrapper for one OCR pass: input rows carry ``pass_text``;
-    output = candidate rows with normalized keys (A1/A2 happen JVM-side)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..config import ExtractConfig
-        from ..operators.ocr_extract import parse_tokens, pass_candidates
-        cfg = ExtractConfig(**cfg_dict)
-        for b in batches:
-            if b.empty:
-                continue
-            b = b.reset_index(drop=True)
-            toks = parse_tokens(b["pass_text"])
-            cands = pass_candidates(toks, cfg)
-            if cands.empty:
-                continue
-            r = cands["row"].to_numpy()
-            out = pd.DataFrame({
-                "doc_id": b["doc_id"].to_numpy()[r],
-                "salt": b["salt"].to_numpy()[r],
-                "span_pos": b["span_pos"].to_numpy()[r],
-                "offset": b["offset"].to_numpy()[r],
-                "media_ref": b["media_ref"].to_numpy()[r],
-                "seq": cands["seq"].to_numpy(),
-                "serial": cands["serial"].to_numpy(),
-                "norm": cands["norm"].to_numpy(),
-                "conf": cands["conf"].to_numpy(),
-            })
-            yield out
-    return fn
-
-
-def _mono_kernel(cfg_dict: dict, image_branch=None):
-    """Fused mode: ONE pass over all span rows (run per Arrow batch by
-    ``_mono_partial_kernel``), dispatching to the four kernels inside the
-    batch (exactly the oracle's per-batch shape).
-
-    One UDF stage instead of a 4-branch union: measured on this box, three
-    concurrent UDF stages + a JVM branch union ran at ~0.5 scaling efficiency
-    8->32 cores while a single UDF stage ran at ~0.65+; one stage also means
-    one Arrow round-trip and one task wave per partition instead of three.
-
-    ``image_branch`` optionally overrides the image-kind kernel as
-    ``(kernel, extra_cols)`` — ``kernel(sub, cfg)`` over the image rows
-    with ``extra_cols`` appended to their input columns (the pixels
-    variant reads a joined PNG ``payload``); default is the token-stream
-    ``recover_ocr``.
-    """
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..config import ExtractConfig
-        from ..operators.assemble import extract_text_spans
-        from ..operators.html_extract import extract_html
-        from ..operators.pdf_extract import extract_pdf
-        from ..operators.ocr_extract import recover_ocr
-        cfg = ExtractConfig(**cfg_dict)
-        cols = ["doc_id", "span_pos", "offset", "media_ref", "text"]
-        out_cols = ["doc_id", "salt", "span_pos", "offset", "out_rank",
-                    "kind", "text", "media_ref"]
-        img_kernel, img_extra = image_branch or (recover_ocr, [])
-        for b in batches:
-            if b.empty:
-                continue
-            kind = b["kind"].to_numpy()
-            parts = []
-            for k, kernel, kc in (
-                    ("text", lambda s: extract_text_spans(s), cols),
-                    ("html", lambda s: extract_html(s, cfg), cols),
-                    ("pdf", lambda s: extract_pdf(s, cfg), cols),
-                    ("image", lambda s: img_kernel(s, cfg),
-                     cols + img_extra)):
-                sub = b.loc[kind == k, kc]
-                if len(sub):
-                    parts.append(kernel(sub))
-            if not parts:
-                continue
-            out = pd.concat(parts, ignore_index=True)
-            if out.empty:
-                continue
-            out = out.merge(
-                b[["doc_id", "span_pos", "salt"]].drop_duplicates(),
-                on=["doc_id", "span_pos"], how="left")
-            yield out[out_cols]
-    return fn
+PARTIAL_SCHEMA = ("doc_id string, partial array<struct<offset:int,"
+                  "span_pos:int,out_rank:int,kind:string,text:string,"
+                  "media_ref:string>>")
+_PARTIAL_FIELDS = ["offset", "span_pos", "out_rank", "kind", "text",
+                   "media_ref"]
+_SPAN_COLS = ["doc_id", "salt", "span_pos", "offset", "kind", "media_ref",
+              "text"]
 
 
 def _pixel_ocr(sub: pd.DataFrame, cfg) -> pd.DataFrame:
     """image rows carrying a PNG ``payload`` -> validated ocr_text rows.
 
-    Real OCR on real pixels (the pixels-variant image branch): decode PNG ->
-    adaptive-threshold binarize -> glyph segmentation -> nearest-template
-    Hamming match (``functions/glyph_ocr.py``), then the SAME extended
-    validation + confidence gate the token path applies
+    Real OCR on real pixels (the image branch when a media store is
+    joined): decode PNG -> adaptive-threshold binarize -> glyph
+    segmentation -> nearest-template Hamming match
+    (``functions/glyph_ocr.py``), then the SAME extended validation +
+    confidence gate the token path applies
     (``app/utils/validation.py:119-214``; min_confidence,
     ``ocr_adapter.py:253-254``).  One candidate per span (the recognizer is
     exact on this corpus), so A1/A2 collapse to out_rank 0."""
@@ -207,23 +88,17 @@ def _pixel_ocr(sub: pd.DataFrame, cfg) -> pd.DataFrame:
     })
 
 
-def _mono_kernel_pixels(cfg_dict: dict):
-    """Fused-mode mono kernel for the pixels variant: identical dispatch to
-    ``_mono_kernel`` except the image branch reads the joined PNG payload
-    instead of the token-stream text (which it provably ignores —
-    tests/test_extract_pixels.py corrupts it)."""
-    return _mono_kernel(cfg_dict, image_branch=(_pixel_ocr, ["payload"]))
+def _mono_partial_kernel(cfg_dict: dict):
+    """The extraction kernel (mapInArrow): ONE pass over all span rows,
+    dispatching each Arrow batch's rows to the four kind kernels (exactly
+    the oracle's per-batch shape), then phase-1 assembly in the same pass.
 
-
-PARTIAL_SCHEMA = ("doc_id string, partial array<struct<offset:int,"
-                  "span_pos:int,out_rank:int,kind:string,text:string,"
-                  "media_ref:string>>")
-_PARTIAL_FIELDS = ["offset", "span_pos", "out_rank", "kind", "text",
-                   "media_ref"]
-
-
-def _mono_partial_kernel(cfg_dict: dict, mono_factory=None):
-    """Fused mode, phase-1 assembly folded into the kernel (mapInArrow).
+    One UDF stage instead of a per-kind branch union: measured on this
+    box, three concurrent UDF stages + a JVM branch union ran at ~0.5
+    scaling efficiency 8->32 cores while a single UDF stage ran at ~0.65+;
+    one stage also means one Arrow round-trip per batch.  The image branch
+    is ``_pixel_ocr`` when the batch carries a joined ``payload`` column,
+    else the token-stream ``recover_ocr``.
 
     The input partitioning (doc_id, salt) already co-locates every row of a
     (doc, salt) group in one partition, so the kernel can emit sorted
@@ -257,12 +132,18 @@ def _mono_partial_kernel(cfg_dict: dict, mono_factory=None):
     the previous list-of-dicts construction as the one hot-path violation).
     """
     import numpy as np
-    mono = (mono_factory or _mono_kernel)(cfg_dict)
     key = ["doc_id", "salt"]
+    cols = ["doc_id", "span_pos", "offset", "media_ref", "text"]
     empty = pd.DataFrame(columns=key + _PARTIAL_FIELDS)
 
     def fn(batches):
         import pyarrow as pa
+        from ..config import ExtractConfig
+        from ..operators.assemble import extract_text_spans
+        from ..operators.html_extract import extract_html
+        from ..operators.pdf_extract import extract_pdf
+        from ..operators.ocr_extract import recover_ocr
+        cfg = ExtractConfig(**cfg_dict)
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -271,7 +152,25 @@ def _mono_partial_kernel(cfg_dict: dict, mono_factory=None):
             b = batch.to_pandas()
             groups = (b[key].drop_duplicates()
                       .sort_values(key, ignore_index=True))
-            d = next(mono(iter([b])), empty)
+            if "payload" in b.columns:
+                image, image_cols = _pixel_ocr, cols + ["payload"]
+            else:
+                image, image_cols = recover_ocr, cols
+            kind = b["kind"].to_numpy()
+            parts = []
+            for k, kernel, kc in (
+                    ("text", lambda s: extract_text_spans(s), cols),
+                    ("html", lambda s: extract_html(s, cfg), cols),
+                    ("pdf", lambda s: extract_pdf(s, cfg), cols),
+                    ("image", lambda s: image(s, cfg), image_cols)):
+                sub = b.loc[kind == k, kc]
+                if len(sub):
+                    parts.append(kernel(sub))
+            d = pd.concat(parts, ignore_index=True) if parts else empty
+            # the kernels drop ``salt``; an empty output may lack columns
+            d = empty if d.empty else d.merge(
+                b[["doc_id", "span_pos", "salt"]].drop_duplicates(),
+                on=["doc_id", "span_pos"], how="left")
             d = d.sort_values(key + ["offset", "span_pos", "out_rank"],
                               kind="stable", ignore_index=True)
             # d is sorted like `groups`, so each row's group index ascends
@@ -294,202 +193,6 @@ def _mono_partial_kernel(cfg_dict: dict, mono_factory=None):
                 [pa.array(groups["doc_id"], type=pa.string()), partial],
                 names=["doc_id", "partial"])
     return fn
-
-
-# --------------------------------------------------------------------------- #
-# Branch plans
-# --------------------------------------------------------------------------- #
-
-def text_branch(rows: DataFrame) -> DataFrame:
-    """kind='text' passthrough — pure Catalyst, no Python at all."""
-    t = F.trim(F.regexp_replace(F.coalesce(F.col("text"), F.lit("")),
-                                r"\s+", " "))
-    return (rows
-            .filter(F.col("kind") == "text")
-            .withColumn("text", t)
-            .filter(F.length("text") > 0)
-            .select("doc_id", "salt", "span_pos", "offset",
-                    F.lit(0).alias("out_rank"),
-                    F.lit("main_text").alias("kind"), "text",
-                    F.lit(None).cast("string").alias("media_ref")))
-
-
-def html_branch(rows: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    from ..operators.html_extract import extract_html
-    return (rows.filter(F.col("kind") == "html")
-            .select("doc_id", "salt", "span_pos", "offset", "text")
-            .mapInPandas(_wrap_block_kernel(extract_html, cfg.as_dict()),
-                         schema=ROW_SCHEMA))
-
-
-def pdf_branch(rows: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    from ..operators.pdf_extract import extract_pdf
-    return (rows.filter(F.col("kind") == "pdf")
-            .select("doc_id", "salt", "span_pos", "offset", "text")
-            .mapInPandas(_wrap_block_kernel(extract_pdf, cfg.as_dict()),
-                         schema=ROW_SCHEMA))
-
-
-def _a1_rank(cands: DataFrame) -> DataFrame:
-    """A1 JVM-side (ocr_adapter_improved.py:1458-1469): per (span, norm)
-    bucket sum quantized confidences, keep the arg-max variant (first
-    occurrence wins ties), rank buckets by (score desc, first_seq asc)."""
-    wnorm = W.partitionBy("doc_id", "span_pos", "norm")
-    wrank = W.partitionBy("doc_id", "span_pos").orderBy(
-        F.desc("score"), F.asc("first_seq"))
-    return (cands
-            .withColumn("iconf", F.bround(F.col("conf") * 1e9, 0).cast("long"))
-            .withColumn("score", F.sum("iconf").over(wnorm))
-            .withColumn("first_seq", F.min("seq").over(wnorm))
-            .withColumn("rn", F.row_number().over(
-                wnorm.orderBy(F.desc("conf"), F.asc("seq"))))
-            .filter(F.col("rn") == 1)
-            .withColumn("a1_rank", F.row_number().over(wrank) - 1)
-            .select("doc_id", "salt", "span_pos", "offset", "media_ref",
-                    "serial", "conf", "a1_rank"))
-
-
-def _a2_merge(all_passes: DataFrame) -> DataFrame:
-    """A2 JVM-side (ocr_adapter_improved.py:1310-1343): closed-form sequential
-    merge fold over occurrence order (pass_idx, a1_rank); cap 1.0; final rank
-    by (conf desc, first occurrence asc)."""
-    wspan = W.partitionBy("doc_id", "span_pos")
-    wser = W.partitionBy("doc_id", "span_pos", "serial")
-    d = (all_passes
-         .withColumn("seq2", F.row_number().over(
-             wspan.orderBy(F.asc("pass_idx"), F.asc("a1_rank"))))
-         .withColumn("n", F.count(F.lit(1)).over(wser))
-         .withColumn("j", F.row_number().over(wser.orderBy(F.asc("seq2"))))
-         .withColumn("contrib",
-                     F.col("conf") + F.lit(0.05) *
-                     F.when(F.col("j") == 1, F.col("n") - 1)
-                      .otherwise(F.col("n") - F.col("j") + 1))
-         .withColumn("merged", F.max("contrib").over(wser))
-         .withColumn("first_seq2", F.min("seq2").over(wser))
-         .filter(F.col("j") == 1)
-         .withColumn("conf2", F.least(F.lit(1.0), F.col("merged")))
-         .withColumn("out_rank", F.row_number().over(
-             wspan.orderBy(F.desc("conf2"), F.asc("first_seq2"))) - 1))
-    return d.select("doc_id", "salt", "span_pos", "offset",
-                    F.col("out_rank").cast("int").alias("out_rank"),
-                    F.lit("ocr_text").alias("kind"),
-                    F.col("serial").alias("text"), "media_ref")
-
-
-def ocr_branch_staged(rows: DataFrame, cfg: ExtractConfig,
-                      on_stage=None) -> DataFrame:
-    """Progressive OCR passes as staged anti-joins (the north-rule topology).
-
-    ``on_stage(pass_idx, a1_df)`` is an optional checkpoint hook — the
-    resumable pipeline (plans.checkpoint) records each pass's A1 output and
-    feeds committed results back instead of recomputing.
-    """
-    img = (rows.filter(F.col("kind") == "image")
-           .select("doc_id", "salt", "span_pos", "offset", "media_ref",
-                   F.split(F.coalesce(F.col("text"), F.lit("")), r"\|")
-                    .alias("passes"))
-           .withColumn("n_passes", F.least(F.size("passes"),
-                                           F.lit(cfg.max_passes))))
-    # Plan truncation between passes: each pass's A1 output (small: ranked
-    # candidates only) is lazily persisted, so pass p+1's analyzed plan
-    # swaps the pass-p subtree for an InMemoryRelation (without truncation
-    # Catalyst re-optimizes an exponentially deepening tree per
-    # pass, ~7x wall-clock on the bench).  Lazy persist() (vs the round-1
-    # eager localCheckpoint) is what fixed scaling: the eager variant ran
-    # one barrier job per pass, serializing the DAG (round-1 verdict: 0.34
-    # scaling efficiency 2->8, local[32] collapse); lazily cached subtrees
-    # keep the whole chain in ONE job while deduplicating shared subplans.
-    # On a cluster the durable equivalent is the icelite stage commit
-    # (plans.checkpoint).
-    img = img.persist()
-    unresolved = img
-    pass_outputs: list[DataFrame] = []
-    for p in range(cfg.max_passes):
-        stage_in = (unresolved
-                    .filter(F.col("n_passes") > p)
-                    .withColumn("pass_text",
-                                F.element_at("passes", p + 1)))
-        cands = (stage_in
-                 .select("doc_id", "salt", "span_pos", "offset", "media_ref",
-                         "pass_text")
-                 .mapInPandas(_ocr_pass_kernel(cfg.as_dict()),
-                              schema=CAND_SCHEMA))
-        a1 = (_a1_rank(cands).withColumn("pass_idx", F.lit(p))
-              .persist())
-        if on_stage is not None:
-            a1 = on_stage(p, a1)
-        pass_outputs.append(a1)
-        if p < cfg.max_passes - 1:
-            resolved = (a1.groupBy("doc_id", "span_pos")
-                        .agg(F.max("conf").alias("best"))
-                        .filter(F.col("best") >= cfg.early_stop_confidence)
-                        .select("doc_id", "span_pos"))
-            # early stop as data flow: only unresolved spans reach pass p+1
-            unresolved = unresolved.join(resolved, ["doc_id", "span_pos"],
-                                         "left_anti")
-    allp = pass_outputs[0]
-    for nxt in pass_outputs[1:]:
-        allp = allp.unionByName(nxt)
-    return _a2_merge(allp)
-
-
-# --------------------------------------------------------------------------- #
-# Assembly + entry point
-# --------------------------------------------------------------------------- #
-
-def reassemble(extracted_rows: DataFrame, doc_spine: DataFrame) -> DataFrame:
-    """Two-phase ordered reassembly for staged mode (skew-safe, SURVEY.md §7
-    hard part (a)).
-
-    Phase 1 aggregates per (doc_id, salt) into sorted partial arrays; phase 2
-    is ``reassemble_partials``.  The branch outputs hold only surviving
-    spans, so docs with no output get an empty spans array from a doc-id
-    spine join.
-    """
-    key = F.struct(
-        F.col("offset").alias("offset"),
-        F.col("span_pos").alias("span_pos"),
-        F.col("out_rank").alias("out_rank"),
-        F.col("kind").alias("kind"),
-        F.col("text").alias("text"),
-        F.col("media_ref").alias("media_ref"))
-    partial = (extracted_rows
-               .groupBy("doc_id", "salt")
-               .agg(F.sort_array(F.collect_list(key)).alias("partial")))
-    empty = F.array().cast(
-        "array<struct<kind:string,text:string,media_ref:string,order:int>>")
-    return (doc_spine.select("doc_id").distinct()
-            .join(reassemble_partials(partial), "doc_id", "left")
-            .select("doc_id", F.coalesce("spans", empty).alias("spans")))
-
-
-def extract_rows(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
-                 num_partitions: int | None = None,
-                 on_stage=None) -> DataFrame:
-    """Staged mode: docs -> flat extracted rows (pre-assembly).
-
-    The salted span rows are cached ONCE (lazy persist) before the branch
-    plans fork: without this, every branch (and the reassembly spine)
-    re-plans its own scan+explode+shuffle subtree — `.explain` showed 10
-    parquet scans / 14 exchanges / 0 reused for one query.  One shared
-    in-memory relation, four cheap filtered reads, all inside one job.  On a
-    cluster the durable analog is a stage commit (plans.checkpoint).
-    """
-    rows = repartition_salted(explode_salted(docs, cfg), num_partitions)
-    # the 4 branch plans fork off `rows` — persist so every branch reads one
-    # shared InMemoryRelation; lazy persist keeps the whole staged topology
-    # one job instead of an eager materialization barrier
-    rows = rows.persist()
-    branches = [
-        text_branch(rows),
-        html_branch(rows, cfg),
-        pdf_branch(rows, cfg),
-        ocr_branch_staged(rows, cfg, on_stage),
-    ]
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
 
 
 def reassemble_partials(partials: DataFrame) -> DataFrame:
@@ -515,78 +218,70 @@ def reassemble_partials(partials: DataFrame) -> DataFrame:
                         i.cast("int").alias("order"))).alias("spans")))
 
 
+def media_join_key() -> Column:
+    """Span-row key for the media-store payload join: the ``media_ref``,
+    or a per-row sentinel ``x-null:<doc_id>:<span_pos>`` where it is null.
+
+    Spark hash-partitions every NULL join key to the SAME reduce partition
+    (hash(null) = seed), so when the store is too big to broadcast and the
+    join becomes a shuffle join, the 2-of-3 non-image rows would all funnel
+    through ONE task — a width-skew AQE never splits (the ~2/3-of-corpus
+    partition is text, far under the 256 MB byte threshold; the cost here
+    is rows, not bytes — same failure shape as the wave-balance study,
+    PLANS.md round 5).  Sentinel keys are per-row unique, spread uniformly,
+    and can never equal a real ``media://...`` ref, so join semantics are
+    bit-identical.  At bench scale the store auto-broadcasts and the
+    sentinel is simply never hashed; the guard is for the
+    non-broadcastable regime."""
+    return F.coalesce(F.col("media_ref"), F.concat_ws(
+        ":", F.lit("x-null"), F.col("doc_id"), F.col("span_pos")))
+
+
+def check_mode(mode: str) -> None:
+    """``mode`` is a compatibility keyword: only ``"fused"``, the one
+    topology, is accepted."""
+    if mode != "fused":
+        raise ValueError(f"mode={mode!r}: the staged topology was removed; "
+                         "extraction has one plan, mode='fused'")
+
+
 def extract_docs(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
-                 mode: str = "staged",
+                 media: DataFrame | None = None,
                  num_partitions: int | None = None,
-                 on_stage=None) -> DataFrame:
+                 mode: str = "fused") -> DataFrame:
     """The flagship plan: docs(doc_id, spans[offset-ordered]) ->
     extracted(doc_id, spans[(kind,text,media_ref,order)]).
 
-    ``on_stage(pass_idx, a1_df)`` (staged mode): per-pass checkpoint hook —
-    ``plans.checkpoint`` uses it to record per-pass, per-partition lineage
-    into the snapshot commit."""
-    if mode == "fused":
-        rows = repartition_salted(explode_salted(docs, cfg), num_partitions)
-        partials = rows.select(
-            "doc_id", "salt", "span_pos", "offset", "kind", "media_ref",
-            "text").mapInArrow(_mono_partial_kernel(cfg.as_dict()),
-                               schema=PARTIAL_SCHEMA)
-        return reassemble_partials(partials)
-    return reassemble(
-        extract_rows(docs, cfg, num_partitions, on_stage), docs)
+    ``media`` (``media_ref, payload``; ``sources.derived.
+    media_from_documents``) switches the image branch to REAL pixels:
+    image spans resolve their ``media_ref`` against the binary media store
+    and the kernel reads the serial off the decoded PNG instead of the
+    token stream — the north rule's "OCR-text span recovery for image
+    media_refs" as an actual pixel path.  The store joins the span rows
+    before the salted repartition, so payloads ride that exchange exactly
+    once; non-image and span-less placeholder rows carry a null media_ref
+    and flow through the SAME left join with a null payload (one subtree,
+    no kind-split fork: a filter+union fork re-plans the scan+explode
+    upstream twice).  The join key is ``media_join_key()``.
 
+    Scale: the join is 1 image row per doc against a same-cardinality
+    store — an equi-join that AQE plans as shuffle-hash; at 100 TB
+    co-bucket both tables on media_ref (``sources/bucketed.py``) and it is
+    exchange-free on the store side.
 
-def extract_docs_pixels(docs: DataFrame, media: DataFrame,
-                        cfg: ExtractConfig = DEFAULT_CONFIG,
-                        num_partitions: int | None = None) -> DataFrame:
-    """Fused extraction with the image branch on REAL pixels: image spans
-    resolve their ``media_ref`` against the binary media store
-    (``sources.derived.media_from_documents``) and the kernel reads the
-    serial off the decoded PNG instead of a token stream — the north rule's
-    "OCR-text span recovery for image media_refs" as an actual pixel path.
-
-    Topology = fused + one payload left equi-join:
-
-        docs ──explode_salted──join(media, media_ref)  (non-image and
-        placeholder rows: null payload) ──repartition(doc_id, salt)
-        ──ONE mapInArrow (text/html/pdf kernels + pixel OCR)
-        ──reassemble_partials
-
-    One ``documents`` scan: a span-less doc rides its ``explode_salted``
-    placeholder row through the join and the kernel, and comes out once
-    with ``spans = []``.
-
-    Scale: the join is 1 image row per doc against a same-cardinality store
-    — an equi-join that AQE plans as shuffle-hash; at 100 TB co-bucket both
-    tables on media_ref (``sources/bucketed.py``) and it is exchange-free on
-    the store side.  Payloads ride the (doc_id, salt) repartition exactly
-    once; non-image rows carry a null media_ref, which an equi-join never
-    matches, so they flow through the SAME left join with a null payload —
-    one subtree, no kind-split fork (a filter+union fork re-plans the
-    scan+explode upstream twice, doubling its cost).
-
-    Null-key spread: Spark hash-partitions every NULL join key to the SAME
-    reduce partition (hash(null) = seed), so when the store is too big to
-    broadcast and the join becomes a shuffle join, the 2-of-3 non-image
-    rows would all funnel through ONE task — a width-skew AQE never splits
-    (the ~2/3-of-corpus partition is text, far under the 256 MB byte
-    threshold; the cost here is rows, not bytes — same failure shape as
-    the wave-balance study, PLANS.md round 5).  The join key is therefore
-    ``coalesce(media_ref, 'x-null:'||doc_id||':'||span_pos)``: sentinel
-    keys are per-row unique, spread uniformly, and can never equal a real
-    ``media://...`` ref, so join semantics are bit-identical.  At bench
-    scale the store auto-broadcasts and the sentinel is simply never
-    hashed; the guard is for the non-broadcastable regime."""
+    ``num_partitions`` sizes the kernel exchange (``operators.skew.
+    repartition_salted``).  ``mode`` accepts only ``"fused"``, the one
+    topology; it is kept for callers that still pass it."""
+    check_mode(mode)
     rows = explode_salted(docs, cfg)
-    jkey = F.coalesce(F.col("media_ref"), F.concat_ws(
-        ":", F.lit("x-null"), F.col("doc_id"), F.col("span_pos")))
-    joined = (rows.withColumn("__mkey", jkey)
-              .join(media.withColumnRenamed("media_ref", "__mkey"),
-                    "__mkey", "left")
-              .select("doc_id", "salt", "span_pos", "offset", "kind",
-                      "media_ref", "text", "payload"))
-    salted = repartition_salted(joined, num_partitions)
-    partials = salted.mapInArrow(
-        _mono_partial_kernel(cfg.as_dict(), mono_factory=_mono_kernel_pixels),
-        schema=PARTIAL_SCHEMA)
+    cols = _SPAN_COLS
+    if media is not None:
+        cols = _SPAN_COLS + ["payload"]
+        rows = (rows.withColumn("__mkey", media_join_key())
+                .join(media.withColumnRenamed("media_ref", "__mkey"),
+                      "__mkey", "left")
+                .select(*cols))
+    partials = (repartition_salted(rows, num_partitions).select(*cols)
+                .mapInArrow(_mono_partial_kernel(cfg.as_dict()),
+                            schema=PARTIAL_SCHEMA))
     return reassemble_partials(partials)

@@ -123,7 +123,8 @@ def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``generate_image.py:247-316``): a map-only job at any scale.  In
     production this table IS the object store manifest; co-bucket it with
     the docs table on media_ref so the payload join in
-    ``plans.pipeline.extract_docs_pixels`` is exchange-free."""
+    ``plans.pipeline.extract_docs(..., media=...)`` is exchange-free on
+    the store side."""
     import pandas as pd
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")

@@ -9,7 +9,7 @@ top: new doc files landing in a directory are extracted incrementally with
 exactly-once semantics enforced by epoch-keyed snapshot commits (a replayed
 micro-batch is a no-op).
 
-Scale notes: ``foreachBatch`` runs the full fused pipeline per micro-batch,
+Scale notes: ``foreachBatch`` runs the extraction pipeline per micro-batch,
 so all batch-side skew handling (salting, two-phase reassembly) applies
 unchanged; ``maxFilesPerTrigger`` bounds micro-batch size on a cluster.
 """
@@ -48,7 +48,7 @@ def _checkpoint_run_id(checkpoint_dir: str) -> str:
 
 
 def commit_epoch(table: Table, batch: DataFrame, epoch_id: int,
-                 cfg: ExtractConfig = DEFAULT_CONFIG, mode: str = "fused",
+                 cfg: ExtractConfig = DEFAULT_CONFIG,
                  run_id: str = "run") -> bool:
     """Idempotently extract one micro-batch into ``table``.
 
@@ -67,7 +67,7 @@ def commit_epoch(table: Table, batch: DataFrame, epoch_id: int,
     key = f"{run_id}/{epoch_id}"
     if key in table.committed_units("epoch_key"):
         return False
-    extracted = extract_docs(batch, cfg, mode=mode).persist()
+    extracted = extract_docs(batch, cfg).persist()
     try:
         n = extracted.count()
         table.append(extracted, operation=f"stream/epoch={key}",
@@ -80,7 +80,7 @@ def commit_epoch(table: Table, batch: DataFrame, epoch_id: int,
 
 def stream_extract(spark: SparkSession, input_dir: str, table_dir: str,
                    checkpoint_dir: str, cfg: ExtractConfig = DEFAULT_CONFIG,
-                   mode: str = "fused", max_files_per_trigger: int | None = None,
+                   max_files_per_trigger: int | None = None,
                    run_id: str | None = None):
     """Incrementally extract docs parquet files from ``input_dir`` into the
     icelite table at ``table_dir``.  Returns the started query (AvailableNow:
@@ -104,7 +104,7 @@ def stream_extract(spark: SparkSession, input_dir: str, table_dir: str,
     docs = reader.parquet(input_dir)
 
     def commit_batch(batch: DataFrame, epoch_id: int) -> None:
-        commit_epoch(table, batch, epoch_id, cfg, mode=mode, run_id=run_id)
+        commit_epoch(table, batch, epoch_id, cfg, run_id=run_id)
 
     return (docs.writeStream
             .foreachBatch(commit_batch)

@@ -38,40 +38,17 @@ REPLICATE = int(os.environ.get("SPARK_GRAFT_REPLICATE", "4"))
 
 
 def make_spark(master: str):
+    """The product session (``session.get_spark``) at ``master``, with 2x
+    cores shuffle partitions: enough waves for balance without drowning in
+    per-task overhead.  Sharing the factory keeps bench and product config
+    from drifting apart (BENCH.md "Heap attribution" and the pixels
+    broadcast-threshold follow-up were both such drifts)."""
     import re
-    from pyspark.sql import SparkSession
+    from apple_ocr_backend_spark.session import get_spark
     m = re.match(r"local\[(\d+)\]", master)
     cores = int(m.group(1)) if m else CPUS
-    # 2x cores: enough waves for balance without drowning in per-task overhead
-    return (SparkSession.builder.master(master)
-            .appName("bench")
-            .config("spark.sql.shuffle.partitions", str(2 * cores))
-            .config("spark.sql.adaptive.enabled", "true")
-            # compute-heavy per byte: the 64 MB advisory default coalesces
-            # payload shuffles into a handful of fat partitions and
-            # strangles reduce-side parallelism (see session.py)
-            .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                    os.environ.get("SPARK_GRAFT_ADVISORY", "8m"))
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-            # match the product session default (session.py: 24g).  The old
-            # 8g default starved the heap in the 480k-doc scaling runs: at
-            # local[8] the GC overhead grew the fused run 45.3 -> 59.9 s
-            # (BENCH.md "Heap attribution") while local[2] barely moved —
-            # reading as a phantom scaling loss that was really the bench
-            # harness, not the plan
-            .config("spark.driver.memory",
-                    os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-            # second harness-product parity fix (session.py sets the same):
-            # at the 10 MB default the pixels media store's ESTIMATED plan
-            # size straddles the threshold (actual payload 2.5 MB) and AQE
-            # flips the payload join broadcast<->shuffle run to run — a
-            # bimodal 26 s / 32 s kernel stage at local[8] (leak probe +
-            # threshold A/B, BENCH.md "pixels 0.762" follow-up)
-            .config("spark.sql.autoBroadcastJoinThreshold",
-                    str(64 * 1024 * 1024))
-            .config("spark.ui.enabled", "false")
-            .getOrCreate())
+    return get_spark(master=master, app_name="bench",
+                     shuffle_partitions=2 * cores)
 
 
 def replicated_docs(spark, sf_dir: str, replicate: int):
@@ -125,11 +102,11 @@ def skew_mode() -> None:
         res = {}
         for label, budget in (("salted", 256), ("unsalted", 1_000_000_000)):
             cfg = ExtractConfig(salt_span_budget=budget)
-            run_noop(extract_docs(docs, cfg, mode="fused"))  # warmup
+            run_noop(extract_docs(docs, cfg))  # warmup
             times = []
             for _ in range(3):
                 t0 = time.time()
-                run_noop(extract_docs(docs, cfg, mode="fused"))
+                run_noop(extract_docs(docs, cfg))
                 times.append(round(time.time() - t0, 2))
             res[label] = {"iters": times, "median": statistics.median(times)}
         report = {"n_docs": n_docs, "giants": 2, "spans_each": 200_000,
@@ -414,7 +391,7 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
 
 def bench_extraction(spark, sf_dir: str, replicate: int,
                      iters: int = 1,
-                     modes: tuple = ("fused", "staged")) -> dict:
+                     modes: tuple = ("fused",)) -> dict:
     """Time the extraction pipeline.  With iters > 1, one untimed warmup runs
     first and the reported value is the median of the timed iterations —
     first-execution effects (JIT of generated code, Python worker forks, GC
@@ -422,8 +399,7 @@ def bench_extraction(spark, sf_dir: str, replicate: int,
     cores, so cold-run numbers say nothing about the 100 TB regime where
     stages run for minutes."""
     import statistics
-    from apple_ocr_backend_spark.plans.pipeline import (extract_docs,
-                                                        extract_docs_pixels)
+    from apple_ocr_backend_spark.plans.pipeline import extract_docs
     docs = replicated_docs(spark, sf_dir, replicate)
     n_docs = docs.count()
     out = {"n_docs": n_docs}
@@ -444,9 +420,7 @@ def bench_extraction(spark, sf_dir: str, replicate: int,
         media = media_from_documents(spark, sf_dir).localCheckpoint()
 
     def build(mode):
-        if mode == "pixels":
-            return extract_docs_pixels(docs, media)
-        return extract_docs(docs, mode=mode)
+        return extract_docs(docs, media=media if mode == "pixels" else None)
 
     for mode in modes:
         # clearCache between runs: the pipeline persist()s shared subplans,
@@ -477,7 +451,7 @@ def bench_extraction(spark, sf_dir: str, replicate: int,
 def single_run(master: str, extraction_only: bool) -> dict:
     sys.path.insert(0, REPO)
     modes = tuple(os.environ.get("SPARK_GRAFT_BENCH_MODES",
-                                 "fused,staged").split(","))
+                                 "fused").split(","))
     spark = make_spark(master)
     try:
         # default mode also warms up + medians (2 iters): cold-run stalls on
@@ -514,13 +488,9 @@ def child(master: str, extraction_only: bool, replicate: int | None = None,
 
 def scaling_mode() -> None:
     pts = {m: child(f"local[{m}]", extraction_only=True) for m in (2, 8, 32)}
-    eff = {}
-    for mode in ("fused", "staged"):
-        d2 = pts[2][f"docs_per_sec_{mode}"]
-        d8 = pts[8][f"docs_per_sec_{mode}"]
-        d32 = pts[32][f"docs_per_sec_{mode}"]
-        eff[mode] = {"2to8": round((d8 / d2) / 4, 3),
-                     "8to32": round((d32 / d8) / 4, 3)}
+    d2, d8, d32 = (pts[m]["docs_per_sec_fused"] for m in (2, 8, 32))
+    eff = {"fused": {"2to8": round((d8 / d2) / 4, 3),
+                     "8to32": round((d32 / d8) / 4, 3)}}
     report = {"n_docs": pts[8]["n_docs"], "sf_dir": SF_DIR,
               "points": {f"local{m}": p for m, p in pts.items()},
               "scaling_efficiency": eff}
@@ -621,7 +591,7 @@ def memory_child(batch_rows: int) -> dict:
         th = threading.Thread(target=_poll_worker_hwm, args=(stop, res))
         th.start()
         t0 = time.time()
-        run_noop(extract_docs(docs, cfg, mode="fused"))
+        run_noop(extract_docs(docs, cfg))
         dt = time.time() - t0
         stop.set()
         th.join()
@@ -704,11 +674,10 @@ def render_bench_md(r: dict) -> str:
         " eff 2→8 (≥0.8 target) | eff 8→32 |",
         "|---|---|---|---|---|---|",
         row("fused"),
-        row("staged"),
         "",
         "Efficiency N→4N = (docs_per_sec@4N / docs_per_sec@N) / 4.",
         "",
-        "Protocol: fresh JVM per master; one untimed warmup per mode, then",
+        "Protocol: fresh JVM per master; one untimed warmup, then",
         "median of 3 timed iterations (cold-run JIT/worker-fork/GC-adaptation",
         "effects are ~10x steady state here and do not scale with cores; at",
         "the 100 TB design point stages run for minutes and warmup is noise).",
@@ -720,34 +689,19 @@ def render_bench_md(r: dict) -> str:
         "Raw iterations (sec):",
         "",
     ] + [
-        f"- local[{m}] fused {p[f'local{m}'].get('iters_fused')}, "
-        f"staged {p[f'local{m}'].get('iters_staged')}"
+        f"- local[{m}] fused {p[f'local{m}'].get('iters_fused')}"
         for m in (2, 8, 32)
     ] + [
         "",
         "Reference single-node baseline (BASELINE.md): ~0.08–0.23 docs/s per",
         "worker on the serving path; this batch pipeline reaches",
         f"{p['local32']['docs_per_sec_fused']} docs/s on one 32-core box",
-        f"({round(p['local32']['docs_per_sec_fused'] / 32, 1)} docs/s/core,"
-        " fused mode).",
+        f"({round(p['local32']['docs_per_sec_fused'] / 32, 1)} docs/s/core).",
         "",
-    ]
-    lines += [
-        "## Mode interpretation", "",
-        "`fused` is the flagship production path (and the resumable-run",
-        "default): one `mapInArrow` pass dispatches all four kernels per",
-        "Arrow batch and emits per-(doc,salt) sorted partial span arrays, so",
-        "the JVM does a single compact merge shuffle — the shape whose",
-        "scaling the north rule cares about.",
-        "",
-        "`staged` is the semantic-fidelity topology (the reference's",
-        "progressive early-stop as anti-joins; per-pass subplans lazily",
-        "persisted so the whole chain runs as one job).  Its pass-to-pass",
-        "data dependency is inherent Amdahl overhead — each OCR pass's",
-        "anti-join consumes the previous pass's ranked output — and its",
-        "local[32] numbers coincide with measured steal spikes; it pins",
-        "reference semantics and per-pass lineage, it does not chase",
-        "throughput.", "",
+        "`fused` is the one extraction plan: one `mapInArrow` pass",
+        "dispatches all four kernels per Arrow batch (OCR early stop per",
+        "span inside the kernel) and emits per-(doc,salt) sorted partial",
+        "span arrays, so the JVM does a single compact merge shuffle.", "",
     ]
     return chr(10).join(lines)
 
@@ -790,7 +744,6 @@ def main() -> None:
     r = single_run(f"local[{CPUS}]", extraction_only=False)
     qtimes = dict(r["queries"])
     qtimes["extract_fused"] = r["extract_fused_sec"]
-    qtimes["extract_staged"] = r["extract_staged_sec"]
     total = round(sum(qtimes.values()), 3)
     sf = SF_DIR.rstrip("/").split("/")[-1].replace("sf", "")
     print(json.dumps({
@@ -798,7 +751,6 @@ def main() -> None:
         "queries": qtimes, "sf": float(sf) if sf else None,
         "n_docs": r["n_docs"],
         "docs_per_sec_fused": r["docs_per_sec_fused"],
-        "docs_per_sec_staged": r["docs_per_sec_staged"],
     }))
 
 

@@ -41,7 +41,7 @@ def evaluate_cell(docs: DataFrame, golden: DataFrame,
     ``golden`` is (doc_id, serial).  Returns total / detected / top-1 and
     any-candidate hit counts + basis-point rates (eval.py:160-177 shape).
     """
-    ocr = (extract_docs(docs, cfg, mode="fused")
+    ocr = (extract_docs(docs, cfg)
            .select("doc_id", F.explode("spans").alias("s"))
            .filter(F.col("s.kind") == "ocr_text")
            .select("doc_id", F.col("s.order").alias("ord"),

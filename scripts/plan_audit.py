@@ -23,7 +23,7 @@ DEFAULT = [
     "quality_repetition", "pii_mask", "events_asof", "events_sessionize",
     "events_sessionize_salted", "dedup_incremental", "training_mix",
     "length_quantiles", "quality_perplexity", "dedup_spans",
-    "dedup_spans_clean",
+    "dedup_spans_clean", "extract_pipeline_fused", "extract_pipeline_pixels",
 ]
 
 

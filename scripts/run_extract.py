@@ -7,7 +7,7 @@ Usage (cluster):
     # equivalently:
     spark-submit --py-files dist/apple_ocr_backend_spark.zip \
         scripts/run_extract.py --input ... --output ... \
-        [--mode fused|staged] [--buckets 64] [--run-id r1] \
+        [--buckets 64] [--run-id r1] [--concurrency 4] \
         [--derive-from-documents]  # input is a documents.parquet dir instead
 
 The job is resumable: each doc bucket commits one icelite snapshot with
@@ -32,7 +32,6 @@ def main() -> None:
                     help="docs parquet dir (doc_id, spans) — or a directory "
                          "containing documents.parquet with --derive-from-documents")
     ap.add_argument("--output", required=True, help="icelite table dir")
-    ap.add_argument("--mode", default="fused", choices=["fused", "staged"])
     ap.add_argument("--buckets", type=int, default=16)
     ap.add_argument("--run-id", default="run")
     ap.add_argument("--derive-from-documents", action="store_true")
@@ -55,7 +54,7 @@ def main() -> None:
         docs = spark.read.parquet(args.input)
 
     res = run_resumable(spark, docs, args.output, n_buckets=args.buckets,
-                        mode=args.mode, run_id=args.run_id,
+                        run_id=args.run_id,
                         concurrency=args.concurrency)
     last = res["table"].last_snapshot()
     print(json.dumps({

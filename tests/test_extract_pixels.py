@@ -1,4 +1,4 @@
-"""Pixels-variant extraction pipeline: media-store join + real-pixel OCR.
+"""Extraction with a media store: payload join + real-pixel OCR.
 
 The catalog oracle suite already hash-checks `extract_pipeline_pixels`
 against DuckDB; these tests pin the properties that check depends on:
@@ -12,7 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from apple_ocr_backend_spark.plans.pipeline import extract_docs, extract_docs_pixels
+from apple_ocr_backend_spark.plans.pipeline import extract_docs
 from apple_ocr_backend_spark.sources.derived import (
     docs_from_documents, media_from_documents, serial_expr, serial_py)
 
@@ -36,6 +36,13 @@ def media(spark):
     return media_from_documents(spark, SF)
 
 
+@pytest.fixture(scope="module")
+def pixel_base(small_docs, media):
+    """The media plan's output at the default kernel partitioning."""
+    from tests.test_pipeline_parity import _spans_map
+    return _spans_map(extract_docs(small_docs, media=media).toPandas())
+
+
 _CORRUPT = str.maketrans("0125", "OIZS")
 
 
@@ -50,8 +57,8 @@ def test_pixel_ocr_resolves_token_pipeline_ambiguity(spark, small_docs, media):
     swaps outside the corrupt family (J->I etc., the collision-resolved
     table in ``functions/serials.py``); the pixels are the ground truth
     that resolves exactly that lost information."""
-    token = extract_docs(small_docs, mode="fused")
-    pixel = extract_docs_pixels(small_docs, media)
+    token = extract_docs(small_docs)
+    pixel = extract_docs(small_docs, media=media)
     tok_cands = {r.doc_id: set(r.cands) for r in
                  (token.select("doc_id", F.explode("spans").alias("s"))
                   .where(F.col("s.kind") == "ocr_text")
@@ -80,8 +87,8 @@ def test_image_token_text_is_ignored_by_pixel_path(spark, small_docs, media):
              .otherwise(s["text"]).alias("text"),
             s["media_ref"].alias("media_ref"),
             s["offset"].alias("offset"))))
-    a = extract_docs_pixels(small_docs, media).orderBy("doc_id").collect()
-    b = extract_docs_pixels(corrupted, media).orderBy("doc_id").collect()
+    a = extract_docs(small_docs, media=media).orderBy("doc_id").collect()
+    b = extract_docs(corrupted, media=media).orderBy("doc_id").collect()
     assert a == b
 
 
@@ -89,7 +96,7 @@ def test_missing_media_drops_span_not_doc(spark, small_docs, media):
     """An image span whose media_ref has no payload (dead link) yields no
     ocr_text row, but the doc's html/pdf spans still extract."""
     no_media = media.limit(0)
-    out = extract_docs_pixels(small_docs, no_media)
+    out = extract_docs(small_docs, media=no_media)
     rows = (out.select("doc_id", F.explode("spans").alias("s"))
             .groupBy(F.col("s.kind").alias("kind")).count().collect())
     kinds = {r.kind: r["count"] for r in rows}
@@ -98,7 +105,7 @@ def test_missing_media_drops_span_not_doc(spark, small_docs, media):
     assert out.count() == 40  # every doc comes out, spans or not
 
 
-def test_span_less_docs_come_out_empty(spark, small_docs, media):
+def test_span_less_docs_come_out_empty(spark, small_docs, media, pixel_base):
     """Docs with nothing to extract (empty or null spans, every span
     filtered out, image refs with no payload) come out once each with
     ``spans = []``, matching the oracle, and leave the other docs'
@@ -109,14 +116,13 @@ def test_span_less_docs_come_out_empty(spark, small_docs, media):
                                             edge_docs)
     edge = edge_docs()
     mixed = small_docs.unionByName(_to_spark_docs(spark, edge))
-    got = extract_docs_pixels(mixed, media).toPandas()
+    got = extract_docs(mixed, media=media).toPandas()
     assert len(got) == 40 + len(edge)
     assert_edge_docs_empty(got)
     have = _spans_map(got)
     assert {k: have[k] for k in edge["doc_id"]} \
         == _spans_map(extract_docs_oracle(edge))
-    base = _spans_map(extract_docs_pixels(small_docs, media).toPandas())
-    assert {k: v for k, v in have.items() if k in base} == base
+    assert {k: v for k, v in have.items() if k in pixel_base} == pixel_base
 
 
 def test_shuffle_join_regime_matches_broadcast_plan(spark, small_docs, media):
@@ -127,11 +133,11 @@ def test_shuffle_join_regime_matches_broadcast_plan(spark, small_docs, media):
     key — and pin that the output is bit-identical to the broadcast plan:
     sentinel keys never match a real media:// ref, and no span is lost or
     duplicated by the key rewrite."""
-    base = extract_docs_pixels(small_docs, media).orderBy("doc_id").collect()
+    base = extract_docs(small_docs, media=media).orderBy("doc_id").collect()
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        forced = (extract_docs_pixels(small_docs, media)
+        forced = (extract_docs(small_docs, media=media)
                   .orderBy("doc_id").collect())
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
@@ -145,14 +151,13 @@ def test_payload_join_bucketed_store_never_shuffles(spark, small_docs, media):
     only the just-exploded spans shuffle.  Evidence: 1 shuffle exchange
     with the bucketed store vs 2 without, identical join output."""
     from apple_ocr_backend_spark.operators.skew import explode_salted
+    from apple_ocr_backend_spark.plans.pipeline import media_join_key
     from apple_ocr_backend_spark.sources.bucketed import (count_exchanges,
                                                           write_bucketed)
     from apple_ocr_backend_spark.config import DEFAULT_CONFIG
 
     rows = explode_salted(small_docs, DEFAULT_CONFIG)
-    jkey = F.coalesce(F.col("media_ref"), F.concat_ws(
-        ":", F.lit("x-null"), F.col("doc_id"), F.col("span_pos")))
-    spans = rows.withColumn("__mkey", jkey)
+    spans = rows.withColumn("__mkey", media_join_key())
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -176,3 +181,45 @@ def test_payload_join_bucketed_store_never_shuffles(spark, small_docs, media):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS t_media_b")
+
+
+def test_media_partitioning_invariance(spark, small_docs, media, pixel_base):
+    """The media plan gives the same output at 1 and 7 kernel partitions
+    as at the default partitioning."""
+    from tests.test_pipeline_parity import _spans_map
+    docs = small_docs.repartition(13)
+    for num_partitions in (1, 7):
+        got = extract_docs(docs, media=media,
+                           num_partitions=num_partitions).toPandas()
+        assert _spans_map(got) == pixel_base, num_partitions
+
+
+def test_media_kernel_streams_per_batch(spark, small_docs, media,
+                                        pixel_base):
+    """Tiny Arrow batches split (doc, salt) groups and payload rows across
+    batches everywhere; the media plan's output must not change."""
+    from tests.test_pipeline_parity import _spans_map
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "5")
+    try:
+        got = extract_docs(small_docs, media=media).toPandas()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert _spans_map(got) == pixel_base
+
+
+def test_media_plan_scans_documents_once(spark, small_docs, media, tmp_path):
+    """The media plan over a parquet docs table reads that table once: a
+    span-less doc rides its placeholder row through the payload join, so
+    no doc-id spine re-reads it."""
+    import re
+    path = str(tmp_path / "docs.parquet")
+    small_docs.write.parquet(path)
+    out = extract_docs(spark.read.parquet(path), media=media)
+    plan = out._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("formatted"))
+    scans = re.findall(r"^\(\d+\) Scan parquet", plan, re.M)
+    locations = re.findall(r"^Location: .*$", plan, re.M)
+    assert len(scans) == len(locations) == 2  # docs + the media store
+    assert sum("docs.parquet" in loc for loc in locations) == 1

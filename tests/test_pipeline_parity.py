@@ -1,8 +1,9 @@
 """Spark pipeline == pandas oracle, bit-for-bit, under span-sequence equality
 (kind, text, media_ref, order) — the BASELINE.json correctness invariant.
 
-Both the staged (anti-join early-stop) and fused (single UDF) OCR topologies
-must produce identical results, independent of partitioning.
+The one extraction plan (a single Arrow kernel pass, OCR early stop per span
+inside the kernel) must match the oracle independent of partitioning and
+Arrow batch size.
 """
 
 from __future__ import annotations
@@ -79,7 +80,7 @@ def corpus():
     return docs, golden
 
 
-@pytest.mark.parametrize("mode", ["staged", "fused"])
+@pytest.mark.parametrize("mode", ["fused"])
 def test_spark_matches_oracle(spark, corpus, mode):
     docs, golden = corpus
     sdf = _to_spark_docs(spark, docs)
@@ -97,23 +98,34 @@ def test_spark_matches_oracle(spark, corpus, mode):
 
 def test_partitioning_invariance(spark, corpus):
     """Same result under a different partition count (shuffle-order
-    independence — the determinism the quantized A1 score buys), down to a
-    single kernel partition in fused mode."""
+    independence), down to a single kernel partition."""
     docs, golden = corpus
     sdf = _to_spark_docs(spark, docs).repartition(13)
-    for mode, num_partitions in (("staged", 7), ("fused", 1), ("fused", 7)):
-        got = extract_docs(sdf, CFG, mode=mode,
+    for num_partitions in (1, 7):
+        got = extract_docs(sdf, CFG,
                            num_partitions=num_partitions).toPandas()
-        assert _spans_map(got) == _spans_map(golden), (mode, num_partitions)
+        assert _spans_map(got) == _spans_map(golden), num_partitions
+
+
+def test_only_the_fused_mode_exists(spark, corpus, tmp_path):
+    """``mode`` is a compatibility keyword: any value but "fused" raises
+    before a plan is built, in ``extract_docs`` and ``run_resumable``."""
+    from apple_ocr_backend_spark.plans.checkpoint import run_resumable
+    sdf = _to_spark_docs(spark, corpus[0])
+    with pytest.raises(ValueError, match="one plan"):
+        extract_docs(sdf, CFG, mode="staged")
+    with pytest.raises(ValueError, match="one plan"):
+        run_resumable(spark, sdf, str(tmp_path / "t"), CFG, mode="staged")
+    assert not (tmp_path / "t").exists()
 
 
 def test_fused_plan_scans_documents_once(spark, corpus, tmp_path):
-    """The fused plan over a parquet docs table reads it once and has no
-    doc-id spine: no broadcast exchange, no broadcast join."""
+    """The plan over a parquet docs table reads it once and has no doc-id
+    spine: no broadcast exchange, no broadcast join."""
     import re
     path = str(tmp_path / "docs.parquet")
     _to_spark_docs(spark, corpus[0]).write.parquet(path)
-    out = extract_docs(spark.read.parquet(path), CFG, mode="fused")
+    out = extract_docs(spark.read.parquet(path), CFG)
     plan = out._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode
         .fromString("formatted"))
@@ -154,8 +166,7 @@ def test_fused_kernel_streams_per_batch(spark, corpus):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "5")
     try:
-        got = extract_docs(_to_spark_docs(spark, docs), CFG,
-                           mode="fused").toPandas()
+        got = extract_docs(_to_spark_docs(spark, docs), CFG).toPandas()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert _spans_map(got) == _spans_map(golden)
@@ -193,7 +204,7 @@ def test_giant_doc_salting(spark):
     docs = make_corpus(5, seed=7, giant_docs=1, giant_spans=200)
     golden = extract_docs_oracle(docs, cfg)
     sdf = _to_spark_docs(spark, docs)
-    got = extract_docs(sdf, cfg, mode="fused").toPandas()
+    got = extract_docs(sdf, cfg).toPandas()
     assert _spans_map(got) == _spans_map(golden)
     g = [s for s in got[got["doc_id"] == "doc_giant_0"]["spans"].iloc[0]]
     orders = [x["order"] for x in g]

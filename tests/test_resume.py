@@ -25,12 +25,11 @@ def test_kill_and_resume(spark, tmp_path):
 
     # run 1: killed after 2 of 4 bucket commits
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_resumable(spark, sdf, tdir, CFG, n_buckets=4, mode="fused",
-                      run_id="r1", fail_after=2)
+        run_resumable(spark, sdf, tdir, CFG, n_buckets=4, run_id="r1",
+                      fail_after=2)
 
     # run 2: resumes — exactly the 2 uncommitted buckets are processed
-    res = run_resumable(spark, sdf, tdir, CFG, n_buckets=4, mode="fused",
-                        run_id="r2")
+    res = run_resumable(spark, sdf, tdir, CFG, n_buckets=4, run_id="r2")
     assert sorted(res["skipped"]) == sorted(res["table"].committed_units("bucket") -
                                             set(res["processed"]))
     assert len(res["skipped"]) == 2 and len(res["processed"]) == 2
@@ -42,8 +41,7 @@ def test_kill_and_resume(spark, tmp_path):
     assert _spans_map(out) == golden
 
     # run 3: everything committed -> full skip, zero reprocessing
-    res3 = run_resumable(spark, sdf, tdir, CFG, n_buckets=4, mode="fused",
-                         run_id="r3")
+    res3 = run_resumable(spark, sdf, tdir, CFG, n_buckets=4, run_id="r3")
     assert res3["processed"] == [] and len(res3["skipped"]) == 4
 
     # lineage rows present per committed snapshot, with partition granularity
@@ -84,35 +82,14 @@ def test_bucket_kernel_partitions(spark, tmp_path, monkeypatch):
     assert cores < want[3] < 4 * cores
 
 
-def test_staged_run_commits_per_pass_lineage(spark, tmp_path):
-    """Staged mode records per-pass, per-partition lineage in each bucket's
-    snapshot commit (north_rule: every stage writes lineage + metrics)."""
-    docs = make_corpus(40, seed=9)
-    res = run_resumable(spark, _to_spark_docs(spark, docs),
-                        str(tmp_path / "t"), CFG, n_buckets=2, mode="staged",
-                        run_id="rs")
-    snaps = res["table"].snapshots()
-    assert len(snaps) == 2
-    pass_rows = [r for s in snaps for r in s["lineage"]
-                 if r["stage"].startswith("ocr_pass_")]
-    assert pass_rows, "no per-pass lineage recorded"
-    assert {r["stage"] for r in pass_rows} >= {"ocr_pass_0"}
-    for r in pass_rows:
-        assert r["span_count"] >= r["doc_count"] >= 0
-        assert 0 <= r["avg_conf_q"] <= 1_000_000
-    # extraction output still exact
-    golden = _spans_map(extract_docs_oracle(docs, CFG))
-    assert _spans_map(res["table"].read(spark).toPandas()) == golden
-
-
 def test_concurrent_buckets_match_serial_golden(spark, tmp_path):
     """concurrency=4: buckets processed by parallel threads, commits stay
     atomic (icelite serializes the commit point), result identical."""
     docs = make_corpus(40, seed=13)
     golden = _spans_map(extract_docs_oracle(docs, CFG))
     res = run_resumable(spark, _to_spark_docs(spark, docs),
-                        str(tmp_path / "t"), CFG, n_buckets=4, mode="fused",
-                        run_id="rc", concurrency=4)
+                        str(tmp_path / "t"), CFG, n_buckets=4, run_id="rc",
+                        concurrency=4)
     assert sorted(res["processed"]) == [0, 1, 2, 3]
     t = res["table"]
     snaps = t.snapshots()

@@ -95,7 +95,7 @@ def test_stream_fresh_checkpoint_sees_new_files(spark, tmp_path):
 
 
 def test_stream_single_execution_per_epoch(spark, tmp_path, monkeypatch):
-    """The fused pipeline must run ONCE per micro-batch (round-1 verdict:
+    """The extraction pipeline must run ONCE per micro-batch (round-1 verdict:
     count() + append() re-executed the whole plan).  An accumulator inside a
     pass-through kernel counts materialized rows: exactly one per doc."""
     import apple_ocr_backend_spark.streaming.stream_extract as SE
@@ -107,8 +107,8 @@ def test_stream_single_execution_per_epoch(spark, tmp_path, monkeypatch):
     acc = spark.sparkContext.accumulator(0)
     orig = SE.extract_docs
 
-    def counting(batch, cfg, mode="fused", **kw):
-        out = orig(batch, cfg, mode=mode, **kw)
+    def counting(batch, cfg, **kw):
+        out = orig(batch, cfg, **kw)
 
         def tick(batches):
             for b in batches:
