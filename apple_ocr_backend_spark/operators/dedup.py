@@ -336,9 +336,15 @@ def duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
     the exchange exactly once; the groupBy+self-join alternative re-uses
     the same exchange but adds a join), one on doc id for the island merge
     and final aggregate.  Nothing is ever joined all-pairs and no token
-    string longer than one window leaves the map side.  Docs shorter than
-    ``n`` tokens are excluded at the source (a partial window is not an
-    n-gram — same round-4-advice semantics as ``benchmark_overlap``)."""
+    string longer than one window leaves the map side.  Hot-key bound:
+    the count window has no map-side combine, so ALL positions of one
+    window digest land in one task — a corpus-universal n-gram (a
+    boilerplate header in every doc) costs one task time linear in its
+    corpus-wide occurrence count.  ``groupBy(g).count()`` plus a rejoin
+    combines map-side and is the form to switch to if that task skews.
+    Docs shorter than ``n`` tokens are excluded at the source (a partial
+    window is not an n-gram — same round-4-advice semantics as
+    ``benchmark_overlap``)."""
     isl = _span_islands(docs, id_col, text_col, n, min_count,
                         with_n_tok=True)
     spans = (isl.groupBy("id", "isl")

@@ -2514,8 +2514,10 @@ def _q_dedup_spans_clean(spark, sf):
     """Removal counterpart of `dedup_spans`: every doc that holds
     duplicated spans re-emitted with ALL covered tokens dropped —
     kept-token count plus the md5 of the surviving text, so the driver
-    hash pins the exact cleaned corpus, not just its size.  The span list
-    per doc is the per-island aggregate (tiny), so stripping is one
+    hash pins the cleaned text of every affected doc, not just its size.
+    Only affected docs come out: the cleaned corpus is this output plus
+    the untouched docs (no duplicated span, or shorter than n).  The span
+    list per doc is the per-island aggregate (tiny), so stripping is one
     doc-id equi-join plus a map-side exists() per token; see
     operators/dedup.py::strip_duplicate_spans.  DuckDB's
     array_to_string([]) is NULL where Spark's concat_ws is '' — the

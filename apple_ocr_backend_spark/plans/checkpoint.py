@@ -16,6 +16,9 @@ commit carries
 * metrics: per-kind span counts + mean candidate confidence — the shape of
   ``extraction_metrics`` (reference: ``app/db.py:124-154`` stats +
   ``app/utils/logging.py:91-135`` events).
+
+The commit body (``commit_extracted``) is shared with the streaming front
+end, so a stream epoch commits the same lineage as a bucket.
 """
 
 from __future__ import annotations
@@ -32,6 +35,52 @@ from .pipeline import check_mode, extract_docs
 
 def bucket_of(doc_id_col, n_buckets: int):
     return F.pmod(F.xxhash64(doc_id_col), F.lit(n_buckets)).cast("int")
+
+
+def commit_extracted(table: Table, extracted: DataFrame, operation: str,
+                     summary: dict) -> dict:
+    """Commit one unit of extraction output (a bucket, a stream epoch) to
+    ``table`` with its lineage: persist, ONE collect of the per-partition
+    lineage + per-kind metrics aggregate, ``table.append``, unpersist, so
+    the extraction plan executes once for both the collect and the append.
+
+    ``summary`` holds the unit's identity keys; every lineage row carries
+    them plus ``partition_id, doc_count, span_count, bytes,
+    ocr_span_count, wall_ms``, and the committed (and returned) summary
+    adds ``docs_in, span_count, wall_ms``."""
+    t0 = time.time()
+    extracted = extracted.persist()
+    try:
+        # per-partition lineage + per-kind metrics in ONE pass over the output
+        flat = extracted.select(
+            "doc_id", F.spark_partition_id().alias("partition_id"),
+            F.size("spans").alias("n_spans"),
+            F.aggregate(F.col("spans"), F.lit(0),
+                        lambda acc, s: acc + F.length(s["text"])).alias("bytes"),
+            F.size(F.filter("spans", lambda s: s["kind"] == "ocr_text"))
+             .alias("n_ocr"))
+        rows = (flat.groupBy("partition_id")
+                .agg(F.count("*").alias("doc_count"),
+                     F.sum("n_spans").alias("span_count"),
+                     F.sum("bytes").alias("bytes"),
+                     F.sum("n_ocr").alias("ocr_span_count"))
+                .collect())
+        wall_ms = (time.time() - t0) * 1000.0
+        lineage = [{**summary, "partition_id": r["partition_id"],
+                    "doc_count": r["doc_count"],
+                    "span_count": int(r["span_count"] or 0),
+                    "bytes": int(r["bytes"] or 0),
+                    "ocr_span_count": int(r["ocr_span_count"] or 0),
+                    "wall_ms": wall_ms} for r in rows]
+        summary = {**summary,
+                   "docs_in": sum(r["doc_count"] for r in lineage),
+                   "span_count": sum(r["span_count"] for r in lineage),
+                   "wall_ms": wall_ms}
+        table.append(extracted, operation=operation, summary=summary,
+                     lineage=lineage)
+    finally:
+        extracted.unpersist()
+    return summary
 
 
 def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
@@ -77,44 +126,11 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     processed: list[int] = []
 
     def work(b: int) -> None:
-        t0 = time.time()
         sub = docs_b.filter(F.col("_bucket") == b).drop("_bucket")
-        extracted = extract_docs(
-            sub, cfg, num_partitions=num_partitions
-        ).persist()  # lineage collect + table append = ONE execution
-        # per-partition lineage + per-kind metrics in ONE pass over the output
-        flat = extracted.select(
-            "doc_id", F.spark_partition_id().alias("partition_id"),
-            F.size("spans").alias("n_spans"),
-            F.aggregate(F.col("spans"), F.lit(0),
-                        lambda acc, s: acc + F.length(s["text"])).alias("bytes"),
-            F.size(F.filter("spans", lambda s: s["kind"] == "ocr_text"))
-             .alias("n_ocr"))
-        lineage_rows = (flat.groupBy("partition_id")
-                        .agg(F.count("*").alias("doc_count"),
-                             F.sum("n_spans").alias("span_count"),
-                             F.sum("bytes").alias("bytes"),
-                             F.sum("n_ocr").alias("ocr_span_count"))
-                        .collect())
-        wall_ms = (time.time() - t0) * 1000.0
-        lineage = [{"run_id": run_id, "stage": "extract", "bucket": b,
-                    "partition_id": r["partition_id"],
-                    "doc_count": r["doc_count"],
-                    "span_count": int(r["span_count"] or 0),
-                    "bytes": int(r["bytes"] or 0),
-                    "ocr_span_count": int(r["ocr_span_count"] or 0),
-                    "wall_ms": wall_ms} for r in lineage_rows]
-        summary = {
-            "bucket": b, "run_id": run_id, "stage": "extract",
-            "docs_in": sum(r["doc_count"] for r in lineage_rows),
-            "span_count": sum(int(r["span_count"] or 0) for r in lineage_rows),
-            "wall_ms": wall_ms,
-        }
-        try:
-            table.append(extracted, operation=f"extract/bucket={b}",
-                         summary=summary, lineage=lineage)
-        finally:
-            extracted.unpersist()
+        commit_extracted(table, extract_docs(sub, cfg,
+                                             num_partitions=num_partitions),
+                         f"extract/bucket={b}",
+                         {"bucket": b, "run_id": run_id, "stage": "extract"})
         processed.append(b)
 
     try:

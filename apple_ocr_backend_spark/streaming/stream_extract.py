@@ -22,6 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
+from ..plans.checkpoint import commit_extracted
 from ..plans.pipeline import extract_docs
 from ..sources.corpus import DOCS_DDL
 from ..sources.icelite import Table
@@ -58,23 +59,19 @@ def commit_epoch(table: Table, batch: DataFrame, epoch_id: int,
     and restart at 0 under a fresh checkpoint, so a bare epoch key would
     wrongly skip the first batches of a NEW run against the same table.
 
-    The extracted frame is persisted so the pipeline (salting, kernels,
-    reassembly shuffle) executes exactly once per micro-batch — the count
-    materializes the cache and the append reads it back.
+    The commit is the batch path's (``plans.checkpoint.commit_extracted``):
+    the pipeline (salting, kernels, reassembly shuffle) executes exactly
+    once per micro-batch, and the snapshot carries per-partition lineage
+    and per-kind metrics, its summary the epoch's ``docs_in``,
+    ``span_count`` and ``wall_ms``.
 
     Returns True if the batch was committed, False if it was a replay.
     """
     key = f"{run_id}/{epoch_id}"
     if key in table.committed_units("epoch_key"):
         return False
-    extracted = extract_docs(batch, cfg).persist()
-    try:
-        n = extracted.count()
-        table.append(extracted, operation=f"stream/epoch={key}",
-                     summary={"epoch_key": key, "epoch": epoch_id,
-                              "run_id": run_id, "docs_in": n})
-    finally:
-        extracted.unpersist()
+    commit_extracted(table, extract_docs(batch, cfg), f"stream/epoch={key}",
+                     {"epoch_key": key, "epoch": epoch_id, "run_id": run_id})
     return True
 
 

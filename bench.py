@@ -1,54 +1,111 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract + scaling-efficiency evidence).
+"""Benchmark harness: the driver line, N->4N scaling evidence and the
+studies, all timed by one loop (``timed``).
 
-Default mode: run the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and print
-ONE JSON line::
+    python bench.py                      # driver contract: ONE JSON line
+    python bench.py --scaling fused 2,8  # N->4N evidence: fused|pixels|image
+    python bench.py --study skew         # one entry of STUDIES
+    python bench.py --render             # latest record per study, markdown
+
+Default mode runs the headline catalog queries and fused extraction at
+``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test data, ``SF_DIR``) on
+``local[$SPARK_GRAFT_CPUS]`` (default 32) and prints ONE JSON line::
 
     {"metric": "end_to_end_bench_sec", "value": <total>, "unit": "sec",
-     "queries": {...per-query sec...}, "sf": ..., "docs_per_sec": ...}
+     "queries": {...per-query sec...}, "sf": ..., "n_docs": ...,
+     "docs_per_sec_fused": ...}
 
-``--scaling`` mode (north-rule evidence, BASELINE.json: N->4N executor scaling
-efficiency >= 0.8; no real cluster in this sandbox, so parallelism levels on
-one host): re-execs this script once per master (local[2], local[8],
-local[32]) on the identical replicated corpus, computes N->4N
-throughput-scaling efficiency per adjacent pair and writes BENCH.md
-(local[2]->local[8] is the headline pair; see BENCH.md for why local[32]
-is steal-limited on this guest).
+``--scaling`` is the north-rule evidence (BASELINE.json: N->4N executor
+scaling efficiency >= 0.8; there is no real cluster, so parallelism levels
+on one host): one point per core count on the identical replicated corpus
+(``$SPARK_GRAFT_REPLICATE``, default 32), and the efficiency of every
+adjacent pair.  ``--study`` runs one entry of ``STUDIES``.  Every point of
+both runs in a fresh JVM (``fresh_jvm``), and each run appends ONE
+sorted-key JSON record to ``BENCH.jsonl``: study, the point specs
+(``params``), each point's resolved session config and per-iteration
+seconds and steal ticks, the result, UTC time, git sha and sf_dir.
+``BENCH.md`` is the frozen prose history of earlier rounds; no code writes
+it.
 
 The extraction workload is the flagship pipeline (plans.pipeline.extract_docs)
 over the interleaved corpus derived JVM-side from the documents table
-(sources.derived.docs_from_documents), replicated REPLICATE x with distinct
-doc_ids so the corpus is large enough that fixed JVM/session overhead does not
-mask UDF-stage scaling.
+(sources.derived.docs_from_documents), replicated with distinct doc_ids so
+the corpus is large enough that fixed JVM/session overhead does not mask
+UDF-stage scaling.
 """
 
 from __future__ import annotations
 
+import argparse
+import datetime
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
+RECORDS = os.path.join(REPO, "BENCH.jsonl")
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-REPLICATE = int(os.environ.get("SPARK_GRAFT_REPLICATE", "4"))
+# driver default 4; scaling defaults to 32 so fixed per-job costs
+# (planning, AQE, job scheduling) don't mask the scalable work
+REPLICATE = os.environ.get("SPARK_GRAFT_REPLICATE")
+BATCH_ROWS = "spark.sql.execution.arrow.maxRecordsPerBatch"
+HOT_EVENTS = 2_000_000  # session_skew: events of the one hot user
+IMAGE_DOCS = 6000  # image: synthetic docs through the ROI chain
+
+# representative catalog entries (relational core + training-data ops)
+DRIVER_QUERIES = [
+    "pricing_summary", "top_customer_per_nation", "event_score_agg",
+    "stats_cube", "sliding_windows", "text_stats", "token_stats_bpe",
+    "quality_filter", "events_json", "dedup_exact",
+    "dedup_minhash_lsh", "dedup_lsh_verified", "dedup_components",
+    "dedup_simhash", "ann_bruteforce", "ann_ivf", "ann_ivf_fitted",
+    "ann_ivf_nprobe", "serial_validate", "client_validate",
+    "history_keyset",
+    "multimodal_frames",
+    # round-3 training-pipeline entries
+    "sample_split", "pack_sequences", "quality_repetition",
+    "pii_mask", "dedup_incremental", "events_asof",
+    "events_sessionize", "events_sessionize_salted",
+    "training_mix", "length_quantiles", "lang_id_multi",
+    "decontaminate", "vocab_topk", "rolling_active_users",
+    "quality_perplexity", "dedup_spans", "dedup_spans_clean",
+    # round-5 sketch-tier siblings
+    "rolling_active_users_approx", "length_quantiles_approx",
+    "dedup_embedding",
+    # round-5 real image payload path (PNG codec + numpy kernels)
+    "image_rois", "image_rois_nms", "image_orientation",
+    "image_ocr", "image_ocr_fallback",
+    "extract_pipeline_pixels",
+    # round-5 real audio payload path (WAV codec, chunk-walking)
+    "audio_decode_stats",
+    # round-5 real video payload path (AVI codec, nested-RIFF walk)
+    "video_frame_stats", "video_ocr_tta"]
 
 
-def make_spark(master: str):
+def make_spark(master: str, extra_conf: dict | None = None):
     """The product session (``session.get_spark``) at ``master``, with 2x
     cores shuffle partitions: enough waves for balance without drowning in
     per-task overhead.  Sharing the factory keeps bench and product config
     from drifting apart (BENCH.md "Heap attribution" and the pixels
-    broadcast-threshold follow-up were both such drifts)."""
+    broadcast-threshold follow-up were both such drifts); ``extra_conf``
+    carries only a study's independent variable."""
     import re
     from apple_ocr_backend_spark.session import get_spark
     m = re.match(r"local\[(\d+)\]", master)
     cores = int(m.group(1)) if m else CPUS
     return get_spark(master=master, app_name="bench",
-                     shuffle_partitions=2 * cores)
+                     shuffle_partitions=2 * cores, extra_conf=extra_conf)
+
+
+def session_conf(spark) -> dict:
+    """The live session's resolved ``spark.sql.*`` and driver memory, so
+    config drift shows inside the record that it skewed."""
+    return {k: v for k, v in spark.conf.getAll.items()
+            if k.startswith("spark.sql.") or k == "spark.driver.memory"}
 
 
 def replicated_docs(spark, sf_dir: str, replicate: int):
@@ -85,63 +142,12 @@ def giant_docs(spark, n_giants: int, spans_each: int):
                                 span).alias("spans")))
 
 
-def skew_mode() -> None:
-    """Demonstrate the spans-size-aware salting lever: giant multi-page docs
-    with salting on (budget 256 -> a 50k-span doc spreads over ~196 tasks)
-    vs off (whole doc in one task).  Appends results to BENCH.md."""
-    import statistics
-    from apple_ocr_backend_spark.config import ExtractConfig
-    from apple_ocr_backend_spark.plans.pipeline import extract_docs
-    spark = make_spark(f"local[{CPUS}]")
-    try:
-        sys.path.insert(0, REPO)
-        base = replicated_docs(spark, SF_DIR, 2)
-        giants = giant_docs(spark, 2, 200_000)
-        docs = base.unionByName(giants).localCheckpoint()
-        n_docs = docs.count()
-        res = {}
-        for label, budget in (("salted", 256), ("unsalted", 1_000_000_000)):
-            cfg = ExtractConfig(salt_span_budget=budget)
-            run_noop(extract_docs(docs, cfg))  # warmup
-            times = []
-            for _ in range(3):
-                t0 = time.time()
-                run_noop(extract_docs(docs, cfg))
-                times.append(round(time.time() - t0, 2))
-            res[label] = {"iters": times, "median": statistics.median(times)}
-        report = {"n_docs": n_docs, "giants": 2, "spans_each": 200_000,
-                  "salted": res["salted"], "unsalted": res["unsalted"],
-                  "speedup": round(res["unsalted"]["median"]
-                                   / res["salted"]["median"], 2)}
-        with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-            f.write(
-                "\n## Skew study (giant multi-page docs)\n\n"
-                f"Corpus: {n_docs} docs incl. 2 giants of 200,000 pdf spans "
-                f"each (~63% of all spans), local[{CPUS}].  Salting on "
-                "(`salt_span_budget=256`; a giant splits over ~781 salts) vs "
-                "off (whole doc in one task):\n\n"
-                f"- salted:   {res['salted']['iters']} s (median "
-                f"{res['salted']['median']})\n"
-                f"- unsalted: {res['unsalted']['iters']} s (median "
-                f"{res['unsalted']['median']})\n"
-                f"- **speedup {report['speedup']}x** — the north-rule "
-                "spans-size-aware salting is what keeps one 10^5-span "
-                "document from serializing a task wave; correctness under "
-                "salting is pinned by tests/test_pipeline_parity.py::"
-                "test_giant_doc_salting.\n")
-        print(json.dumps(report))
-    finally:
-        spark.stop()
-
-
 def run_noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
 def _steal_ticks() -> int | None:
-    """Hypervisor steal ticks (cumulative, all cpus) from /proc/stat —
-    logged per timed iteration so a steal spike is distinguishable from a
-    real regression on this oversubscribed guest."""
+    """Hypervisor steal ticks (cumulative, all cpus) from /proc/stat."""
     try:
         with open("/proc/stat") as f:
             return int(f.readline().split()[8])
@@ -149,10 +155,187 @@ def _steal_ticks() -> int | None:
         return None
 
 
+def timed(run, iters: int, warmup: int = 0) -> list[list]:
+    """The one timing loop: ``warmup`` untimed then ``iters`` timed calls
+    of ``run``, each after clearing the Spark cache.  Returns ``[sec,
+    steal ticks]`` per timed call.
+
+    The clear is required: pipelines persist() shared subplans and Spark's
+    CacheManager matches structurally identical plans, so without it a
+    repeat run (or another query sharing a subplan) measures cache reads.
+    Inputs meant to outlive the clear are localCheckpoint()ed.  Steal
+    ticks tell a host steal spike from a real regression on this
+    oversubscribed guest."""
+    from pyspark.sql import SparkSession
+    spark = SparkSession.getActiveSession()
+    out = []
+    for i in range(warmup + iters):
+        spark.catalog.clearCache()
+        s0, t0 = _steal_ticks(), time.perf_counter()
+        run()
+        sec, s1 = time.perf_counter() - t0, _steal_ticks()
+        if i >= warmup:
+            out.append([round(sec, 3),
+                        None if s0 is None or s1 is None else s1 - s0])
+    return out
+
+
+def median_sec(iters: list[list]) -> float:
+    return statistics.median(sec for sec, _ in iters)
+
+
+def best_sec(iters: list[list]) -> float:
+    return min(sec for sec, _ in iters)
+
+
+def time_queries(spark, names: list[str]) -> dict[str, list[list]]:
+    """Two timed runs per catalog entry; callers report the best: the
+    first execution of a query in a JVM pays whole-stage-codegen
+    compilation and Python-worker forks (5-8 s one-offs on the heavier
+    plans) that say nothing about the 100 TB regime where a stage runs
+    for minutes."""
+    from apple_ocr_backend_spark.plans.catalog import queries
+    q = queries()
+    out = {}
+    for name in names:
+        out[name] = timed(lambda: run_noop(q[name](spark, SF_DIR)), 2)
+    return out
+
+
+def extract_point(spark, mode: str = "fused", replicate: int = 32,
+                  iters: int = 3) -> dict:
+    """Extraction docs/s (``mode`` "pixels": image spans OCRed from the
+    binary media store), median of ``iters`` after one warmup:
+    first-execution effects (JIT, Python worker forks, GC adaptation) are
+    ~10x steady state on this box and don't scale with cores."""
+    from apple_ocr_backend_spark.plans.pipeline import extract_docs
+    docs = replicated_docs(spark, SF_DIR, replicate)
+    n_docs = docs.count()
+    media = None
+    if mode == "pixels":
+        # replicated docs share the base corpus's payloads (a realistic
+        # media-dedup shape).  The store is a stored INPUT table, not
+        # per-query work: materialized once, so the per-run clear keeps
+        # it; re-rendering PNGs per run was the dominant variance in the
+        # pixels pair (BENCH.md "Reading the pixels 0.762")
+        from apple_ocr_backend_spark.sources.derived import (
+            media_from_documents)
+        media = media_from_documents(spark, SF_DIR).localCheckpoint()
+    its = timed(lambda: run_noop(extract_docs(docs, media=media)), iters, 1)
+    sec = round(median_sec(its), 3)
+    return {"iters": {mode: its},
+            "result": {"n_docs": n_docs, "sec": sec,
+                       "docs_per_sec": round(n_docs / sec, 2)}}
+
+
+def image_point(spark) -> dict:
+    """The full ROI chain (render PNG -> decode -> glare-reduce -> CLAHE ->
+    bilateral -> adaptive threshold -> projection -> band extraction) over
+    ``IMAGE_DOCS`` synthetic ids: docs/s, best of 2 after a warmup, and the
+    ROI count (0 would mean the chain produced nothing)."""
+    from apple_ocr_backend_spark.operators.image_extract import (
+        extract_rois, render_media)
+    cores = spark.sparkContext.defaultParallelism
+    ids = (spark.range(IMAGE_DOCS).withColumnRenamed("id", "doc_id")
+           .repartition(cores * 4, "doc_id"))
+    rois = []
+    its = timed(lambda: rois.append(
+        extract_rois(render_media(ids, rotate=False)).count()), 2, 1)
+    return {"iters": {"image": its},
+            "result": {"docs": IMAGE_DOCS, "rois": rois[-1],
+                       "docs_per_sec": round(IMAGE_DOCS / best_sec(its), 1)}}
+
+
+def skew_point(spark) -> dict:
+    """The spans-size-aware salting lever on giant multi-page docs: salting
+    on (budget 256: a 200k-span doc spreads over ~781 salts) vs off (the
+    whole doc in one task), median of 3 after a warmup.  Correctness under
+    salting: tests/test_pipeline_parity.py::test_giant_doc_salting."""
+    from apple_ocr_backend_spark.config import ExtractConfig
+    from apple_ocr_backend_spark.plans.pipeline import extract_docs
+    docs = (replicated_docs(spark, SF_DIR, 2)
+            .unionByName(giant_docs(spark, 2, 200_000)).localCheckpoint())
+    iters = {}
+    for label, budget in (("salted", 256), ("unsalted", 1_000_000_000)):
+        cfg = ExtractConfig(salt_span_budget=budget)
+        iters[label] = timed(lambda: run_noop(extract_docs(docs, cfg)), 3, 1)
+    return {"iters": iters,
+            "result": {"n_docs": docs.count(), "giants": 2,
+                       "spans_each": 200_000,
+                       "speedup": round(median_sec(iters["unsalted"])
+                                        / median_sec(iters["salted"]), 2)}}
+
+
+def dedup_point(spark) -> dict:
+    """Verified dedup cost tracks CANDIDATE COUNT, not corpus^2:
+    ``jaccard_verify`` over LSH candidate subsets of shrinking size on the
+    same corpus (an all-pairs plan would cost the same on every subset),
+    median of 3 after a warmup."""
+    from pyspark.sql import functions as F
+    from apple_ocr_backend_spark.operators import dedup as DD
+    from apple_ocr_backend_spark.plans.catalog import _dup_corpus
+    corpus = (_dup_corpus(spark, SF_DIR)
+              .filter((F.col("doc_id") % 100000) < 1000).localCheckpoint())
+    cands = DD.lsh_candidate_pairs(corpus, "doc_id", "text",
+                                   k=12, bands=4).localCheckpoint()
+    iters, res = {}, {"n_docs": corpus.count(),
+                      "n_candidates_full": cands.count()}
+    for pct in (100, 50, 25):
+        sub = cands.filter(F.pmod(F.xxhash64("id_a", "id_b"), F.lit(100))
+                           < pct).localCheckpoint()
+        iters[f"pct{pct}"] = timed(lambda: run_noop(
+            DD.jaccard_verify(corpus, sub, "doc_id", "text")), 3, 1)
+        res[f"pct{pct}"] = {"n_candidates": sub.count(),
+                            "median_sec": median_sec(iters[f"pct{pct}"])}
+    return {"iters": iters, "result": res}
+
+
+def catalog_point(spark) -> dict:
+    """Every catalog entry, best of 2, with each run's steal ticks beside
+    it so a slow entry is attributable to the host rather than guessed
+    at."""
+    from apple_ocr_backend_spark.plans.catalog import queries
+    iters = time_queries(spark, list(queries()))
+    return {"iters": iters,
+            "result": {"n_queries": len(iters),
+                       "total_sec": round(sum(map(best_sec, iters.values())),
+                                          3)}}
+
+
+def session_skew_point(spark) -> dict:
+    """Hot-entity sessionization: one user with ``HOT_EVENTS`` events (vs
+    the sf corpus's normal users).  The single window sorts that user in
+    one task; ``sessionize_two_phase`` bounds the slice by a 6 h bucket
+    (row-identical output).  Median of 3 after a warmup."""
+    from pyspark.sql import functions as F
+    from apple_ocr_backend_spark.operators.temporal import (
+        sessionize, sessionize_two_phase)
+    base = (spark.read.parquet(f"{SF_DIR}/events.parquet")
+            .select("event_id", "user_id", "ts", "value"))
+    # hot user -1: 10 s cadence with an hour jump every 200 events ->
+    # ~10k real sessions spread over ~7 months of coarse buckets
+    hot = (spark.range(HOT_EVENTS).select(
+        (F.lit(10_000_000) + F.col("id")).alias("event_id"),
+        F.lit(-1).cast("long").alias("user_id"),
+        F.timestamp_seconds(
+            F.lit(1_700_000_000) + F.col("id") * 10
+            + F.floor(F.col("id") / 200) * 3600).alias("ts"),
+        (F.col("id") % 97).cast("double").alias("value")))
+    ev = base.unionByName(hot).localCheckpoint()
+    iters = {
+        "single_window": timed(lambda: run_noop(sessionize(ev, 30)), 3, 1),
+        "two_phase": timed(lambda: run_noop(sessionize_two_phase(
+            ev, 30, bucket_minutes=360)), 3, 1)}
+    return {"iters": iters,
+            "result": {"n_events": ev.count(), "hot_events": HOT_EVENTS,
+                       "speedup": round(median_sec(iters["single_window"])
+                                        / median_sec(iters["two_phase"]),
+                                        2)}}
+
+
 def _poll_worker_hwm(stop, result: dict, interval: float = 0.2) -> None:
     """Track the peak VmHWM (resident high-water, MB) across pyspark worker
-    processes — the per-task memory evidence for the fused kernel's
-    streaming-per-batch claim."""
+    processes."""
     import glob
     peak = 0
     while not stop.is_set():
@@ -172,587 +355,205 @@ def _poll_worker_hwm(stop, result: dict, interval: float = 0.2) -> None:
     result["peak_mb"] = peak
 
 
-def dedup_mode() -> None:
-    """Evidence that verified dedup cost tracks CANDIDATE COUNT, not corpus²:
-    same corpus, candidate subsets of decreasing size — the candidate-bounded
-    jaccard_verify gets cheaper as candidates shrink (an all-pairs shape
-    would cost the same regardless).  Appends results to BENCH.md."""
-    import statistics
-    from pyspark.sql import functions as F
-    from apple_ocr_backend_spark.operators import dedup as DD
-    from apple_ocr_backend_spark.plans.catalog import _dup_corpus
-    spark = make_spark(f"local[{CPUS}]")
-    try:
-        sys.path.insert(0, REPO)
-        corpus = (_dup_corpus(spark, SF_DIR)
-                  .filter((F.col("doc_id") % 100000) < 1000).persist())
-        n_docs = corpus.count()
-        cands = DD.lsh_candidate_pairs(corpus, "doc_id", "text",
-                                       k=12, bands=4).persist()
-        n_cands = cands.count()
-        rows = []
-        for pct in (100, 50, 25):
-            sub = (cands.filter(
-                F.pmod(F.xxhash64("id_a", "id_b"), F.lit(100)) < pct)
-                .persist())
-            n_sub = sub.count()
-            run_noop(DD.jaccard_verify(corpus, sub, "doc_id", "text"))  # warm
-            times = []
-            for _ in range(3):
-                t0 = time.time()
-                run_noop(DD.jaccard_verify(corpus, sub, "doc_id", "text"))
-                times.append(round(time.time() - t0, 2))
-            rows.append({"pct": pct, "n_candidates": n_sub,
-                         "iters": times, "median": statistics.median(times)})
-            sub.unpersist()
-        report = {"n_docs": n_docs, "n_candidates_full": n_cands,
-                  "points": rows}
-        with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-            f.write(
-                "\n## Verified-dedup cost tracks candidate count\n\n"
-                f"Same corpus ({n_docs} docs incl. exact+near dups), "
-                "`jaccard_verify` over LSH candidate subsets of shrinking "
-                f"size, local[{CPUS}], median of 3 after warmup:\n\n"
-                "| candidates | median s | iters |\n|---|---|---|\n")
-            for r in rows:
-                f.write(f"| {r['n_candidates']} ({r['pct']}%) | "
-                        f"{r['median']} | {r['iters']} |\n")
-            f.write(
-                "\nAn all-pairs plan would be flat across rows (the corpus "
-                "never changes); the decreasing cost shows the exact-Jaccard "
-                "work is bounded by the candidate set — the property the "
-                "round-1 verdict found violated and this round fixed "
-                "(`operators/dedup.py::jaccard_verify`).\n")
-        print(json.dumps(report))
-    finally:
-        spark.stop()
-
-
-def catalog_mode() -> None:
-    """Steal-annotated FULL-catalog pin (round-3 verdict #7): every catalog
-    entry at SF_DIR, best of 2 cache-cleared runs, with the per-run
-    hypervisor steal ticks beside each number so a slow entry is
-    attributable to host oversubscription rather than guessed at.  Appends
-    the table to BENCH.md and prints one JSON line."""
-    from apple_ocr_backend_spark.plans.catalog import queries
-    spark = make_spark(f"local[{CPUS}]")
-    try:
-        sys.path.insert(0, REPO)
-        rows = []
-        for name, fn in queries().items():
-            iters = []
-            for _ in range(2):
-                spark.catalog.clearCache()
-                s0 = _steal_ticks()
-                t0 = time.time()
-                run_noop(fn(spark, SF_DIR))
-                dt = round(time.time() - t0, 3)
-                s1 = _steal_ticks()
-                st = (s1 - s0) if s0 is not None and s1 is not None else None
-                iters.append((dt, st))
-            best = min(iters, key=lambda x: x[0])
-            rows.append({"query": name, "sec": best[0], "steal": best[1],
-                         "iters": iters})
-    finally:
-        spark.stop()
-    total = round(sum(r["sec"] for r in rows), 3)
-    with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-        f.write(
-            "\n## Full-catalog pin (steal-annotated)\n\n"
-            f"All {len(rows)} catalog entries at `{SF_DIR}`, "
-            f"local[{CPUS}], best of 2 cache-cleared runs; the steal "
-            "column is the hypervisor steal-tick delta (/proc/stat) "
-            "during the reported run — a nonzero-steal number measures "
-            "the host, not the plan.\n\n"
-            "| query | sec | steal ticks | both iters (sec, steal) |\n"
-            "|---|---|---|---|\n")
-        for r in rows:
-            f.write(f"| {r['query']} | {r['sec']} | {r['steal']} | "
-                    f"{r['iters']} |\n")
-        f.write(f"\nTotal (best-run sum): {total} s.\n")
-    print(json.dumps({"n_queries": len(rows), "total_sec": total,
-                      "rows": rows}))
-
-
-def session_skew_mode() -> None:
-    """Hot-entity sessionization study: one user with ~2M events (vs the
-    sf corpus's normal users).  Single-window sessionize serializes that
-    user into one task; sessionize_two_phase bounds the slice by the
-    coarse bucket.  Appends results to BENCH.md."""
-    import statistics
-    from pyspark.sql import functions as F
-    from apple_ocr_backend_spark.operators.temporal import (
-        sessionize, sessionize_two_phase)
-    n_hot = int(os.environ.get("SPARK_GRAFT_HOT_EVENTS", "2000000"))
-    spark = make_spark(f"local[{CPUS}]")
-    try:
-        sys.path.insert(0, REPO)
-        base = (spark.read.parquet(f"{SF_DIR}/events.parquet")
-                .select("event_id", "user_id", "ts", "value"))
-        # hot user -1: 10 s cadence with an hour jump every 200 events ->
-        # ~10k real sessions spread over ~7 months of coarse buckets
-        hot = (spark.range(n_hot).select(
-            (F.lit(10_000_000) + F.col("id")).alias("event_id"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.timestamp_seconds(
-                F.lit(1_700_000_000) + F.col("id") * 10
-                + F.floor(F.col("id") / 200) * 3600).alias("ts"),
-            (F.col("id") % 97).cast("double").alias("value")))
-        ev = base.unionByName(hot).localCheckpoint()
-        n = ev.count()
-        res = {}
-        for label, fn in (
-                ("single_window", lambda d: sessionize(d, 30)),
-                ("two_phase",
-                 lambda d: sessionize_two_phase(d, 30, bucket_minutes=360))):
-            run_noop(fn(ev))  # warmup
-            times = []
-            for _ in range(3):
-                t0 = time.time()
-                run_noop(fn(ev))
-                times.append(round(time.time() - t0, 2))
-            res[label] = {"iters": times,
-                          "median": statistics.median(times)}
-        report = {"n_events": n, "hot_events": n_hot, **res,
-                  "speedup": round(res["single_window"]["median"]
-                                   / res["two_phase"]["median"], 2)}
-        with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-            f.write(
-                "\n## Hot-entity sessionization (two-phase vs single "
-                "window)\n\n"
-                f"Corpus: {n} events incl. ONE user with {n_hot} events "
-                f"(~10k true sessions), local[{CPUS}], median of 3 after "
-                "warmup.  The single window sorts the hot user in one "
-                "task; the two-phase form pre-sessionizes per (user, 6h "
-                "bucket) and merges boundary sessions (row-identical "
-                "output — same DuckDB oracle + skew parity test).\n\n"
-                f"- single window: {res['single_window']['iters']} s "
-                f"(median {res['single_window']['median']})\n"
-                f"- two-phase:     {res['two_phase']['iters']} s "
-                f"(median {res['two_phase']['median']})\n"
-                f"- **speedup {report['speedup']}x** — and the two-phase "
-                "task bound is what matters at 10^9-event entities, where "
-                "the single window simply cannot finish.\n")
-        print(json.dumps(report))
-    finally:
-        spark.stop()
-
-
-def bench_queries(spark, sf_dir: str) -> dict[str, float]:
-    """Representative catalog queries (relational core + training-data ops)."""
-    from apple_ocr_backend_spark.plans.catalog import queries
-    q = queries()
-    names = ["pricing_summary", "top_customer_per_nation", "event_score_agg",
-             "stats_cube", "sliding_windows", "text_stats", "token_stats_bpe",
-             "quality_filter", "events_json", "dedup_exact",
-             "dedup_minhash_lsh", "dedup_lsh_verified", "dedup_components",
-             "dedup_simhash", "ann_bruteforce", "ann_ivf", "ann_ivf_fitted",
-             "ann_ivf_nprobe", "serial_validate", "client_validate",
-             "history_keyset",
-             "multimodal_frames",
-             # round-3 training-pipeline entries
-             "sample_split", "pack_sequences", "quality_repetition",
-             "pii_mask", "dedup_incremental", "events_asof",
-             "events_sessionize", "events_sessionize_salted",
-             "training_mix", "length_quantiles", "lang_id_multi",
-             "decontaminate", "vocab_topk", "rolling_active_users",
-             "quality_perplexity", "dedup_spans", "dedup_spans_clean",
-             # round-5 sketch-tier siblings
-             "rolling_active_users_approx", "length_quantiles_approx",
-             "dedup_embedding",
-             # round-5 real image payload path (PNG codec + numpy kernels)
-             "image_rois", "image_rois_nms", "image_orientation",
-             "image_ocr", "image_ocr_fallback",
-             "extract_pipeline_pixels",
-             # round-5 real audio payload path (WAV codec, chunk-walking)
-             "audio_decode_stats",
-             # round-5 real video payload path (AVI codec, nested-RIFF walk)
-             "video_frame_stats", "video_ocr_tta"]
-    times = {}
-    for name in names:
-        # two timed runs, report the min: the first execution of a query in
-        # a JVM pays whole-stage-codegen compilation and Python-worker forks
-        # (measured 5-8s one-offs on the heavier plans), which say nothing
-        # about the 100 TB regime where a stage runs for minutes.  The cache
-        # is cleared before each run — distinct queries can share cached
-        # subplans (e.g. the LSH signature frame of dedup_minhash_lsh and
-        # dedup_components is plan-identical) and lazily persisted subtrees
-        # would otherwise make run 2 measure cache reads.
-        best = None
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            run_noop(q[name](spark, sf_dir))
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        times[name] = round(best, 3)
-    return times
-
-
-def bench_extraction(spark, sf_dir: str, replicate: int,
-                     iters: int = 1,
-                     modes: tuple = ("fused",)) -> dict:
-    """Time the extraction pipeline.  With iters > 1, one untimed warmup runs
-    first and the reported value is the median of the timed iterations —
-    first-execution effects (JIT of generated code, Python worker forks, GC
-    adaptation) are ~10x steady state on this box and don't scale with
-    cores, so cold-run numbers say nothing about the 100 TB regime where
-    stages run for minutes."""
-    import statistics
-    from apple_ocr_backend_spark.plans.pipeline import extract_docs
-    docs = replicated_docs(spark, sf_dir, replicate)
-    n_docs = docs.count()
-    out = {"n_docs": n_docs}
-    media = None
-    if "pixels" in modes:
-        # the pixels variant resolves image media_refs against the binary
-        # media store; replicated docs share the base corpus's payloads
-        # (a realistic media-dedup shape — the per-span OCR work is
-        # identical either way)
-        from apple_ocr_backend_spark.sources.derived import (
-            media_from_documents)
-        # materialize the store ONCE per JVM (localCheckpoint survives the
-        # per-iteration clearCache): in production the media store is a
-        # stored INPUT table, not per-query work — re-rendering the PNGs
-        # every timed iteration both mis-charges the pipeline and was the
-        # dominant variance in the pixels pair (±20%/iteration vs the
-        # token path's ±3%; BENCH.md "Reading the pixels 0.762")
-        media = media_from_documents(spark, sf_dir).localCheckpoint()
-
-    def build(mode):
-        return extract_docs(docs, media=media if mode == "pixels" else None)
-
-    for mode in modes:
-        # clearCache between runs: the pipeline persist()s shared subplans,
-        # and Spark's CacheManager matches structurally identical plans —
-        # without the clear, iteration 2+ of the SAME query reads cached
-        # blocks and measures cache bandwidth, not the pipeline
-        if iters > 1:
-            spark.catalog.clearCache()
-            run_noop(build(mode))  # warmup
-        times, steals = [], []
-        for _ in range(iters):
-            spark.catalog.clearCache()
-            s0 = _steal_ticks()
-            t0 = time.time()
-            run_noop(build(mode))
-            times.append(time.time() - t0)
-            s1 = _steal_ticks()
-            steals.append(s1 - s0 if s0 is not None and s1 is not None
-                          else None)
-        t = statistics.median(times)
-        out[f"extract_{mode}_sec"] = round(t, 3)
-        out[f"docs_per_sec_{mode}"] = round(n_docs / t, 2)
-        out[f"iters_{mode}"] = [round(x, 3) for x in times]
-        out[f"steal_{mode}"] = steals
-    return out
-
-
-def single_run(master: str, extraction_only: bool) -> dict:
-    sys.path.insert(0, REPO)
-    modes = tuple(os.environ.get("SPARK_GRAFT_BENCH_MODES",
-                                 "fused").split(","))
-    spark = make_spark(master)
-    try:
-        # default mode also warms up + medians (2 iters): cold-run stalls on
-        # this guest are ~5x steady state and would dominate a single sample
-        iters = 3 if extraction_only else 2
-        ext = bench_extraction(spark, SF_DIR, REPLICATE, iters=iters,
-                               modes=modes)
-        queries = {} if extraction_only else bench_queries(spark, SF_DIR)
-    finally:
-        spark.stop()
-    out = {"master": master, "sf_dir": SF_DIR, **ext, "queries": queries}
-    return out
-
-
-def child(master: str, extraction_only: bool, replicate: int | None = None,
-          modes: str | None = None) -> dict:
-    """Fresh JVM per master — required for a fair parallelism comparison."""
-    env = dict(os.environ, SPARK_GRAFT_BENCH_CHILD=master,
-               SPARK_GRAFT_BENCH_EXTRACTION_ONLY=str(int(extraction_only)))
-    if replicate is not None:
-        env["SPARK_GRAFT_REPLICATE"] = str(replicate)
-    if modes is not None:
-        env["SPARK_GRAFT_BENCH_MODES"] = modes
-    # scaling children default to a larger corpus so fixed per-job costs
-    # (planning, AQE, job scheduling) don't mask the scalable work
-    env.setdefault("SPARK_GRAFT_REPLICATE", "32")
-    p = subprocess.run([sys.executable, os.path.abspath(__file__)], env=env,
-                       capture_output=True, text=True, cwd=REPO)
-    if p.returncode != 0:
-        sys.stderr.write(p.stdout + p.stderr)
-        raise RuntimeError(f"bench child {master} failed")
-    return json.loads(p.stdout.strip().splitlines()[-1])
-
-
-def scaling_mode() -> None:
-    pts = {m: child(f"local[{m}]", extraction_only=True) for m in (2, 8, 32)}
-    d2, d8, d32 = (pts[m]["docs_per_sec_fused"] for m in (2, 8, 32))
-    eff = {"fused": {"2to8": round((d8 / d2) / 4, 3),
-                     "8to32": round((d32 / d8) / 4, 3)}}
-    report = {"n_docs": pts[8]["n_docs"], "sf_dir": SF_DIR,
-              "points": {f"local{m}": p for m, p in pts.items()},
-              "scaling_efficiency": eff}
-    with open(os.path.join(REPO, "BENCH.md"), "w") as f:
-        f.write(render_bench_md(report))
-    print(json.dumps(report))
-
-
-def scaling_pair_mode() -> None:
-    """Fresh N→4N evidence for the current round WITHOUT rewriting
-    BENCH.md (--scaling regenerates the whole file; this appends one
-    section): fused extraction at local[2] and local[8] on the identical
-    replicated corpus, fresh JVM per master, per-iteration steal ticks."""
-    reps = int(os.environ.get("SPARK_GRAFT_REPLICATE", "32"))
-    mode = os.environ.get("SPARK_GRAFT_BENCH_SCALING_MODE", "fused")
-    pts = {m: child(f"local[{m}]", extraction_only=True, replicate=reps,
-                    modes=mode) for m in (2, 8)}
-    d2 = pts[2][f"docs_per_sec_{mode}"]
-    d8 = pts[8][f"docs_per_sec_{mode}"]
-    eff = round((d8 / d2) / 4, 3)
-    report = {"n_docs": pts[8]["n_docs"], "replicate": reps, "mode": mode,
-              "local2": pts[2], "local8": pts[8], "eff_2to8": eff}
-    rnd = os.environ.get("SPARK_GRAFT_ROUND", "5")
-    with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-        f.write(
-            f"\n## Round-{rnd} N→4N re-pin ({mode}, local[2]→local[8])\n\n"
-            f"Same protocol as the headline table ({report['n_docs']} "
-            "docs, fresh JVM per master, warmup + median of 3, cache "
-            f"cleared per iteration), re-measured on the round-{rnd} "
-            "code:\n\n"
-            "| master | docs/s | iters (s) | steal ticks/iter |\n"
-            "|---|---|---|---|\n"
-            f"| local[2] | {d2} | {pts[2][f'iters_{mode}']} | "
-            f"{pts[2][f'steal_{mode}']} |\n"
-            f"| local[8] | {d8} | {pts[8][f'iters_{mode}']} | "
-            f"{pts[8][f'steal_{mode}']} |\n\n"
-            f"Scaling efficiency 2→8 = **{eff}** "
-            "(north-rule target ≥ 0.8).\n")
-    print(json.dumps(report))
-
-
-def scaling_large_mode() -> None:
-    """One larger-corpus scaling point for the 8→32 pair (round-2 verdict
-    #9): REPLICATE 96 (~384k docs) makes the fused stages run for minutes —
-    the closest this sandbox gets to the 100 TB regime's long-stage
-    behavior, where fixed per-job costs vanish and steal spikes average
-    out.  Per-iteration steal ticks are logged so a slow iteration is
-    attributable.  Appends to BENCH.md."""
-    reps = int(os.environ.get("SPARK_GRAFT_REPLICATE_LARGE", "96"))
-    pts = {m: child(f"local[{m}]", extraction_only=True, replicate=reps,
-                    modes="fused") for m in (8, 32)}
-    d8 = pts[8]["docs_per_sec_fused"]
-    d32 = pts[32]["docs_per_sec_fused"]
-    eff = round((d32 / d8) / 4, 3)
-    report = {"n_docs": pts[8]["n_docs"], "replicate": reps,
-              "local8": pts[8], "local32": pts[32], "eff_8to32": eff}
-    with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-        f.write(
-            "\n## Larger-corpus scaling point (8→32, minutes-long stages)\n\n"
-            f"Fused mode, REPLICATE={reps} ({report['n_docs']} docs — stage "
-            "runtimes in the minutes, where fixed per-job costs are noise "
-            "and short steal spikes average out), fresh JVM per master, "
-            "median of 3 after warmup, per-iteration hypervisor steal ticks "
-            "from /proc/stat beside each time:\n\n"
-            "| master | docs/s | iters (s) | steal ticks/iter |\n"
-            "|---|---|---|---|\n"
-            f"| local[8] | {d8} | {pts[8]['iters_fused']} | "
-            f"{pts[8]['steal_fused']} |\n"
-            f"| local[32] | {d32} | {pts[32]['iters_fused']} | "
-            f"{pts[32]['steal_fused']} |\n\n"
-            f"Scaling efficiency 8→32 = {eff} "
-            "(raw-CPU calibration ceiling for this pair on this guest: "
-            "0.74 quiet — see calibration section).\n")
-    print(json.dumps(report))
-
-
-def memory_child(batch_rows: int) -> dict:
-    """Per-task memory probe for the fused kernel (round-2 verdict #1 done
-    criterion): two 200k-span giant docs, salting OFF so each doc is ONE
-    partition, local[4].  ``batch_rows`` is Arrow
-    ``maxRecordsPerBatch`` — 2048 exercises the streaming-per-batch kernel;
-    a value larger than the partition makes the JVM ship the whole
-    partition as one Arrow batch, reproducing the round-2 whole-partition
-    buffering footprint for the before/after comparison."""
+def memory_point(spark) -> dict:
+    """Fused-kernel per-task memory: two 200k-span giant docs, salting OFF
+    so each doc is ONE partition; peak worker VmHWM polled from /proc
+    during one run.  The study varies Arrow ``maxRecordsPerBatch``: the
+    default streams per batch, a value larger than the partition ships the
+    whole partition as one batch (the round-2 buffered footprint)."""
     import threading
     from apple_ocr_backend_spark.config import ExtractConfig
     from apple_ocr_backend_spark.plans.pipeline import extract_docs
-    sys.path.insert(0, REPO)
-    spark = make_spark("local[4]")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_rows))
+    docs = giant_docs(spark, 2, 200_000).localCheckpoint()
+    cfg = ExtractConfig(salt_span_budget=1_000_000_000)
+    stop, peak = threading.Event(), {}
+    th = threading.Thread(target=_poll_worker_hwm, args=(stop, peak))
+    th.start()
     try:
-        docs = giant_docs(spark, 2, 200_000).localCheckpoint()
-        n = docs.count()
-        cfg = ExtractConfig(salt_span_budget=1_000_000_000)
-        stop = threading.Event()
-        res: dict = {}
-        th = threading.Thread(target=_poll_worker_hwm, args=(stop, res))
-        th.start()
-        t0 = time.time()
-        run_noop(extract_docs(docs, cfg))
-        dt = time.time() - t0
+        its = timed(lambda: run_noop(extract_docs(docs, cfg)), 1)
+    finally:
         stop.set()
         th.join()
-        return {"batch_rows": batch_rows, "n_docs": n, "sec": round(dt, 2),
-                "worker_peak_rss_mb": res.get("peak_mb")}
+    return {"iters": {"run": its},
+            "result": {"n_docs": docs.count(),
+                       "worker_peak_rss_mb": peak.get("peak_mb")}}
+
+
+POINTS = {"extract": extract_point, "image": image_point, "skew": skew_point,
+          "dedup": dedup_point, "catalog": catalog_point,
+          "session_skew": session_skew_point, "memory": memory_point}
+
+
+def point(spec: dict) -> dict:
+    """One measurement in this process: a session at ``spec["master"]``
+    (plus ``spec["extra_conf"]``), ``POINTS[spec["fn"]]`` with
+    ``spec["args"]``, and the session's resolved config."""
+    spark = make_spark(spec["master"], spec.get("extra_conf"))
+    try:
+        out = POINTS[spec["fn"]](spark, **spec.get("args", {}))
+        out["conf"] = session_conf(spark)
+        return out
     finally:
         spark.stop()
 
 
-def memory_mode() -> None:
-    """Fused-kernel memory high-water study: streaming per Arrow batch
-    (8192 rows, the session default) vs whole-partition-as-one-batch (the
-    round-2 buffered footprint).  Fresh JVM per point — VmHWM is monotone
-    per process, so reused workers would smear the two measurements
-    together.  Appends to BENCH.md."""
-    pts = {}
-    for rows in (8192, 1_000_000):
-        env = dict(os.environ, SPARK_GRAFT_BENCH_MEMORY=str(rows))
-        p = subprocess.run([sys.executable, os.path.abspath(__file__)],
-                           env=env, capture_output=True, text=True, cwd=REPO)
-        if p.returncode != 0:
-            sys.stderr.write(p.stdout + p.stderr)
-            raise RuntimeError(f"memory child {rows} failed")
-        pts[rows] = json.loads(p.stdout.strip().splitlines()[-1])
-    small, big = pts[8192], pts[1_000_000]
-    report = {"streaming_8192": small, "whole_partition": big,
-              "rss_ratio": round(big["worker_peak_rss_mb"]
-                                 / max(small["worker_peak_rss_mb"], 1), 2)}
-    with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-        f.write(
-            "\n## Fused-kernel per-task memory high-water\n\n"
-            "Two 200,000-span giant docs, salting OFF (each doc = ONE "
-            "partition), local[4], fresh JVM per point; peak worker VmHWM "
-            "polled from /proc while the fused extraction runs.\n\n"
-            "| kernel input | worker peak RSS (MB) | wall (s) |\n"
-            "|---|---|---|\n"
-            f"| streaming per 8192-row Arrow batch (session default) | "
-            f"{small['worker_peak_rss_mb']} | {small['sec']} |\n"
-            f"| whole partition as one batch (round-2 buffered footprint) | "
-            f"{big['worker_peak_rss_mb']} | {big['sec']} |\n\n"
-            f"Peak-RSS ratio {report['rss_ratio']}x: the per-batch kernel "
-            "bounds task memory by ONE Arrow batch regardless of partition "
-            "size — the property that keeps fat salted partitions from "
-            "OOMing executors at 100 TB (correctness of batch-straddling "
-            "groups is pinned by tests/test_pipeline_parity.py::"
-            "test_fused_kernel_streams_per_batch).\n")
-    print(json.dumps(report))
+def fresh_jvm(spec: dict) -> dict:
+    """``point(spec)`` in a new interpreter and JVM: one process cannot
+    restart its SparkSession with another master reliably, and worker
+    VmHWM is monotone per process.  Returns the child's last stdout
+    line; Spark logs stream to stderr."""
+    p = subprocess.run([sys.executable, os.path.abspath(__file__),
+                        "--child", json.dumps(spec)],
+                       stdout=subprocess.PIPE, text=True, cwd=REPO)
+    if p.returncode != 0:
+        sys.stderr.write(p.stdout)
+        raise RuntimeError(f"bench child failed: {spec}")
+    return json.loads(p.stdout.strip().splitlines()[-1])
 
 
-def render_bench_md(r: dict) -> str:
-    e = r["scaling_efficiency"]
-    p = r["points"]
-
-    def row(mode):
-        return (f"| {mode} | {p['local2'][f'docs_per_sec_{mode}']} | "
-                f"{p['local8'][f'docs_per_sec_{mode}']} | "
-                f"{p['local32'][f'docs_per_sec_{mode}']} | "
-                f"**{e[mode]['2to8']}** | {e[mode]['8to32']} |")
-
-    lines = [
-        "# BENCH — throughput + N→4N scaling efficiency",
-        "",
-        "North metric (BASELINE.json): documents/sec end-to-end extraction",
-        "throughput with N→4N executor scaling efficiency ≥ 0.8.  No real",
-        "cluster exists in this sandbox, so the same job runs at multiple",
-        "parallelism levels on identical input (fresh JVM per level) — the",
-        "sanctioned evidence protocol (BASELINE.md).  The N→4N pair is",
-        "**local[2] → local[8]** (2 and 8 dedicated cores); local[32] is",
-        "reported as a third point, but this virtualized guest shows 5–30%",
-        "hypervisor CPU steal under full 32-vCPU load (measured via /proc/stat",
-        "steal ticks during runs; dmesg logs 395 ms hrtimer stalls), so the",
-        "32-core point measures the host's oversubscription, not the plan's",
-        "scalability — raw-CPU calibration (pure-Python multiprocessing of the",
-        "same extraction kernels) scales 8→32 at 0.87 when the host is quiet.",
-        "",
-        f"Corpus: {r['n_docs']} interleaved docs (3 spans each: html/pdf/image)",
-        f"derived JVM-side from `{r['sf_dir']}/documents.parquet`.",
-        "",
-        "| mode | local[2] docs/s | local[8] docs/s | local[32] docs/s |"
-        " eff 2→8 (≥0.8 target) | eff 8→32 |",
-        "|---|---|---|---|---|---|",
-        row("fused"),
-        "",
-        "Efficiency N→4N = (docs_per_sec@4N / docs_per_sec@N) / 4.",
-        "",
-        "Protocol: fresh JVM per master; one untimed warmup, then",
-        "median of 3 timed iterations (cold-run JIT/worker-fork/GC-adaptation",
-        "effects are ~10x steady state here and do not scale with cores; at",
-        "the 100 TB design point stages run for minutes and warmup is noise).",
-        "The Spark cache is CLEARED before every timed iteration: the",
-        "pipeline lazily persists shared subplans and Spark's CacheManager",
-        "matches structurally identical plans, so without the clear a repeat",
-        "iteration of the same query measures cache reads, not the pipeline.",
-        "",
-        "Raw iterations (sec):",
-        "",
-    ] + [
-        f"- local[{m}] fused {p[f'local{m}'].get('iters_fused')}"
-        for m in (2, 8, 32)
-    ] + [
-        "",
-        "Reference single-node baseline (BASELINE.md): ~0.08–0.23 docs/s per",
-        "worker on the serving path; this batch pipeline reaches",
-        f"{p['local32']['docs_per_sec_fused']} docs/s on one 32-core box",
-        f"({round(p['local32']['docs_per_sec_fused'] / 32, 1)} docs/s/core).",
-        "",
-        "`fused` is the one extraction plan: one `mapInArrow` pass",
-        "dispatches all four kernels per Arrow batch (OCR early stop per",
-        "span inside the kernel) and emits per-(doc,salt) sorted partial",
-        "span arrays, so the JVM does a single compact merge shuffle.", "",
-    ]
-    return chr(10).join(lines)
+def efficiency(points: list[tuple[int, float]]) -> dict[str, float]:
+    """Scaling efficiency of each adjacent ``(cores, docs/s)`` pair:
+    ``(d_j / d_i) / (m_j / m_i)``, 1.0 for perfect scaling."""
+    return {f"{m_i}to{m_j}": round((d_j / d_i) / (m_j / m_i), 3)
+            for (m_i, d_i), (m_j, d_j) in zip(points, points[1:])}
 
 
-def main() -> None:
-    mem_child = os.environ.get("SPARK_GRAFT_BENCH_MEMORY")
-    if mem_child:
-        print(json.dumps(memory_child(int(mem_child))))
-        return
-    child_master = os.environ.get("SPARK_GRAFT_BENCH_CHILD")
-    if child_master:
-        ext_only = os.environ.get(
-            "SPARK_GRAFT_BENCH_EXTRACTION_ONLY", "0") == "1"
-        print(json.dumps(single_run(child_master, ext_only)))
-        return
-    if "--scaling" in sys.argv:
-        scaling_mode()
-        return
-    if "--scaling-large" in sys.argv:
-        scaling_large_mode()
-        return
-    if "--scaling-pair" in sys.argv:
-        scaling_pair_mode()
-        return
-    if "--memory" in sys.argv:
-        memory_mode()
-        return
-    if "--skew" in sys.argv:
-        skew_mode()
-        return
-    if "--dedup" in sys.argv:
-        dedup_mode()
-        return
-    if "--catalog" in sys.argv:
-        catalog_mode()
-        return
-    if "--session-skew" in sys.argv:
-        session_skew_mode()
-        return
-    r = single_run(f"local[{CPUS}]", extraction_only=False)
-    qtimes = dict(r["queries"])
-    qtimes["extract_fused"] = r["extract_fused_sec"]
-    total = round(sum(qtimes.values()), 3)
+def _single(points: list[dict]) -> dict:
+    return points[0]["result"]
+
+
+def _rss_ratio(points: list[dict]) -> dict:
+    small, big = (p["result"]["worker_peak_rss_mb"] for p in points)
+    return {"worker_peak_rss_mb": [small, big],
+            "rss_ratio": round(big / max(small, 1), 2)}
+
+
+# name -> (point specs, one fresh JVM each; reducer over their outputs);
+# a spec without "master" runs at local[$SPARK_GRAFT_CPUS]
+STUDIES = {
+    "skew": ([{"fn": "skew"}], _single),
+    "dedup": ([{"fn": "dedup"}], _single),
+    "catalog": ([{"fn": "catalog"}], _single),
+    "session_skew": ([{"fn": "session_skew"}], _single),
+    "image": ([{"fn": "image"}], _single),
+    # fresh JVM per point: VmHWM is monotone per process
+    "memory": ([{"fn": "memory", "master": "local[4]",
+                 "extra_conf": {BATCH_ROWS: str(rows)}}
+                for rows in (8192, 1_000_000)], _rss_ratio),
+}
+
+
+def scaling(kind: str, cores: list[int]) -> tuple[list[dict], object]:
+    """The N->4N evidence as a study: one point per core count on the
+    identical corpus, reduced to docs/s and each adjacent pair's
+    efficiency."""
+    fn, args = (("image", {}) if kind == "image" else
+                ("extract", {"mode": kind, "replicate": int(REPLICATE or 32)}))
+    specs = [{"fn": fn, "master": f"local[{n}]", "args": args} for n in cores]
+
+    def reduce(points: list[dict]) -> dict:
+        dps = [p["result"]["docs_per_sec"] for p in points]
+        return {"docs_per_sec": dps,
+                "efficiency": efficiency(list(zip(cores, dps)))}
+    return specs, reduce
+
+
+def _git_rev() -> str | None:
+    """The checkout's commit, suffixed ``-dirty`` when the working tree
+    differs from it, so a record names the code that produced it."""
+    try:
+        p = subprocess.run(["git", "describe", "--always", "--dirty"],
+                           cwd=REPO, capture_output=True, text=True)
+    except OSError:
+        return None
+    return p.stdout.strip() if p.returncode == 0 else None
+
+
+def append_record(path: str, rec: dict) -> None:
+    """Append ``rec`` as one sorted-key JSON line; earlier lines are never
+    rewritten."""
+    with open(path, "a") as f:
+        f.write(json.dumps(rec, sort_keys=True) + "\n")
+
+
+def run_study(study: str, specs: list[dict], reduce) -> dict:
+    specs = [{"master": f"local[{CPUS}]", **s} for s in specs]
+    points = [fresh_jvm(s) for s in specs]
+    rec = {"study": study, "params": specs, "points": points,
+           "result": reduce(points), "sf_dir": SF_DIR, "git": _git_rev(),
+           "utc": datetime.datetime.now(datetime.timezone.utc)
+           .isoformat(timespec="seconds")}
+    append_record(RECORDS, rec)
+    return rec
+
+
+def render(lines) -> str:
+    """The latest record per study (last line wins) as one markdown
+    table."""
+    latest = {}
+    for line in lines:
+        if line.strip():
+            rec = json.loads(line)
+            latest[rec["study"]] = rec
+    rows = ["| study | utc | git | sf_dir | master | result |",
+            "|---|---|---|---|---|---|"]
+    for name, r in sorted(latest.items()):
+        masters = ", ".join(s["master"] for s in r["params"])
+        rows.append(f"| {name} | {r['utc']} | {r['git'] or ''} | "
+                    f"{r['sf_dir']} | {masters} | "
+                    f"`{json.dumps(r['result'], sort_keys=True)}` |")
+    return "\n".join(rows)
+
+
+def driver() -> dict:
+    """The driver-contract line (see the module docstring)."""
+    spark = make_spark(f"local[{CPUS}]")
+    try:
+        # warmup + median of 2: cold-run stalls on this guest are ~5x
+        # steady state and would dominate a single sample
+        ext = extract_point(spark, "fused", int(REPLICATE or 4), iters=2)
+        qtimes = {name: best_sec(its) for name, its
+                  in time_queries(spark, DRIVER_QUERIES).items()}
+    finally:
+        spark.stop()
+    qtimes["extract_fused"] = ext["result"]["sec"]
     sf = SF_DIR.rstrip("/").split("/")[-1].replace("sf", "")
-    print(json.dumps({
-        "metric": "end_to_end_bench_sec", "value": total, "unit": "sec",
-        "queries": qtimes, "sf": float(sf) if sf else None,
-        "n_docs": r["n_docs"],
-        "docs_per_sec_fused": r["docs_per_sec_fused"],
-    }))
+    return {"metric": "end_to_end_bench_sec",
+            "value": round(sum(qtimes.values()), 3), "unit": "sec",
+            "queries": qtimes, "sf": float(sf) if sf else None,
+            "n_docs": ext["result"]["n_docs"],
+            "docs_per_sec_fused": ext["result"]["docs_per_sec"]}
+
+
+def main(argv: list[str]) -> None:
+    ap = argparse.ArgumentParser(description="Benchmark harness.")
+    g = ap.add_mutually_exclusive_group()
+    g.add_argument("--study", choices=sorted(STUDIES))
+    g.add_argument("--scaling", nargs=2, metavar=("KIND", "CORES"),
+                   help="fused|pixels|image and comma-separated core counts")
+    g.add_argument("--render", action="store_true")
+    g.add_argument("--child", help=argparse.SUPPRESS)
+    args = ap.parse_args(argv)
+    if args.child:
+        out = point(json.loads(args.child))
+    elif args.study:
+        out = run_study(args.study, *STUDIES[args.study])["result"]
+    elif args.scaling:
+        kind, cores = args.scaling[0], [int(c) for c in
+                                        args.scaling[1].split(",")]
+        if kind not in ("fused", "pixels", "image"):
+            ap.error(f"--scaling kind must be fused, pixels or image: {kind}")
+        out = run_study(f"scaling_{kind}", *scaling(kind, cores))["result"]
+    elif args.render:
+        if not os.path.exists(RECORDS):
+            ap.exit(message=f"no records yet: {RECORDS}\n")
+        with open(RECORDS) as f:
+            print(render(f))
+        return
+    else:
+        out = driver()
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -35,9 +35,25 @@ def test_stream_extract_matches_batch(spark, tmp_path):
     q.awaitTermination(120)
 
     from apple_ocr_backend_spark.sources.icelite import Table
-    out = Table(str(tmp_path / "tbl")).read(spark).toPandas()
+    t = Table(str(tmp_path / "tbl"))
+    out = t.read(spark).toPandas()
     assert len(out) == len(docs)
     assert _spans_map(out) == golden
+
+    # every epoch commits like a batch bucket: per-partition lineage whose
+    # doc counts sum to the epoch's docs_in, which is the rows it wrote
+    # (empty part files make empty epochs: no lineage rows, docs_in 0)
+    snaps = t.snapshots()
+    assert sum(s["summary"]["docs_in"] > 0 for s in snaps) >= 2
+    for s in snaps:
+        assert all({"epoch_key", "run_id", "partition_id", "doc_count",
+                    "span_count", "bytes", "wall_ms"} <= set(r)
+                   for r in s["lineage"])
+        written = spark.read.schema(t.read(spark).schema).parquet(
+            os.path.join(t.path, s["data_dirs"][-1])).count()
+        assert (sum(r["doc_count"] for r in s["lineage"])
+                == s["summary"]["docs_in"] == written)
+    assert sum(s["summary"]["docs_in"] for s in snaps) == len(docs)
 
 
 def test_stream_epoch_replay_is_idempotent(spark, tmp_path):
@@ -53,6 +69,9 @@ def test_stream_epoch_replay_is_idempotent(spark, tmp_path):
     assert commit_epoch(t, sdf, 0, CFG, run_id="r1") is True
     n1 = t.read(spark).count()
     snaps1 = len(t.snapshots())
+    lineage = t.snapshots()[-1]["lineage"]
+    assert (sum(r["doc_count"] for r in lineage)
+            == t.snapshots()[-1]["summary"]["docs_in"] == n1 == len(docs))
     # replayed micro-batch: same run, same epoch -> no-op
     assert commit_epoch(t, sdf, 0, CFG, run_id="r1") is False
     assert t.read(spark).count() == n1
