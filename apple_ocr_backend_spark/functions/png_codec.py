@@ -91,7 +91,18 @@ def _unfilter(raw: np.ndarray, h: int, w: int, bpp: int) -> np.ndarray:
 def decode_png_gray(data: bytes) -> np.ndarray:
     """PNG bytes -> uint8 (h, w) grayscale array.  Color type 0 decodes
     directly; color type 2 (RGB) is reduced to integer BT.601 luma.  No
-    interlace, palette, or 16-bit support (our renderer never emits them)."""
+    interlace, palette, or 16-bit support (our renderer never emits them).
+
+    Every malformed input (bad signature, truncated chunk or stream,
+    header sizes that disagree with the pixel data) raises ``ValueError``,
+    so a caller can drop one bad payload without failing its task."""
+    try:
+        return _decode_png_gray(data)
+    except (struct.error, zlib.error) as e:
+        raise ValueError(f"corrupt PNG: {e}") from e
+
+
+def _decode_png_gray(data: bytes) -> np.ndarray:
     if data[:8] != _SIG:
         raise ValueError("not a PNG (bad signature)")
     pos, ihdr, idat = 8, None, []
@@ -109,6 +120,8 @@ def decode_png_gray(data: bytes) -> np.ndarray:
     if ihdr is None or not idat:
         raise ValueError("truncated PNG (missing IHDR/IDAT)")
     w, h, depth, ctype, _comp, _filt, interlace = ihdr
+    if not w or not h:
+        raise ValueError("empty PNG (zero width or height)")
     if depth != 8 or interlace != 0 or ctype not in (0, 2):
         raise ValueError(f"unsupported PNG (depth={depth}, color={ctype}, "
                          f"interlace={interlace})")

@@ -18,8 +18,9 @@ confidence-shaping / aggregation semantics of the reference OCR backend
 * A2 cross-stage sequential merge fold     app/pipeline/ocr_adapter_improved.py:1310-1343
 
 Everything operates on whole pandas Series / DataFrames (no per-row Python in
-the Spark hot path); the only Python loops are over *unique* 12-char strings
-(expansion memo) and over the fixed 12 character positions.
+the Spark hot path); the only Python loop is over *unique* 12-char strings
+(expansion memo).  Position-aware normalization is one numpy gather from a
+(position, code point) lookup table.
 
 Determinism note: the reference iterates ``set`` objects when emitting expanded
 variants (``_expand_ambiguous`` returns ``Set[str]``), so with equal
@@ -106,6 +107,11 @@ _POS_MAPS: list[dict[str, str]] = [
     {ch: rules[i] for ch, rules in POSITION_RULES.items() if i in rules}
     for i in range(12)
 ]
+# the same rules as a (12, 128) code-point table for 12-char strings: the
+# position rule, else the general map, else the char itself
+_POS_LUT = np.array(
+    [[ord(_POS_MAPS[i].get(chr(c), AMBIGUOUS_MAP.get(chr(c), chr(c))))
+      for c in range(128)] for i in range(12)], dtype=np.uint32)
 
 _TRANS_FULL = str.maketrans(AMBIGUOUS_MAP)
 _TRANS_BASIC = str.maketrans(AMBIGUOUS_MAP_BASIC)
@@ -139,26 +145,17 @@ def normalize_ambiguous(s: pd.Series, position_aware: bool = True,
     own `_normalize_ambiguous`, ocr_adapter.py:160-162).
     """
     up = s.fillna("").str.strip().str.upper()
-    table = _TRANS_BASIC if basic else _TRANS_FULL
-    general = up.str.translate(table)
-    if not position_aware:
-        return general
-
-    is12 = up.str.len() == 12
-    if not bool(is12.any()):
-        return general
-
-    twelve = up[is12]
-    parts = []
-    for i in range(12):
-        ch = twelve.str[i]
-        pos_mapped = ch.map(_POS_MAPS[i])           # NaN where no position rule
-        gen_mapped = ch.map(AMBIGUOUS_MAP)          # NaN where no general rule
-        merged = pos_mapped.where(pos_mapped.notna(), gen_mapped)
-        parts.append(merged.where(merged.notna(), ch))
-    out12 = parts[0].str.cat(parts[1:])
-    result = general.copy()
-    result[is12] = out12
+    is12 = ((up.str.len() == 12) & position_aware).to_numpy()
+    result = up.copy()
+    result[~is12] = up[~is12].str.translate(
+        _TRANS_BASIC if basic else _TRANS_FULL).to_numpy()
+    # 12-char rows: one gather over their (n, 12) code-point matrix; code
+    # points >= 128 pass through unchanged
+    cp = np.array(up[is12].tolist(), dtype="U12").view(np.uint32).reshape(-1, 12)
+    out = np.where(cp < 128, _POS_LUT[np.arange(12), np.minimum(cp, 127)], cp)
+    # back through UTF-32, not ``.view("U12")``, which drops trailing NULs
+    flat = out.astype("<u4").tobytes().decode("utf-32-le")
+    result[is12] = [flat[i:i + 12] for i in range(0, len(flat), 12)]
     return result
 
 
@@ -373,7 +370,8 @@ def aggregate_candidates(df: pd.DataFrame, group_cols: list[str]) -> pd.DataFram
         return df.assign(rank=pd.Series(dtype=np.int64))[
             group_cols + ["serial", "conf", "rank"]]
     d = df.sort_values("seq", kind="stable").reset_index(drop=True)
-    d["norm"] = normalize_ambiguous(d["serial"], position_aware=True)
+    if "norm" not in d:
+        d["norm"] = normalize_ambiguous(d["serial"], position_aware=True)
     # Determinism across shuffles: the A1 score is a float SUM whose value
     # would depend on addition order on an engine that shuffles.  We sum
     # half-even-rounded integer micro-units (1e-9) instead — exact and

@@ -59,26 +59,29 @@ def repartition_salted(rows: DataFrame, num_partitions: int | None = None) -> Da
     small docs stay together (one shuffle, reused by every downstream
     per-(doc,salt) aggregation — reuse of the partitioning across stages).
 
-    When ``num_partitions`` is not given, the count is pinned EXPLICITLY to
-    ``4 x defaultParallelism`` (= 4 task waves on every core) rather than
-    left to AQE: the stage downstream of this exchange is Python-kernel
-    compute-bound, where cost is per ROW, not per shuffle BYTE — AQE's
-    byte-based advisory target (8 MB, session.py) coalesced the 160k-doc
-    bench exchange to 12 partitions at local[8] = 1.5 task waves, leaving
-    half the cores idle in the tail wave (kernel stage 25.6 s; 32 explicit
-    partitions = 4 waves: 18.8 s, BENCH.md round-5 wave-balance study).
-    Pinning an explicit count disables AQE coalescing for exactly this one
-    exchange; byte-cost exchanges elsewhere keep the advisory behavior.
+    When ``num_partitions`` is not given, the count is pinned to
+    ``defaultParallelism``: ONE task wave, one task per core.  The stage
+    downstream is the Python kernel, whose cost is partly fixed per task
+    and per Arrow batch rather than per row:
 
-    Every kernel task also pays a fixed cost whatever its size: pyspark's
-    worker calls ``importlib.invalidate_caches()`` per task, which on
-    CPython 3.11 re-reads the 3.5 MB ``pyspark.zip`` directory once per
-    cached zip importer.  On a 4-vCPU host that is about 0.3 s per task:
-    a no-op ``mapInArrow`` over 100k rows took 0.45 s at 4 partitions and
-    4.9-5.5 s at 64.  So a caller that splits one input into several jobs
-    divides the task budget among them: ``plans.checkpoint.run_resumable``
-    gives each of its ``n_buckets`` jobs ``max(defaultParallelism,
-    ceil(4 x defaultParallelism / n_buckets))`` partitions."""
+    * per task, pyspark's worker calls ``importlib.invalidate_caches()``,
+      which on CPython 3.11 re-reads the 3.5 MB ``pyspark.zip`` directory
+      once per cached zip importer — about 0.1-0.3 s per task on a 4-vCPU
+      host (a no-op ``mapInArrow`` over 100k rows took 0.45 s at 4
+      partitions and 4.9-5.5 s at 64);
+    * per batch, the kernel pays pandas frame assembly and the group
+      machinery, so fewer, fuller batches amortize it.
+
+    One wave pays the per-task cost once per core.  Memory stays bounded
+    because a partition never arrives whole: ``session.get_spark`` caps
+    each Arrow batch at 8,192 rows and 1 MiB, and the kernel streams one
+    batch at a time.  What one wave gives up is a second task to hide a
+    straggler behind, so kernel slot utilization falls somewhat.
+
+    The count is explicit because AQE sizes by shuffle bytes, not kernel
+    rows (round 5: it coalesced this exchange to 1.5 waves at local[8]).
+    A caller that splits one input into several jobs
+    (``plans.checkpoint.run_resumable``) gives each job one wave too."""
     if not num_partitions:
-        num_partitions = 4 * rows.sparkSession.sparkContext.defaultParallelism
+        num_partitions = rows.sparkSession.sparkContext.defaultParallelism
     return rows.repartition(num_partitions, "doc_id", "salt")

@@ -23,7 +23,6 @@ end, so a stream epoch commits the same lineage as a bucket.
 
 from __future__ import annotations
 
-import math
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -96,12 +95,10 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     ``mode`` accepts only ``"fused"`` and is kept for callers that still
     pass it.
 
-    Each bucket's kernel exchange gets ``max(defaultParallelism,
-    ceil(4 x defaultParallelism / n_buckets))`` partitions: the whole run
-    spends the kernel-task budget of one unbucketed job (4 waves,
-    ``operators.skew.repartition_salted``), with at least one task per
-    core per bucket, instead of ``n_buckets`` times that budget — every
-    task pays a fixed Python-worker cost whatever its size.
+    Each bucket job's kernel exchange takes the default of
+    ``operators.skew.repartition_salted``: one wave of
+    ``defaultParallelism`` tasks, so every bucket pays the fixed
+    Python-worker cost once per core and no more.
 
     ``fail_after`` (tests only): raise after committing that many buckets,
     simulating a kill between stage commits (forces serial execution).
@@ -121,14 +118,11 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     docs_b = docs_b.persist()
     skipped = [b for b in range(n_buckets) if b in done]
     todo = [b for b in range(n_buckets) if b not in done]
-    cores = spark.sparkContext.defaultParallelism
-    num_partitions = max(cores, math.ceil(4 * cores / n_buckets))
     processed: list[int] = []
 
     def work(b: int) -> None:
         sub = docs_b.filter(F.col("_bucket") == b).drop("_bucket")
-        commit_extracted(table, extract_docs(sub, cfg,
-                                             num_partitions=num_partitions),
+        commit_extracted(table, extract_docs(sub, cfg),
                          f"extract/bucket={b}",
                          {"bucket": b, "run_id": run_id, "stage": "extract"})
         processed.append(b)

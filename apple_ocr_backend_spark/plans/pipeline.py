@@ -66,12 +66,13 @@ def _pixel_ocr(sub: pd.DataFrame, cfg) -> pd.DataFrame:
     src = sub.reset_index(drop=True)
     texts, confs = [], []
     for p in src["payload"]:
-        if p is None:
-            texts.append("")
-            confs.append(0.0)
-            continue
-        img = decode_png_gray(bytes(p))
-        t, c = recognize_text(K.adaptive_threshold(img), expect_chars=12)
+        # a missing or corrupt payload costs its span, never the task
+        try:
+            img = None if p is None else decode_png_gray(bytes(p))
+        except ValueError:
+            img = None
+        t, c = (("", 0.0) if img is None else
+                recognize_text(K.adaptive_threshold(img), expect_chars=12))
         texts.append(t)
         confs.append(c)
     t = pd.Series(texts)

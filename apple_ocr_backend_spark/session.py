@@ -42,6 +42,13 @@ def get_spark(app_name: str = "apple_ocr_backend_spark",
          # size sweep") — still batch-bounded, nowhere near the 343 MB
          # whole-partition footprint the streaming kernel exists to avoid
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
+         # ... and at most 1 MiB per batch, so a one-wave kernel partition
+         # (operators.skew.repartition_salted) still streams as bounded
+         # batches.  extract_mixed at local[4], one wave (perfbench, median
+         # of 2 runs, worker peak RSS / docs/s; 4 waves read 135 MB):
+         # 512 KiB 138 MB / 2,224; 768 KiB 140 MB / 2,544; 1 MiB 145 MB /
+         # 2,876; no cap 149 MB / 3,434 (+10 % RSS, over the bench bound)
+         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(1 << 20))
          .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
          .config("spark.ui.enabled", "false")
          .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)))

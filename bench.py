@@ -359,8 +359,10 @@ def memory_point(spark) -> dict:
     """Fused-kernel per-task memory: two 200k-span giant docs, salting OFF
     so each doc is ONE partition; peak worker VmHWM polled from /proc
     during one run.  The study varies Arrow ``maxRecordsPerBatch``: the
-    default streams per batch, a value larger than the partition ships the
-    whole partition as one batch (the round-2 buffered footprint)."""
+    default streams per batch; a value larger than the partition lifts
+    only the row cap, and the 1 MiB byte cap (``session.get_spark``)
+    still bounds each batch, so that point no longer reaches the round-2
+    whole-partition footprint."""
     import threading
     from apple_ocr_backend_spark.config import ExtractConfig
     from apple_ocr_backend_spark.plans.pipeline import extract_docs

@@ -125,6 +125,38 @@ def test_span_less_docs_come_out_empty(spark, small_docs, media, pixel_base):
     assert {k: v for k, v in have.items() if k in pixel_base} == pixel_base
 
 
+def test_corrupt_payloads_cost_their_span_not_the_job(spark, small_docs,
+                                                      media, pixel_base):
+    """Truncated, garbage and zero-length PNG payloads planted among good
+    ones: the job succeeds, each bad payload's doc loses only its
+    ocr_text span, and every other doc equals the unplanted output."""
+    from apple_ocr_backend_spark.functions.png_codec import _SIG, _chunk
+    from tests.test_pipeline_parity import _spans_map
+    refs = sorted(s[2] for spans in pixel_base.values() for s in spans
+                  if s[0] == "ocr_text")[:4]
+    good = media.where(F.col("media_ref") == refs[0]).first().payload
+    bad = dict(zip(refs, [bytes(good[:len(good) // 2]),
+                          b"\x00garbage" * 9,
+                          _SIG + _chunk(b"IHDR", b"\x00\x07") + b"junk",
+                          b""]))
+    payload = F.col("payload")
+    for ref, b in bad.items():
+        payload = F.when(F.col("media_ref") == ref,
+                         F.lit(bytearray(b))).otherwise(payload)
+    planted = media.withColumn("payload", payload)
+    got = _spans_map(extract_docs(small_docs, media=planted).toPandas())
+    assert set(got) == set(pixel_base)
+    hit = {d for d, spans in pixel_base.items()
+           if any(s[2] in bad for s in spans)}
+    assert len(hit) == len(bad)
+    for doc_id, spans in pixel_base.items():
+        if doc_id in hit:
+            assert [s[:3] for s in got[doc_id]] == [
+                s[:3] for s in spans if s[2] not in bad], doc_id
+        else:
+            assert got[doc_id] == spans, doc_id
+
+
 def test_shuffle_join_regime_matches_broadcast_plan(spark, small_docs, media):
     """The null-spreading sentinel join key exists for the regime where the
     media store cannot broadcast (at bench scale the store auto-broadcasts

@@ -12,7 +12,7 @@ loop; hypothesis drives both through random occurrence patterns.
 from __future__ import annotations
 
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from apple_ocr_backend_spark.functions import serials as K
 
@@ -73,6 +73,31 @@ def test_normalize_matches_per_char_model(strings):
             else K.POSITION_RULES[c][i]
             for i, c in enumerate(s))
         assert g == want, (s, g, want)
+
+
+def _normalize_model(raw: str | None) -> str:
+    up = (raw or "").strip().upper()
+    if len(up) != 12:
+        return up.translate(str.maketrans(K.AMBIGUOUS_MAP))
+    return "".join(K.POSITION_RULES.get(c, {}).get(i)
+                   or K.AMBIGUOUS_MAP.get(c, c) for i, c in enumerate(up))
+
+
+# ASCII serial chars plus NUL, whitespace, non-ASCII and chars whose
+# upper() changes the length (ß -> SS, ﬁ -> FI)
+odd_text = st.text(alphabet=st.sampled_from(ALPHABET + "\x00 \tßﬁéŸİ")
+               | st.characters(), max_size=14)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.none() | odd_text, min_size=1, max_size=8))
+@example(["ABCDEFGHIJK\x00", "\x00" * 12, "ßßßßßß", None, "", "é0125OIQGDTE"])
+def test_normalize_arbitrary_text_matches_per_char_model(strings):
+    """The code-point lookup table agrees with the per-char model on any
+    text: non-ASCII passes through, lengths are taken after strip+upper,
+    and trailing NULs survive the round trip."""
+    got = list(K.normalize_ambiguous(pd.Series(strings, dtype=object)))
+    assert got == [_normalize_model(s) for s in strings]
 
 
 # --------------------------------------------------------------------------- #

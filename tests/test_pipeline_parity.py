@@ -172,6 +172,37 @@ def test_fused_kernel_streams_per_batch(spark, corpus):
     assert _spans_map(got) == _spans_map(golden)
 
 
+def test_fused_kernel_streams_under_byte_cap(spark, corpus):
+    """The 1 MiB Arrow byte cap is what bounds a one-wave kernel
+    partition's batch memory, so pin that Spark honours
+    ``maxBytesPerBatch`` on mapInArrow input: with a tiny byte cap and
+    the 8,192-row cap, ONE kernel partition arrives as several batches,
+    and the output still equals the oracle bit-for-bit."""
+    from apple_ocr_backend_spark.operators.skew import (explode_salted,
+                                                        repartition_salted)
+    docs, golden = corpus
+    sdf = _to_spark_docs(spark, docs)
+
+    def batch_rows(batches):
+        import pyarrow as pa
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({"n": [b.num_rows]})
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        assert spark.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch") == "8192"
+        rows = repartition_salted(explode_salted(sdf, CFG), 1)
+        sizes = [r.n for r in rows.mapInArrow(batch_rows, "n long").collect()]
+        got = extract_docs(sdf, CFG, num_partitions=1).toPandas()
+    finally:
+        spark.conf.set(key, old)
+    assert len(sizes) > 1 and sum(sizes) == rows.count() < 8192, sizes
+    assert _spans_map(got) == _spans_map(golden)
+
+
 def test_kernel_emits_every_group():
     """The fused kernel emits one partial per input (doc_id, salt) group —
     empty for a span-less placeholder row (null span_pos) and for a group

@@ -92,3 +92,29 @@ def test_errors():
     data[8 + 8 + 8] = 16
     with pytest.raises(ValueError, match="unsupported"):
         decode_png_gray(bytes(data))
+
+
+def test_every_malformed_input_raises_valueerror():
+    """Truncated at any byte, a short IHDR, pixel data that disagrees with
+    the header, a zero-area image: each raises ValueError (never
+    zlib.error, struct.error or IndexError), so the pixel kernel can drop
+    the one payload.  A cut after the last IDAT still decodes."""
+    img = np.random.default_rng(3).integers(0, 256, (9, 7), dtype=np.uint8)
+    data = encode_png_gray(img)
+    for cut in range(len(data)):
+        try:
+            got = decode_png_gray(data[:cut])
+        except ValueError:
+            continue
+        assert (got == img).all(), cut
+    ihdr = struct.pack(">IIBBBBB", 7, 9, 8, 0, 0, 0, 0)
+    idat = _chunk(b"IDAT", zlib.compress(b"\0" * 8 * 9))
+    bad = [_SIG + _chunk(b"IHDR", ihdr[:5]) + idat,
+           _SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", b"not zlib"),
+           _SIG + _chunk(b"IHDR", struct.pack(">IIBBBBB", 8, 9, 8, 0, 0, 0, 0))
+           + idat,
+           _make_png(0, 7, 1, b""),
+           b""]
+    for b in bad:
+        with pytest.raises(ValueError):
+            decode_png_gray(b)

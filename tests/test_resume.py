@@ -56,9 +56,9 @@ def test_kill_and_resume(spark, tmp_path):
 
 
 def test_bucket_kernel_partitions(spark, tmp_path, monkeypatch):
-    """Each bucket job gets max(cores, ceil(4 x cores / n_buckets)) kernel
-    partitions: the run as a whole keeps one unbucketed job's 4-wave task
-    budget, and no bucket drops below one task per core."""
+    """Every bucket job's kernel exchange has defaultParallelism
+    partitions (one task wave), whatever the bucket count."""
+    import re
     from apple_ocr_backend_spark.plans import checkpoint
 
     class Captured(Exception):
@@ -66,20 +66,22 @@ def test_bucket_kernel_partitions(spark, tmp_path, monkeypatch):
 
     seen = []
 
-    def capture(*args, **kwargs):
-        seen.append(kwargs["num_partitions"])
+    def capture(table, extracted, *args):
+        plan = extracted._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode
+            .fromString("simple"))
+        seen.append(re.findall(
+            r"hashpartitioning\(doc_id#\d+, salt#\d+, (\d+)\)", plan))
         raise Captured
 
-    monkeypatch.setattr(checkpoint, "extract_docs", capture)
+    monkeypatch.setattr(checkpoint, "commit_extracted", capture)
     sdf = _to_spark_docs(spark, make_corpus(8, seed=3))
     cores = spark.sparkContext.defaultParallelism
-    want = {1: 4 * cores, 3: -(-4 * cores // 3), 4: cores, 8: cores}
-    for n_buckets in want:
+    for n_buckets in (1, 3, 4, 8):
         with pytest.raises(Captured):
             run_resumable(spark, sdf, str(tmp_path / f"t{n_buckets}"), CFG,
                           n_buckets=n_buckets)
-    assert seen == list(want.values())
-    assert cores < want[3] < 4 * cores
+    assert seen == [[str(cores)]] * 4
 
 
 def test_concurrent_buckets_match_serial_golden(spark, tmp_path):

@@ -279,6 +279,25 @@ def test_aggregate_matches_naive():
                [(s, round(c, 9)) for s, c in want], doc
 
 
+def test_aggregate_reuses_precomputed_norm():
+    """A ``norm`` column already on the input (``pass_candidates`` emits
+    one) is used as the grouping key, not recomputed: the output equals
+    the run without it, and a different ``norm`` changes the buckets."""
+    rng = np.random.RandomState(23)
+    # pairs that normalize alike (S -> 5 at positions 10 and 11)
+    pool = ["C02Y95A8JG5H", "C02Y95A8JGSH", "F5KVN0DKHJC5", "F5KVN0DKHJCS"]
+    df = pd.DataFrame(
+        [(doc, pool[rng.randint(0, 4)], round(float(rng.uniform(0.2, 0.99)), 6),
+          seq) for doc in range(40) for seq in range(rng.randint(1, 9))],
+        columns=["doc", "serial", "conf", "seq"])
+    want = K.aggregate_candidates(df, ["doc"])
+    with_norm = df.assign(norm=K.normalize_ambiguous(df["serial"]))
+    pd.testing.assert_frame_equal(
+        K.aggregate_candidates(with_norm, ["doc"]), want)
+    raw = K.aggregate_candidates(df.assign(norm=df["serial"]), ["doc"])
+    assert len(raw) > len(want)
+
+
 def test_sliding_windows():
     s = pd.Series(["A" * 12, "B" * 14, "C" * 8, ""])
     w = K.sliding_windows(s)
