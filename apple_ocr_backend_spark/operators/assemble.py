@@ -1,4 +1,6 @@
-"""Span assembly: explode input docs, passthrough text spans, reassemble
+"""Span assembly: explode input docs, the kind kernels' one output frame
+(``spans_out``) and one kind dispatch (``extract_span_rows``, shared by the
+Spark kernel and the pandas oracle), passthrough text spans, reassemble
 ordered output spans.
 
 Hard part (SURVEY.md §7): exact span ordering across shuffles.  Every
@@ -35,20 +37,52 @@ def explode_docs_pandas(docs: pd.DataFrame) -> pd.DataFrame:
     return out[["doc_id", "span_pos", "kind", "text", "media_ref", "offset"]]
 
 
+def spans_out(src: pd.DataFrame, rows, out_rank, text, kind: str = "main_text",
+              media_ref=None) -> pd.DataFrame:
+    """The one kernel output frame: output row ``i`` comes from input row
+    ``rows[i]`` (a position in ``src``) and is indexed by that row's label.
+
+    Every kind kernel returns its rows in input-row order with ``out_rank``
+    dense from 0 per input row, so a caller can gather per-input-row keys
+    (the Spark kernel's ``salt``) through the index."""
+    rows = np.asarray(rows, dtype=np.int64)
+    return pd.DataFrame({
+        "doc_id": src["doc_id"].to_numpy()[rows],
+        "span_pos": src["span_pos"].to_numpy()[rows],
+        "offset": src["offset"].to_numpy()[rows],
+        "out_rank": np.asarray(out_rank, dtype=np.int64),
+        "kind": kind,
+        "text": np.asarray(text, dtype=object),
+        "media_ref": media_ref,
+    }, index=src.index[rows])
+
+
 def extract_text_spans(df: pd.DataFrame) -> pd.DataFrame:
     """kind='text' passthrough: whitespace-normalized, empties dropped."""
-    from .html_extract import _empty_out
-    if df.empty:
-        return _empty_out()
-    src = df.reset_index(drop=True)
-    text = (src["text"].fillna("").str.replace(r"\s+", " ", regex=True).str.strip())
-    keep = text.str.len() > 0
-    out = src.loc[keep.to_numpy(), ["doc_id", "span_pos", "offset"]].copy()
-    out["out_rank"] = 0
-    out["kind"] = "main_text"
-    out["text"] = text[keep].to_numpy()
-    out["media_ref"] = None
-    return out[["doc_id", "span_pos", "offset", "out_rank", "kind", "text", "media_ref"]]
+    text = df["text"].fillna("").str.replace(r"\s+", " ", regex=True).str.strip()
+    rows = np.flatnonzero((text.str.len() > 0).to_numpy())
+    return spans_out(df, rows, np.zeros(len(rows)), text.to_numpy()[rows])
+
+
+def extract_span_rows(rows: pd.DataFrame, cfg) -> pd.DataFrame:
+    """Span rows -> extracted rows: each kind's rows go to its kernel and
+    the outputs are concatenated (text, html, pdf, image).  The image
+    kernel reads the PNG ``payload`` when the frame carries one, else the
+    token stream.  Shared by the Spark kernel (per Arrow batch) and the
+    pandas oracle."""
+    # imported here: the kind kernels import ``spans_out`` from this module
+    from .html_extract import extract_html
+    from .ocr_extract import recover_ocr, recover_pixels
+    from .pdf_extract import extract_pdf
+    pixels = "payload" in rows.columns
+    kind = rows["kind"].to_numpy()
+    parts = [kernel(rows[kind == k]) for k, kernel in (
+        ("text", extract_text_spans),
+        ("html", lambda s: extract_html(s, cfg)),
+        ("pdf", lambda s: extract_pdf(s, cfg)),
+        ("image", lambda s: (recover_pixels(s, cfg) if pixels
+                             else recover_ocr(s, cfg)))) if (kind == k).any()]
+    return pd.concat(parts) if parts else spans_out(rows, [], [], [])
 
 
 def reassemble_pandas(extracted: pd.DataFrame) -> pd.DataFrame:

@@ -30,6 +30,7 @@ import numpy as np
 import pandas as pd
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
+from .assemble import spans_out
 
 _ZONE_RE = r"(?is)<(nav|footer|header|aside)\b[^>]*>.*?</\1>"
 _SCRIPT_RE = r"(?is)<(script|style)\b[^>]*>.*?</\1>|<!--.*?-->"
@@ -50,25 +51,12 @@ def extract_html(df: pd.DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> pd.Da
     Input columns:  ``doc_id, span_pos, offset, text``  (one row per html span)
     Output columns: ``doc_id, span_pos, offset, out_rank, kind, text, media_ref``
     """
-    if df.empty:
-        return _empty_out()
     body = (df["text"].fillna("")
             .str.replace(_SCRIPT_RE, " ", regex=True)
             .str.replace(_ZONE_RE, " ", regex=True))
     blocks = body.str.findall(_BLOCK_RE)  # list of (tag, inner) tuples
-    n_blocks = blocks.str.len().to_numpy()
-    if int(n_blocks.sum()) == 0:
-        return _empty_out()
-
-    rep = np.repeat(np.arange(len(df)), n_blocks)
-    flat = [t for lst in blocks for t in lst]
-    b = pd.DataFrame({
-        "row": rep,
-        "inner": pd.Series([t[1] for t in flat], dtype=object),
-    })
-    b["block_idx"] = b.groupby("row", sort=False).cumcount()
-
-    inner = b["inner"]
+    rep = np.repeat(np.arange(len(df)), blocks.str.len().to_numpy())
+    inner = pd.Series([t[1] for lst in blocks for t in lst], dtype=object)
     text = _strip_tags(inner)
     link_text = _strip_tags(
         inner.str.findall(_LINK_RE).str.join(" "))
@@ -80,35 +68,7 @@ def extract_html(df: pd.DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> pd.Da
 
     keep = ((words >= cfg.html_min_words)
             & (link_ratio <= cfg.html_max_link_ratio)
-            & (tag_density <= cfg.html_max_tag_density))
-    b = b.loc[keep.to_numpy()].copy()
-    if b.empty:
-        return _empty_out()
-    b["text"] = text[keep]
-
-    src = df.reset_index(drop=True)
-    out = pd.DataFrame({
-        "doc_id": src["doc_id"].to_numpy()[b["row"].to_numpy()],
-        "span_pos": src["span_pos"].to_numpy()[b["row"].to_numpy()],
-        "offset": src["offset"].to_numpy()[b["row"].to_numpy()],
-        "text": b["text"].to_numpy(),
-        "block_idx": b["block_idx"].to_numpy(),
-    })
-    out = out.sort_values(["doc_id", "span_pos", "block_idx"],
-                          kind="stable", ignore_index=True)
-    out["out_rank"] = out.groupby(["doc_id", "span_pos"], sort=False).cumcount()
-    out["kind"] = "main_text"
-    out["media_ref"] = None
-    return out[["doc_id", "span_pos", "offset", "out_rank", "kind", "text", "media_ref"]]
-
-
-def _empty_out() -> pd.DataFrame:
-    return pd.DataFrame({
-        "doc_id": pd.Series(dtype=object),
-        "span_pos": pd.Series(dtype=np.int64),
-        "offset": pd.Series(dtype=np.int64),
-        "out_rank": pd.Series(dtype=np.int64),
-        "kind": pd.Series(dtype=object),
-        "text": pd.Series(dtype=object),
-        "media_ref": pd.Series(dtype=object),
-    })
+            & (tag_density <= cfg.html_max_tag_density)).to_numpy()
+    rows = rep[keep]
+    out_rank = pd.Series(rows).groupby(rows, sort=False).cumcount()
+    return spans_out(df, rows, out_rank, text.to_numpy()[keep])

@@ -33,7 +33,9 @@ best candidate reaches ``early_stop_confidence`` (ocr_adapter_improved.py:
 The per-pass kernel (`pass_candidates`) emits the normalized key alongside
 each candidate; `recover_ocr` runs A1/A2 and the per-span early stop over
 it inside the Spark pipeline's one extraction kernel (and in the pandas
-oracle), so both paths share the exact same code.
+oracle), so both paths share the exact same code.  When a media store
+joins PNG payloads, `recover_pixels` reads the serial off the pixels
+instead.
 """
 
 from __future__ import annotations
@@ -43,7 +45,7 @@ import pandas as pd
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
 from ..functions import serials as K
-from .html_extract import _empty_out
+from .assemble import spans_out
 
 _TOKEN_RE = r"^(.+)@(0(?:\.\d+)?|1(?:\.0+)?)$"
 
@@ -141,21 +143,19 @@ def recover_ocr(df: pd.DataFrame,
 
     Input columns:  ``doc_id, span_pos, offset, media_ref, text``.
     Output columns: ``doc_id, span_pos, offset, out_rank, kind, text, media_ref``
-    (kind='ocr_text', text=serial, ordered by final A2 rank).
+    (kind='ocr_text', text=serial, out_rank = final A2 rank; input-row
+    order, ``assemble.spans_out``).
 
     Processes passes progressively with per-span early stop (reference P9):
     pass k+1 runs only on spans no earlier pass resolved.  The Spark
     pipeline calls this per Arrow batch inside its one extraction kernel.
     """
-    if df.empty:
-        return _empty_out()
-    src = df.reset_index(drop=True)
-    passes = split_passes(src["text"])
+    passes = split_passes(df["text"])
     n_passes = passes.str.len().clip(upper=cfg.max_passes)
 
-    active = np.ones(len(src), dtype=bool)
+    active = np.ones(len(df), dtype=bool)
     collected: list[pd.DataFrame] = []  # candidate rows with pass_idx, a1_rank
-    for p in range(int(n_passes.max()) if len(src) else 0):
+    for p in range(int(n_passes.max()) if len(df) else 0):
         has_pass = (n_passes > p).to_numpy()
         sel = active & has_pass
         if not sel.any():
@@ -179,23 +179,49 @@ def recover_ocr(df: pd.DataFrame,
                 (best >= cfg.early_stop_confidence).to_numpy()]]
             active[resolved_rows] = False
     if not collected:
-        return _empty_out()
+        return spans_out(df, [], [], [], "ocr_text")
     allc = pd.concat(collected, ignore_index=True)
     allc = allc.sort_values(["src_row", "pass_idx", "rank"],
                             kind="stable", ignore_index=True)
     allc["seq"] = allc.groupby("src_row", sort=False).cumcount()
+    # merge_passes returns (row, rank) order: the input-row order contract
     merged = K.merge_passes(
         allc.rename(columns={"src_row": "g"})[["g", "serial", "conf", "seq"]],
         ["g"])
     g = merged["g"].to_numpy()
-    out = pd.DataFrame({
-        "doc_id": src["doc_id"].to_numpy()[g],
-        "span_pos": src["span_pos"].to_numpy()[g],
-        "offset": src["offset"].to_numpy()[g],
-        "out_rank": merged["rank"].to_numpy(),
-        "kind": "ocr_text",
-        "text": merged["serial"].to_numpy(),
-        "media_ref": src["media_ref"].to_numpy()[g],
-    })
-    return out.sort_values(["doc_id", "span_pos", "out_rank"],
-                           kind="stable", ignore_index=True)
+    return spans_out(df, g, merged["rank"], merged["serial"], "ocr_text",
+                     df["media_ref"].to_numpy()[g])
+
+
+def recover_pixels(df: pd.DataFrame,
+                   cfg: ExtractConfig = DEFAULT_CONFIG) -> pd.DataFrame:
+    """image rows carrying a PNG ``payload`` -> validated ocr_text rows.
+
+    Real OCR on real pixels (the image branch when a media store is
+    joined): decode PNG -> adaptive-threshold binarize -> glyph
+    segmentation -> nearest-template Hamming match
+    (``functions/glyph_ocr.py``), then the SAME extended validation +
+    confidence gate the token path applies
+    (``app/utils/validation.py:119-214``; min_confidence,
+    ``ocr_adapter.py:253-254``).  One candidate per span (the recognizer is
+    exact on this corpus), so A1/A2 collapse to out_rank 0."""
+    from ..functions import image_kernels as IK
+    from ..functions.glyph_ocr import recognize_text
+    from ..functions.png_codec import decode_png_gray
+
+    texts, confs = [], []
+    for p in df["payload"]:
+        # a missing or corrupt payload costs its span, never the task
+        try:
+            img = None if p is None else decode_png_gray(bytes(p))
+        except ValueError:
+            img = None
+        t, c = (("", 0.0) if img is None else
+                recognize_text(IK.adaptive_threshold(img), expect_chars=12))
+        texts.append(t)
+        confs.append(c)
+    t = pd.Series(texts, dtype=object)
+    rows = np.flatnonzero(K.validate_extended(t)["is_valid"].to_numpy()
+                          & (np.asarray(confs) >= cfg.min_confidence))
+    return spans_out(df, rows, np.zeros(len(rows)), t.to_numpy()[rows],
+                     "ocr_text", df["media_ref"].to_numpy()[rows])

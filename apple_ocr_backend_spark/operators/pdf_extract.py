@@ -26,7 +26,7 @@ import numpy as np
 import pandas as pd
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
-from .html_extract import _empty_out
+from .assemble import spans_out
 
 _REC_RE = r"^(-?\d+(?:\.\d+)?),(-?\d+(?:\.\d+)?),(\d+(?:\.\d+)?)\|(.*)$"
 
@@ -35,23 +35,15 @@ def extract_pdf(df: pd.DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> pd.Dat
     """Input columns:  ``doc_id, span_pos, offset, text`` (one row per pdf span).
     Output columns: ``doc_id, span_pos, offset, out_rank, kind, text, media_ref``.
     """
-    if df.empty:
-        return _empty_out()
-    src = df.reset_index(drop=True)
-    recs = src["text"].fillna("").str.split("\n")
-    n = recs.str.len().to_numpy()
-    if int(n.sum()) == 0:
-        return _empty_out()
+    recs = df["text"].fillna("").str.split("\n")
     r = pd.DataFrame({
-        "row": np.repeat(np.arange(len(src)), n),
-        "rec": np.concatenate([np.asarray(v, dtype=object) for v in recs]),
+        "row": np.repeat(np.arange(len(df)), recs.str.len().to_numpy()),
+        "rec": pd.Series([rec for lst in recs for rec in lst], dtype=object),
     })
     parsed = r["rec"].str.extract(_REC_RE)
     parsed.columns = ["x", "y", "size", "line"]
     ok = parsed["x"].notna()
     r = pd.concat([r[["row"]], parsed], axis=1).loc[ok.to_numpy()].copy()
-    if r.empty:
-        return _empty_out()
     r["x"] = r["x"].astype(float)
     r["y"] = r["y"].astype(float)
     r["size"] = r["size"].astype(float)
@@ -65,26 +57,16 @@ def extract_pdf(df: pd.DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> pd.Dat
               .agg(text=("line", " ".join), size=("size", "first"))
               .reset_index())
 
-    # block clustering: gap to previous line > gap_factor * prev_size
+    # block clustering: gap to previous line > gap_factor * prev_size; a
+    # span's first line (no previous line) compares False, so blocks number
+    # densely from 0 per span
     prev_y = lines.groupby("row", sort=False)["y"].shift(1)
     prev_size = lines.groupby("row", sort=False)["size"].shift(1)
     new_block = (lines["y"] - prev_y) > (cfg.pdf_gap_factor * prev_size)
-    new_block = new_block.fillna(True)
-    lines["block"] = new_block.astype(int).groupby(lines["row"], ).cumsum()
+    lines["block"] = new_block.astype(int).groupby(lines["row"]).cumsum()
 
+    # groups come out in (row, block) order: lines are sorted by (row, y)
     blocks = (lines.groupby(["row", "block"], sort=False)
                .agg(text=("text", "\n".join))
                .reset_index())
-    blocks = blocks.sort_values(["row", "block"], kind="stable", ignore_index=True)
-
-    rows = blocks["row"].to_numpy()
-    out = pd.DataFrame({
-        "doc_id": src["doc_id"].to_numpy()[rows],
-        "span_pos": src["span_pos"].to_numpy()[rows],
-        "offset": src["offset"].to_numpy()[rows],
-        "text": blocks["text"].to_numpy(),
-    })
-    out["out_rank"] = out.groupby(["doc_id", "span_pos"], sort=False).cumcount()
-    out["kind"] = "main_text"
-    out["media_ref"] = None
-    return out[["doc_id", "span_pos", "offset", "out_rank", "kind", "text", "media_ref"]]
+    return spans_out(df, blocks["row"], blocks["block"], blocks["text"])

@@ -6,18 +6,19 @@ re-expression):
          [──left join media(media_ref -> payload), when a media store is
            given]
          ──repartition(doc_id, salt)
-         ──ONE mapInArrow (text/html/pdf/image kernels dispatched per Arrow
-           batch; one sorted partial span array per input (doc,salt)
-           group, empty when nothing survives)
+         ──ONE mapInArrow (``operators.assemble.extract_span_rows`` per
+           Arrow batch; one sorted partial span array per input
+           (doc,salt) group, empty when nothing survives)
          ──groupBy(doc_id): flatten + array_sort (one compact payload
            shuffle) ──> extracted docs
 
 One ``documents`` scan: every doc reaches the merge through its own
 (possibly empty) partials.  The plan picks the image branch: with a media
-store the kernel OCRs the decoded PNG payload (``_pixel_ocr``); without
-one it resolves the span's token stream (``operators.ocr_extract.
-recover_ocr``), whose progressive passes stop per span once a pass's best
-candidate is confident enough (reference P9, early stop inside the kernel).
+store the kernel OCRs the decoded PNG payload (``operators.ocr_extract.
+recover_pixels``); without one it resolves the span's token stream
+(``recover_ocr``), whose progressive passes stop per span once a pass's
+best candidate is confident enough (reference P9, early stop inside the
+kernel).
 
 Everything relational (salting, ordering, reassembly) runs JVM-side;
 Python only touches Arrow batches inside the kernel — no per-row Python
@@ -31,7 +32,6 @@ partitioning, Arrow batch size or shuffle order.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
@@ -46,60 +46,18 @@ _SPAN_COLS = ["doc_id", "salt", "span_pos", "offset", "kind", "media_ref",
               "text"]
 
 
-def _pixel_ocr(sub: pd.DataFrame, cfg) -> pd.DataFrame:
-    """image rows carrying a PNG ``payload`` -> validated ocr_text rows.
-
-    Real OCR on real pixels (the image branch when a media store is
-    joined): decode PNG -> adaptive-threshold binarize -> glyph
-    segmentation -> nearest-template Hamming match
-    (``functions/glyph_ocr.py``), then the SAME extended validation +
-    confidence gate the token path applies
-    (``app/utils/validation.py:119-214``; min_confidence,
-    ``ocr_adapter.py:253-254``).  One candidate per span (the recognizer is
-    exact on this corpus), so A1/A2 collapse to out_rank 0."""
-    import numpy as np
-    from ..functions import image_kernels as K
-    from ..functions import serials as S
-    from ..functions.glyph_ocr import recognize_text
-    from ..functions.png_codec import decode_png_gray
-
-    src = sub.reset_index(drop=True)
-    texts, confs = [], []
-    for p in src["payload"]:
-        # a missing or corrupt payload costs its span, never the task
-        try:
-            img = None if p is None else decode_png_gray(bytes(p))
-        except ValueError:
-            img = None
-        t, c = (("", 0.0) if img is None else
-                recognize_text(K.adaptive_threshold(img), expect_chars=12))
-        texts.append(t)
-        confs.append(c)
-    t = pd.Series(texts)
-    ok = (S.validate_extended(t)["is_valid"].to_numpy()
-          & (np.asarray(confs) >= cfg.min_confidence))
-    return pd.DataFrame({
-        "doc_id": src["doc_id"].to_numpy()[ok],
-        "span_pos": src["span_pos"].to_numpy()[ok],
-        "offset": src["offset"].to_numpy()[ok],
-        "out_rank": 0,
-        "kind": "ocr_text",
-        "text": t.to_numpy()[ok],
-        "media_ref": src["media_ref"].to_numpy()[ok],
-    })
-
-
 def _mono_partial_kernel(cfg_dict: dict):
-    """The extraction kernel (mapInArrow): ONE pass over all span rows,
-    dispatching each Arrow batch's rows to the four kind kernels (exactly
-    the oracle's per-batch shape), then phase-1 assembly in the same pass.
+    """The extraction kernel (mapInArrow): per Arrow batch, extract every
+    span row (``operators.assemble.extract_span_rows``, the oracle's own
+    dispatch) and emit one sorted partial span array per input
+    (doc_id, salt) group.
 
     One UDF stage instead of a per-kind branch union: measured on this
     box, three concurrent UDF stages + a JVM branch union ran at ~0.5
     scaling efficiency 8->32 cores while a single UDF stage ran at ~0.65+;
     one stage also means one Arrow round-trip per batch.  The image branch
-    is ``_pixel_ocr`` when the batch carries a joined ``payload`` column,
-    else the token-stream ``recover_ocr``.
+    is ``ocr_extract.recover_pixels`` when the batch carries a joined
+    ``payload`` column, else the token-stream ``recover_ocr``.
 
     The input partitioning (doc_id, salt) already co-locates every row of a
     (doc, salt) group in one partition, so the kernel can emit sorted
@@ -107,43 +65,36 @@ def _mono_partial_kernel(cfg_dict: dict):
     ONE payload shuffle (groupBy doc_id, flatten+sort small arrays) instead
     of two groupBy passes over individual span rows.  Sort key
     (offset, span_pos, out_rank) is unique per doc (span_pos is the array
-    position, out_rank dense within a span), so the pandas sort and the JVM
-    array_sort agree with no tie-break ambiguity.
+    position, out_rank dense within a span), so the kernel's sort and the
+    JVM array_sort agree with no tie-break ambiguity.
 
-    Every input (doc_id, salt) group gets a partial, EMPTY when no span of
-    it survives extraction — including the span-less placeholder row
-    ``explode_salted`` emits (null ``kind``, so no kernel takes it).
-    So the partial merge sees every input doc.
+    Each extracted row is indexed by the batch row it came from, so its
+    (doc_id, salt) group number is a gather; one integer lexsort over
+    (group, offset, span_pos, out_rank) orders the rows and per-group
+    counts give the list offsets.  Every input (doc_id, salt) group gets a
+    partial, EMPTY when no span of it survives extraction — including the
+    span-less placeholder row ``explode_salted`` emits (null ``kind``, so
+    no kernel takes it).  So the partial merge sees every input doc.
 
-    Streaming per Arrow batch (round-2 verdict #1): each input batch is
-    kerneled, group-sorted, and emitted as its own RecordBatch — the kernel
-    never buffers the whole partition in pandas, so per-task memory
-    high-water is ONE Arrow batch (plus its extracted rows), not the full
-    partition.  A (doc, salt) group that straddles a batch boundary emits
-    one partial array per batch; that is correct by construction because
-    ``reassemble_partials`` flattens ALL partials per doc_id and re-sorts by
-    the same unique (offset, span_pos, out_rank) prefix before assigning the
-    dense order — multiple partials per key merge into the identical final
-    sequence (pinned by
+    Streaming per Arrow batch: each input batch is extracted, sorted and
+    emitted as its own RecordBatch, so per-task memory high-water is ONE
+    Arrow batch (plus its extracted rows), not the full partition.  A
+    (doc, salt) group that straddles a batch boundary emits one partial
+    array per batch; ``reassemble_partials`` flattens ALL partials per
+    doc_id and re-sorts by the same unique prefix, so the final sequence
+    is identical (pinned by
     test_pipeline_parity.py::test_fused_kernel_streams_per_batch).
 
     The list<struct> output column is assembled with pyarrow directly from
-    the already-vectorized numpy columns (StructArray + ListArray over group
-    boundary offsets) — no per-row Python anywhere (round-1 verdict flagged
-    the previous list-of-dicts construction as the one hot-path violation).
+    the vectorized numpy columns (StructArray + ListArray over group
+    offsets) — no per-row Python.
     """
     import numpy as np
-    key = ["doc_id", "salt"]
-    cols = ["doc_id", "span_pos", "offset", "media_ref", "text"]
-    empty = pd.DataFrame(columns=key + _PARTIAL_FIELDS)
 
     def fn(batches):
         import pyarrow as pa
         from ..config import ExtractConfig
-        from ..operators.assemble import extract_text_spans
-        from ..operators.html_extract import extract_html
-        from ..operators.pdf_extract import extract_pdf
-        from ..operators.ocr_extract import recover_ocr
+        from ..operators.assemble import extract_span_rows
         cfg = ExtractConfig(**cfg_dict)
         for batch in batches:
             if batch.num_rows == 0:
@@ -151,35 +102,17 @@ def _mono_partial_kernel(cfg_dict: dict):
             # a span-less placeholder row turns span_pos/offset into floats
             # for its batch; the kernels only carry them through
             b = batch.to_pandas()
-            groups = (b[key].drop_duplicates()
-                      .sort_values(key, ignore_index=True))
-            if "payload" in b.columns:
-                image, image_cols = _pixel_ocr, cols + ["payload"]
-            else:
-                image, image_cols = recover_ocr, cols
-            kind = b["kind"].to_numpy()
-            parts = []
-            for k, kernel, kc in (
-                    ("text", lambda s: extract_text_spans(s), cols),
-                    ("html", lambda s: extract_html(s, cfg), cols),
-                    ("pdf", lambda s: extract_pdf(s, cfg), cols),
-                    ("image", lambda s: image(s, cfg), image_cols)):
-                sub = b.loc[kind == k, kc]
-                if len(sub):
-                    parts.append(kernel(sub))
-            d = pd.concat(parts, ignore_index=True) if parts else empty
-            # the kernels drop ``salt``; an empty output may lack columns
-            d = empty if d.empty else d.merge(
-                b[["doc_id", "span_pos", "salt"]].drop_duplicates(),
-                on=["doc_id", "span_pos"], how="left")
-            d = d.sort_values(key + ["offset", "span_pos", "out_rank"],
-                              kind="stable", ignore_index=True)
-            # d is sorted like `groups`, so each row's group index ascends
-            # and the per-group counts are the list offsets
-            gi = pd.MultiIndex.from_frame(groups).get_indexer(
-                pd.MultiIndex.from_frame(d[key]))
+            group = (b.groupby(["doc_id", "salt"], sort=True, dropna=False)
+                     .ngroup().to_numpy())
+            n_groups = int(group.max()) + 1
+            doc_ids = np.empty(n_groups, dtype=object)
+            doc_ids[group] = b["doc_id"].to_numpy()
+            d = extract_span_rows(b, cfg)
+            g = group[d.index.to_numpy()]
+            d = d.iloc[np.lexsort((d["out_rank"], d["span_pos"],
+                                   d["offset"], g))]
             offsets = np.concatenate(
-                [[0], np.cumsum(np.bincount(gi, minlength=len(groups)))])
+                [[0], np.cumsum(np.bincount(g, minlength=n_groups))])
             struct = pa.StructArray.from_arrays(
                 [pa.array(d["offset"].to_numpy(dtype=np.int32)),
                  pa.array(d["span_pos"].to_numpy(dtype=np.int32)),
@@ -191,7 +124,7 @@ def _mono_partial_kernel(cfg_dict: dict):
             partial = pa.ListArray.from_arrays(
                 pa.array(offsets, pa.int32()), struct)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(groups["doc_id"], type=pa.string()), partial],
+                [pa.array(doc_ids, type=pa.string()), partial],
                 names=["doc_id", "partial"])
     return fn
 

@@ -18,11 +18,8 @@ import numpy as np
 import pandas as pd
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
-from ..operators.assemble import (explode_docs_pandas, extract_text_spans,
+from ..operators.assemble import (explode_docs_pandas, extract_span_rows,
                                   reassemble_pandas)
-from ..operators.html_extract import extract_html
-from ..operators.pdf_extract import extract_pdf
-from ..operators.ocr_extract import recover_ocr
 
 # --------------------------------------------------------------------------- #
 # Spark schemas (import-guarded so pandas-only tests don't need a JVM)
@@ -262,15 +259,7 @@ def extract_docs_oracle(docs: pd.DataFrame,
                         cfg: ExtractConfig = DEFAULT_CONFIG) -> pd.DataFrame:
     """Pure-pandas end-to-end extraction (the golden producer; the Spark
     pipeline must equal it exactly — SURVEY.md §7 step 1/3)."""
-    rows = explode_docs_pandas(docs)
-    parts = []
-    if len(rows):
-        parts.append(extract_text_spans(rows[rows["kind"] == "text"]))
-        parts.append(extract_html(rows[rows["kind"] == "html"], cfg))
-        parts.append(extract_pdf(rows[rows["kind"] == "pdf"], cfg))
-        parts.append(recover_ocr(rows[rows["kind"] == "image"], cfg))
-    extracted = (pd.concat(parts, ignore_index=True) if parts
-                 else pd.DataFrame())
+    extracted = extract_span_rows(explode_docs_pandas(docs), cfg)
     out = reassemble_pandas(extracted)
     # docs with no extracted spans still appear, with an empty array
     missing = docs.loc[~docs["doc_id"].isin(out["doc_id"]), ["doc_id"]].copy()

@@ -6,8 +6,8 @@ happens driver-side, mirroring the reference's split where
 ``generate_excel`` styles rows that SQLite already filtered
 (``app/services/export.py:11-238``).  The eval-report shape matches
 ``app/services/eval.py:78-125,160-181``: one CSV row per document plus a
-JSON summary sidecar.  Excel uses ``openpyxl`` when present and otherwise
-the vendored stdlib OOXML writer (``xlsx_lite.py``).
+JSON summary sidecar.  Excel goes through the vendored stdlib OOXML
+writer (``xlsx_lite.py``).
 """
 
 from __future__ import annotations
@@ -83,7 +83,7 @@ def workbook_frames(df: DataFrame, value_col: str | None = None,
     Spark-side and materialized as small pandas frames for presentation.
 
     Separated from the styling/writer so the sheet semantics are testable
-    without openpyxl.  ``max_rows`` guards the driver materialization —
+    without a workbook.  ``max_rows`` guards the driver materialization —
     Spark must have already filtered/aggregated (this is presentation, not a
     data path)."""
     import pandas as pd
@@ -121,33 +121,8 @@ def generate_excel(df: DataFrame, path: str, max_rows: int = 100_000,
                    filters: dict | None = None) -> str:
     """S6 Excel sink: the reference's 3-sheet styled workbook (data, summary,
     export-info metadata — ``app/services/export.py:11-238``) with bold
-    filled header rows and auto-sized columns.
-
-    Uses openpyxl when present; otherwise the vendored stdlib OOXML writer
-    (``sources/xlsx_lite.py``) emits the same 3 sheets, header style, and
-    column widths — so the sink runs everywhere."""
-    import pandas as pd
+    filled header rows and auto-sized columns, written by the vendored
+    stdlib OOXML writer (``sources/xlsx_lite.py``)."""
+    from .xlsx_lite import write_xlsx
     frames = workbook_frames(df, value_col, group_col, filters, max_rows)
-    try:
-        import openpyxl  # noqa: F401
-        from openpyxl.styles import Font, PatternFill
-        from openpyxl.utils import get_column_letter
-    except ImportError:
-        from .xlsx_lite import write_xlsx
-        return write_xlsx(path, _frames_to_sheets(frames))
-    with pd.ExcelWriter(path, engine="openpyxl") as xl:  # pragma: no cover
-        for sheet, pdf in frames.items():
-            pdf.to_excel(xl, sheet_name=sheet, index=False)
-            ws = xl.sheets[sheet]
-            fill = PatternFill("solid", start_color="D9E1F2")
-            for cell in ws[1]:
-                cell.font = Font(bold=True)
-                cell.fill = fill
-            for i, col in enumerate(pdf.columns):
-                longest = pdf[col].astype(str).str.len().max()
-                if pd.isna(longest):  # empty sheet: max() is NaN (truthy!)
-                    longest = 0
-                width = max(len(str(col)), int(longest))
-                ws.column_dimensions[get_column_letter(i + 1)].width = min(
-                    width + 2, 60)
-    return path
+    return write_xlsx(path, _frames_to_sheets(frames))

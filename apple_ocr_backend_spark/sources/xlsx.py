@@ -11,9 +11,9 @@ spreadsheet whose header is messy (e.g. ``'Serial N0.'``), then keep the
    ``'serial'``;
 4. value rows: skip empties, ``strip().upper()``, keep ``len == 12`` only.
 
-The xlsx branch uses openpyxl when present and otherwise the vendored
-stdlib OOXML reader (``xlsx_lite.py``); the CSV branch implements identical
-semantics over the same tabular shape.  Loaded serials
+The xlsx branch reads through the vendored stdlib OOXML reader
+(``xlsx_lite.py``); the CSV branch implements identical semantics over the
+same tabular shape.  Loaded serials
 become a Spark DataFrame via ``to_spark`` (driver-side list — the reference
 analog is a small golden list, never bulk data)."""
 
@@ -53,27 +53,16 @@ def _filter_values(raw: list) -> list[str]:
 
 
 def load_serials_from_xlsx(path: str, column: str = "serial") -> list[str]:
-    """Excel branch — openpyxl when present, else the vendored stdlib OOXML
-    reader (``xlsx_lite.read_xlsx``), with identical header-matching and
-    value semantics (reference guard: generate_image.py:57-58)."""
-    try:
-        import openpyxl
-    except ImportError:
-        from .xlsx_lite import read_xlsx
-        sheets = read_xlsx(path)
-        if not sheets:
-            raise ValueError(f"workbook {path} has no sheets")
-        headers, rows = next(iter(sheets.values()))
-        idx = _pick_header(list(headers), column)
-        return _filter_values([r[idx] if idx < len(r) else None
-                               for r in rows])
-    wb = openpyxl.load_workbook(path)
-    ws = wb.active
-    rows = ws.iter_rows(min_row=1)
-    headers = [c.value for c in next(rows)]
-    idx = _pick_header(headers, column)
-    return _filter_values([r[idx].value if idx < len(r) else None
-                           for r in rows])
+    """Excel branch: the first sheet, read by the vendored stdlib OOXML
+    reader (``xlsx_lite.read_xlsx``), with the CSV branch's header-matching
+    and value semantics (reference guard: generate_image.py:57-58)."""
+    from .xlsx_lite import read_xlsx
+    sheets = read_xlsx(path)
+    if not sheets:
+        raise ValueError(f"workbook {path} has no sheets")
+    headers, rows = next(iter(sheets.values()))
+    idx = _pick_header(list(headers), column)
+    return _filter_values([r[idx] if idx < len(r) else None for r in rows])
 
 
 def load_serials_from_csv(path: str, column: str = "serial") -> list[str]:
@@ -87,8 +76,8 @@ def load_serials_from_csv(path: str, column: str = "serial") -> list[str]:
 
 
 def load_serials(path: str, column: str = "serial") -> list[str]:
-    """Dispatch on extension; xlsx falls back to NotImplementedError when the
-    engine is absent."""
+    """Dispatch on extension: ``.xlsx``/``.xlsm`` read as a workbook,
+    anything else as CSV."""
     if path.lower().endswith((".xlsx", ".xlsm")):
         return load_serials_from_xlsx(path, column)
     return load_serials_from_csv(path, column)

@@ -6,10 +6,9 @@ styles with a bold+filled header format, one worksheet per frame with inline
 strings and column widths) and reads them back with ElementTree.  It exists
 so the S6 Excel sink (``sources/export.py``, reference
 ``app/services/export.py:11-238``) and the S10 xlsx serial source
-(``sources/xlsx.py``, reference ``generate_image.py:56-98``) are runnable
-and testable in environments without openpyxl — when openpyxl IS present
-the callers still prefer it, and both writers produce workbooks this reader
-(and openpyxl) can open.
+(``sources/xlsx.py``, reference ``generate_image.py:56-98``) run with no
+third-party spreadsheet library; the workbooks it writes open in standard
+spreadsheet readers.
 
 Scope is deliberately small: strings, numbers, booleans, blanks; no
 formulas, merged cells, or dates-as-serials (dates are written as ISO

@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """Raw-CPU scaling calibration — no Spark.
 
-Runs the SAME pandas extraction kernels the pipeline uses (html strip, pdf
-layout parse, OCR recovery) over identical pre-built chunks with a
-``multiprocessing`` pool at 2 / 8 / 32 workers and reports docs/sec plus
-pairwise scaling efficiency.
+Runs the SAME pandas extraction dispatch the pipeline's kernel uses
+(``operators.assemble.extract_span_rows``: html strip, pdf layout parse, OCR
+recovery) over identical pre-built chunks with a ``multiprocessing`` pool at
+2 / 8 / 32 workers and reports docs/sec plus pairwise scaling efficiency.
 
 Purpose (BENCH.md): when Spark's 8→32 efficiency sags on this virtualized
 guest, this isolates the cause — if embarrassingly parallel pure-Python work
@@ -70,18 +70,9 @@ def _make_chunks(docs_per_chunk: int, n_chunks: int):
 
 
 def _work(chunk) -> int:
-    from apple_ocr_backend_spark.operators.html_extract import extract_html
-    from apple_ocr_backend_spark.operators.pdf_extract import extract_pdf
-    from apple_ocr_backend_spark.operators.ocr_extract import recover_ocr
-    cols = ["doc_id", "span_pos", "offset", "media_ref", "text"]
-    n = 0
-    for kind, kernel in (("html", extract_html), ("pdf", extract_pdf),
-                         ("image", recover_ocr)):
-        sub = chunk[chunk["kind"] == kind][cols]
-        if kind != "image":
-            sub = sub[["doc_id", "span_pos", "offset", "text"]]
-        n += len(kernel(sub.reset_index(drop=True)))
-    return n
+    from apple_ocr_backend_spark.config import DEFAULT_CONFIG
+    from apple_ocr_backend_spark.operators.assemble import extract_span_rows
+    return len(extract_span_rows(chunk, DEFAULT_CONFIG))
 
 
 def main() -> None:

@@ -320,3 +320,104 @@ def test_despeckle_invariants(seed, min_neighbors):
     assert not (out.astype(bool) & ~mask.astype(bool)).any()
     assert out[0, 0] == 0
     assert out[11, 11] == 1
+
+
+# --------------------------------------------------------------------------- #
+# span-row contract: extract_span_rows output, indexed by its input rows
+# --------------------------------------------------------------------------- #
+
+# sha256 of the canonical JSON of extract_docs_oracle on the parity corpus
+# (test_pipeline_parity: make_corpus(150, seed=42) + edge_docs), the output
+# the Spark parity tests hold the plan to; a change to the oracle's output
+# must change this pin on purpose
+PARITY_ORACLE_SHA256 = (
+    "c9ae17ba39d61240d1733df08e0bfd1f24a70839a357c59cf81d5d31ab168bc0")
+
+
+def _shuffled_rows(docs: pd.DataFrame, seed: int) -> pd.DataFrame:
+    """Span rows in a shuffled order under unique, non-contiguous labels."""
+    import numpy as np
+    from apple_ocr_backend_spark.operators.assemble import explode_docs_pandas
+    rng = np.random.RandomState(seed)
+    rows = explode_docs_pandas(docs)
+    rows = rows.iloc[rng.permutation(len(rows))]
+    rows.index = rng.choice(10 ** 7, len(rows), replace=False)
+    return rows
+
+
+def _assert_contract(rows: pd.DataFrame, out: pd.DataFrame) -> None:
+    """Every output label names an input row with the same doc_id /
+    span_pos / offset; each kind's rows come in input-row order; out_rank
+    is dense from 0, in order, per label."""
+    import numpy as np
+    assert rows.index.is_unique and len(out)
+    src = rows.loc[out.index]
+    for col in ("doc_id", "span_pos", "offset"):
+        assert (src[col].to_numpy() == out[col].to_numpy()).all(), col
+    pos = rows.index.get_indexer(out.index)
+    for k in src["kind"].unique():
+        assert (np.diff(pos[src["kind"].to_numpy() == k]) >= 0).all(), k
+    rank = pd.Series(out["out_rank"].to_numpy())
+    assert (rank == rank.groupby(pos).cumcount()).all()
+
+
+def test_span_rows_contract_and_oracle_parity():
+    import hashlib
+    import json
+    from apple_ocr_backend_spark.config import DEFAULT_CONFIG
+    from apple_ocr_backend_spark.operators.assemble import (
+        extract_span_rows, reassemble_pandas)
+    from apple_ocr_backend_spark.sources.corpus import (
+        extract_docs_oracle, make_corpus)
+    from tests.test_pipeline_parity import edge_docs
+
+    docs = pd.concat([make_corpus(150, seed=42), edge_docs()],
+                     ignore_index=True)
+    rows = _shuffled_rows(docs, seed=1)
+    out = extract_span_rows(rows, DEFAULT_CONFIG)
+    _assert_contract(rows, out)
+
+    golden = extract_docs_oracle(docs, DEFAULT_CONFIG)
+    canon = [[d, [[s["kind"], s["text"], s["media_ref"], s["order"]]
+                  for s in spans]]
+             for d, spans in zip(golden["doc_id"], golden["spans"])]
+    assert (hashlib.sha256(json.dumps(canon).encode()).hexdigest()
+            == PARITY_ORACLE_SHA256)
+    got = reassemble_pandas(out)
+    want = golden[golden["spans"].str.len() > 0].reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_span_rows_contract_with_payload():
+    """A ``payload`` column sends image rows to pixel OCR; a missing or
+    corrupt payload drops its span, and the other kinds are unchanged."""
+    import numpy as np
+    from apple_ocr_backend_spark.config import DEFAULT_CONFIG
+    from apple_ocr_backend_spark.functions.png_codec import encode_png_gray
+    from apple_ocr_backend_spark.operators.assemble import extract_span_rows
+    from apple_ocr_backend_spark.sources.corpus import make_corpus
+    from apple_ocr_backend_spark.sources.derived import serial_py
+    from apple_ocr_backend_spark.sources.image_corpus import (
+        render_serial_image)
+
+    rows = _shuffled_rows(make_corpus(30, seed=9), seed=2)
+    image = np.flatnonzero((rows["kind"] == "image").to_numpy())
+    payload = [None] * len(rows)
+    for j, i in enumerate(image):
+        payload[i] = (b"\x89PNG\r\n\x1a\ntruncated" if j % 5 == 1 else
+                      None if j % 5 == 3 else
+                      encode_png_gray(render_serial_image(
+                          i, text=serial_py(i))))
+    with_payload = rows.assign(payload=payload)
+    out = extract_span_rows(with_payload, DEFAULT_CONFIG)
+    _assert_contract(with_payload, out)
+
+    pixel = out[out["kind"] == "ocr_text"]
+    good = rows.index[image[[j % 5 not in (1, 3)
+                             for j in range(len(image))]]]
+    assert len(pixel) and set(pixel.index) <= set(good)
+    assert (pixel["text"] == [serial_py(rows.index.get_loc(i))
+                              for i in pixel.index]).all()
+    token = extract_span_rows(rows, DEFAULT_CONFIG)
+    pd.testing.assert_frame_equal(out[out["kind"] == "main_text"],
+                                  token[token["kind"] == "main_text"])
