@@ -1,4 +1,4 @@
-"""OCR-text span recovery — vectorized pandas kernel.
+"""OCR-text span recovery — vectorized numpy kernel.
 
 Recovers validated serial-number spans from the noisy OCR token stream carried
 by ``kind='image'`` spans (the deterministic stand-in for an OCR engine's
@@ -30,15 +30,20 @@ best candidate reaches ``early_stop_confidence`` (ocr_adapter_improved.py:
 1432-1456,1037-1039) and A2 sequential merge of all executed passes
 (ocr_adapter_improved.py:1310-1343).
 
-The per-pass kernel (`pass_candidates`) emits the normalized key alongside
-each candidate; `recover_ocr` runs A1/A2 and the per-span early stop over
-it inside the Spark pipeline's one extraction kernel (and in the pandas
-oracle), so both paths share the exact same code.  When a media store
-joins PNG payloads, `recover_pixels` reads the serial off the pixels
-instead.
+From step 5 on, candidates are int64 base-36 serial codes
+(``functions/serials.py``): each step gathers its rows from the step
+before, and A1/A2 group and rank codes.  The per-pass chain
+(`pass_candidates`) emits the normalized key alongside each candidate;
+`recover_ocr` runs A1/A2 and the per-span early stop over it inside the
+Spark pipeline's one extraction kernel (and in the pandas oracle), so both
+paths share the exact same code, and decodes strings once, for the spans
+it emits.  When a media store joins PNG payloads, `recover_pixels` reads
+the serial off the pixels instead.
 """
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 import pandas as pd
@@ -47,7 +52,8 @@ from ..config import ExtractConfig, DEFAULT_CONFIG
 from ..functions import serials as K
 from .assemble import spans_out
 
-_TOKEN_RE = r"^(.+)@(0(?:\.\d+)?|1(?:\.0+)?)$"
+# a token is ``<head>@<conf>``: a non-empty head and a confidence in [0, 1]
+_CONF_RE = re.compile(r"0(?:\.\d+)?|1(?:\.0+)?")
 
 
 def split_passes(texts: pd.Series) -> pd.Series:
@@ -59,26 +65,53 @@ def parse_tokens(pass_text: pd.Series) -> pd.DataFrame:
     """Parse one pass string per row into tokens.
 
     Returns ``(row, token_idx, token, conf)`` — ``row`` is the positional
-    index into ``pass_text``; malformed tokens dropped.
+    index into ``pass_text``; malformed tokens dropped.  The head ends at
+    a token's last ``@`` (a confidence has none).
     """
-    toks = pass_text.fillna("").str.split()
-    n = toks.str.len().to_numpy()
-    if len(pass_text) == 0 or int(n.sum()) == 0:
-        return pd.DataFrame({"row": pd.Series(dtype=np.int64),
-                             "token_idx": pd.Series(dtype=np.int64),
-                             "token": pd.Series(dtype=object),
-                             "conf": pd.Series(dtype=float)})
-    t = pd.DataFrame({
-        "row": np.repeat(np.arange(len(pass_text)), n),
-        "token": np.concatenate([np.asarray(v, dtype=object) for v in toks]),
-    })
-    t["token_idx"] = t.groupby("row", sort=False).cumcount()
-    parsed = t["token"].str.extract(_TOKEN_RE)
-    ok = parsed[0].notna() & parsed[1].notna()
-    t = t.loc[ok.to_numpy()].copy()
-    t["token"] = parsed.loc[ok.to_numpy(), 0].to_numpy()
-    t["conf"] = parsed.loc[ok.to_numpy(), 1].astype(float).to_numpy()
-    return t[["row", "token_idx", "token", "conf"]].reset_index(drop=True)
+    toks = [t.split() for t in pass_text.fillna("").tolist()]
+    n = np.fromiter(map(len, toks), dtype=np.int64, count=len(toks))
+    parts = [tok.rpartition("@") for ts in toks for tok in ts]
+    ok = np.fromiter((bool(h) and _CONF_RE.fullmatch(c) is not None
+                      for h, _, c in parts), dtype=bool, count=len(parts))
+    keep = np.flatnonzero(ok)
+    return pd.DataFrame({
+        "row": np.repeat(np.arange(len(toks)), n)[keep],
+        "token_idx": (np.arange(len(parts)) - np.repeat(np.cumsum(n) - n, n))[keep],
+        "token": pd.Series([parts[i][0] for i in keep], dtype=object),
+        "conf": np.array([float(parts[i][2]) for i in keep], dtype=float)})
+
+
+def _candidate_codes(tokens: pd.DataFrame,
+                     cfg: ExtractConfig) -> dict[str, np.ndarray]:
+    """``pass_candidates`` with ``serial`` and ``norm`` as base-36 codes
+    (``functions.serials``)."""
+    o = np.lexsort((tokens["token_idx"].to_numpy(), tokens["row"].to_numpy()))
+    conf = tokens["conf"].to_numpy(dtype=float)[o]
+    # 1-2-3: projection + gates
+    clean = K.clean_tokens(tokens["token"].iloc[o]).to_numpy()
+    keep = np.flatnonzero((conf >= cfg.min_confidence)
+                          & (np.fromiter(map(len, clean), dtype=np.int64,
+                                         count=len(clean)) >= 8))
+    # 4: shaping
+    enhanced = K.shape_confidence(pd.Series(clean[keep]),
+                                  pd.Series(conf[keep])).to_numpy()
+    # 5: windows (len==12 -> itself; >12 -> slides; 8..11 -> nothing)
+    tok, codes = K.window_codes(clean[keep].tolist())
+    # 6: expansion (variants in pinned lexicographic order)
+    win, variant, _ = K.expand_codes(codes)
+    tok = tok[win]
+    # 7: validation (extended; enhanced-confidence gate as in improved:781)
+    ok = K.validate_codes(variant) & (enhanced[tok] >= cfg.min_confidence)
+    tok, variant = tok[ok], variant[ok]
+    # 8: quality filter
+    q = K.quality_codes(variant, enhanced[tok])
+    ok = q >= cfg.min_confidence * 0.8
+    tok, variant, q = tok[ok], variant[ok], q[ok]
+    # rows stay in (row, token_idx, window_idx, variant_rank) order, so seq
+    # numbers each row's candidates
+    row = tokens["row"].to_numpy()[o][keep][tok]
+    return {"row": row, "seq": K.run_rank(row), "serial": variant,
+            "norm": K.normalize_codes(variant), "conf": q}
 
 
 def pass_candidates(tokens: pd.DataFrame,
@@ -88,53 +121,14 @@ def pass_candidates(tokens: pd.DataFrame,
     Input columns:  ``row, token_idx, token, conf``.
     Output columns: ``row, seq, serial, norm, conf`` — ``seq`` is the
     occurrence order within (row): (token_idx, window_idx, variant_rank).
+
+    After the gates every step is a gather from the step before (window
+    -> token, variant -> window) over int64 serial codes; ``serial`` and
+    ``norm`` are decoded once, for the survivors.
     """
-    empty = pd.DataFrame({"row": pd.Series(dtype=np.int64),
-                          "seq": pd.Series(dtype=np.int64),
-                          "serial": pd.Series(dtype=object),
-                          "norm": pd.Series(dtype=object),
-                          "conf": pd.Series(dtype=float)})
-    if tokens.empty:
-        return empty
-    t = tokens.reset_index(drop=True).copy()
-    # 1-2-3: projection + gates
-    t["clean"] = K.clean_tokens(t["token"])
-    t = t[(t["conf"] >= cfg.min_confidence) & (t["clean"].str.len() >= 8)]
-    if t.empty:
-        return empty
-    t = t.reset_index(drop=True)
-    # 4: shaping
-    t["enhanced"] = K.shape_confidence(t["clean"], t["conf"])
-    # 5: windows (len==12 -> itself; >12 -> slides; 8..11 -> nothing)
-    w = K.sliding_windows(t["clean"])
-    if w.empty:
-        return empty
-    w = w.merge(t[["row", "token_idx", "enhanced"]],
-                left_on="idx", right_index=True, how="left")
-    # 6: expansion (variants in pinned lexicographic order)
-    e = K.expand_ambiguous(w["window"], position_aware=True)
-    e = e.merge(w.reset_index(drop=True)
-                  .rename_axis("widx").reset_index()
-                  [["widx", "row", "token_idx", "window_idx", "enhanced"]],
-                left_on="idx", right_on="widx", how="left")
-    # 7: validation (extended; enhanced-confidence gate as in improved:781)
-    ext = K.validate_extended(e["variant"])
-    e = e[(ext["is_valid"].to_numpy()) & (e["enhanced"] >= cfg.min_confidence)]
-    if e.empty:
-        return empty
-    e = e.reset_index(drop=True)
-    # 8: quality filter
-    q = K.quality_score(e["variant"], e["enhanced"])
-    e["q"] = q
-    e = e[e["q"] >= cfg.min_confidence * 0.8]
-    if e.empty:
-        return empty
-    e = e.sort_values(["row", "token_idx", "window_idx", "variant_rank"],
-                      kind="stable", ignore_index=True)
-    e["seq"] = e.groupby("row", sort=False).cumcount()
-    e["norm"] = K.normalize_ambiguous(e["variant"], position_aware=True)
-    out = e.rename(columns={"variant": "serial", "q": "conf"})
-    return out[["row", "seq", "serial", "norm", "conf"]]
+    c = _candidate_codes(tokens, cfg)
+    return pd.DataFrame({**c, "serial": K.decode(c["serial"]),
+                         "norm": K.decode(c["norm"])})
 
 
 def recover_ocr(df: pd.DataFrame,
@@ -149,48 +143,49 @@ def recover_ocr(df: pd.DataFrame,
     Processes passes progressively with per-span early stop (reference P9):
     pass k+1 runs only on spans no earlier pass resolved.  The Spark
     pipeline calls this per Arrow batch inside its one extraction kernel.
+    A1 and A2 rank serial codes; strings are decoded once, for the output.
     """
-    passes = split_passes(df["text"])
-    n_passes = passes.str.len().clip(upper=cfg.max_passes)
+    passes = split_passes(df["text"]).to_numpy()
+    n_passes = np.minimum(np.fromiter(map(len, passes), dtype=np.int64,
+                                      count=len(passes)), cfg.max_passes)
 
     active = np.ones(len(df), dtype=bool)
-    collected: list[pd.DataFrame] = []  # candidate rows with pass_idx, a1_rank
+    collected: list[pd.DataFrame] = []  # A1 rows: src_row, pass_idx, rank, ...
     for p in range(int(n_passes.max()) if len(df) else 0):
-        has_pass = (n_passes > p).to_numpy()
-        sel = active & has_pass
-        if not sel.any():
+        rows = np.flatnonzero(active & (n_passes > p))
+        if not len(rows):
             break
-        rows = np.flatnonzero(sel)
-        pass_text = pd.Series([passes.iloc[i][p] for i in rows])
-        toks = parse_tokens(pass_text)
-        cands = pass_candidates(toks, cfg)
-        if not cands.empty:
-            # A1 per span for this pass
-            a1 = K.aggregate_candidates(
-                cands.rename(columns={"row": "g"}), ["g"])
-            a1["src_row"] = rows[a1["g"].to_numpy()]
-            a1["pass_idx"] = p
-            collected.append(a1[["src_row", "pass_idx", "rank", "serial", "conf"]])
-            # early stop: span resolved when best pass-candidate conf clears
-            # the bar (reference: max over extract_serials output,
-            # ocr_adapter_improved.py:1037-1039)
-            best = a1.groupby("g", sort=False)["conf"].max()
-            resolved_rows = rows[best.index.to_numpy()[
-                (best >= cfg.early_stop_confidence).to_numpy()]]
-            active[resolved_rows] = False
+        cands = pd.DataFrame(_candidate_codes(
+            parse_tokens(pd.Series([passes[i][p] for i in rows], dtype=object)),
+            cfg))
+        if cands.empty:
+            continue
+        # A1 per span for this pass, in (g, rank) order
+        a1 = K.aggregate_candidates(cands.rename(columns={"row": "g"}), ["g"])
+        g = a1["g"].to_numpy()
+        collected.append(pd.DataFrame({
+            "src_row": rows[g], "pass_idx": p, "rank": a1["rank"].to_numpy(),
+            "serial": a1["serial"].to_numpy(), "conf": a1["conf"].to_numpy()}))
+        # early stop: span resolved when best pass-candidate conf clears
+        # the bar (reference: max over extract_serials output,
+        # ocr_adapter_improved.py:1037-1039)
+        best = np.full(len(rows), -np.inf)
+        np.maximum.at(best, g, a1["conf"].to_numpy())
+        active[rows[best >= cfg.early_stop_confidence]] = False
     if not collected:
         return spans_out(df, [], [], [], "ocr_text")
     allc = pd.concat(collected, ignore_index=True)
-    allc = allc.sort_values(["src_row", "pass_idx", "rank"],
-                            kind="stable", ignore_index=True)
-    allc["seq"] = allc.groupby("src_row", sort=False).cumcount()
+    allc = allc.iloc[np.lexsort((allc["rank"].to_numpy(),
+                                 allc["pass_idx"].to_numpy(),
+                                 allc["src_row"].to_numpy()))]
+    src = allc["src_row"].to_numpy()
     # merge_passes returns (row, rank) order: the input-row order contract
-    merged = K.merge_passes(
-        allc.rename(columns={"src_row": "g"})[["g", "serial", "conf", "seq"]],
-        ["g"])
+    merged = K.merge_passes(pd.DataFrame({
+        "g": src, "serial": allc["serial"].to_numpy(),
+        "conf": allc["conf"].to_numpy(), "seq": K.run_rank(src)}), ["g"])
     g = merged["g"].to_numpy()
-    return spans_out(df, g, merged["rank"], merged["serial"], "ocr_text",
-                     df["media_ref"].to_numpy()[g])
+    return spans_out(df, g, merged["rank"], K.decode(merged["serial"].to_numpy()),
+                     "ocr_text", df["media_ref"].to_numpy()[g])
 
 
 def recover_pixels(df: pd.DataFrame,

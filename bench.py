@@ -5,6 +5,7 @@ studies, all timed by one loop (``timed``).
     python bench.py                      # driver contract: ONE JSON line
     python bench.py --scaling fused 2,8  # N->4N evidence: fused|pixels|image
     python bench.py --study skew         # one entry of STUDIES
+    python bench.py --study kernel       # the kernel alone: no Spark
     python bench.py --render             # latest record per study, markdown
 
 Default mode runs the headline catalog queries and fused extraction at
@@ -19,8 +20,10 @@ Default mode runs the headline catalog queries and fused extraction at
 scaling efficiency >= 0.8; there is no real cluster, so parallelism levels
 on one host): one point per core count on the identical replicated corpus
 (``$SPARK_GRAFT_REPLICATE``, default 32), and the efficiency of every
-adjacent pair.  ``--study`` runs one entry of ``STUDIES``.  Every point of
-both runs in a fresh JVM (``fresh_jvm``), and each run appends ONE
+adjacent pair.  ``--study`` runs one entry of ``STUDIES``; the ``kernel``
+study times the extraction kernel's kind branches and its raw-CPU process
+pool ceiling with no Spark at all.  Every point of both runs in a fresh
+process (``fresh_jvm``), and each run appends ONE
 sorted-key JSON record to ``BENCH.jsonl``: study, the point specs
 (``params``), each point's resolved session config and per-iteration
 seconds and steal ticks, the result, UTC time, git sha and sf_dir.
@@ -53,8 +56,10 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # (planning, AQE, job scheduling) don't mask the scalable work
 REPLICATE = os.environ.get("SPARK_GRAFT_REPLICATE")
 BATCH_ROWS = "spark.sql.execution.arrow.maxRecordsPerBatch"
+BATCH_BYTES = "spark.sql.execution.arrow.maxBytesPerBatch"
 HOT_EVENTS = 2_000_000  # session_skew: events of the one hot user
 IMAGE_DOCS = 6000  # image: synthetic docs through the ROI chain
+KERNEL_DOCS, KERNEL_BATCH = 4000, 2500  # kernel: make_corpus docs, rows/batch
 
 # representative catalog entries (relational core + training-data ops)
 DRIVER_QUERIES = [
@@ -93,12 +98,16 @@ def make_spark(master: str, extra_conf: dict | None = None):
     from drifting apart (BENCH.md "Heap attribution" and the pixels
     broadcast-threshold follow-up were both such drifts); ``extra_conf``
     carries only a study's independent variable."""
-    import re
     from apple_ocr_backend_spark.session import get_spark
-    m = re.match(r"local\[(\d+)\]", master)
-    cores = int(m.group(1)) if m else CPUS
     return get_spark(master=master, app_name="bench",
-                     shuffle_partitions=2 * cores, extra_conf=extra_conf)
+                     shuffle_partitions=2 * _cores(master),
+                     extra_conf=extra_conf)
+
+
+def _cores(master: str) -> int:
+    import re
+    m = re.match(r"local\[(\d+)\]", master)
+    return int(m.group(1)) if m else CPUS
 
 
 def session_conf(spark) -> dict:
@@ -157,8 +166,8 @@ def _steal_ticks() -> int | None:
 
 def timed(run, iters: int, warmup: int = 0) -> list[list]:
     """The one timing loop: ``warmup`` untimed then ``iters`` timed calls
-    of ``run``, each after clearing the Spark cache.  Returns ``[sec,
-    steal ticks]`` per timed call.
+    of ``run``, each after clearing the Spark cache (when a session is
+    active).  Returns ``[sec, steal ticks]`` per timed call.
 
     The clear is required: pipelines persist() shared subplans and Spark's
     CacheManager matches structurally identical plans, so without it a
@@ -170,7 +179,8 @@ def timed(run, iters: int, warmup: int = 0) -> list[list]:
     spark = SparkSession.getActiveSession()
     out = []
     for i in range(warmup + iters):
-        spark.catalog.clearCache()
+        if spark is not None:
+            spark.catalog.clearCache()
         s0, t0 = _steal_ticks(), time.perf_counter()
         run()
         sec, s1 = time.perf_counter() - t0, _steal_ticks()
@@ -358,11 +368,10 @@ def _poll_worker_hwm(stop, result: dict, interval: float = 0.2) -> None:
 def memory_point(spark) -> dict:
     """Fused-kernel per-task memory: two 200k-span giant docs, salting OFF
     so each doc is ONE partition; peak worker VmHWM polled from /proc
-    during one run.  The study varies Arrow ``maxRecordsPerBatch``: the
-    default streams per batch; a value larger than the partition lifts
-    only the row cap, and the 1 MiB byte cap (``session.get_spark``)
-    still bounds each batch, so that point no longer reaches the round-2
-    whole-partition footprint."""
+    during one run.  The study varies the Arrow batch bound: the session
+    default (8,192 rows, 1 MiB) streams per batch; the whole-partition
+    point lifts both the row cap and the byte cap, so one batch holds a
+    whole partition (the round-2 footprint)."""
     import threading
     from apple_ocr_backend_spark.config import ExtractConfig
     from apple_ocr_backend_spark.plans.pipeline import extract_docs
@@ -386,10 +395,69 @@ POINTS = {"extract": extract_point, "image": image_point, "skew": skew_point,
           "session_skew": session_skew_point, "memory": memory_point}
 
 
+def _extract_rows(rows) -> int:
+    from apple_ocr_backend_spark.config import DEFAULT_CONFIG
+    from apple_ocr_backend_spark.operators.assemble import extract_span_rows
+    return len(extract_span_rows(rows, DEFAULT_CONFIG))
+
+
+def kernel_point(cores: int) -> dict:
+    """The extraction kernel without Spark, on the span rows of
+    ``make_corpus(KERNEL_DOCS, seed=7)`` in ``KERNEL_BATCH``-row batches
+    through the one kind dispatch (``extract_span_rows``):
+
+    * per kind, microseconds per span, best of 3; each run starts from an
+      empty expansion memo, as a worker does on docs it has not seen;
+    * the raw-CPU ceiling: docs/s of a process pool of 1, 2, 4, ...
+      ``cores`` workers mapping the batches ``cores`` times over, and each
+      adjacent pair's efficiency.  Spark's N->4N efficiency reads against
+      this host ceiling (the pool's memos are warm: a ceiling)."""
+    import multiprocessing as mp
+    from apple_ocr_backend_spark.functions.serials import clear_expand_memo
+    from apple_ocr_backend_spark.operators.assemble import explode_docs_pandas
+    from apple_ocr_backend_spark.sources.corpus import make_corpus
+    rows = explode_docs_pandas(make_corpus(KERNEL_DOCS, seed=7))
+
+    def batches(sub):
+        return [sub.iloc[i:i + KERNEL_BATCH]
+                for i in range(0, len(sub), KERNEL_BATCH)]
+
+    def run_cold(bs):
+        clear_expand_memo()
+        for b in bs:
+            _extract_rows(b)
+
+    iters, spans, us = {}, {}, {}
+    for kind in ("text", "html", "pdf", "image"):
+        sub = rows[rows["kind"] == kind]
+        bs = batches(sub)
+        iters[kind] = timed(lambda: run_cold(bs), 3)
+        spans[kind] = len(sub)
+        us[kind] = round(best_sec(iters[kind]) / len(sub) * 1e6, 1)
+    work = batches(rows) * cores
+    workers = sorted({cores, *(1 << i for i in range(cores.bit_length())
+                               if 1 << i < cores)})
+    dps = []
+    for w in workers:
+        with mp.get_context("spawn").Pool(w) as pool:
+            pool.map(_extract_rows, work[:w])  # start + import, untimed
+            iters[f"pool{w}"] = timed(lambda: pool.map(_extract_rows, work), 1)
+        dps.append(round(KERNEL_DOCS * cores / best_sec(iters[f"pool{w}"]), 1))
+    return {"iters": iters,
+            "result": {"n_docs": KERNEL_DOCS, "batch_rows": KERNEL_BATCH,
+                       "spans": spans, "us_per_span": us,
+                       "pool": {"workers": workers, "docs_per_sec": dps,
+                                "efficiency": efficiency(
+                                    list(zip(workers, dps)))}}}
+
+
 def point(spec: dict) -> dict:
     """One measurement in this process: a session at ``spec["master"]``
     (plus ``spec["extra_conf"]``), ``POINTS[spec["fn"]]`` with
-    ``spec["args"]``, and the session's resolved config."""
+    ``spec["args"]``, and the session's resolved config.  The ``kernel``
+    point starts no session; its master only names the core count."""
+    if spec["fn"] == "kernel":
+        return kernel_point(_cores(spec["master"]))
     spark = make_spark(spec["master"], spec.get("extra_conf"))
     try:
         out = POINTS[spec["fn"]](spark, **spec.get("args", {}))
@@ -400,7 +468,7 @@ def point(spec: dict) -> dict:
 
 
 def fresh_jvm(spec: dict) -> dict:
-    """``point(spec)`` in a new interpreter and JVM: one process cannot
+    """``point(spec)`` in a new interpreter (and JVM): one process cannot
     restart its SparkSession with another master reliably, and worker
     VmHWM is monotone per process.  Returns the child's last stdout
     line; Spark logs stream to stderr."""
@@ -438,10 +506,14 @@ STUDIES = {
     "catalog": ([{"fn": "catalog"}], _single),
     "session_skew": ([{"fn": "session_skew"}], _single),
     "image": ([{"fn": "image"}], _single),
-    # fresh JVM per point: VmHWM is monotone per process
-    "memory": ([{"fn": "memory", "master": "local[4]",
-                 "extra_conf": {BATCH_ROWS: str(rows)}}
-                for rows in (8192, 1_000_000)], _rss_ratio),
+    # fresh JVM per point: VmHWM is monotone per process.  The session's
+    # bound, then no bound: a row cap above the partition size and
+    # Spark's own byte-cap default (2**31 - 1, no cap)
+    "memory": ([{"fn": "memory", "master": "local[4]", "extra_conf": conf}
+                for conf in ({}, {BATCH_ROWS: "1000000",
+                                  BATCH_BYTES: str((1 << 31) - 1)})],
+               _rss_ratio),
+    "kernel": ([{"fn": "kernel"}], _single),
 }
 
 

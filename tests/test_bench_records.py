@@ -85,9 +85,10 @@ def test_bench_code_declares_no_session_config():
             if pat.search(line)]
     assert not hits, hits
     # the other way in is a point spec's extra_conf: only the memory
-    # study's independent variable (the Arrow batch size) may pass there
+    # study's independent variables (the Arrow batch row and byte caps)
+    # may pass there
     specs = [s for specs, _ in bench.STUDIES.values() for s in specs]
     specs += [s for kind in ("fused", "pixels", "image")
               for s in bench.scaling(kind, [1, 4])[0]]
     extra = {k for s in specs for k in s.get("extra_conf", {})}
-    assert extra <= {bench.BATCH_ROWS}, extra
+    assert extra <= {bench.BATCH_ROWS, bench.BATCH_BYTES}, extra

@@ -260,6 +260,146 @@ def test_quality_score_matches_scalar_model(rows):
 
 
 # --------------------------------------------------------------------------- #
+# the code-point / base-36 paths at their encoding edges
+# --------------------------------------------------------------------------- #
+
+# chars that uppercase INTO the charset (ı -> I, ſ -> S), change length
+# (ß -> SS), NUL (numpy ``U`` strings drop a trailing one) and Unicode
+# whitespace that strip() removes
+edge_chars = st.sampled_from(list(ALPHABET + "ıſßé\x00 \u00a0\u2003\u3000\t"))
+edge_text = st.one_of(
+    st.text(alphabet=edge_chars, min_size=0, max_size=14),
+    st.builds(lambda pad, core, tail: pad + core + tail,
+              st.sampled_from(["", " ", "\u00a0", "\u2003\t"]),
+              serial12 | st.text(alphabet=edge_chars, min_size=10, max_size=13),
+              st.sampled_from(["", "\x00", " ", "\u3000"])))
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(edge_text, min_size=1, max_size=8),
+       st.floats(min_value=0.0, max_value=1.0, allow_nan=False))
+@example(["ſ02Y95A8JG5H", "ıC02Y95A8JG5", "C02Y95A8JGß", "C02Y95A8JG5\x00",
+          "C02Y95A8JG5H\x00", "\u3000C02Y95A8JG5H\u00a0", ""], 0.7)
+def test_code_paths_match_scalar_models_on_edges(strings, conf):
+    s = pd.Series(strings, dtype=object)
+    got = K.validate_extended(s)["is_valid"]
+    assert [bool(g) for g in got] == [_valid_model(x) for x in strings]
+    assert list(K.quality_score(s, pd.Series([conf] * len(s)))) == \
+        [_quality_model(x, conf) for x in strings]
+    assert list(K.normalize_ambiguous(s)) == [_normalize_model(x) for x in strings]
+
+
+def test_uppercase_into_charset_is_valid():
+    assert K.validate_extended(pd.Series(["ſ02Y95A8JG5H"]))["is_valid"][0]
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.tuples(st.integers(0, 2),
+                          st.text(alphabet="AOIS05\x00ſ ", max_size=13),
+                          st.sampled_from([0.5, 0.6, 0.7])),
+                min_size=1, max_size=14))
+def test_a1_a2_ties_match_models(rows):
+    """Tie-heavy occurrence streams (three confidences, few distinct
+    serials of any length, several groups) through A1 and A2 against
+    the literal reference loops."""
+    from test_serial_kernels import naive_aggregate
+    df = pd.DataFrame(rows, columns=["g", "serial", "conf"]).assign(
+        seq=range(len(rows)))
+    a1 = K.aggregate_candidates(df, ["g"])
+    # A2 is bit-exact to the fold at <= 2 occurrences per serial (see
+    # test_merge_passes_equals_sequential_fold)
+    seen: dict = {}
+    keep = []
+    for k in zip(df["g"], df["serial"]):
+        seen[k] = seen.get(k, 0) + 1
+        keep.append(seen[k] <= 2)
+    capped = df[keep]
+    a2 = K.merge_passes(capped, ["g"])
+    assert list(a1["g"]) == sorted(a1["g"]) and list(a2["g"]) == sorted(a2["g"])
+    for g in sorted(set(df["g"])):
+        sub, a1g = df[df["g"] == g], a1[a1["g"] == g]
+        assert list(a1g["rank"]) == list(range(len(a1g)))
+        assert list(zip(a1g["serial"], a1g["conf"])) == \
+            naive_aggregate(list(zip(sub["serial"], sub["conf"])))
+        csub, a2g = capped[capped["g"] == g], a2[a2["g"] == g]
+        assert list(a2g["rank"]) == list(range(len(a2g)))
+        assert list(zip(a2g["serial"], a2g["conf"])) == \
+            _a2_fold_model(list(zip(csub["serial"], csub["conf"])))
+
+
+# --------------------------------------------------------------------------- #
+# pdf layout: extract_pdf == a per-span walk of the module docstring's rules
+# --------------------------------------------------------------------------- #
+
+def _pdf_number(v: str, signed: bool) -> bool:
+    if signed and v.startswith("-"):
+        v = v[1:]
+    whole, dot, frac = v.partition(".")
+    return whole.isdecimal() and (not dot or frac.isdecimal())
+
+
+def _pdf_model(text: str | None, gap_factor: float) -> list[str]:
+    """Rules 1-5 of ``operators/pdf_extract.py``, one span at a time."""
+    recs = []
+    for rec in (text or "").split("\n"):                      # 1. parse
+        head, bar, line = rec.partition("|")
+        nums = head.split(",")
+        if bar and len(nums) == 3 and all(
+                _pdf_number(v, i < 2) for i, v in enumerate(nums)):
+            x, y, size = map(float, nums)
+            recs.append((y, x, line, size))
+    recs.sort(key=lambda r: r[:3])                             # 2. order
+    lines: list[list] = []                                     # 3. same y
+    for y, _, line, size in recs:
+        if lines and lines[-1][0] == y:
+            lines[-1][2].append(line)
+        else:
+            lines.append([y, size, [line]])
+    blocks: list[list[str]] = []                               # 4. gaps
+    for i, (y, _, words) in enumerate(lines):
+        if i == 0 or y - lines[i - 1][0] > gap_factor * lines[i - 1][1]:
+            blocks.append([])
+        blocks[-1].append(" ".join(words))
+    return ["\n".join(b) for b in blocks]                      # 5. emit
+
+
+# y 100 / 118 / 136 sit exactly pdf_gap_factor (1.8) x size 10 apart;
+# "118" and "118.0" are one visual line
+_pdf_record = st.builds(
+    lambda x, y, size, line: f"{x},{y},{size}|{line}",
+    st.sampled_from(["72", "72.5", "300", "-5", "007", "72.0"]),
+    st.sampled_from(["100", "118", "118.0", "136", "100.5", "-0", "0"]),
+    st.sampled_from(["10", "12", "0", "2.5"]),
+    st.text(alphabet="ab |,", max_size=4))
+_pdf_junk = st.sampled_from(["nonsense", "72,100|x", "a,b,c|d", "72,100,-3|n",
+                             "", "72,100,10", "72,,10|e", "|broken"])
+_pdf_span = st.one_of(
+    st.none(),
+    st.lists(st.one_of(_pdf_record, _pdf_record, _pdf_junk),
+             max_size=8).map("\n".join),
+    st.lists(_pdf_junk, min_size=1, max_size=3).map("\n".join))
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_pdf_span, min_size=1, max_size=6),
+       st.sampled_from([1.8, 0.5]))
+def test_extract_pdf_matches_per_span_model(texts, gap_factor):
+    import numpy as np
+    from apple_ocr_backend_spark.config import ExtractConfig
+    from apple_ocr_backend_spark.operators.pdf_extract import extract_pdf
+    df = pd.DataFrame({"doc_id": [f"d{i}" for i in range(len(texts))],
+                       "span_pos": 0, "offset": 0,
+                       "text": np.array(texts, dtype=object)},
+                      index=np.arange(len(texts)) * 3 + 7)
+    out = extract_pdf(df, ExtractConfig(pdf_gap_factor=gap_factor))
+    assert list(out.index) == sorted(out.index)
+    for label, text in zip(df.index, texts):
+        mine = out.loc[out.index == label]
+        assert list(mine["text"]) == _pdf_model(text, gap_factor), text
+        assert list(mine["out_rank"]) == list(range(len(mine)))
+
+
+# --------------------------------------------------------------------------- #
 # image kernels: NMS + despeckle invariants
 # --------------------------------------------------------------------------- #
 

@@ -204,6 +204,34 @@ def test_expand_matches_naive():
         assert got == naive_expand(t, True), t
 
 
+def test_expand_memo_bounded_by_variants(monkeypatch):
+    """Hostile tokens (every char ambiguous) expand to thousands of
+    variants each; the memo evicts by the variants it holds, so streaming
+    them keeps it within budget, and every expansion still equals the
+    naive one — evicted, re-expanded or served from the memo."""
+    assert len(K._expand_one("LOSTDQOIZSBL")) == 4608
+    rng = np.random.RandomState(29)
+    hostile = ["LOSTDQOIZSBL"] + ["".join(rng.choice(list("LOSTDQIZBG"), 12))
+                                 for _ in range(11)]
+    want = {t: sorted(naive_expand(t, True)) for t in hostile}
+    budget = 3 * 4608
+    monkeypatch.setattr(K, "EXPAND_MEMO_VARIANTS", budget)
+    K.clear_expand_memo()
+    try:
+        for _ in range(3):
+            for i in range(0, len(hostile), 2):
+                batch = hostile[i:i + 2] + ["C02Y95A8JG5H"]
+                df = K.expand_ambiguous(pd.Series(batch))
+                for j, t in enumerate(batch):
+                    got = list(df.loc[df["idx"] == j, "variant"])
+                    assert got == (want.get(t) or sorted(naive_expand(t)))
+                held = sum(len(v) for v in K._MEMO.values())
+                assert held == K._memo_held <= budget
+                assert all(v.dtype == np.int64 for v in K._MEMO.values())
+    finally:
+        K.clear_expand_memo()
+
+
 def test_validate_matches_naive():
     rng = np.random.RandomState(13)
     strs = _random_strings(800, rng) + ["", "  ", "D2KFL96JDRVG", "A1BCDEFGHJK9"]
