@@ -21,6 +21,8 @@ plans       end-to-end pipeline composition (one extraction plan: a single
             Arrow kernel pass with per-span OCR early stop; checkpoint
             commits) and the query/oracle catalog
 streaming   Structured Streaming ingestion variant
+worker      once-per-worker setup of a Spark Python worker (zip importers
+            re-read an archive only when it changed on disk)
 
 Nothing here is a port: the reference is a per-request FastAPI/OpenCV/EasyOCR
 service; this repo is a declarative Spark DataFrame program whose only Python
@@ -28,3 +30,9 @@ hot paths are Arrow-vectorized pandas UDF stages.
 """
 
 __version__ = "0.1.0"
+
+from .worker import install_in_spark_task
+
+# inside a Spark Python worker, stop each later task from re-reading every
+# zip archive on sys.path (see worker.py); a no-op in the driver
+install_in_spark_task()

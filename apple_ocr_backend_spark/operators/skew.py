@@ -65,10 +65,14 @@ def repartition_salted(rows: DataFrame, num_partitions: int | None = None) -> Da
     and per Arrow batch rather than per row:
 
     * per task, pyspark's worker calls ``importlib.invalidate_caches()``,
-      which on CPython 3.11 re-reads the 3.5 MB ``pyspark.zip`` directory
-      once per cached zip importer — about 0.1-0.3 s per task on a 4-vCPU
-      host (a no-op ``mapInArrow`` over 100k rows took 0.45 s at 4
-      partitions and 4.9-5.5 s at 64);
+      which on CPython < 3.13 re-reads an archive's directory once per
+      cached zip importer: 12 times ``pyspark.zip``'s, twice the
+      spark-core jar's (0.3-0.4 s per task on a 4-vCPU host).  The package
+      pays that once per worker, not per task: imported in a task, it
+      keys each importer's re-read on the archive's stat
+      (``apple_ocr_backend_spark.worker``), so a worker's later tasks read
+      nothing (``bench.py --study worker``: an empty kernel's median task
+      went 382 -> 92 ms);
     * per batch, the kernel pays pandas frame assembly and the group
       machinery, so fewer, fuller batches amortize it.
 

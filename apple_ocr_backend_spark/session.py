@@ -47,7 +47,12 @@ def get_spark(app_name: str = "apple_ocr_backend_spark",
          # batches.  extract_mixed at local[4], one wave (perfbench, median
          # of 2 runs, worker peak RSS / docs/s; 4 waves read 135 MB):
          # 512 KiB 138 MB / 2,224; 768 KiB 140 MB / 2,544; 1 MiB 145 MB /
-         # 2,876; no cap 149 MB / 3,434 (+10 % RSS, over the bench bound)
+         # 2,876; no cap 149 MB / 3,434 (+10 % RSS, over the bench bound).
+         # One wave stays the best count now that a Python worker pays the
+         # per-task import cost (zip directory re-reads) once per worker, not
+         # per task (worker.py): extract + merge of the 8,000 extract_mixed
+         # docs at local[4], median of 6, took 1.01 s at 4 partitions,
+         # 1.13 s at 8 and 1.23 s at 12
          .config("spark.sql.execution.arrow.maxBytesPerBatch", str(1 << 20))
          .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
          .config("spark.ui.enabled", "false")

@@ -6,6 +6,7 @@ studies, all timed by one loop (``timed``).
     python bench.py --scaling fused 2,8  # N->4N evidence: fused|pixels|image
     python bench.py --study skew         # one entry of STUDIES
     python bench.py --study kernel       # the kernel alone: no Spark
+    python bench.py --study worker       # fixed per-task cost of a kernel
     python bench.py --render             # latest record per study, markdown
 
 Default mode runs the headline catalog queries and fused extraction at
@@ -22,9 +23,10 @@ on one host): one point per core count on the identical replicated corpus
 (``$SPARK_GRAFT_REPLICATE``, default 32), and the efficiency of every
 adjacent pair.  ``--study`` runs one entry of ``STUDIES``; the ``kernel``
 study times the extraction kernel's kind branches and its raw-CPU process
-pool ceiling with no Spark at all.  Every point of both runs in a fresh
-process (``fresh_jvm``), and each run appends ONE
-sorted-key JSON record to ``BENCH.jsonl``: study, the point specs
+pool ceiling with no Spark at all, and the ``worker`` study the Python
+kernel stage's fixed per-task cost (an empty kernel, one wave).  Every
+point of both runs in a fresh process (``fresh_jvm``), and each run
+appends ONE sorted-key JSON record to ``BENCH.jsonl``: study, the point specs
 (``params``), each point's resolved session config and per-iteration
 seconds and steal ticks, the result, UTC time, git sha and sf_dir.
 ``BENCH.md`` is the frozen prose history of earlier rounds; no code writes
@@ -390,9 +392,74 @@ def memory_point(spark) -> dict:
                        "worker_peak_rss_mb": peak.get("peak_mb")}}
 
 
+def _empty_kernel(batches):
+    """A mapInArrow kernel that reads its input and emits nothing.  It
+    imports the package, as the extraction kernel does, so a worker gets
+    whatever once-per-worker setup the package does on import."""
+    import apple_ocr_backend_spark  # noqa: F401
+    for _ in batches:
+        pass
+    return iter(())
+
+
+def _task_ms(spark, group: str) -> list[int]:
+    """Durations (launch to finish, ms) of every task of the jobs run
+    under job group ``group``, read from the live status store once the
+    listener has recorded them all."""
+    sc = spark.sparkContext
+    st, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    stages = [st.getStageInfo(s) for j in st.getJobIdsForGroup(group)
+              for s in st.getJobInfo(j).stageIds]
+    for _ in range(100):
+        out = []
+        for s in stages:
+            tasks = store.taskList(s.stageId, s.currentAttemptId, 100_000)
+            out += [tasks.apply(i).duration() for i in range(tasks.size())]
+        if (len(out) == sum(s.numTasks for s in stages)
+                and all(d.isDefined() for d in out)):
+            return sorted(d.get() for d in out)
+        time.sleep(0.05)
+    raise RuntimeError(f"status store incomplete for job group {group}")
+
+
+def worker_point(spark) -> dict:
+    """The Python kernel stage's fixed per-task cost: an empty mapInArrow
+    (``_empty_kernel``) over extract_mixed-shaped span rows
+    (``make_corpus(500, seed=7)`` x 16, salted, one wave of
+    ``defaultParallelism`` partitions, checkpointed so each timed job is
+    that one stage).  Median task ms of 5 timed runs after 2 warmups: the
+    first forks the workers, and a worker's setup on import takes effect
+    from its next task on.  Every run's task ms is in the record."""
+    from pyspark.sql import functions as F
+    from apple_ocr_backend_spark.operators.skew import (
+        explode_salted, repartition_salted)
+    from apple_ocr_backend_spark.sources.corpus import (
+        docs_spark_schema, make_corpus)
+    base = spark.createDataFrame(make_corpus(500, seed=7),
+                                 schema=docs_spark_schema())
+    docs = (base.crossJoin(spark.range(16).withColumnRenamed("id", "rep"))
+            .select(F.concat("doc_id", F.lit(".r"),
+                             F.col("rep").cast("string")).alias("doc_id"),
+                    "spans"))
+    rows = repartition_salted(explode_salted(docs)).localCheckpoint()
+    task_ms = []
+
+    def run():
+        group = f"worker{len(task_ms)}"
+        spark.sparkContext.setJobGroup(group, "empty kernel")
+        run_noop(rows.mapInArrow(_empty_kernel, rows.schema))
+        task_ms.append(_task_ms(spark, group))
+    its = timed(run, 5, 2)
+    timed_ms = [ms for run_ms in task_ms[2:] for ms in run_ms]
+    return {"iters": {"empty_kernel": its},
+            "result": {"n_rows": rows.count(), "task_ms": task_ms,
+                       "task_ms_median": statistics.median(timed_ms)}}
+
+
 POINTS = {"extract": extract_point, "image": image_point, "skew": skew_point,
           "dedup": dedup_point, "catalog": catalog_point,
-          "session_skew": session_skew_point, "memory": memory_point}
+          "session_skew": session_skew_point, "memory": memory_point,
+          "worker": worker_point}
 
 
 def _extract_rows(rows) -> int:
@@ -514,6 +581,7 @@ STUDIES = {
                                   BATCH_BYTES: str((1 << 31) - 1)})],
                _rss_ratio),
     "kernel": ([{"fn": "kernel"}], _single),
+    "worker": ([{"fn": "worker"}], _single),
 }
 
 
