@@ -43,8 +43,9 @@ def spans_out(src: pd.DataFrame, rows, out_rank, text, kind: str = "main_text",
     ``rows[i]`` (a position in ``src``) and is indexed by that row's label.
 
     Every kind kernel returns its rows in input-row order with ``out_rank``
-    dense from 0 per input row, so a caller can gather per-input-row keys
-    (the Spark kernel's ``salt``) through the index."""
+    dense from 0 per input row, so ``(offset, span_pos, out_rank)`` is
+    unique per doc and a caller can gather per-input-row keys through the
+    index."""
     rows = np.asarray(rows, dtype=np.int64)
     return pd.DataFrame({
         "doc_id": src["doc_id"].to_numpy()[rows],

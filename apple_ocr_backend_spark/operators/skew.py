@@ -8,10 +8,12 @@ one Arrow batch / one reassembly group.  Strategy (SURVEY.md §4):
   a normal doc has one salt, a 100k-span doc ~391 of them;
 * extraction stages repartition on ``(doc_id, salt)`` so giant docs spread
   across tasks;
-* reassembly is two-phase: partial sorted arrays per ``(doc_id, salt)``,
-  then a flatten + array_sort merge per ``doc_id`` — the only full-doc
-  group touches already-aggregated partials (the deliberate two-phase
-  extract-then-reassemble around the skewed shuffle).
+* the extraction kernel is a per-row map over that partitioning, and
+  reassembly is ONE ``groupBy(doc_id)`` with one ``array_sort`` of the
+  collected span rows (``plans.pipeline.reassemble_partials``).  Because
+  a normal doc's rows share one task, the map-side partial aggregate
+  collects about one group per doc; a giant doc's salts meet only in the
+  final merge.
 
 Reference analog: time-budgeted stage caps (``ocr_adapter_improved.py:
 1069-1071,1128-1130``) replaced by deterministic size-aware work splitting.
@@ -31,9 +33,10 @@ def explode_salted(docs: DataFrame,
     Output: ``doc_id, salt, span_pos, kind, text, media_ref, offset`` — one
     row per span, plus ONE row for each doc whose ``spans`` is empty or
     null: salt 0, every other column null.  That placeholder carries the
-    doc through the kernel exchange, so the partial merge
-    (``plans.pipeline.reassemble_partials``) sees every doc; no kernel
-    takes it (its ``kind`` matches no branch).
+    doc through the kernel exchange; no kernel takes it (its ``kind``
+    matches no branch), and the kernel's null-span row for its doc brings
+    it to the merge (``plans.pipeline.reassemble_partials``), which emits
+    it with ``spans = []``.
     """
     n_salts = F.greatest(
         F.lit(1),

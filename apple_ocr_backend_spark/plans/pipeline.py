@@ -7,22 +7,21 @@ re-expression):
            given]
          ──repartition(doc_id, salt)
          ──ONE mapInArrow (``operators.assemble.extract_span_rows`` per
-           Arrow batch; one sorted partial span array per input
-           (doc,salt) group, empty when nothing survives)
-         ──groupBy(doc_id): flatten + array_sort (one compact payload
-           shuffle) ──> extracted docs
+           Arrow batch; a per-row map: one (doc_id, span) row per
+           extracted span plus one null-span row per distinct doc_id)
+         ──groupBy(doc_id): array_sort(collect_list(span)) (the one group
+           and the one sort) ──> extracted docs
 
-One ``documents`` scan: every doc reaches the merge through its own
-(possibly empty) partials.  The plan picks the image branch: with a media
-store the kernel OCRs the decoded PNG payload (``operators.ocr_extract.
-recover_pixels``); without one it resolves the span's token stream
-(``recover_ocr``), whose progressive passes stop per span once a pass's
-best candidate is confident enough (reference P9, early stop inside the
-kernel).
+One ``documents`` scan: every doc reaches the merge through its null-span
+row.  The plan picks the image branch: with a media store the kernel OCRs
+the decoded PNG payload (``operators.ocr_extract.recover_pixels``); without
+one it resolves the span's token stream (``recover_ocr``), whose
+progressive passes stop per span once a pass's best candidate is confident
+enough (reference P9, early stop inside the kernel).
 
-Everything relational (salting, ordering, reassembly) runs JVM-side;
-Python only touches Arrow batches inside the kernel — no per-row Python
-anywhere (north_rule).
+Everything relational (salting, grouping, ordering, reassembly) runs
+JVM-side; Python only touches Arrow batches inside the kernel — no per-row
+Python anywhere (north_rule).
 
 The per-doc output is bit-identical to the pandas oracle
 (`sources.corpus.extract_docs_oracle`): every doc's spans are sorted by the
@@ -37,20 +36,17 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..config import ExtractConfig, DEFAULT_CONFIG
 from ..operators.skew import explode_salted, repartition_salted
 
-PARTIAL_SCHEMA = ("doc_id string, partial array<struct<offset:int,"
-                  "span_pos:int,out_rank:int,kind:string,text:string,"
-                  "media_ref:string>>")
-_PARTIAL_FIELDS = ["offset", "span_pos", "out_rank", "kind", "text",
-                   "media_ref"]
-_SPAN_COLS = ["doc_id", "salt", "span_pos", "offset", "kind", "media_ref",
-              "text"]
+SPAN_ROW_SCHEMA = ("doc_id string, span struct<offset:int,span_pos:int,"
+                   "out_rank:int,kind:string,text:string,media_ref:string>")
+_SPAN_FIELDS = ["offset", "span_pos", "out_rank", "kind", "text", "media_ref"]
+_KERNEL_COLS = ["doc_id", "span_pos", "offset", "kind", "media_ref", "text"]
 
 
 def _mono_partial_kernel(cfg_dict: dict):
-    """The extraction kernel (mapInArrow): per Arrow batch, extract every
-    span row (``operators.assemble.extract_span_rows``, the oracle's own
-    dispatch) and emit one sorted partial span array per input
-    (doc_id, salt) group.
+    """The extraction kernel (mapInArrow), a plain per-row map: per Arrow
+    batch, extract every span row (``operators.assemble.extract_span_rows``,
+    the oracle's own dispatch) and emit it as ``(doc_id, span)``, plus one
+    null-``span`` row for each distinct ``doc_id`` of the batch.
 
     One UDF stage instead of a per-kind branch union: measured on this
     box, three concurrent UDF stages + a JVM branch union ran at ~0.5
@@ -59,40 +55,28 @@ def _mono_partial_kernel(cfg_dict: dict):
     is ``ocr_extract.recover_pixels`` when the batch carries a joined
     ``payload`` column, else the token-stream ``recover_ocr``.
 
-    The input partitioning (doc_id, salt) already co-locates every row of a
-    (doc, salt) group in one partition, so the kernel can emit sorted
-    partial span arrays per (doc_id, salt) directly — the JVM then needs only
-    ONE payload shuffle (groupBy doc_id, flatten+sort small arrays) instead
-    of two groupBy passes over individual span rows.  Sort key
-    (offset, span_pos, out_rank) is unique per doc (span_pos is the array
-    position, out_rank dense within a span), so the kernel's sort and the
-    JVM array_sort agree with no tie-break ambiguity.
+    The kernel builds no per-group arrays and sorts nothing:
+    ``reassemble_partials`` groups and sorts once, JVM-side.  ``span``
+    leads with the sort key (offset, span_pos, out_rank), unique per doc
+    (span_pos is the array position, out_rank dense within a span), so the
+    merge's ``array_sort`` has no ties and no result depends on
+    partitioning, batch size or row order.  The null
+    span rows carry every input doc to the merge, whose ``collect_list``
+    drops them, so a span-less doc (its ``explode_salted`` placeholder
+    row has a null ``kind``, which no kernel takes) or a doc whose every
+    span filters out comes out with ``spans = []``.  ``salt`` is only the
+    exchange key: the plan does not pass it in, and the kernel ignores it
+    if present.
 
-    Each extracted row is indexed by the batch row it came from, so its
-    (doc_id, salt) group number is a gather; one integer lexsort over
-    (group, offset, span_pos, out_rank) orders the rows and per-group
-    counts give the list offsets.  Every input (doc_id, salt) group gets a
-    partial, EMPTY when no span of it survives extraction — including the
-    span-less placeholder row ``explode_salted`` emits (null ``kind``, so
-    no kernel takes it).  So the partial merge sees every input doc.
-
-    Streaming per Arrow batch: each input batch is extracted, sorted and
-    emitted as its own RecordBatch, so per-task memory high-water is ONE
-    Arrow batch (plus its extracted rows), not the full partition.  A
-    (doc, salt) group that straddles a batch boundary emits one partial
-    array per batch; ``reassemble_partials`` flattens ALL partials per
-    doc_id and re-sorts by the same unique prefix, so the final sequence
-    is identical (pinned by
+    Streaming per Arrow batch: each input batch is extracted and emitted
+    as its own RecordBatch, so per-task memory high-water is ONE Arrow
+    batch (plus its extracted rows), not the full partition (pinned by
     test_pipeline_parity.py::test_fused_kernel_streams_per_batch).
-
-    The list<struct> output column is assembled with pyarrow directly from
-    the vectorized numpy columns (StructArray + ListArray over group
-    offsets) — no per-row Python.
     """
-    import numpy as np
-
     def fn(batches):
+        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
         from ..config import ExtractConfig
         from ..operators.assemble import extract_span_rows
         cfg = ExtractConfig(**cfg_dict)
@@ -101,46 +85,34 @@ def _mono_partial_kernel(cfg_dict: dict):
                 continue
             # a span-less placeholder row turns span_pos/offset into floats
             # for its batch; the kernels only carry them through
-            b = batch.to_pandas()
-            group = (b.groupby(["doc_id", "salt"], sort=True, dropna=False)
-                     .ngroup().to_numpy())
-            n_groups = int(group.max()) + 1
-            doc_ids = np.empty(n_groups, dtype=object)
-            doc_ids[group] = b["doc_id"].to_numpy()
-            d = extract_span_rows(b, cfg)
-            g = group[d.index.to_numpy()]
-            d = d.iloc[np.lexsort((d["out_rank"], d["span_pos"],
-                                   d["offset"], g))]
-            offsets = np.concatenate(
-                [[0], np.cumsum(np.bincount(g, minlength=n_groups))])
-            struct = pa.StructArray.from_arrays(
-                [pa.array(d["offset"].to_numpy(dtype=np.int32)),
-                 pa.array(d["span_pos"].to_numpy(dtype=np.int32)),
-                 pa.array(d["out_rank"].to_numpy(dtype=np.int32)),
-                 pa.array(d["kind"], type=pa.string()),
-                 pa.array(d["text"], type=pa.string()),
-                 pa.array(d["media_ref"], type=pa.string())],
-                names=_PARTIAL_FIELDS)
-            partial = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()), struct)
+            d = extract_span_rows(batch.to_pandas(), cfg)
+            span = pa.StructArray.from_arrays(
+                [pa.array(d[c].to_numpy(dtype=np.int32))
+                 for c in _SPAN_FIELDS[:3]]
+                + [pa.array(d[c], type=pa.string()) for c in _SPAN_FIELDS[3:]],
+                names=_SPAN_FIELDS)
+            ids = batch.column("doc_id")
+            docs = pc.unique(ids)
+            # d's index is each extracted row's input row (spans_out)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, type=pa.string()), partial],
-                names=["doc_id", "partial"])
+                [pa.concat_arrays([ids.take(d.index.to_numpy()), docs]),
+                 pa.concat_arrays([span, pa.nulls(len(docs), span.type)])],
+                names=["doc_id", "span"])
     return fn
 
 
-def reassemble_partials(partials: DataFrame) -> DataFrame:
-    """Merge kernel-emitted partial arrays: one groupBy(doc_id) over compact
-    arrays (most docs have exactly one partial), flatten + array_sort by the
-    (offset, span_pos, out_rank) prefix, assign dense order.
+def reassemble_partials(spans: DataFrame) -> DataFrame:
+    """The one merge of the kernel's span rows: groupBy(doc_id),
+    ``array_sort(collect_list(span))`` by the (offset, span_pos, out_rank)
+    prefix, then assign the dense ``order``.
 
-    The kernel emits a partial for every input (doc_id, salt) group, empty
-    when nothing survives, so every input doc is already a group here and a
-    span-less doc comes out once with ``spans = []``."""
-    return (partials
+    ``collect_list`` drops the kernel's null spans, so every input doc is
+    a group here and a span-less doc comes out once with ``spans = []``.
+    The (doc_id, salt) exchange keeps a normal doc in one task, so the
+    map-side partial aggregate sees about one group per doc."""
+    return (spans
             .groupBy("doc_id")
-            .agg(F.array_sort(F.flatten(F.collect_list("partial")))
-                 .alias("ordered"))
+            .agg(F.array_sort(F.collect_list("span")).alias("ordered"))
             .select(
                 "doc_id",
                 F.transform(
@@ -208,14 +180,14 @@ def extract_docs(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     topology; it is kept for callers that still pass it."""
     check_mode(mode)
     rows = explode_salted(docs, cfg)
-    cols = _SPAN_COLS
+    cols = _KERNEL_COLS
     if media is not None:
-        cols = _SPAN_COLS + ["payload"]
+        cols = _KERNEL_COLS + ["payload"]
         rows = (rows.withColumn("__mkey", media_join_key())
                 .join(media.withColumnRenamed("media_ref", "__mkey"),
                       "__mkey", "left")
-                .select(*cols))
-    partials = (repartition_salted(rows, num_partitions).select(*cols)
-                .mapInArrow(_mono_partial_kernel(cfg.as_dict()),
-                            schema=PARTIAL_SCHEMA))
-    return reassemble_partials(partials)
+                .select("salt", *cols))
+    spans = (repartition_salted(rows, num_partitions).select(*cols)
+             .mapInArrow(_mono_partial_kernel(cfg.as_dict()),
+                         schema=SPAN_ROW_SCHEMA))
+    return reassemble_partials(spans)

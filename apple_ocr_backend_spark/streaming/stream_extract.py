@@ -10,7 +10,7 @@ exactly-once semantics enforced by epoch-keyed snapshot commits (a replayed
 micro-batch is a no-op).
 
 Scale notes: ``foreachBatch`` runs the extraction pipeline per micro-batch,
-so all batch-side skew handling (salting, two-phase reassembly) applies
+so all batch-side skew handling (salting, the one span merge) applies
 unchanged; ``maxFilesPerTrigger`` bounds micro-batch size on a cluster.
 """
 

@@ -12,8 +12,9 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 DEFAULT = [
     "pricing_summary", "top_customer_per_nation", "eval_metrics",

@@ -76,7 +76,8 @@ def test_rows_only_queries_run(spark, name):
 
 def test_entry_smoke(spark):
     import sys
-    sys.path.insert(0, "/root/repo")
+    from pathlib import Path
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as E
     df = E.entry(spark)
     assert df.count() > 0

@@ -116,6 +116,39 @@ def test_ingest_epoch_band_bucket_cap_reports_drops(spark, tmp_path):
     assert s2["docs_in"] == 3
 
 
+def test_ingest_epoch_store_scans_are_column_pruned(spark, tmp_path):
+    """Parquet column pruning bounds what an epoch reads from the accepted
+    store: across the physical plans of one epoch's SQL executions, the
+    store is scanned for ``digest`` (exact axis), ``id, sigs`` (near-dup
+    band axis) and ``id, text`` (verify axis) and for nothing wider."""
+    import re
+    status = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        it = status.executionsList().iterator()
+        while it.hasNext():
+            e = it.next()
+            yield e.executionId(), e.physicalPlanDescription()
+
+    t = Table(str(tmp_path / "tbl"))
+    b1 = _docs(spark, [(i, f"distinct seed doc {i} with words {i * 7}")
+                       for i in range(50)])
+    assert ingest_dedup_epoch(t, b1, 0, run_id="r1") is True
+    last = max(i for i, _ in executions())
+    b2 = _docs(spark, [(100, "distinct seed doc 3 with words 21"),
+                       (101, "distinct seed doc 5 with words 35 tail"),
+                       (102, "totally novel content qqq zzz"),
+                       (103, "totally novel content qqq zzz"),
+                       (104, None)])
+    assert ingest_dedup_epoch(t, b2, 1, run_id="r1") is True
+    read = {tuple(re.findall(r"(?:<|,)(\w+):", schema))
+            for i, plan in executions() if i > last
+            for schema in re.findall(
+                r"^\(\d+\) Scan parquet.*?^ReadSchema: (struct<[^\n]*)",
+                plan, re.M | re.S)}
+    assert read == {("digest",), ("id", "sigs"), ("id", "text")}
+
+
 def test_ingest_epoch_empty_batch_commits_ledger(spark, tmp_path):
     """A stream can deliver an EMPTY micro-batch; the epoch must still
     commit its ledger row (exactly-once bookkeeping) without corrupting

@@ -137,14 +137,15 @@ def test_fused_plan_scans_documents_once(spark, corpus, tmp_path):
 def test_fused_kernel_streams_per_batch(spark, corpus):
     """Round-2 verdict #1: the fused mapInArrow kernel must stream one output
     RecordBatch per input Arrow batch (no whole-partition pandas buffering),
-    and a (doc, salt) group straddling a batch boundary must still reassemble
-    into the identical final sequence (reassemble_partials merges multiple
-    partials per key by the unique (offset, span_pos, out_rank) sort)."""
+    and a doc straddling a batch boundary must still reassemble into the
+    identical final sequence (reassemble_partials collects every span row
+    of a doc and sorts by the unique (offset, span_pos, out_rank) key)."""
     import pyarrow as pa
     from apple_ocr_backend_spark.plans.pipeline import _mono_partial_kernel
 
-    # direct kernel probe: ONE (doc, salt) group split across two input
-    # batches -> two emitted RecordBatches (streaming), two partial arrays
+    # direct kernel probe: ONE doc split across two input batches -> two
+    # emitted RecordBatches (streaming), each with that batch's two
+    # extracted spans plus one null-span row for the doc
     b = pd.DataFrame({
         "doc_id": ["d"] * 4, "salt": [0] * 4, "span_pos": [0, 1, 2, 3],
         "offset": [0, 1, 2, 3], "kind": ["text"] * 4,
@@ -157,8 +158,10 @@ def test_fused_kernel_streams_per_batch(spark, corpus):
                                    preserve_index=False)]
     out = list(_mono_partial_kernel(CFG.as_dict())(iter(batches)))
     assert len(out) == 2, "kernel buffered batches instead of streaming"
-    # each batch emitted one partial array for the same (doc, salt)
-    assert [o.num_rows for o in out] == [1, 1]
+    assert [o.num_rows for o in out] == [3, 3]
+    assert [[s and s["text"] for s in o.column("span").to_pylist()]
+            for o in out] == [["alpha one", "beta two", None],
+                              ["gamma three", "delta four", None]]
 
     # end-to-end: tiny Arrow batches force straddling everywhere; the fused
     # result must still equal the oracle bit-for-bit
@@ -204,9 +207,11 @@ def test_fused_kernel_streams_under_byte_cap(spark, corpus):
 
 
 def test_kernel_emits_every_group():
-    """The fused kernel emits one partial per input (doc_id, salt) group —
-    empty for a span-less placeholder row (null span_pos) and for a group
-    whose every span filters out — so the merge needs no doc-id spine."""
+    """The fused kernel emits every extracted span row plus exactly one
+    null-span row per distinct doc_id of each batch — for a span-less
+    placeholder row (null span_pos, doc a), a doc whose every span
+    filters out (b) and a doc with a surviving span (c) alike — so the
+    merge needs no doc-id spine."""
     import pyarrow as pa
     from apple_ocr_backend_spark.plans.pipeline import _mono_partial_kernel
 
@@ -222,11 +227,15 @@ def test_kernel_emits_every_group():
         {"doc_id": "b", "salt": 0, "span_pos": 0, "offset": 0,
          "kind": "text", "media_ref": None, "text": " \t "}], schema=schema)
     kernel = _mono_partial_kernel(CFG.as_dict())
-    out = [b.to_pydict() for b in kernel(iter([batch, batch.slice(1, 2)]))]
-    assert out[0]["doc_id"] == ["a", "b", "c"]
-    assert out[0]["partial"][:2] == [[], []]
-    assert [s["text"] for s in out[0]["partial"][2]] == ["kept text"]
-    assert out[1] == {"doc_id": ["a", "b"], "partial": [[], []]}
+    out = [b.to_pylist() for b in kernel(iter([batch, batch.slice(1, 2)]))]
+    assert len(out) == 2
+    spans = [[r for r in rows if r["span"] is not None] for rows in out]
+    nulls = [sorted(r["doc_id"] for r in rows if r["span"] is None)
+             for rows in out]
+    assert spans == [[{"doc_id": "c", "span": {
+        "offset": 4, "span_pos": 1, "out_rank": 0, "kind": "main_text",
+        "text": "kept text", "media_ref": None}}], []]
+    assert nulls == [["a", "b", "c"], ["a", "b"]]
 
 
 def test_giant_doc_salting(spark):

@@ -2,7 +2,7 @@
 --py-files`` artifact ``scripts/submit.sh`` builds before every submit) must
 carry a working package: built with the same recipe into a temp dir and
 imported from nowhere else, its extraction kernel gives the in-tree
-kernel's partials on one Arrow batch."""
+kernel's span rows on one Arrow batch."""
 
 from __future__ import annotations
 
@@ -16,7 +16,8 @@ import numpy as np
 import pyarrow as pa
 
 from apple_ocr_backend_spark.config import DEFAULT_CONFIG
-from apple_ocr_backend_spark.operators.assemble import explode_docs_pandas
+from apple_ocr_backend_spark.operators.assemble import (explode_docs_pandas,
+                                                       extract_span_rows)
 from apple_ocr_backend_spark.plans.pipeline import _mono_partial_kernel
 from apple_ocr_backend_spark.sources.corpus import make_corpus
 
@@ -70,5 +71,8 @@ def test_ship_zip_matches_sources(tmp_path):
 
     kernel = _mono_partial_kernel(DEFAULT_CONFIG.as_dict())
     in_tree = pa.Table.from_batches(list(kernel(iter([batch]))))
-    assert in_tree.num_rows == len(set(batch.column("doc_id").to_pylist()))
+    extracted = extract_span_rows(batch.to_pandas(), DEFAULT_CONFIG)
+    docs = set(batch.column("doc_id").to_pylist())
+    assert in_tree.num_rows == len(extracted) + len(docs)
+    assert in_tree.column("span").null_count == len(docs)
     assert shipped_out.equals(in_tree)
