@@ -2827,47 +2827,9 @@ _register("training_mix", _q_training_mix, _training_mix_sql())
 # public surface                                                              #
 # =========================================================================== #
 
-# The driver snapshots per-entry correctness in dict iteration order and
-# caps the file at 50 rows/round, so with >50 catalog entries the tail is
-# skipped.  ROTATION RULE (round-4 verdict #1): every entry that missed a
-# driver row LAST round leads THIS round (check the previous
-# CORRECTNESS_r{N}.json for absent keys), followed by the flagship
-# composite (training_mix, re-checked every round) and this round's new
-# entries; the displaced tail is then always entries with a fresh green
-# row from the immediately preceding round — no entry ever goes more than
-# one round without a driver check (the analog of the reference eval
-# harness re-running its full golden set every run,
-# app/services/eval.py:41-182).
-#
-# Round-5 FRONT: the brand-new entries (no prior driver row exists: the
-# seven image-path entries, the audio-path entry, and client_validate),
-# then the 7 entries absent from CORRECTNESS_r04.json, then
-# training_mix, then the round-5 approx siblings, then every entry whose
-# CODE changed this round (an r04 green row doesn't cover changed code:
-# the map-only lang-ID rewrite, the decontaminate sub-n-gram fix, and the
-# quantized embedding-dedup kernels), then the flagship extraction entry
-# (never displaced).  With 73 entries and a 50-row cap the 23 displaced
-# are then all unchanged-since-r04 green entries.
-_FRONT = ["audio_decode_stats", "video_frame_stats", "video_ocr_tta",
-          "image_rois", "image_rois_nms", "image_orientation",
-          "image_decode_stats",
-          "image_resize", "image_ocr", "image_ocr_fallback",
-          "extract_pipeline_pixels", "client_validate",
-          "pack_sequences", "quality_repetition", "pii_mask",
-          "dedup_incremental", "events_asof", "events_sessionize",
-          "length_quantiles",
-          "training_mix",
-          "rolling_active_users_approx", "length_quantiles_approx",
-          "lang_id_multi", "decontaminate", "quality_perplexity",
-          "dedup_spans", "dedup_spans_clean",
-          "dedup_embedding", "dedup_embedding_fitted",
-          "extract_pipeline_fused"]
-
-
 def catalog() -> dict[str, dict]:
-    names = ([n for n in _FRONT if n in _Q]
-             + [n for n in _Q if n not in _FRONT])
-    return {n: _Q[n] for n in names}
+    """Every entry, in registration order."""
+    return dict(_Q)
 
 
 def queries():

@@ -24,8 +24,10 @@ end, so a stream epoch commits the same lineage as a bucket.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
 from ..sources.icelite import Table
@@ -86,7 +88,7 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
                   cfg: ExtractConfig = DEFAULT_CONFIG, n_buckets: int = 8,
                   mode: str = "fused", run_id: str = "run",
                   fail_after: int | None = None,
-                  concurrency: int = 1) -> dict:
+                  concurrency: int = 2) -> dict:
     """Extract ``docs`` into the icelite table at ``table_dir``, one commit
     per doc bucket; skips buckets already committed (resume).
 
@@ -100,16 +102,21 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     ``defaultParallelism`` tasks, so every bucket pays the fixed
     Python-worker cost once per core and no more.
 
-    ``fail_after`` (tests only): raise after committing that many buckets,
-    simulating a kill between stage commits (forces serial execution).
+    Buckets run on a pool of ``concurrency`` threads, so one bucket's
+    driver-only time (plan build, persist, the lineage collect) overlaps
+    another bucket's stages on the same executors.  Each thread inherits
+    the caller's job group, description and tags.  Each bucket's commit
+    stays atomic (icelite serializes the commit point).  The first bucket
+    error cancels every bucket not yet started, waits for those in flight
+    (each commits whole or leaves a staging orphan for ``vacuum``) and is
+    re-raised.
 
-    ``concurrency`` > 1 processes buckets in parallel threads — Spark
-    schedules the concurrent jobs across the same executors (free throughput
-    when single-bucket jobs can't saturate the cluster); each bucket's
-    commit stays atomic (icelite serializes the commit point).
+    ``fail_after`` (tests only): run only the first ``fail_after`` todo
+    buckets, then raise once they have committed, simulating a kill
+    between stage commits.
 
-    Returns {"processed": [bucket ids worked this run], "skipped": [...],
-    "table": Table}.
+    Returns {"processed": [bucket ids worked this run, in bucket order],
+    "skipped": [...], "table": Table}.
     """
     check_mode(mode)
     table = Table(table_dir)
@@ -117,27 +124,29 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     docs_b = docs.withColumn("_bucket", bucket_of(F.col("doc_id"), n_buckets))
     docs_b = docs_b.persist()
     skipped = [b for b in range(n_buckets) if b in done]
-    todo = [b for b in range(n_buckets) if b not in done]
-    processed: list[int] = []
+    processed = [b for b in range(n_buckets) if b not in done][:fail_after]
 
     def work(b: int) -> None:
-        sub = docs_b.filter(F.col("_bucket") == b).drop("_bucket")
-        commit_extracted(table, extract_docs(sub, cfg),
-                         f"extract/bucket={b}",
-                         {"bucket": b, "run_id": run_id, "stage": "extract"})
-        processed.append(b)
+        try:
+            sub = docs_b.filter(F.col("_bucket") == b).drop("_bucket")
+            commit_extracted(table, extract_docs(sub, cfg),
+                             f"extract/bucket={b}",
+                             {"bucket": b, "run_id": run_id, "stage": "extract"})
+        except BaseException:
+            # cancel the queue before this thread can take another bucket
+            pool.shutdown(wait=False, cancel_futures=True)
+            raise
 
     try:
-        if concurrency <= 1 or fail_after is not None:
-            for b in todo:
-                work(b)
-                if fail_after is not None and len(processed) >= fail_after:
-                    raise RuntimeError(
-                        f"injected failure after {fail_after} buckets")
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=concurrency) as ex:
-                list(ex.map(work, todo))  # re-raises worker exceptions
+        # one wrapper per bucket: one shared wrapper shares one
+        # local-properties object, and concurrent SQL executions then
+        # overwrite each other's execution id
+        targets = [inheritable_thread_target(spark)(work) for _ in processed]
+        with ThreadPoolExecutor(min(concurrency, len(processed)) or 1) as pool:
+            for f in [pool.submit(t, b) for t, b in zip(targets, processed)]:
+                f.result()  # re-raises the first bucket error
     finally:
         docs_b.unpersist()
+    if len(processed) == fail_after:  # all of them committed: the kill
+        raise RuntimeError(f"injected failure after {fail_after} buckets")
     return {"processed": processed, "skipped": skipped, "table": table}

@@ -7,6 +7,7 @@ studies, all timed by one loop (``timed``).
     python bench.py --study skew         # one entry of STUDIES
     python bench.py --study kernel       # the kernel alone: no Spark
     python bench.py --study worker       # fixed per-task cost of a kernel
+    python bench.py --study resume       # bucket threads of a resumable run
     python bench.py --render             # latest record per study, markdown
 
 Default mode runs the headline catalog queries and fused extraction at
@@ -62,6 +63,7 @@ BATCH_BYTES = "spark.sql.execution.arrow.maxBytesPerBatch"
 HOT_EVENTS = 2_000_000  # session_skew: events of the one hot user
 IMAGE_DOCS = 6000  # image: synthetic docs through the ROI chain
 KERNEL_DOCS, KERNEL_BATCH = 4000, 2500  # kernel: make_corpus docs, rows/batch
+RESUME_KS = (1, 2, 4, 8)  # resume: bucket-thread counts, in round-0 order
 
 # representative catalog entries (relational core + training-data ops)
 DRIVER_QUERIES = [
@@ -456,10 +458,58 @@ def worker_point(spark) -> dict:
                        "task_ms_median": statistics.median(timed_ms)}}
 
 
+def resume_point(spark, rounds: int = 5) -> dict:
+    """Bucket overlap in a resumable run: ``run_resumable`` (8 buckets, no
+    kill) into a fresh table at each ``concurrency`` of ``RESUME_KS``, on
+    the resume_skewed-shaped corpus (``make_corpus(500, seed=7)`` x 6 plus
+    its 2 giant PDF docs of 3,500 spans), read from parquet.  One warmup,
+    then ``rounds`` rounds; the order of k reverses every round, so a
+    warming JVM or a steal spike does not favour one k.  Median and
+    quartiles of seconds per k; every run's steal ticks are in the
+    record."""
+    import tempfile
+    from pyspark.sql import functions as F
+    from apple_ocr_backend_spark.plans.checkpoint import run_resumable
+    from apple_ocr_backend_spark.sources.corpus import (
+        docs_spark_schema, make_corpus)
+    base = spark.createDataFrame(
+        make_corpus(500, seed=7, giant_docs=2, giant_spans=3500),
+        schema=docs_spark_schema())
+    giant = F.col("doc_id").startswith("doc_giant_")
+    reps = spark.range(6).select(
+        F.concat(F.lit(".r"), F.col("id").cast("string")).alias("rep"))
+    small = base.where(~giant).crossJoin(reps).select(
+        F.concat("doc_id", "rep").alias("doc_id"), "spans")
+    iters = {f"k{k}": [] for k in RESUME_KS}
+    with tempfile.TemporaryDirectory(prefix="bench_resume_") as tmp:
+        small.unionByName(base.where(giant)) \
+            .repartition(2 * spark.sparkContext.defaultParallelism) \
+            .write.parquet(f"{tmp}/docs")
+        docs = spark.read.parquet(f"{tmp}/docs")
+        n_docs = docs.count()
+
+        def run(k: int, table: str) -> None:  # a fresh table per run
+            run_resumable(spark, docs, f"{tmp}/{table}", n_buckets=8,
+                          concurrency=k)
+        timed(lambda: run(max(RESUME_KS), "warmup"), 0, 1)
+        for r in range(rounds):
+            for k in RESUME_KS[::1 if r % 2 == 0 else -1]:
+                iters[f"k{k}"] += timed(lambda: run(k, f"r{r}k{k}"), 1)
+    sec = {}
+    for name, its in iters.items():
+        q1, med, q3 = statistics.quantiles([s for s, _ in its], n=4)
+        sec[name] = {"median": round(med, 3), "q1": round(q1, 3),
+                     "q3": round(q3, 3)}
+    return {"iters": iters,
+            "result": {"n_docs": n_docs, "buckets": 8, "sec": sec,
+                       "docs_per_sec": {name: round(n_docs / v["median"], 1)
+                                        for name, v in sec.items()}}}
+
+
 POINTS = {"extract": extract_point, "image": image_point, "skew": skew_point,
           "dedup": dedup_point, "catalog": catalog_point,
           "session_skew": session_skew_point, "memory": memory_point,
-          "worker": worker_point}
+          "worker": worker_point, "resume": resume_point}
 
 
 def _extract_rows(rows) -> int:
@@ -582,6 +632,7 @@ STUDIES = {
                _rss_ratio),
     "kernel": ([{"fn": "kernel"}], _single),
     "worker": ([{"fn": "worker"}], _single),
+    "resume": ([{"fn": "resume"}], _single),
 }
 
 

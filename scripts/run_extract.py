@@ -14,9 +14,12 @@ The job is resumable: each doc bucket commits one icelite snapshot with
 per-partition lineage + metrics; re-running with the same --output skips
 committed buckets (plans/checkpoint.py).  On a real cluster, point --output
 at shared storage and raise --buckets so each commit unit fits executor
-memory at the target scale.  Raising --buckets does not multiply kernel
-tasks: the run shares one job's kernel-task budget across its buckets, with
-at least one task per core per bucket (``run_resumable``).
+memory at the target scale.  Each bucket job runs one wave of
+``defaultParallelism`` kernel tasks (``operators/skew.py::
+repartition_salted``), so raising --buckets multiplies kernel tasks, and the
+fixed per-task cost with them.  --concurrency bucket jobs run at once, so
+one bucket's driver-only time overlaps another's stages; it defaults to
+``run_resumable``'s default.
 """
 
 from __future__ import annotations
@@ -36,9 +39,10 @@ def main() -> None:
     ap.add_argument("--run-id", default="run")
     ap.add_argument("--derive-from-documents", action="store_true")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
-    ap.add_argument("--concurrency", type=int, default=1,
+    ap.add_argument("--concurrency", type=int, default=None,
                     help="buckets processed in parallel threads (Spark "
-                         "schedules the concurrent jobs across executors)")
+                         "schedules the concurrent jobs across executors); "
+                         "default: run_resumable's")
     args = ap.parse_args()
 
     # Imports deferred until after spark-submit has added --py-files to path.
@@ -53,9 +57,10 @@ def main() -> None:
     else:
         docs = spark.read.parquet(args.input)
 
+    threads = {} if args.concurrency is None else {
+        "concurrency": args.concurrency}
     res = run_resumable(spark, docs, args.output, n_buckets=args.buckets,
-                        run_id=args.run_id,
-                        concurrency=args.concurrency)
+                        run_id=args.run_id, **threads)
     last = res["table"].last_snapshot()
     print(json.dumps({
         "processed_buckets": res["processed"],

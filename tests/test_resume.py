@@ -57,7 +57,9 @@ def test_kill_and_resume(spark, tmp_path):
 
 def test_bucket_kernel_partitions(spark, tmp_path, monkeypatch):
     """Every bucket job's kernel exchange has defaultParallelism
-    partitions (one task wave), whatever the bucket count."""
+    partitions (one task wave), whatever the bucket count.  Buckets run on
+    a thread pool, so one run may capture a plan from each bucket already
+    in flight when the first raises."""
     import re
     from apple_ocr_backend_spark.plans import checkpoint
 
@@ -66,12 +68,12 @@ def test_bucket_kernel_partitions(spark, tmp_path, monkeypatch):
 
     seen = []
 
-    def capture(table, extracted, *args):
+    def capture(table, extracted, operation, summary):
         plan = extracted._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode
             .fromString("simple"))
-        seen.append(re.findall(
-            r"hashpartitioning\(doc_id#\d+, salt#\d+, (\d+)\)", plan))
+        seen.append((n_buckets, re.findall(
+            r"hashpartitioning\(doc_id#\d+, salt#\d+, (\d+)\)", plan)))
         raise Captured
 
     monkeypatch.setattr(checkpoint, "commit_extracted", capture)
@@ -81,7 +83,8 @@ def test_bucket_kernel_partitions(spark, tmp_path, monkeypatch):
         with pytest.raises(Captured):
             run_resumable(spark, sdf, str(tmp_path / f"t{n_buckets}"), CFG,
                           n_buckets=n_buckets)
-    assert seen == [[str(cores)]] * 4
+    assert {n for n, _ in seen} == {1, 3, 4, 8}
+    assert all(parts == [str(cores)] for _, parts in seen)
 
 
 def test_concurrent_buckets_match_serial_golden(spark, tmp_path):
@@ -98,6 +101,78 @@ def test_concurrent_buckets_match_serial_golden(spark, tmp_path):
     assert len(snaps) == 4  # consecutive chain: no commit was lost
     assert {s["summary"]["bucket"] for s in snaps} == {0, 1, 2, 3}
     assert _spans_map(t.read(spark).toPandas()) == golden
+
+
+def test_bucket_jobs_inherit_caller_job_group(spark, tmp_path):
+    """The job group and description set on the calling thread reach
+    every job of every bucket, though buckets run on pool threads."""
+    sc = spark.sparkContext
+    st, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    ungrouped = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup("resume_inherit", "bucketed resume run")
+    try:
+        run_resumable(spark, _to_spark_docs(spark, make_corpus(40, seed=13)),
+                      str(tmp_path / "t"), CFG, n_buckets=4, concurrency=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert set(st.getJobIdsForGroup(None)) <= ungrouped
+    jobs = st.getJobIdsForGroup("resume_inherit")
+    assert len(jobs) >= 4  # at least one per bucket
+    for j in jobs:
+        assert store.job(j).description().get() == "bucketed resume run"
+
+
+def test_first_bucket_error_stops_the_run(spark, tmp_path, monkeypatch):
+    """Fail-fast: bucket 0 fails while bucket 1 is in flight.  The error
+    propagates, buckets 2 and 3 are never attempted, bucket 1 commits
+    whole, and a later resume completes the table equal to the oracle."""
+    import threading
+    from pyspark.sql import functions as F
+    from apple_ocr_backend_spark.plans import checkpoint
+
+    class Boom(Exception):
+        pass
+
+    real = checkpoint.commit_extracted
+    sibling_in, failed = threading.Event(), threading.Event()
+    attempted, failer = [], []
+
+    def flaky(table, extracted, operation, summary):
+        attempted.append(summary["bucket"])
+        if summary["bucket"] == 0:
+            assert sibling_in.wait(60)
+            failer.append(threading.current_thread())
+            failed.set()
+            raise Boom
+        sibling_in.set()
+        assert failed.wait(60)
+        # a pool thread exits once its pool is shut down, so joining the
+        # failing thread waits until the run has cancelled the queue
+        failer[0].join(60)
+        assert not failer[0].is_alive()
+        return real(table, extracted, operation, summary)
+
+    monkeypatch.setattr(checkpoint, "commit_extracted", flaky)
+    docs = make_corpus(40, seed=13)
+    sdf = _to_spark_docs(spark, docs)
+    tdir = str(tmp_path / "t")
+    with pytest.raises(Boom):
+        run_resumable(spark, sdf, tdir, CFG, n_buckets=4, concurrency=2)
+    assert sorted(attempted) == [0, 1]
+
+    table = checkpoint.Table(tdir)
+    assert [s["summary"]["bucket"] for s in table.snapshots()] == [1]
+    bucket = checkpoint.bucket_of(F.col("doc_id"), 4).alias("b")
+    got = {r["doc_id"] for r in table.read(spark).select("doc_id").collect()}
+    assert got == {r["doc_id"] for r in
+                   sdf.select("doc_id", bucket).where("b = 1").collect()}
+
+    monkeypatch.setattr(checkpoint, "commit_extracted", real)
+    res = run_resumable(spark, sdf, tdir, CFG, n_buckets=4, concurrency=2)
+    assert res["processed"] == [0, 2, 3] and res["skipped"] == [1]
+    assert _spans_map(res["table"].read(spark).toPandas()) == \
+        _spans_map(extract_docs_oracle(docs, CFG))
 
 
 def test_snapshot_chain_ignores_orphans(spark, tmp_path):
