@@ -24,16 +24,11 @@ import struct
 
 import numpy as np
 
-
-def _chunk(cid: bytes, payload: bytes) -> bytes:
-    if len(cid) != 4:
-        raise ValueError("chunk id must be 4 bytes")
-    pad = b"\x00" if len(payload) % 2 else b""
-    return cid + struct.pack("<I", len(payload)) + payload + pad
+from .wav_codec import iter_riff_chunks, riff_chunk
 
 
 def _list(list_type: bytes, payload: bytes) -> bytes:
-    return _chunk(b"LIST", list_type + payload)
+    return riff_chunk(b"LIST", list_type + payload)
 
 
 def _dib_rows(frame: np.ndarray) -> bytes:
@@ -66,24 +61,13 @@ def encode_avi_gray(frames: list[np.ndarray], fps: int = 10) -> bytes:
             + struct.pack("<4h", 0, 0, w, h))
     strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, frame_bytes,
                        0, 0, 0, 0)
-    hdrl = _list(b"hdrl", _chunk(b"avih", avih)
-                 + _list(b"strl", _chunk(b"strh", strh)
-                         + _chunk(b"strf", strf)))
-    movi = _list(b"movi", b"".join(_chunk(b"00db", _dib_rows(f))
+    hdrl = _list(b"hdrl", riff_chunk(b"avih", avih)
+                 + _list(b"strl", riff_chunk(b"strh", strh)
+                         + riff_chunk(b"strf", strf)))
+    movi = _list(b"movi", b"".join(riff_chunk(b"00db", _dib_rows(f))
                                    for f in frames))
-    junk = _chunk(b"JUNK", b"\x00" * 7)  # odd size: exercises pad handling
-    return _chunk(b"RIFF", b"AVI " + hdrl + junk + movi)
-
-
-def _iter_chunks(data: bytes, pos: int, end: int):
-    """Yield (chunk_id, payload_start, payload_size) walking [pos, end)."""
-    while pos + 8 <= end:
-        cid = data[pos:pos + 4]
-        size = struct.unpack_from("<I", data, pos + 4)[0]
-        if pos + 8 + size > end:
-            raise ValueError(f"truncated {cid!r} chunk")
-        yield cid, pos + 8, size
-        pos += 8 + size + (size % 2)
+    junk = riff_chunk(b"JUNK", b"\x00" * 7)  # odd size: exercises pad handling
+    return riff_chunk(b"RIFF", b"AVI " + hdrl + junk + movi)
 
 
 def decode_avi_gray(data: bytes) -> tuple[list[np.ndarray], int]:
@@ -104,7 +88,7 @@ def decode_avi_gray(data: bytes) -> tuple[list[np.ndarray], int]:
 
     def walk(pos: int, stop: int) -> None:
         nonlocal dims, bits, compression, bottom_up, usec_per_frame
-        for cid, at, size in _iter_chunks(data, pos, stop):
+        for cid, at, size in iter_riff_chunks(data, pos, stop):
             if cid == b"LIST":
                 walk(at + 4, at + size)  # skip the 4-byte list type
             elif cid == b"avih":

@@ -20,6 +20,10 @@ readers get wrong):
   puts 'fmt ' first;
 - RIFF word alignment: an odd-sized chunk is followed by one pad byte
   that is NOT counted in its size field.
+
+``riff_chunk`` and ``iter_riff_chunks`` are the one RIFF chunk writer and
+walker; the AVI codec (``avi_codec.py``) builds its nested LIST tree with
+them.
 """
 
 from __future__ import annotations
@@ -44,18 +48,33 @@ def encode_wav_pcm16(samples: np.ndarray, sample_rate: int,
     byte_rate = sample_rate * SAMPLE_WIDTH
     fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, byte_rate,
                       SAMPLE_WIDTH, 8 * SAMPLE_WIDTH)
-    body = b"WAVE" + _chunk(b"fmt ", fmt)
+    body = b"WAVE" + riff_chunk(b"fmt ", fmt)
     for cid, payload in (extra_chunks or []):
-        body += _chunk(cid, payload)
-    body += _chunk(b"data", samples.astype("<i2").tobytes())
-    return _chunk(b"RIFF", body)
+        body += riff_chunk(cid, payload)
+    body += riff_chunk(b"data", samples.astype("<i2").tobytes())
+    return riff_chunk(b"RIFF", body)
 
 
-def _chunk(cid: bytes, payload: bytes) -> bytes:
+def riff_chunk(cid: bytes, payload: bytes) -> bytes:
+    """One RIFF chunk: 4-byte id, little-endian size, payload, and the pad
+    byte an odd-sized payload needs."""
     if len(cid) != 4:
         raise ValueError(f"chunk id must be 4 bytes, got {cid!r}")
     pad = b"\x00" if len(payload) % 2 else b""
     return cid + struct.pack("<I", len(payload)) + payload + pad
+
+
+def iter_riff_chunks(data: bytes, pos: int, end: int):
+    """Yield (chunk_id, payload_start, payload_size) walking [pos, end);
+    a chunk whose payload runs past ``end`` raises ValueError, and an
+    odd-sized payload's pad byte is skipped."""
+    while pos + 8 <= end:
+        cid = data[pos:pos + 4]
+        size = struct.unpack_from("<I", data, pos + 4)[0]
+        if pos + 8 + size > end:
+            raise ValueError(f"truncated {cid!r} chunk")
+        yield cid, pos + 8, size
+        pos += 8 + size + (size % 2)
 
 
 def decode_wav_pcm16(data: bytes) -> tuple[np.ndarray, int]:
@@ -70,13 +89,8 @@ def decode_wav_pcm16(data: bytes) -> tuple[np.ndarray, int]:
         raise ValueError("not a RIFF/WAVE payload")
     riff_size = struct.unpack_from("<I", data, 4)[0]
     end = min(len(data), 8 + riff_size)
-    pos, fmt_seen, sample_rate = 12, False, 0
-    while pos + 8 <= end:
-        cid = data[pos:pos + 4]
-        size = struct.unpack_from("<I", data, pos + 4)[0]
-        payload_at = pos + 8
-        if payload_at + size > end:
-            raise ValueError(f"truncated {cid!r} chunk")
+    fmt_seen, sample_rate = False, 0
+    for cid, payload_at, size in iter_riff_chunks(data, 12, end):
         if cid == b"fmt ":
             if size < 16:
                 raise ValueError("fmt chunk too short")
@@ -97,5 +111,4 @@ def decode_wav_pcm16(data: bytes) -> tuple[np.ndarray, int]:
             samples = np.frombuffer(data, dtype="<i2", count=size // 2,
                                     offset=payload_at)
             return samples.astype(np.int16, copy=False), sample_rate
-        pos = payload_at + size + (size % 2)  # RIFF pad byte
     raise ValueError("no data chunk found")

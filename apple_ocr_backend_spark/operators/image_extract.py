@@ -3,9 +3,11 @@
 These are the real (non-stubbed) versions of the reference's image path,
 built on the from-scratch PNG codec (``functions/png_codec.py``) and the
 numpy kernel suite (``functions/image_kernels.py``) — no cv2/pillow.
-Each stage is an Arrow-batched ``mapInPandas``: the Python level iterates
+Each stage is a row function over the one Arrow-batch shell of the media
+operators (``operators/multimodal.py::map_media``): the shell iterates
 documents within a batch exactly like the reference's per-image cv2 calls
-(``app/pipeline/ocr_adapter_improved.py:1346-1471``); every pixel loop is
+(``app/pipeline/ocr_adapter_improved.py:1346-1471``), the row function
+turns one document into its output rows, and every pixel loop is
 vectorized numpy.  At scale the binary column arrives from the table scan
 (these stages never shuffle — they are map-only over whatever partitioning
 the scan produced); ``render_media`` exists because this sandbox has to
@@ -20,31 +22,12 @@ X10 (CLAHE/bilateral/adaptive-threshold/resize kernels).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
 
 from ..functions import image_kernels as K
 from ..functions.png_codec import decode_png_gray, encode_png_gray
 from ..sources.image_corpus import render_doc_image
-
-RENDER_DDL = "doc_id bigint, media binary"
-
-
-def _render_media_from(df: DataFrame, render_fn) -> DataFrame:
-    """Shared batching shell for the synthetic media renderers:
-    df(doc_id, ...) -> (doc_id, media: binary PNG) via ``render_fn(doc_id)
-    -> uint8 ndarray``."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            media = [encode_png_gray(render_fn(int(d))) for d in b["doc_id"]]
-            yield pd.DataFrame({"doc_id": b["doc_id"], "media": media})
-    return df.select("doc_id").mapInPandas(fn, schema=RENDER_DDL)
+from .multimodal import map_media, render_media_column
 
 
 def render_media(df: DataFrame, rotate: bool = False,
@@ -52,8 +35,8 @@ def render_media(df: DataFrame, rotate: bool = False,
     """df(doc_id, ...) -> (doc_id, media: binary): deterministic synthetic
     PNG pages (the sandbox's stand-in for reading an image column off the
     table scan)."""
-    return _render_media_from(
-        df, lambda d: render_doc_image(d, rotate=rotate, glare=glare))
+    return render_media_column(df, lambda d: encode_png_gray(
+        render_doc_image(d, rotate=rotate, glare=glare)))
 
 
 DECODE_STATS_DDL = ("doc_id bigint, height int, width int, ink_rows int, "
@@ -65,21 +48,12 @@ def decode_stats(df: DataFrame, bg_ref: int = 215) -> DataFrame:
     (S1 + A8): decoded dimensions, count of rows carrying any ink, and a
     saturation(glare) flag — the stats the reference derives before
     choosing preprocessing parameters (``ocr_adapter_improved.py:843-869``)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            hs, ws, inkr, gl = [], [], [], []
-            for media in b["media"]:
-                img = decode_png_gray(bytes(media))
-                ink = K.ink_image(img, bg_ref)
-                hs.append(img.shape[0])
-                ws.append(img.shape[1])
-                inkr.append(int((ink.sum(axis=1) > 0).sum()))
-                gl.append(bool((img >= 250).any()))
-            yield pd.DataFrame({"doc_id": b["doc_id"], "height": hs,
-                                "width": ws, "ink_rows": inkr, "glare": gl})
-    return df.mapInPandas(fn, schema=DECODE_STATS_DDL)
+    def row(doc, media):
+        img = decode_png_gray(bytes(media))
+        ink_rows = int((K.ink_image(img, bg_ref).sum(axis=1) > 0).sum())
+        return [(doc, img.shape[0], img.shape[1], ink_rows,
+                 bool((img >= 250).any()))]
+    return map_media(df, DECODE_STATS_DDL, row)
 
 
 ROI_DDL = "doc_id bigint, roi_idx int, y0 int, y1 int"
@@ -93,6 +67,15 @@ def _default_bands(h: int) -> list[tuple[int, int, int]]:
     return [(third, 2 * third, 0), (2 * third, h, 0), (0, third, 0)]
 
 
+def _roi_mask(media: bytes):
+    """The preprocess chain both ROI detectors share: decode PNG ->
+    glare-reduce -> CLAHE -> bilateral -> adaptive threshold -> row
+    projection.  Returns ((h, w), binary mask, row profile)."""
+    img, _method = K.reduce_glare(decode_png_gray(bytes(media)))
+    binm = K.adaptive_threshold(K.bilateral5(K.clahe(img)))
+    return img.shape, binm, K.row_projection(binm)
+
+
 def extract_rois(df: DataFrame, top_k: int = 4,
                  fallback: bool = True) -> DataFrame:
     """df(doc_id, media) -> one row per detected text band
@@ -101,30 +84,16 @@ def extract_rois(df: DataFrame, top_k: int = 4,
     filters -> energy top-k, emitted in position order; documents where
     nothing survives fall back to the reference's 3 fixed bands.
     1 -> N Arrow batch contract."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            docs, idxs, y0s, y1s = [], [], [], []
-            for doc, media in zip(b["doc_id"], b["media"]):
-                img = decode_png_gray(bytes(media))
-                img, _method = K.reduce_glare(img)
-                binm = K.adaptive_threshold(K.bilateral5(K.clahe(img)))
-                bands = K.find_bands(K.row_projection(binm), img.shape[0])
-                widths = [max(x1 - x0, 1) for x0, x1 in
-                          (K.band_x_extent(binm, b0, b1) for b0, b1, _ in bands)]
-                rois = K.top_k_bands(
-                    K.filter_rois(bands, img.shape[1], widths), top_k)
-                if not rois and fallback:
-                    rois = _default_bands(img.shape[0])
-                for i, (y0, y1, _energy) in enumerate(rois):
-                    docs.append(doc)
-                    idxs.append(i)
-                    y0s.append(y0)
-                    y1s.append(y1)
-            yield pd.DataFrame({"doc_id": docs, "roi_idx": idxs,
-                                "y0": y0s, "y1": y1s})
-    return df.mapInPandas(fn, schema=ROI_DDL)
+    def row(doc, media):
+        (h, w), binm, profile = _roi_mask(media)
+        bands = K.find_bands(profile, h)
+        widths = [max(x1 - x0, 1) for x0, x1 in
+                  (K.band_x_extent(binm, b0, b1) for b0, b1, _ in bands)]
+        rois = K.top_k_bands(K.filter_rois(bands, w, widths), top_k)
+        if not rois and fallback:
+            rois = _default_bands(h)
+        return [(doc, i, y0, y1) for i, (y0, y1, _energy) in enumerate(rois)]
+    return map_media(df, ROI_DDL, row)
 
 
 def extract_rois_nms(df: DataFrame, top_k: int = 4,
@@ -149,49 +118,31 @@ def extract_rois_nms(df: DataFrame, top_k: int = 4,
     proposals are listed first and win exact ties.  Energy top-k of the
     survivors, emitted in position order; the empty-proposal fallback is
     the reference's 3 fixed bands (P5)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            docs, idxs, y0s, y1s = [], [], [], []
-            for doc, media in zip(b["doc_id"], b["media"]):
-                img = decode_png_gray(bytes(media))
-                img, _method = K.reduce_glare(img)
-                binm = K.adaptive_threshold(K.bilateral5(K.clahe(img)))
-                profile = K.row_projection(binm)
-                proposals = []
-                for refine in (True, False):  # refined first: wins ties
-                    cand = K.find_bands(profile, img.shape[0],
-                                        refine=refine)
-                    extents = [K.band_x_extent(binm, b0, b1)
-                               for b0, b1, _ in cand]
-                    widths = [max(x1 - x0, 1) for x0, x1 in extents]
-                    kept = set(K.filter_rois(cand, img.shape[1], widths))
-                    for band, (x0, x1) in zip(cand, extents):
-                        if band in kept:
-                            y0, y1, energy = band
-                            proposals.append((y0, x0, y1, x1, energy))
-                if proposals:
-                    boxes = [(p[0], p[1], p[2], p[3]) for p in proposals]
-                    scores = [p[4] / max(p[2] - p[0], 1) for p in proposals]
-                    keep = K.nms(boxes, scores, iou_threshold)
-                    survivors = [(proposals[i][0], proposals[i][2],
-                                  proposals[i][4]) for i in keep]
-                    rois = [(y0, y1) for y0, y1, _
-                            in K.top_k_bands(survivors, top_k)]
-                elif fallback:
-                    rois = [(y0, y1) for y0, y1, _
-                            in _default_bands(img.shape[0])]
-                else:
-                    rois = []
-                for i, (y0, y1) in enumerate(rois):
-                    docs.append(doc)
-                    idxs.append(i)
-                    y0s.append(y0)
-                    y1s.append(y1)
-            yield pd.DataFrame({"doc_id": docs, "roi_idx": idxs,
-                                "y0": y0s, "y1": y1s})
-    return df.mapInPandas(fn, schema=ROI_DDL)
+    def row(doc, media):
+        (h, w), binm, profile = _roi_mask(media)
+        proposals = []
+        for refine in (True, False):  # refined first: wins ties
+            cand = K.find_bands(profile, h, refine=refine)
+            extents = [K.band_x_extent(binm, b0, b1) for b0, b1, _ in cand]
+            widths = [max(x1 - x0, 1) for x0, x1 in extents]
+            kept = set(K.filter_rois(cand, w, widths))
+            for band, (x0, x1) in zip(cand, extents):
+                if band in kept:
+                    y0, y1, energy = band
+                    proposals.append((y0, x0, y1, x1, energy))
+        if proposals:
+            boxes = [(p[0], p[1], p[2], p[3]) for p in proposals]
+            scores = [p[4] / max(p[2] - p[0], 1) for p in proposals]
+            keep = K.nms(boxes, scores, iou_threshold)
+            survivors = [(proposals[i][0], proposals[i][2], proposals[i][4])
+                         for i in keep]
+            rois = K.top_k_bands(survivors, top_k)
+        elif fallback:
+            rois = _default_bands(h)
+        else:
+            rois = []
+        return [(doc, i, y0, y1) for i, (y0, y1, _energy) in enumerate(rois)]
+    return map_media(df, ROI_DDL, row)
 
 
 ORIENT_DDL = "doc_id bigint, angle int"
@@ -200,15 +151,8 @@ ORIENT_DDL = "doc_id bigint, angle int"
 def detect_orientations(df: DataFrame) -> DataFrame:
     """df(doc_id, media) -> (doc_id, angle in {0,90,180,270}) via projection
     variance + thickest-band position (P6)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            angles = [K.detect_orientation(decode_png_gray(bytes(m)))
-                      for m in b["media"]]
-            yield pd.DataFrame({"doc_id": b["doc_id"],
-                                "angle": pd.Series(angles, dtype="int32")})
-    return df.mapInPandas(fn, schema=ORIENT_DDL)
+    return map_media(df, ORIENT_DDL, lambda doc, media: [
+        (doc, K.detect_orientation(decode_png_gray(bytes(media))))])
 
 
 RESIZE_DDL = ("doc_id bigint, h_in int, w_in int, h_out int, w_out int, "
@@ -219,24 +163,13 @@ def resize_images(df: DataFrame, scale: int = 2) -> DataFrame:
     """df(doc_id, media) -> bilinear downscale by ``scale`` + re-encode
     (X10 resize on real pixels; replaces the byte-decimation stand-in for
     PNG payloads)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            rows = {"doc_id": b["doc_id"], "h_in": [], "w_in": [],
-                    "h_out": [], "w_out": [], "n_bytes_out": []}
-            for media in b["media"]:
-                img = decode_png_gray(bytes(media))
-                h, w = img.shape
-                out = K.resize_bilinear(img, h // scale, w // scale)
-                enc = encode_png_gray(out)
-                rows["h_in"].append(h)
-                rows["w_in"].append(w)
-                rows["h_out"].append(out.shape[0])
-                rows["w_out"].append(out.shape[1])
-                rows["n_bytes_out"].append(len(enc))
-            yield pd.DataFrame(rows)
-    return df.mapInPandas(fn, schema=RESIZE_DDL)
+    def row(doc, media):
+        img = decode_png_gray(bytes(media))
+        h, w = img.shape
+        out = K.resize_bilinear(img, h // scale, w // scale)
+        return [(doc, h, w, out.shape[0], out.shape[1],
+                 len(encode_png_gray(out)))]
+    return map_media(df, RESIZE_DDL, row)
 
 
 def render_serial_media(df: DataFrame) -> DataFrame:
@@ -244,7 +177,8 @@ def render_serial_media(df: DataFrame) -> DataFrame:
     12-char string in the 5x7 glyph font with jitter + ink dropout
     (``sources/image_corpus.py::render_serial_image``)."""
     from ..sources.image_corpus import render_serial_image
-    return _render_media_from(df, render_serial_image)
+    return render_media_column(
+        df, lambda d: encode_png_gray(render_serial_image(d)))
 
 
 OCR_DDL = "doc_id bigint, text string, conf double"
@@ -258,20 +192,12 @@ def ocr_serials(df: DataFrame, expect_chars: int = 12) -> DataFrame:
     ``conf`` is the worst per-glyph template similarity."""
     from ..functions.glyph_ocr import recognize_text
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            texts, confs = [], []
-            for media in b["media"]:
-                img = decode_png_gray(bytes(media))
-                text, conf = recognize_text(K.adaptive_threshold(img),
-                                            expect_chars=expect_chars)
-                texts.append(text)
-                confs.append(conf)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "text": texts,
-                                "conf": confs})
-    return df.mapInPandas(fn, schema=OCR_DDL)
+    def row(doc, media):
+        img = decode_png_gray(bytes(media))
+        text, conf = recognize_text(K.adaptive_threshold(img),
+                                    expect_chars=expect_chars)
+        return [(doc, text, conf)]
+    return map_media(df, OCR_DDL, row)
 
 
 def render_degraded_serial_media(df: DataFrame) -> DataFrame:
@@ -280,7 +206,8 @@ def render_degraded_serial_media(df: DataFrame) -> DataFrame:
     isolated background salt, ``sources/image_corpus.py::
     render_degraded_serial_image``) — the fallback sweep's input."""
     from ..sources.image_corpus import render_degraded_serial_image
-    return _render_media_from(df, render_degraded_serial_image)
+    return render_media_column(
+        df, lambda d: encode_png_gray(render_degraded_serial_image(d)))
 
 
 FALLBACK_DDL = ("doc_id bigint, text string, conf double, variant string, "
@@ -324,46 +251,33 @@ def ocr_serials_fallback(df: DataFrame, expect_chars: int = 12) -> DataFrame:
     """
     from ..functions.glyph_ocr import recognize_text
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            rows = {"doc_id": [], "text": [], "conf": [], "variant": [],
-                    "n_tried": []}
-            for doc_id, media in zip(b["doc_id"], b["media"]):
-                base = K.adaptive_threshold(decode_png_gray(bytes(media)))
-                masks = {0: base}
-                cands: dict[str, tuple[float, str, int]] = {}
-                tried = 0
-                for name, dk, fixed in _FALLBACK_SWEEP:
-                    if dk not in masks:
-                        masks[dk] = K.despeckle(base, dk)
-                    t, c = recognize_text(
-                        masks[dk],
-                        expect_chars=expect_chars if fixed else None)
-                    tried += 1
-                    if len(t) == expect_chars:
-                        if t not in cands or c > cands[t][0]:
-                            cands[t] = (c, name, tried)
-                        if c == 1.0:
-                            # early stop only on a confident HIT — in the
-                            # reference only validity-filtered reads become
-                            # candidates at all (tesseract_adapter.py:
-                            # 224-226) and early stop keys on the best
-                            # CANDIDATE's confidence (O1,
-                            # ocr_adapter_improved.py:1432-1456); a
-                            # confident read that failed the length filter
-                            # is not a candidate and must not end the sweep
-                            break
-                if cands:
-                    text, (conf, variant, _) = max(
-                        cands.items(), key=lambda kv: (kv[1][0], -kv[1][2]))
-                else:
-                    text, conf, variant = "", 0.0, "none"
-                rows["doc_id"].append(doc_id)
-                rows["text"].append(text)
-                rows["conf"].append(conf)
-                rows["variant"].append(variant)
-                rows["n_tried"].append(tried)
-            yield pd.DataFrame(rows)
-    return df.mapInPandas(fn, schema=FALLBACK_DDL)
+    def row(doc, media):
+        base = K.adaptive_threshold(decode_png_gray(bytes(media)))
+        masks = {0: base}
+        cands: dict[str, tuple[float, str, int]] = {}
+        tried = 0
+        for name, dk, fixed in _FALLBACK_SWEEP:
+            if dk not in masks:
+                masks[dk] = K.despeckle(base, dk)
+            t, c = recognize_text(
+                masks[dk], expect_chars=expect_chars if fixed else None)
+            tried += 1
+            if len(t) == expect_chars:
+                if t not in cands or c > cands[t][0]:
+                    cands[t] = (c, name, tried)
+                if c == 1.0:
+                    # early stop only on a confident HIT — in the reference
+                    # only validity-filtered reads become candidates at all
+                    # (tesseract_adapter.py:224-226) and early stop keys on
+                    # the best CANDIDATE's confidence (O1,
+                    # ocr_adapter_improved.py:1432-1456); a confident read
+                    # that failed the length filter is not a candidate and
+                    # must not end the sweep
+                    break
+        if cands:
+            text, (conf, variant, _) = max(
+                cands.items(), key=lambda kv: (kv[1][0], -kv[1][2]))
+        else:
+            text, conf, variant = "", 0.0, "none"
+        return [(doc, text, conf, variant, tried)]
+    return map_media(df, FALLBACK_DDL, row)

@@ -1,14 +1,17 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
-The Spark-side plumbing is real — binary columns, Arrow-batched
-``mapInPandas`` with the exact batch shape a decode/feature-extract stage
-needs — and the decode step is real for PNG and BMP images via the
-from-scratch codecs (``functions/png_codec.py``, ``functions/bmp_codec.py``)
-and for PCM16 WAV audio (``functions/wav_codec.py``, chunk-walking RIFF
-parse; see ``audio_decode_stats`` below); formats that genuinely need an
-external library (JPEG/WebP/compressed audio/video) raise
-``NotImplementedError`` and the shipping path falls back to the
-deterministic signature extractor.
+Every media operator here and in ``operators/image_extract.py`` is a row
+function over one Arrow-batch shell, ``map_rows``: the shell selects the
+columns the row function reads, runs one ``mapInPandas`` over them and
+builds one output frame per input batch; the row function turns one
+input row into 0..N output tuples.  The decode step is real for PNG and
+BMP images via the from-scratch codecs (``functions/png_codec.py``,
+``functions/bmp_codec.py``) and for PCM16 WAV audio
+(``functions/wav_codec.py``, chunk-walking RIFF parse; see
+``audio_decode_stats`` below); formats that genuinely need an external
+library (JPEG/WebP/compressed audio/video) raise ``NotImplementedError``
+and the shipping path falls back to the deterministic signature
+extractor.
 
 Reference analog: raw request bytes decoded per image
 (``cv2.imdecode(np.frombuffer(...))``, ``app/pipeline/ocr_adapter.py:105-108``).
@@ -21,14 +24,50 @@ are already cached per worker by Python.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 
-MEDIA_META_DDL = "doc_id bigint, n_bytes bigint, sig string"
+
+def map_rows(df: DataFrame, cols: tuple[str, ...], ddl: str,
+             row_fn: Callable[..., Iterable[tuple]]) -> DataFrame:
+    """The one Arrow-batch shell of the media operators: ``df`` ->
+    rows of ``ddl``.  ``row_fn(*values of cols in one input row)`` returns
+    that row's output tuples in ``ddl`` column order, 0 to N of them.
+    Only ``cols`` cross into Python; each non-empty input batch yields one
+    output frame, so a batch whose rows yield nothing yields an empty
+    frame of the ``ddl`` columns."""
+    names = [c.split()[0] for c in ddl.split(",")]
+
+    def fn(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        for b in batches:
+            if b.empty:
+                continue
+            rows = [out for row in zip(*(b[c] for c in cols))
+                    for out in row_fn(*row)]
+            yield pd.DataFrame(rows, columns=names)
+    return df.select(*cols).mapInPandas(fn, schema=ddl)
+
+
+def map_media(df: DataFrame, ddl: str,
+              row_fn: Callable[..., Iterable[tuple]]) -> DataFrame:
+    """``map_rows`` over ``(doc_id, media)``: a decode/feature stage."""
+    return map_rows(df, ("doc_id", "media"), ddl, row_fn)
+
+
+RENDER_DDL = "doc_id bigint, media binary"
+
+
+def render_media_column(df: DataFrame,
+                        render_doc: Callable[[int], bytes]) -> DataFrame:
+    """df(doc_id, ...) -> (doc_id, media: binary) via ``render_doc(doc_id)
+    -> payload bytes``: the shared stand-in for reading a stored media
+    column off the table scan (every synthetic renderer goes through it)."""
+    return map_rows(df, ("doc_id",), RENDER_DDL,
+                    lambda doc: [(doc, render_doc(doc))])
 
 
 def decode_image(data: bytes):
@@ -48,139 +87,83 @@ def decode_image(data: bytes):
         "pillow/cv2 for JPEG/WebP and extend decode_image")
 
 
-def _signature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Deterministic fallback feature extractor: byte length + md5 hex.
-    Vectorized per Arrow batch; the only per-item Python is hashlib over the
-    raw buffers (CPU-bound C code, no decode)."""
-    for b in batches:
-        if b.empty:
-            continue
-        media = b["media"]
-        yield pd.DataFrame({
-            "doc_id": b["doc_id"],
-            "n_bytes": media.map(len).astype("int64"),
-            "sig": media.map(lambda x: hashlib.md5(x).hexdigest()),
-        })
+MEDIA_META_DDL = "doc_id bigint, n_bytes bigint, sig string"
 
 
 def media_signatures(df: DataFrame) -> DataFrame:
-    """df(doc_id, media: binary) -> (doc_id, n_bytes, sig).
-
-    The real pipeline would swap `_signature_batches` for a decode +
-    feature-extract kernel with the identical batch shape."""
-    return df.mapInPandas(_signature_batches, schema=MEDIA_META_DDL)
+    """df(doc_id, media: binary) -> (doc_id, n_bytes, sig): the
+    deterministic fallback feature extractor, byte length + md5 hex (the
+    only per-item work is hashlib over the raw buffer, no decode).  A
+    null buffer reads as empty, as in ``resize_media`` and
+    ``sample_frames``.  A decode + feature-extract kernel is another row
+    function over the same ``map_media`` shell."""
+    def row(doc, media):
+        media = media or b""  # null buffer -> empty, not a crash
+        return [(doc, len(media), hashlib.md5(media).hexdigest())]
+    return map_media(df, MEDIA_META_DDL, row)
 
 
 RESIZE_DDL = ("doc_id bigint, n_bytes_in bigint, n_bytes_out bigint, "
               "sig_out string")
 
 
-def _resize_batches(target_bytes: int):
-    """Deterministic resize stand-in: stride-decimate the buffer down to
-    ~``target_bytes`` (every ceil(n/target)-th byte), emit the output size +
-    digest.  The real kernel swaps the decimation for a codec resize
-    (INTER_AREA analog — the reference caps inputs the same way,
-    ``ocr_adapter_improved.py:647-655``) behind the identical batch shape."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            n_in, n_out, sigs = [], [], []
-            for media in b["media"]:
-                media = media or b""  # null buffer -> empty, not a crash
-                n = len(media)
-                stride = max(1, -(-n // target_bytes))
-                out = media[::stride]
-                n_in.append(n)
-                n_out.append(len(out))
-                sigs.append(hashlib.md5(out).hexdigest())
-            yield pd.DataFrame({"doc_id": b["doc_id"], "n_bytes_in": n_in,
-                                "n_bytes_out": n_out, "sig_out": sigs})
-    return fn
-
-
 def resize_media(df: DataFrame, target_bytes: int = 64) -> DataFrame:
     """df(doc_id, media: binary) -> (doc_id, n_bytes_in, n_bytes_out,
     sig_out): the resize/downsample contract (O4 input-size cap analog),
-    deterministic so the catalog oracle replays it in SQL."""
-    return df.mapInPandas(_resize_batches(target_bytes), schema=RESIZE_DDL)
+    deterministic so the catalog oracle replays it in SQL.  The stand-in
+    stride-decimates the buffer down to ~``target_bytes`` (every
+    ceil(n/target)-th byte) and emits the output size + digest; a real
+    kernel swaps the decimation for a codec resize (INTER_AREA analog —
+    the reference caps inputs the same way,
+    ``ocr_adapter_improved.py:647-655``)."""
+    def row(doc, media):
+        media = media or b""  # null buffer -> empty, not a crash
+        n = len(media)
+        stride = max(1, -(-n // target_bytes))
+        out = media[::stride]
+        return [(doc, n, len(out), hashlib.md5(out).hexdigest())]
+    return map_media(df, RESIZE_DDL, row)
 
 
 FRAME_DDL = "doc_id bigint, frame_idx int, n_frame_bytes bigint, frame_sig string"
-
-
-def _frame_batches(max_frames: int):
-    """Deterministic frame sampler: a media buffer of n bytes yields
-    ``min(max_frames, 1 + n // 64)`` frames — contiguous byte slices of
-    stride ``ceil(n / n_frames)`` — each reduced to (length, md5).  This is
-    the decode/frame-sample STAND-IN: the real kernel swaps the slicing for
-    a codec call with the identical 1->N Arrow batch contract (per-item C
-    hashing here plays the role of per-frame decode work)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            docs, idxs, lens, sigs = [], [], [], []
-            for doc, media in zip(b["doc_id"], b["media"]):
-                media = media or b""  # null buffer -> empty, not a crash
-                n = len(media)
-                nf = min(max_frames, 1 + n // 64)
-                stride = -(-n // nf)
-                for k in range(nf):
-                    chunk = media[k * stride:(k + 1) * stride]
-                    docs.append(doc)
-                    idxs.append(k)
-                    lens.append(len(chunk))
-                    sigs.append(hashlib.md5(chunk).hexdigest())
-            yield pd.DataFrame({"doc_id": docs, "frame_idx": idxs,
-                                "n_frame_bytes": lens, "frame_sig": sigs})
-    return fn
 
 
 def sample_frames(df: DataFrame, max_frames: int = 4) -> DataFrame:
     """df(doc_id, media: binary) -> (doc_id, frame_idx, n_frame_bytes,
     frame_sig): the video frame-sampling contract (1 row -> N frame rows
     through one Arrow batch stage).  Deterministic, so the catalog oracle
-    replays it in SQL; a real deployment swaps the slicing stand-in for the
-    codec singleton's decode."""
-    return df.mapInPandas(_frame_batches(max_frames), schema=FRAME_DDL)
+    replays it in SQL: a media buffer of n bytes yields
+    ``min(max_frames, 1 + n // 64)`` frames — contiguous byte slices of
+    stride ``ceil(n / n_frames)`` — each reduced to (length, md5).  This is
+    the decode/frame-sample STAND-IN (per-item C hashing plays the role of
+    per-frame decode work); ``video_frame_stats`` is the same contract
+    with a real codec behind it."""
+    def row(doc, media):
+        media = media or b""  # null buffer -> empty, not a crash
+        n = len(media)
+        nf = min(max_frames, 1 + n // 64)
+        stride = -(-n // nf)
+        for k in range(nf):
+            chunk = media[k * stride:(k + 1) * stride]
+            yield doc, k, len(chunk), hashlib.md5(chunk).hexdigest()
+    return map_media(df, FRAME_DDL, row)
 
 
 # ---------------------------------------------------- audio / video paths
-
-RENDER_MEDIA_DDL = "doc_id bigint, media binary"
-# kept under their historical names for existing callers/tests
-RENDER_AUDIO_DDL = RENDER_VIDEO_DDL = RENDER_MEDIA_DDL
-
-
-def _render_media_operator(render_doc):
-    """(doc_id -> payload bytes) -> a (doc_id, media: binary) mapInPandas
-    operator: the shared stand-in for reading a stored media column off
-    the table scan (one definition for the WAV/AVI/serial-clip renderers)."""
-    def op(df: DataFrame) -> DataFrame:
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for b in batches:
-                if b.empty:
-                    continue
-                media = [render_doc(int(d)) for d in b["doc_id"]]
-                yield pd.DataFrame({"doc_id": b["doc_id"], "media": media})
-        return df.select("doc_id").mapInPandas(fn, schema=RENDER_MEDIA_DDL)
-    return op
-
 
 def render_audio_media(df: DataFrame) -> DataFrame:
     """df(doc_id, ...) -> (doc_id, media: binary WAV): deterministic
     synthetic PCM16 payloads (``sources/audio_corpus.py``) — the audio
     twin of ``image_extract.render_media``."""
     from ..sources.audio_corpus import render_doc_audio
-    return _render_media_operator(render_doc_audio)(df)
+    return render_media_column(df, render_doc_audio)
 
 
 def render_video_media(df: DataFrame) -> DataFrame:
     """df(doc_id, ...) -> (doc_id, media: binary AVI): deterministic
     synthetic uncompressed-DIB clips (``sources/video_corpus.py``)."""
     from ..sources.video_corpus import render_doc_video
-    return _render_media_operator(render_doc_video)(df)
+    return render_media_column(df, render_doc_video)
 
 
 VIDEO_STATS_DDL = ("doc_id bigint, frame_idx int, height int, width int, "
@@ -196,24 +179,12 @@ def video_frame_stats(df: DataFrame, background: int = 200) -> DataFrame:
     is that contract with an actual codec behind it."""
     from ..functions.avi_codec import decode_avi_gray
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            docs, idxs, hs, ws, inkr, mins = [], [], [], [], [], []
-            for doc, media in zip(b["doc_id"], b["media"]):
-                frames, _fps = decode_avi_gray(bytes(media))
-                for k, fr in enumerate(frames):
-                    docs.append(doc)
-                    idxs.append(k)
-                    hs.append(fr.shape[0])
-                    ws.append(fr.shape[1])
-                    inkr.append(int((fr.min(axis=1) < background).sum()))
-                    mins.append(int(fr.min()))
-            yield pd.DataFrame({"doc_id": docs, "frame_idx": idxs,
-                                "height": hs, "width": ws,
-                                "ink_rows": inkr, "ink_min": mins})
-    return df.mapInPandas(fn, schema=VIDEO_STATS_DDL)
+    def row(doc, media):
+        frames, _fps = decode_avi_gray(bytes(media))
+        for k, fr in enumerate(frames):
+            ink_rows = int((fr.min(axis=1) < background).sum())
+            yield doc, k, fr.shape[0], fr.shape[1], ink_rows, int(fr.min())
+    return map_media(df, VIDEO_STATS_DDL, row)
 
 
 def render_serial_video_media(df: DataFrame) -> DataFrame:
@@ -222,7 +193,7 @@ def render_serial_video_media(df: DataFrame) -> DataFrame:
     12-char string (``sources/video_corpus.py::render_doc_serial_video``,
     the client scan-window fixture)."""
     from ..sources.video_corpus import render_doc_serial_video
-    return _render_media_operator(render_doc_serial_video)(df)
+    return render_media_column(df, render_doc_serial_video)
 
 
 VIDEO_OCR_DDL = "doc_id bigint, frame_idx int, text string, conf double"
@@ -241,23 +212,13 @@ def video_frame_ocr(df: DataFrame, expect_chars: int = 12) -> DataFrame:
     from ..functions.avi_codec import decode_avi_gray
     from ..functions.glyph_ocr import recognize_text
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            docs, idxs, texts, confs = [], [], [], []
-            for doc, media in zip(b["doc_id"], b["media"]):
-                frames, _fps = decode_avi_gray(bytes(media))
-                for k, fr in enumerate(frames):
-                    text, conf = recognize_text(K.adaptive_threshold(fr),
-                                                expect_chars=expect_chars)
-                    docs.append(doc)
-                    idxs.append(k)
-                    texts.append(text)
-                    confs.append(conf)
-            yield pd.DataFrame({"doc_id": docs, "frame_idx": idxs,
-                                "text": texts, "conf": confs})
-    return df.mapInPandas(fn, schema=VIDEO_OCR_DDL)
+    def row(doc, media):
+        frames, _fps = decode_avi_gray(bytes(media))
+        for k, fr in enumerate(frames):
+            text, conf = recognize_text(K.adaptive_threshold(fr),
+                                        expect_chars=expect_chars)
+            yield doc, k, text, conf
+    return map_media(df, VIDEO_OCR_DDL, row)
 
 
 AUDIO_STATS_DDL = ("doc_id bigint, n_samples int, sample_rate int, "
@@ -275,23 +236,12 @@ def audio_decode_stats(df: DataFrame) -> DataFrame:
     843-869``) would key preprocessing on."""
     from ..functions.wav_codec import decode_wav_pcm16
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            ns, rates, durs, peaks, rmss, zcs = [], [], [], [], [], []
-            for media in b["media"]:
-                samples, rate = decode_wav_pcm16(bytes(media))
-                s = samples.astype(np.int64)
-                n = len(s)
-                ns.append(n)
-                rates.append(rate)
-                durs.append(n * 1000.0 / rate)
-                peaks.append(int(np.abs(s).max()) if n else 0)
-                rmss.append(float(np.sqrt(np.mean(s * s))) if n else 0.0)
-                zcs.append(int(np.count_nonzero(s[1:] * s[:-1] < 0)))
-            yield pd.DataFrame({
-                "doc_id": b["doc_id"], "n_samples": ns, "sample_rate": rates,
-                "duration_ms": durs, "peak": peaks, "rms": rmss,
-                "zero_crossings": zcs})
-    return df.mapInPandas(fn, schema=AUDIO_STATS_DDL)
+    def row(doc, media):
+        samples, rate = decode_wav_pcm16(bytes(media))
+        s = samples.astype(np.int64)
+        n = len(s)
+        peak = int(np.abs(s).max()) if n else 0
+        rms = float(np.sqrt(np.mean(s * s))) if n else 0.0
+        zero_crossings = int(np.count_nonzero(s[1:] * s[:-1] < 0))
+        return [(doc, n, rate, n * 1000.0 / rate, peak, rms, zero_crossings)]
+    return map_media(df, AUDIO_STATS_DDL, row)

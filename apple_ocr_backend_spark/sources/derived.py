@@ -125,23 +125,14 @@ def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     the docs table on media_ref so the payload join in
     ``plans.pipeline.extract_docs(..., media=...)`` is exchange-free on
     the store side."""
-    import pandas as pd
+    from ..functions.png_codec import encode_png_gray
+    from ..operators.multimodal import map_rows  # sources stay below operators
+    from .image_corpus import render_serial_image
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     # rendering is the whole cost; spread the 1-split scan across cores
     # (an exchange of bare int64 ids is free by comparison)
     d = d.repartition(spark.sparkContext.defaultParallelism)
-
-    def fn(batches):
-        from ..functions.png_codec import encode_png_gray
-        from .image_corpus import render_serial_image
-        for b in batches:
-            if b.empty:
-                continue
-            ids = b["doc_id"].astype("int64")
-            yield pd.DataFrame({
-                "media_ref": [f"media://doc_{i:08d}/0" for i in ids],
-                "payload": [encode_png_gray(
-                    render_serial_image(int(i), text=serial_py(int(i))))
-                    for i in ids]})
-    return d.mapInPandas(fn, schema=MEDIA_DDL)
+    return map_rows(d, ("doc_id",), MEDIA_DDL, lambda i: [(
+        f"media://doc_{i:08d}/0",
+        encode_png_gray(render_serial_image(i, text=serial_py(i))))])

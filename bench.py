@@ -8,6 +8,7 @@ studies, all timed by one loop (``timed``).
     python bench.py --study kernel       # the kernel alone: no Spark
     python bench.py --study worker       # fixed per-task cost of a kernel
     python bench.py --study resume       # bucket threads of a resumable run
+    python bench.py --study ingest       # streaming ingest-dedup end to end
     python bench.py --render             # latest record per study, markdown
 
 Default mode runs the headline catalog queries and fused extraction at
@@ -64,6 +65,8 @@ HOT_EVENTS = 2_000_000  # session_skew: events of the one hot user
 IMAGE_DOCS = 6000  # image: synthetic docs through the ROI chain
 KERNEL_DOCS, KERNEL_BATCH = 4000, 2500  # kernel: make_corpus docs, rows/batch
 RESUME_KS = (1, 2, 4, 8)  # resume: bucket-thread counts, in round-0 order
+INGEST_EPOCHS, INGEST_DOCS = 10, 10_000  # ingest: micro-batches, docs each
+INGEST_COMPACT_EVERY, INGEST_MAX_BUCKET = 4, 200  # ingest: dedup settings
 
 # representative catalog entries (relational core + training-data ops)
 DRIVER_QUERIES = [
@@ -506,10 +509,100 @@ def resume_point(spark, rounds: int = 5) -> dict:
                                         for name, v in sec.items()}}}
 
 
+def _ingest_batch(spark, epoch: int, n: int):
+    """Epoch ``epoch``'s micro-batch of ``n`` docs: 70% novel, 15% exact
+    re-arrivals and 15% near-dup variants (text + a suffix) of docs
+    stored at epoch 0, all derived JVM-side and deterministic, so every
+    decision axis of the dedup does real work each epoch."""
+    from pyspark.sql import functions as F
+    base = spark.range(n).select(
+        (F.col("id") + epoch * n).alias("doc_id"), F.col("id").alias("i"))
+    frac = F.col("i") % 20  # 0..13 novel, 14..16 exact-dup, 17..19 near-dup
+    # a 40-word body keyed by (source epoch, i); dup rows key on epoch 0,
+    # so their text matches what was actually STORED
+    src_epoch = F.when((frac >= 14) & (epoch > 0), F.lit(0)) \
+        .otherwise(F.lit(epoch))
+    words = F.transform(
+        F.sequence(F.lit(0), F.lit(39)),
+        lambda j: F.concat(F.lit("w"),
+                           F.conv(F.substring(F.md5(F.concat_ws(
+                               "_", src_epoch, F.col("i"), j)), 1, 6),
+                               16, 10)))
+    text = F.concat_ws(" ", words)
+    text = F.when((frac >= 17) & (F.lit(epoch) > F.lit(0)),
+                  F.concat(text, F.lit(" tail variant "),
+                           F.col("doc_id"))).otherwise(text)
+    return base.select("doc_id", text.alias("text"))
+
+
+def ingest_point(spark) -> dict:
+    """The streaming ingest-dedup loop end to end: ``stream_ingest_dedup``
+    (AvailableNow file stream -> foreachBatch epoch -> icelite commit ->
+    tail-only compaction every ``INGEST_COMPACT_EVERY`` committed epochs)
+    over ``INGEST_EPOCHS`` parquet micro-batches of ``INGEST_DOCS`` docs
+    (``_ingest_batch``), one timed run.  Reports docs/s, Spark jobs per
+    epoch, accepted docs, and the accepted store's read fan-in (data dirs
+    a scan unions) before and after each compaction, read off the
+    compacting snapshots."""
+    import tempfile
+    from apple_ocr_backend_spark.sources.icelite import Table
+    from apple_ocr_backend_spark.streaming.ingest_dedup import (
+        stream_ingest_dedup)
+    sc = spark.sparkContext
+    with tempfile.TemporaryDirectory(prefix="bench_ingest_") as work:
+        inp, tbl, ckpt = f"{work}/in", f"{work}/tbl", f"{work}/ckpt"
+        for e in range(INGEST_EPOCHS):
+            _ingest_batch(spark, e, INGEST_DOCS).coalesce(4) \
+                .write.parquet(f"{inp}/batch_{e:03d}")
+        query = []
+
+        def run() -> None:
+            query.append(stream_ingest_dedup(
+                spark, f"{inp}/batch_*", tbl, ckpt,
+                schema_ddl="doc_id LONG, text STRING",
+                max_files_per_trigger=4,  # one written dir (4 files)/epoch
+                max_bucket=INGEST_MAX_BUCKET,
+                compact_every=INGEST_COMPACT_EVERY))
+            query[0].awaitTermination()
+        its = timed(run, 1)
+        # foreachBatch jobs run on the stream-execution thread, which sets
+        # the query runId as the job group
+        jobs = len(sc.statusTracker().getJobIdsForGroup(str(query[0].runId)))
+        table = Table(tbl)
+        ingests, compactions = [], []
+        for snap in table.snapshots():
+            op, summary = str(snap.get("operation", "")), snap["summary"]
+            if op.startswith("ingest/"):
+                ingests.append(summary)
+            elif op == "compact":  # after: the carried dirs + one tail dir
+                carried = summary["carried_dirs"]
+                compactions.append({
+                    "after_epoch": len(ingests),
+                    "dirs_before": carried + summary["compacted_dirs"],
+                    "dirs_after": carried + 1})
+        store_dirs = len(table.data_dirs())
+    docs_in = INGEST_EPOCHS * INGEST_DOCS
+    return {"iters": {"stream": its},
+            "result": {
+                "epochs": INGEST_EPOCHS, "docs_in": docs_in,
+                "accepted": sum(int(s.get("accepted", 0)) for s in ingests),
+                "dropped_band_buckets": sum(
+                    int(s.get("dropped_band_buckets_existing", 0))
+                    + int(s.get("dropped_band_buckets_batch", 0))
+                    for s in ingests),
+                "docs_per_sec": round(docs_in / its[0][0], 1),
+                "jobs_total": jobs,
+                "jobs_per_epoch": round(jobs / INGEST_EPOCHS, 1),
+                "compact_every": INGEST_COMPACT_EVERY,
+                "max_bucket": INGEST_MAX_BUCKET,
+                "compactions": compactions, "store_dirs_final": store_dirs}}
+
+
 POINTS = {"extract": extract_point, "image": image_point, "skew": skew_point,
           "dedup": dedup_point, "catalog": catalog_point,
           "session_skew": session_skew_point, "memory": memory_point,
-          "worker": worker_point, "resume": resume_point}
+          "worker": worker_point, "resume": resume_point,
+          "ingest": ingest_point}
 
 
 def _extract_rows(rows) -> int:
@@ -633,6 +726,7 @@ STUDIES = {
     "kernel": ([{"fn": "kernel"}], _single),
     "worker": ([{"fn": "worker"}], _single),
     "resume": ([{"fn": "resume"}], _single),
+    "ingest": ([{"fn": "ingest"}], _single),
 }
 
 

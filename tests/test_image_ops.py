@@ -35,6 +35,11 @@ def test_extract_rois_partitioning_invariant(spark, ids):
     b = (extract_rois(media.repartition(7))
          .orderBy("doc_id", "roi_idx").collect())
     assert a == b
+    # extra input columns, in any position, do not reach the row function
+    wide = media.select(F.lit("x").alias("note"), "media",
+                        F.col("media").alias("media2"), "doc_id")
+    c = extract_rois(wide).orderBy("doc_id", "roi_idx").collect()
+    assert a == c
 
 
 def test_orientation_matches_planted(spark, ids):
@@ -76,6 +81,36 @@ def test_null_and_empty_partition_batches(spark):
     empty = spark.range(0).withColumnRenamed("id", "doc_id")
     assert extract_rois(render_media(empty)).count() == 0
     assert decode_stats(render_media(empty)).count() == 0
+    # a non-empty batch in which no doc yields a row: an empty frame that
+    # still converts to the operator's schema
+    import numpy as np
+    from apple_ocr_backend_spark.functions.png_codec import encode_png_gray
+    blank = bytearray(encode_png_gray(np.full((144, 256), 216, np.uint8)))
+    blanks = spark.createDataFrame([(d, blank) for d in range(3)],
+                                   "doc_id long, media binary").coalesce(1)
+    none = extract_rois(blanks, fallback=False)
+    assert none.collect() == []
+    assert none.schema.simpleString() == (
+        "struct<doc_id:bigint,roi_idx:int,y0:int,y1:int>")
+
+
+def test_null_media_reads_as_empty(spark):
+    """The byte-level stand-ins treat a null buffer as b"" (the
+    signature extractor is the documented fallback, so it must not fail
+    its task on one)."""
+    import hashlib
+    from apple_ocr_backend_spark.operators.multimodal import (
+        media_signatures, resize_media, sample_frames)
+    df = spark.createDataFrame([(0, bytearray(b"abc")), (1, None)],
+                               "doc_id long, media binary").coalesce(1)
+    empty_sig = hashlib.md5(b"").hexdigest()
+    sigs = {r.doc_id: tuple(r) for r in media_signatures(df).collect()}
+    assert sigs == {0: (0, 3, hashlib.md5(b"abc").hexdigest()),
+                    1: (1, 0, empty_sig)}
+    resized = {r.doc_id: tuple(r) for r in resize_media(df).collect()}
+    assert resized[1] == (1, 0, 0, empty_sig)
+    frames = [tuple(r) for r in sample_frames(df).collect() if r.doc_id == 1]
+    assert frames == [(1, 0, 0, empty_sig)]
 
 
 def test_blank_page_falls_back_to_fixed_bands(spark):
@@ -88,6 +123,21 @@ def test_blank_page_falls_back_to_fixed_bands(spark):
     rows = extract_rois(df).orderBy("roi_idx").collect()
     assert [(r.y0, r.y1) for r in rows] == [(48, 96), (96, 144), (0, 48)]
     assert extract_rois(df, fallback=False).count() == 0
+    # without the fallback the blank doc yields no rows, and its
+    # neighbours in the same batch keep exactly theirs
+    from apple_ocr_backend_spark.sources.image_corpus import render_doc_image
+
+    def page(d):
+        return bytearray(encode_png_gray(render_doc_image(d)))
+    mixed = spark.createDataFrame([(1, page(1)), (0, bytearray(blank)),
+                                   (2, page(2))],
+                                  "doc_id long, media binary").coalesce(1)
+    got = {}
+    for r in extract_rois(mixed, fallback=False).collect():
+        got.setdefault(r.doc_id, []).append((r.roi_idx, r.y0, r.y1))
+    assert got == {d: [(i, y0, y1) for i, (y0, y1) in
+                       enumerate(planted_geometry(d)["bands"])]
+                   for d in (1, 2)}
 
 
 def test_ocr_serials_reads_planted_strings(spark, ids):
