@@ -4,10 +4,12 @@ No Iceberg/Delta jars ship in this environment (SURVEY.md §7), so this module
 provides the same commit semantics over plain Parquet + a JSON snapshot log:
 
 * data files are written to a staging dir and **atomically renamed** into
-  place; a snapshot JSON (id, parent id, data dirs, summary, per-partition
-  lineage) is also written via write-temp + ``os.rename`` — the rename is the
-  commit point, so a killed job can never expose partial data (readers only
-  see data dirs referenced by committed snapshots);
+  place (``write``); a snapshot JSON (id, parent id, data dirs, summary,
+  the caller's lineage rows) is also written via write-temp + ``os.rename``
+  (``commit``) — the rename is the commit point, so a killed job can never
+  expose partial data (readers only see data dirs referenced by committed
+  snapshots).  ``append`` is ``write`` then ``commit``; a caller that needs
+  stats of the written files in the snapshot reads them between the two;
 * ``read()`` unions the data dirs of the committed snapshot chain;
 * the call sites (`append`, `read`, `last_snapshot`) bind 1:1 to a real
   Iceberg catalog (``df.writeTo(tbl).append()`` / ``spark.read.table``) when
@@ -85,7 +87,8 @@ class Table:
                expect_parent: int | None = None,
                _carry_dirs: list[str] | None = None,
                _carry_stats: dict | None = None) -> int:
-        """Write df as a new data dir + commit a snapshot. Returns snapshot id.
+        """Write df as a new data dir + commit a snapshot (``write``, then
+        ``commit``).  Returns snapshot id.
 
         ``stats_col`` records the min/max of that column over the written
         data dir in the snapshot manifest (Iceberg's per-file column stats
@@ -111,15 +114,12 @@ class Table:
         correct; carried dirs WITHOUT compatible stats make the snapshot
         drop stats entirely (pruning is conservative — a statless snapshot
         is always read)."""
-        data_name = f"{uuid.uuid4().hex}"
-        staging = os.path.join(self.path, "_staging", data_name)
-        df.write.mode("overwrite").parquet(staging)
-        final = os.path.join(self.path, "data", data_name)
-        os.rename(staging, final)  # atomic on one filesystem
+        data_dir = self.write(df)
         stats = None
         if stats_col is not None:
             from pyspark.sql import functions as F
-            row = (df.sparkSession.read.parquet(final)
+            row = (df.sparkSession.read.parquet(os.path.join(self.path,
+                                                             data_dir))
                    .agg(F.min(stats_col).alias("mn"),
                         F.max(stats_col).alias("mx")).first())
             stats = {"column": stats_col,
@@ -135,7 +135,33 @@ class Table:
                     # dir's bounds as the snapshot's would prune rows the
                     # carried dirs hold
                     stats = None
+        return self.commit(list(_carry_dirs or []) + [data_dir], operation,
+                           summary, lineage, stats=stats,
+                           compacts_chain=compacts_chain,
+                           expect_parent=expect_parent)
 
+    def write(self, df: DataFrame) -> str:
+        """Write df to a fresh staging dir and rename it into ``data/``: the
+        first half of ``append``.  Returns the dir path-relative, as a
+        snapshot's ``data_dirs`` holds it.  Readers see it only once a
+        ``commit`` references it; ``vacuum`` collects it if none does."""
+        name = uuid.uuid4().hex
+        staging = os.path.join(self.path, "_staging", name)
+        df.write.mode("overwrite").parquet(staging)
+        # atomic on one filesystem
+        os.rename(staging, os.path.join(self.path, "data", name))
+        return f"data/{name}"
+
+    def commit(self, data_dirs: list[str], operation: str = "append",
+               summary: dict | None = None,
+               lineage: list[dict] | None = None,
+               stats: dict | None = None, compacts_chain: bool = False,
+               expect_parent: int | None = None) -> int:
+        """Commit a snapshot referencing ``data_dirs`` (written by ``write``
+        or already committed): the second half of ``append`` and the
+        table's one commit point.  Under the commit lock it checks the
+        ``expect_parent`` CAS and refuses to resurrect orphan snapshots,
+        then renames the snapshot file into place.  Returns its id."""
         with self._commit_lock:
             parent = self.last_snapshot()
             if expect_parent is not None and \
@@ -167,7 +193,7 @@ class Table:
                 "parent_id": parent["snapshot_id"] if parent else None,
                 "committed_at": time.time(),
                 "operation": operation,
-                "data_dirs": list(_carry_dirs or []) + [f"data/{data_name}"],
+                "data_dirs": data_dirs,
                 "summary": summary or {},
                 "lineage": lineage or [],
             }

@@ -747,13 +747,21 @@ def scaling(kind: str, cores: list[int]) -> tuple[list[dict], object]:
 
 def _git_rev() -> str | None:
     """The checkout's commit, suffixed ``-dirty`` when the working tree
-    differs from it, so a record names the code that produced it."""
+    differs from it, so a record names the code that produced it.
+    ``BENCH.jsonl`` is left out of the dirty check: every study appends
+    to it, and that must not mark the next record's code as changed."""
+    def git(*args):
+        return subprocess.run(["git", *args], cwd=REPO, capture_output=True,
+                              text=True)
     try:
-        p = subprocess.run(["git", "describe", "--always", "--dirty"],
-                           cwd=REPO, capture_output=True, text=True)
+        rev = git("describe", "--always")
+        dirty = git("status", "--porcelain", "--untracked-files=no", "--",
+                    ".", ":!BENCH.jsonl")
     except OSError:
         return None
-    return p.stdout.strip() if p.returncode == 0 else None
+    if rev.returncode or dirty.returncode:
+        return None
+    return rev.stdout.strip() + ("-dirty" if dirty.stdout.strip() else "")
 
 
 def append_record(path: str, rec: dict) -> None:

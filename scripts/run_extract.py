@@ -11,13 +11,14 @@ Usage (cluster):
         [--derive-from-documents]  # input is a documents.parquet dir instead
 
 The job is resumable: each doc bucket commits one icelite snapshot with
-per-partition lineage + metrics; re-running with the same --output skips
-committed buckets (plans/checkpoint.py).  On a real cluster, point --output
-at shared storage and raise --buckets so each commit unit fits executor
-memory at the target scale.  Each bucket job runs one wave of
-``defaultParallelism`` kernel tasks (``operators/skew.py::
-repartition_salted``), so raising --buckets multiplies kernel tasks, and the
-fixed per-task cost with them.  --concurrency bucket jobs run at once, so
+one lineage row per written data file; re-running with the same --output
+skips committed buckets (plans/checkpoint.py).  On a real cluster, point
+--output at shared storage.  A bucket is the work a kill can lose, so
+raise --buckets to bound it; nothing is cached, so bucket size is not
+bounded by executor memory.  Each bucket scans the input again and runs
+one wave of ``defaultParallelism`` kernel tasks (``operators/skew.py::
+repartition_salted``), so raising --buckets multiplies input scans and
+kernel tasks, and the fixed per-task cost with them.  --concurrency bucket jobs run at once, so
 one bucket's driver-only time overlaps another's stages; it defaults to
 ``run_resumable``'s default.
 """

@@ -92,3 +92,23 @@ def test_bench_code_declares_no_session_config():
               for s in bench.scaling(kind, [1, 4])[0]]
     extra = {k for s in specs for k in s.get("extra_conf", {})}
     assert extra <= {bench.BATCH_ROWS, bench.BATCH_BYTES}, extra
+
+
+def test_git_rev_ignores_bench_records(tmp_path, monkeypatch):
+    """A study's own append to the tracked ``BENCH.jsonl`` leaves the
+    record's rev clean; an edit to tracked code marks it ``-dirty``."""
+    def git(*args):
+        subprocess.run(["git", "-c", "user.name=t", "-c", "user.email=t@t",
+                        *args], cwd=tmp_path, check=True, capture_output=True)
+    (tmp_path / "BENCH.jsonl").write_text("")
+    (tmp_path / "mod.py").write_text("x = 1\n")
+    git("init", "-q")
+    git("add", ".")
+    git("commit", "-q", "-m", "seed")
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    clean = bench._git_rev()
+    assert clean and not clean.endswith("-dirty")
+    bench.append_record(str(tmp_path / "BENCH.jsonl"), {"study": "resume"})
+    assert bench._git_rev() == clean
+    (tmp_path / "mod.py").write_text("x = 2\n")
+    assert bench._git_rev() == clean + "-dirty"

@@ -4,7 +4,12 @@ result equals the single-run golden exactly."""
 
 from __future__ import annotations
 
+import glob
+import os
+import re
+
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from apple_ocr_backend_spark.config import ExtractConfig
@@ -54,13 +59,65 @@ def test_kill_and_resume(spark, tmp_path):
             assert {"run_id", "stage", "bucket", "partition_id", "doc_count",
                     "span_count", "bytes", "wall_ms"} <= set(row)
 
+    # lineage equals the committed files: each row names exactly one part
+    # file of its data dir and holds that file's footer row count, and the
+    # snapshot's span totals are the oracle's for the docs the dir holds
+    for s in snaps:
+        (data_dir,) = s["data_dirs"]
+        files = glob.glob(os.path.join(res["table"].path, data_dir,
+                                       "part-*.parquet"))
+        parts = [int(re.match(r"part-(\d+)", os.path.basename(f)).group(1))
+                 for f in files]
+        for row in s["lineage"]:
+            (f,) = [f for f, p in zip(files, parts)
+                    if p == row["partition_id"]]
+            assert row["doc_count"] == pq.ParquetFile(f).metadata.num_rows
+        ids = [d for f in files
+               for d in pq.read_table(f, columns=["doc_id"])["doc_id"]
+               .to_pylist()]
+        assert s["summary"]["docs_in"] == len(ids)
+        spans = [sp for d in ids for sp in golden[d]]
+        totals = {k: sum(r[k] for r in s["lineage"])
+                  for k in ("span_count", "bytes", "ocr_span_count")}
+        assert totals == {
+            "span_count": len(spans),
+            "bytes": sum(len(text) for _, text, _, _ in spans),
+            "ocr_span_count": sum(kind == "ocr_text" for kind, *_ in spans)}
+
+
+def test_resumable_run_caches_nothing_and_coalesces_writes(
+        spark, tmp_path, monkeypatch):
+    """No RDD is persisted while a bucket commits: the input is filtered
+    per bucket and the lineage is read back from the written files.  So
+    AQE may coalesce each bucket's write, and a small bucket writes fewer
+    part files than the merge's ``spark.sql.shuffle.partitions``."""
+    from apple_ocr_backend_spark.plans import checkpoint
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    real = checkpoint.commit_extracted
+    held = []
+
+    def watched(table, extracted, operation, summary):
+        held.append(set(jsc.getPersistentRDDs()) - before)
+        out = real(table, extracted, operation, summary)
+        held.append(set(jsc.getPersistentRDDs()) - before)
+        return out
+
+    monkeypatch.setattr(checkpoint, "commit_extracted", watched)
+    res = run_resumable(spark, _to_spark_docs(spark, make_corpus(200, seed=13)),
+                        str(tmp_path / "t"), CFG, n_buckets=4)
+    assert len(held) == 8 and not any(held), held
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for d in res["table"].data_dirs():
+        assert 1 <= len(glob.glob(os.path.join(d, "part-*.parquet"))) \
+            < n_shuffle
+
 
 def test_bucket_kernel_partitions(spark, tmp_path, monkeypatch):
     """Every bucket job's kernel exchange has defaultParallelism
     partitions (one task wave), whatever the bucket count.  Buckets run on
     a thread pool, so one run may capture a plan from each bucket already
     in flight when the first raises."""
-    import re
     from apple_ocr_backend_spark.plans import checkpoint
 
     class Captured(Exception):
