@@ -64,6 +64,7 @@ BATCH_BYTES = "spark.sql.execution.arrow.maxBytesPerBatch"
 HOT_EVENTS = 2_000_000  # session_skew: events of the one hot user
 IMAGE_DOCS = 6000  # image: synthetic docs through the ROI chain
 KERNEL_DOCS, KERNEL_BATCH = 4000, 2500  # kernel: make_corpus docs, rows/batch
+HOSTILE_CHARS = (20_000, 40_000)  # kernel: hostile html span sizes (a doubling)
 RESUME_KS = (1, 2, 4, 8)  # resume: bucket-thread counts, in round-0 order
 INGEST_EPOCHS, INGEST_DOCS = 10, 10_000  # ingest: micro-batches, docs each
 INGEST_COMPACT_EVERY, INGEST_MAX_BUCKET = 4, 200  # ingest: dedup settings
@@ -621,8 +622,13 @@ def kernel_point(cores: int) -> dict:
     * the raw-CPU ceiling: docs/s of a process pool of 1, 2, 4, ...
       ``cores`` workers mapping the batches ``cores`` times over, and each
       adjacent pair's efficiency.  Spark's N->4N efficiency reads against
-      this host ceiling (the pool's memos are warm: a ceiling)."""
+      this host ceiling (the pool's memos are warm: a ceiling);
+    * each hostile html shape (``tests/html_model.py``) as one span of
+      each ``HOSTILE_CHARS`` size: ms, best of 3, and the doubling ratio
+      (about 4 for a quadratic kernel, 2 for a linear one)."""
     import multiprocessing as mp
+    import pandas as pd
+    from tests.html_model import HOSTILE, hostile_html
     from apple_ocr_backend_spark.functions.serials import clear_expand_memo
     from apple_ocr_backend_spark.operators.assemble import explode_docs_pandas
     from apple_ocr_backend_spark.sources.corpus import make_corpus
@@ -644,6 +650,19 @@ def kernel_point(cores: int) -> dict:
         iters[kind] = timed(lambda: run_cold(bs), 3)
         spans[kind] = len(sub)
         us[kind] = round(best_sec(iters[kind]) / len(sub) * 1e6, 1)
+    hostile = {}
+    for shape in HOSTILE:
+        ms = []
+        for size in HOSTILE_CHARS:
+            span = pd.DataFrame({"doc_id": ["h"], "span_pos": [0],
+                                 "offset": [0], "kind": ["html"],
+                                 "text": [hostile_html(shape, size)],
+                                 "media_ref": [None]})
+            it = iters[f"hostile.{shape}.{size}"] = timed(
+                lambda: _extract_rows(span), 3)
+            ms.append(round(best_sec(it) * 1e3, 1))
+        hostile[shape] = {"ms": ms,
+                          "doubling": round(ms[1] / max(ms[0], 0.1), 2)}
     work = batches(rows) * cores
     workers = sorted({cores, *(1 << i for i in range(cores.bit_length())
                                if 1 << i < cores)})
@@ -656,6 +675,8 @@ def kernel_point(cores: int) -> dict:
     return {"iters": iters,
             "result": {"n_docs": KERNEL_DOCS, "batch_rows": KERNEL_BATCH,
                        "spans": spans, "us_per_span": us,
+                       "hostile_chars": list(HOSTILE_CHARS),
+                       "hostile": hostile,
                        "pool": {"workers": workers, "docs_per_sec": dps,
                                 "efficiency": efficiency(
                                     list(zip(workers, dps)))}}}

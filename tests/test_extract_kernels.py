@@ -3,6 +3,8 @@ and the end-to-end pandas oracle (FIXTURES.md §3 classes A/B/C/D/E)."""
 
 from __future__ import annotations
 
+import time
+
 import pandas as pd
 import pytest
 
@@ -14,6 +16,7 @@ from apple_ocr_backend_spark.operators.ocr_extract import (
 from apple_ocr_backend_spark.sources.corpus import (
     make_corpus, extract_docs_oracle, gen_serial, corrupt_serial)
 from apple_ocr_backend_spark.functions import serials as K
+from html_model import HOSTILE, hostile_html
 
 import numpy as np
 
@@ -73,6 +76,37 @@ def test_html_tag_density():
     dense = "<p><b>a</b> <b>b</b> <b>c</b> <b>d</b> one two three four five six</p>"
     out = extract_html(_span_df("html", dense), CFG)
     assert out.empty
+
+
+@pytest.mark.parametrize("shape", sorted(HOSTILE))
+def test_html_linear_time(shape):
+    """One ~1 MB span of each shape on which the regex formulation
+    rescans to the end of the span from every unit (quadratic: 2-4 s at
+    40 KB) finishes well inside a second-scale bound, and each doubling
+    of the span costs at most ~2.5x its CPU time (a quadratic kernel
+    reads ~4x).  The doubling factor is taken over two doublings (256 KiB
+    to 1 MiB, at most 2.5 ** 2), since one doubling can cross a cache
+    size; times are the best of 5 interleaved runs, and a noisy reading
+    (a busier machine, not a slower kernel) gets up to two more tries.  A
+    128 KiB span goes first, so a quadratic kernel fails in seconds
+    rather than running for hours."""
+    t0 = time.perf_counter()
+    extract_html(_span_df("html", hostile_html(shape, 1 << 17)), CFG)
+    assert time.perf_counter() - t0 < 1.0, shape
+    small, big = (_span_df("html", hostile_html(shape, n))
+                  for n in (1 << 18, 1 << 20))
+    for _ in range(3):
+        cpu = {}
+        for _ in range(5):
+            for name, df in (("small", small), ("big", big)):
+                t0, c0 = time.perf_counter(), time.process_time()
+                extract_html(df, CFG)
+                cpu[name] = min(cpu.get(name, 1e9), time.process_time() - c0)
+                assert time.perf_counter() - t0 < 10.0, shape
+        per_doubling = (cpu["big"] / cpu["small"]) ** 0.5
+        if per_doubling <= 2.5:
+            return
+    pytest.fail(f"doubling {shape} cost {per_doubling:.2f}x")
 
 
 # --------------------------------------------------------------------------- #

@@ -6,15 +6,23 @@ computes ``min(1, max_j(c_j + 0.05 * boosts_j))`` in one vectorized pass,
 while the reference folds occurrences sequentially
 (``cur = max(cur, c) + 0.05`` on each repeat — ocr_adapter_improved.py:
 1310-1343).  The fold below is an INDEPENDENT transcription of the reference
-loop; hypothesis drives both through random occurrence patterns.
+loop; hypothesis drives both through random occurrence patterns.  The
+html kernel is checked the same way against the regex model in
+``tests/html_model.py``.
 """
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
 import pandas as pd
 from hypothesis import example, given, settings, strategies as st
 
+from apple_ocr_backend_spark.config import ExtractConfig
 from apple_ocr_backend_spark.functions import serials as K
+from apple_ocr_backend_spark.operators import html_extract as H
+from html_model import extract_html as html_model
 
 ALPHABET = "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
 
@@ -561,3 +569,111 @@ def test_span_rows_contract_with_payload():
     token = extract_span_rows(rows, DEFAULT_CONFIG)
     pd.testing.assert_frame_equal(out[out["kind"] == "main_text"],
                                   token[token["kind"] == "main_text"])
+
+
+# --------------------------------------------------------------------------- #
+# html: the tag-index kernel == the regex model (tests/html_model.py)
+# --------------------------------------------------------------------------- #
+
+_ALL = "".join(map(chr, range(0x110000)))
+_SPACES = re.findall(r"\s", _ALL)  # all 29: \x1c-\x1f, \x85, 　, ...
+# letters Python's (?i) matches to a tag-name letter outside ASCII: İ/ı as
+# i, ſ as s and K (U+212A) as k
+_VARIANTS = {"i": "iIİı", "s": "sSſ", "k": "kKK"}
+_NAMES = ("p", "h1", "h6", "li", "td", "blockquote", "a", "script", "style",
+          "nav", "footer", "header", "aside", "b", "i", "div", "h7", "pa",
+          "navé", "nav-x", "abbr", "scripts", "lı")
+
+
+@st.composite
+def _spelled(draw, name):
+    return "".join(draw(st.sampled_from(_VARIANTS.get(ch, ch + ch.upper())))
+                   for ch in name)
+
+
+_attr = st.sampled_from(["", "", " ", " class=x", "\nclass='a\nb'",
+                         " a=\"<\"", " /", "\t", " href='/x'"])
+_leaf = st.one_of(
+    st.sampled_from(["one", "two", "three", "four", "x", "é", "𝒜𝒞", "ſ", "0",
+                     "word", "K"]),
+    st.sampled_from(_SPACES), st.just(" "), st.text(max_size=3),
+    st.sampled_from(["<", ">", "<>", "<<b>", "<!--", "-->", "--", "<!-->",
+                     "--->", "/", "\0", "<!-- <p>c</p> -->", "<p<!--c-->>",
+                     "<script><!-- x --></script>", "<SCRIPT>s</script>",
+                     "<br>", "<b>", "</b>"]),
+    st.builds(lambda n, a: f"<{n}{a}", st.sampled_from(_NAMES).flatmap(
+        _spelled), _attr),  # an opening with no '>'
+    st.builds(lambda n: f"</{n}>", st.sampled_from(_NAMES).flatmap(
+        _spelled)))
+
+
+@st.composite
+def _element(draw, kids):
+    """``<name attrs>kids</name>``, the end tag spelt the same, spelt in
+    another case, with a space before its ``>``, or missing."""
+    base = draw(st.sampled_from(_NAMES))
+    name = draw(_spelled(base))
+    end = draw(st.sampled_from(["same", "same", "other", "space", "none"]))
+    close = {"same": f"</{name}>", "other": f"</{draw(_spelled(base))}>",
+             "space": f"</{name} >", "none": ""}[end]
+    return (f"<{name}{draw(_attr)}>" + "".join(draw(st.lists(kids, max_size=6)))
+            + close)
+
+
+_html = st.lists(st.recursive(_leaf, _element, max_leaves=40),
+                 max_size=8).map("".join)
+
+
+def _span_frame(texts):
+    n = len(texts)
+    return pd.DataFrame({"doc_id": [f"d{i % 3}" for i in range(n)],
+                         "span_pos": range(n), "offset": range(0, 2 * n, 2),
+                         "text": np.array(texts, dtype=object)},
+                        index=range(100, 100 + n))
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(st.none() | st.just("") | _html, min_size=1, max_size=4),
+       st.sampled_from([ExtractConfig(),
+                        ExtractConfig(html_min_words=1,
+                                      html_max_link_ratio=1.0,
+                                      html_max_tag_density=2.0),
+                        ExtractConfig(html_min_words=0,
+                                      html_max_link_ratio=0.0)]))
+@example(["<p<!--c-->>hello world one two three four</p>"], ExtractConfig())
+@example(["<navé><p>one two three four five six</p></nav>"], ExtractConfig())
+@example(["<p>aaaa bbb ccc d e f <a>xxxx</a><a>yyyy</a></p>"],  # ratio 9/28
+         ExtractConfig())
+@example(["<ſcript>x</script><p>one two three four five six</p></ſcript>"
+          "<scrİpt></SCRIPT><blocKquote>a b c d e f g</blocKquote>",
+          None, ""], ExtractConfig())
+def test_html_kernel_equals_regex_model(texts, cfg):
+    """Every output column, the index and the order equal the model's, on
+    tag soup that reaches the edges of Python's ``re``: Unicode case
+    folding and ``\\b``, case-insensitive backreferences, ``<>``, nested
+    same-name tags, comments inside scripts and tags inside comments, tags
+    formed across a removed region, every ``\\s`` character, non-BMP text,
+    null and empty spans."""
+    df = _span_frame(texts)
+    pd.testing.assert_frame_equal(H.extract_html(df, cfg),
+                                  html_model(df, cfg))
+
+
+def test_html_tables_are_what_re_says():
+    """The kernel's case-fold, case-class and whitespace tables, each
+    derived from ``re`` at import, checked code point by code point
+    against ``re`` and pinned where they leave ASCII."""
+    fold = {chr(c): H._LETTERS[H._FOLD[c] - 1]
+            for c in map(int, np.flatnonzero(H._FOLD))}
+    assert fold == {c: x for x in H._LETTERS
+                    for c in re.findall(f"(?i){x}", _ALL)}
+    assert {c: x for c, x in fold.items() if not c.isascii()} == {
+        "İ": "i", "ı": "i", "ſ": "s", "K": "k"}
+    for c in fold:  # a backreference to c matches exactly c's case class
+        for d in fold:
+            if fold[c] == fold[d]:
+                assert (re.fullmatch(r"(?i)(.)\1", c + d) is not None) == (
+                    H._CASE[ord(c)] == H._CASE[ord(d)]), (c, d)
+    assert {chr(c) for c in np.flatnonzero(H._CASE)} == {"ı", "ſ"}
+    assert [chr(c) for c in np.flatnonzero(H._IS_SPACE)] == _SPACES
+    assert len(_SPACES) == 29 and not H._IS_SPACE[-1]
