@@ -664,9 +664,6 @@ def merge_passes(df: pd.DataFrame, group_cols: list[str]) -> pd.DataFrame:
 # Misc scalar semantics (X4 / X5)
 # --------------------------------------------------------------------------- #
 
-SERIAL_EXTRACT_RE = r"Serial[:,.]?\s?([A-Z0-9]{12})"  # vendor/ipad-ocr/main.py:65
-
-
 def mask_serial(s: pd.Series) -> pd.Series:
     """Log masking ``serial[:4]***serial[-4:]`` (app/routers/serials.py:93)."""
     return s.str.slice(0, 4).str.cat(s.str.slice(-4), sep="***")

@@ -71,19 +71,6 @@ def lang_id(text: Column) -> Column:
     return F.when(stopword_ratio_q(text) >= 50_000, F.lit("en")).otherwise("unk")
 
 
-def distinct_token_ratio_q(text: Column, scale: int = 1_000_000) -> Column:
-    toks = tokens(text)
-    return F.floor(F.size(F.array_distinct(toks)) / F.size(toks) * scale).cast("long")
-
-
-def alpha_ratio_q(text: Column, scale: int = 1_000_000) -> Column:
-    """alphabetic chars / total chars (quality signal: punctuation soup
-    scores low)."""
-    total = F.greatest(F.length(text), F.lit(1))
-    alpha = F.length(F.regexp_replace(text, r"[^A-Za-z]", ""))
-    return F.floor(alpha / total * scale).cast("long")
-
-
 def quality_score_q(text: Column, scale: int = 1_000_000) -> Column:
     """Composite document-quality score in [0, 1] * scale (long):
     0.5*min(tokens/50,1) + 0.3*distinct_ratio + 0.2*alpha_ratio."""
@@ -94,13 +81,6 @@ def quality_score_q(text: Column, scale: int = 1_000_000) -> Column:
     alpha_part = (F.length(F.regexp_replace(text, r"[^A-Za-z]", ""))
                   / F.greatest(F.length(text), F.lit(1))) * 0.2
     return F.floor((len_part + distinct_part + alpha_part) * scale).cast("long")
-
-
-def char_shingles(text: Column, n: int = 8) -> Column:
-    """Array of n-char shingles (rolling windows) over the text."""
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(text) - (n - 1), F.lit(1))),
-        lambda i: F.substring(text, i, F.lit(n)))
 
 
 def fingerprint(text: Column, n: int = 8, max_chars: int = 4096) -> Column:

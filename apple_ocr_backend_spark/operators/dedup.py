@@ -556,10 +556,6 @@ def dedup_decisions(df: DataFrame, id_col: str = "doc_id",
 # SimHash
 # --------------------------------------------------------------------------- #
 
-def _hex_val(ch: Column) -> Column:
-    return F.conv(ch, 16, 10).cast("int")
-
-
 def simhash64(df: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> DataFrame:
     """64-bit SimHash from token md5s, stored as four 16-bit words

@@ -9,18 +9,19 @@ bucket is one commit unit.  A run processes only buckets absent from the
 results table's committed snapshot summaries (the anti-join resume set —
 reference analog: progressive early-stop skipping, SURVEY.md §3.3).  Each
 bucket filters the input by its hash and runs the one extraction plan; no
-input or output is cached.  Each commit writes the unit's output once and
-carries
+input or output is cached.  Each commit runs one plan, the write of the
+unit's output, and carries
 
 * lineage: one row per data file the write produced, which is one
   partition of the write (``partition_id`` is the file's ``part-NNNNN``),
-  with doc/span counts, text bytes, OCR span count and wall ms — the shape
-  of FIXTURES.md §6 ``checkpoint_lineage``.  It is read back from the
-  written files in one aggregate before the snapshot commits, as an
-  Iceberg manifest takes its per-data-file stats from the files it
-  commits;
-* a summary: the unit's identity keys plus ``docs_in``, ``span_count``
-  and ``wall_ms``.
+  with its doc count and the unit's wall ms — the shape of FIXTURES.md §6
+  ``checkpoint_lineage``.  The doc count is the file's Parquet footer row
+  count, as an Iceberg manifest takes its per-data-file stats from the
+  files it commits; no job reads the files back;
+* a summary: the unit's identity keys plus ``docs_in``, ``span_count``,
+  ``bytes`` (span text length), ``ocr_span_count`` and ``wall_ms``.  An
+  ``Observation`` on the write computes the four totals as the rows go
+  out.
 
 The commit body (``commit_extracted``) is shared with the streaming front
 end, so a stream epoch commits the same lineage as a bucket.
@@ -28,11 +29,14 @@ end, so a stream epoch commits the same lineage as a bucket.
 
 from __future__ import annotations
 
+import glob
 import os
+import re
 import time
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.util import inheritable_thread_target
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
@@ -47,39 +51,39 @@ def bucket_of(doc_id_col, n_buckets: int):
 def commit_extracted(table: Table, extracted: DataFrame, operation: str,
                      summary: dict) -> dict:
     """Commit one unit of extraction output (a bucket, a stream epoch) to
-    ``table`` with its lineage: ``table.write`` runs the extraction plan
-    once into a new data dir, ONE aggregate over that dir's files gives a
-    lineage row per part file, and ``table.commit`` commits the snapshot.
-    Nothing is cached, so AQE may coalesce the write's partitions.
+    ``table`` with its lineage, running ONE plan: ``table.write`` runs the
+    extraction plan once into a new data dir with an ``Observation`` that
+    totals the unit on the way, each written part file's footer gives its
+    row count, and ``table.commit`` commits the snapshot.  Nothing is
+    cached or read back, so AQE may coalesce the write's partitions.
 
     ``summary`` holds the unit's identity keys; every lineage row carries
     them plus ``partition_id`` (the part file's writing partition),
-    ``doc_count, span_count, bytes, ocr_span_count, wall_ms``, and the
-    committed (and returned) summary adds ``docs_in, span_count,
-    wall_ms``.  ``wall_ms`` covers the write and the lineage read."""
+    ``doc_count`` (its footer row count) and ``wall_ms``; 0-row files get
+    no row.  The committed (and returned) summary adds the unit's
+    ``docs_in, span_count, bytes, ocr_span_count`` (0 for an empty unit)
+    and ``wall_ms``, which covers the write and the footer reads."""
     t0 = time.time()
-    data_dir = table.write(extracted)
-    # the known schema spares the job that would infer it from a footer
-    written = extracted.sparkSession.read.schema(extracted.schema).parquet(
-        os.path.join(table.path, data_dir))
+    totals = Observation()
+    data_dir = table.write(extracted.observe(
+        totals, F.count("*").alias("docs_in"),
+        F.sum(F.size("spans")).alias("span_count"),
+        F.sum(F.aggregate("spans", F.lit(0),
+                          lambda acc, s: acc + F.length(s["text"])))
+        .alias("bytes"),
+        F.sum(F.size(F.filter("spans", lambda s: s["kind"] == "ocr_text")))
+        .alias("ocr_span_count")))
     # a part file's part-NNNNN is the partition of the task that wrote it
-    rows = (written
-            .groupBy(F.regexp_extract("_metadata.file_name", r"^part-(\d+)", 1)
-                     .cast("int").alias("partition_id"))
-            .agg(F.count("*").alias("doc_count"),
-                 F.sum(F.size("spans")).alias("span_count"),
-                 F.sum(F.aggregate("spans", F.lit(0),
-                                   lambda acc, s: acc + F.length(s["text"])))
-                 .alias("bytes"),
-                 F.sum(F.size(F.filter("spans",
-                                       lambda s: s["kind"] == "ocr_text")))
-                 .alias("ocr_span_count"))
-            .collect())
+    files = glob.glob(os.path.join(table.path, data_dir, "part-*.parquet"))
+    counts = sorted(
+        (int(re.match(r"part-(\d+)", os.path.basename(f)).group(1)),
+         pq.read_metadata(f).num_rows) for f in files)
     wall_ms = (time.time() - t0) * 1000.0
-    lineage = [{**summary, **r.asDict(), "wall_ms": wall_ms} for r in rows]
-    summary = {**summary,
-               "docs_in": sum(r["doc_count"] for r in lineage),
-               "span_count": sum(r["span_count"] for r in lineage),
+    lineage = [{**summary, "partition_id": p, "doc_count": n,
+                "wall_ms": wall_ms} for p, n in counts if n]
+    # get only once the write has returned: it blocks until the action
+    # reports; an empty unit's sums are None
+    summary = {**summary, **{k: v or 0 for k, v in totals.get.items()},
                "wall_ms": wall_ms}
     table.commit([data_dir], operation, summary, lineage)
     return summary
@@ -89,7 +93,7 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
                   cfg: ExtractConfig = DEFAULT_CONFIG, n_buckets: int = 8,
                   mode: str = "fused", run_id: str = "run",
                   fail_after: int | None = None,
-                  concurrency: int = 2) -> dict:
+                  concurrency: int = 4) -> dict:
     """Extract ``docs`` into the icelite table at ``table_dir``, one commit
     per doc bucket; skips buckets already committed (resume).
 
@@ -106,13 +110,15 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     Python-worker cost once per core and no more.
 
     Buckets run on a pool of ``concurrency`` threads, so one bucket's
-    driver-only time (plan build, the lineage read-back) overlaps
-    another bucket's stages on the same executors.  Each thread inherits
-    the caller's job group, description and tags.  Each bucket's commit
-    stays atomic (icelite serializes the commit point).  The first bucket
-    error cancels every bucket not yet started, waits for those in flight
-    (each commits whole or leaves an uncommitted dir for ``vacuum``) and
-    is re-raised.
+    driver-only time (plan build, footer reads, commit) overlaps
+    another bucket's stages on the same executors.  Four by default: a
+    bucket's write stage runs one task and its scan stage a few, so two
+    buckets at a time leave cores idle (PLANS.md "One plan per commit
+    unit").  Each thread inherits the caller's job group, description
+    and tags.  Each bucket's commit stays atomic (icelite serializes the
+    commit point).  The first bucket error cancels every bucket not yet
+    started, waits for those in flight (each commits whole or leaves an
+    uncommitted dir for ``vacuum``) and is re-raised.
 
     ``fail_after`` (tests only): run only the first ``fail_after`` todo
     buckets, then raise once they have committed, simulating a kill

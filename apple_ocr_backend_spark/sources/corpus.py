@@ -27,13 +27,9 @@ from ..operators.assemble import (explode_docs_pandas, extract_span_rows,
 
 SPAN_FIELDS_IN = [("kind", "string"), ("text", "string"),
                   ("media_ref", "string"), ("offset", "int")]
-SPAN_FIELDS_OUT = [("kind", "string"), ("text", "string"),
-                   ("media_ref", "string"), ("order", "int")]
 
 DOCS_DDL = ("doc_id string, spans array<struct<kind:string,text:string,"
             "media_ref:string,offset:int>>")
-EXTRACTED_DDL = ("doc_id string, spans array<struct<kind:string,text:string,"
-                 "media_ref:string,order:int>>")
 
 
 def docs_spark_schema():

@@ -8,8 +8,9 @@ provides the same commit semantics over plain Parquet + a JSON snapshot log:
   the caller's lineage rows) is also written via write-temp + ``os.rename``
   (``commit``) — the rename is the commit point, so a killed job can never
   expose partial data (readers only see data dirs referenced by committed
-  snapshots).  ``append`` is ``write`` then ``commit``; a caller that needs
-  stats of the written files in the snapshot reads them between the two;
+  snapshots).  ``append`` is ``write`` then ``commit``; stats a snapshot
+  records of its data (``stats_col``) ride the write as an
+  ``Observation``, so no commit reads back the files it wrote;
 * ``read()`` unions the data dirs of the committed snapshot chain;
 * the call sites (`append`, `read`, `last_snapshot`) bind 1:1 to a real
   Iceberg catalog (``df.writeTo(tbl).append()`` / ``spark.read.table``) when
@@ -29,7 +30,7 @@ import threading
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 _SNAP_RE = re.compile(r"^v(\d+)\.json$")
 
@@ -94,8 +95,8 @@ class Table:
         data dir in the snapshot manifest (Iceberg's per-file column stats
         analog, at data-dir granularity): readers with a range predicate
         then skip whole committed dirs without opening them
-        (``read(between=...)`` / ``data_dirs``).  The stats scan reads the
-        freshly written files once, column-pruned to one column.  Values
+        (``read(between=...)`` / ``data_dirs``).  The bounds come from an
+        ``Observation`` on the write itself: no second job.  Values
         must be JSON-representable; timestamps/dates are stored as ISO
         strings (pass ISO strings as the predicate bounds for those).
 
@@ -114,16 +115,16 @@ class Table:
         correct; carried dirs WITHOUT compatible stats make the snapshot
         drop stats entirely (pruning is conservative — a statless snapshot
         is always read)."""
+        bounds = Observation()
+        if stats_col is not None:
+            df = df.observe(bounds, F.min(stats_col).alias("min"),
+                            F.max(stats_col).alias("max"))
         data_dir = self.write(df)
         stats = None
         if stats_col is not None:
-            from pyspark.sql import functions as F
-            row = (df.sparkSession.read.parquet(os.path.join(self.path,
-                                                             data_dir))
-                   .agg(F.min(stats_col).alias("mn"),
-                        F.max(stats_col).alias("mx")).first())
+            # read once the write has returned: get blocks until it reports
             stats = {"column": stats_col,
-                     "min": _plain(row["mn"]), "max": _plain(row["mx"])}
+                     **{k: _plain(v) for k, v in bounds.get.items()}}
             if _carry_dirs:
                 if _carry_stats and _carry_stats.get("column") == stats_col:
                     for key, pick in (("min", min), ("max", max)):

@@ -61,9 +61,10 @@ def commit_epoch(table: Table, batch: DataFrame, epoch_id: int,
 
     The commit is the batch path's (``plans.checkpoint.commit_extracted``):
     the pipeline (salting, kernels, reassembly shuffle) executes exactly
-    once per micro-batch, and the snapshot carries per-partition lineage
-    and per-kind metrics, its summary the epoch's ``docs_in``,
-    ``span_count`` and ``wall_ms``.
+    once per micro-batch and is the commit's only plan; the snapshot
+    carries per-file lineage (doc counts from the Parquet footers), its
+    summary the epoch's ``docs_in``, ``span_count``, ``bytes``,
+    ``ocr_span_count`` and ``wall_ms``.
 
     Returns True if the batch was committed, False if it was a replay.
     """
@@ -132,13 +133,6 @@ def windowed_event_counts(events: DataFrame, watermark: str = "10 minutes",
                  .cast("long").alias("sum_q"))
             .select(F.col("w.start").alias("w_start"),
                     F.col("w.end").alias("w_end"), "event_type", "n", "sum_q"))
-
-
-def dedup_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Streaming exact-dedup on event_id within the watermark horizon
-    (reference analog: per-serial dedupe, ``tesseract_adapter.py:177``)."""
-    return (events.withWatermark("ts", watermark)
-            .dropDuplicates(["event_id", "ts"]))
 
 
 CONFIRM_STATE_DDL = "n int, best double"

@@ -470,7 +470,8 @@ def resume_point(spark, rounds: int = 5) -> dict:
     then ``rounds`` rounds; the order of k reverses every round, so a
     warming JVM or a steal spike does not favour one k.  Median and
     quartiles of seconds per k; every run's steal ticks are in the
-    record."""
+    record.  Each run is one job group, so the record also gives each
+    k's Spark jobs per bucket (median over the rounds)."""
     import tempfile
     from pyspark.sql import functions as F
     from apple_ocr_backend_spark.plans.checkpoint import run_resumable
@@ -485,6 +486,8 @@ def resume_point(spark, rounds: int = 5) -> dict:
     small = base.where(~giant).crossJoin(reps).select(
         F.concat("doc_id", "rep").alias("doc_id"), "spans")
     iters = {f"k{k}": [] for k in RESUME_KS}
+    jobs = {}  # table -> Spark jobs of the run that wrote it
+    sc = spark.sparkContext
     with tempfile.TemporaryDirectory(prefix="bench_resume_") as tmp:
         small.unionByName(base.where(giant)) \
             .repartition(2 * spark.sparkContext.defaultParallelism) \
@@ -493,8 +496,11 @@ def resume_point(spark, rounds: int = 5) -> dict:
         n_docs = docs.count()
 
         def run(k: int, table: str) -> None:  # a fresh table per run
+            sc.setJobGroup(f"resume_{table}", f"resume k={k}")
             run_resumable(spark, docs, f"{tmp}/{table}", n_buckets=8,
                           concurrency=k)
+            jobs[table] = len(
+                sc.statusTracker().getJobIdsForGroup(f"resume_{table}"))
         timed(lambda: run(max(RESUME_KS), "warmup"), 0, 1)
         for r in range(rounds):
             for k in RESUME_KS[::1 if r % 2 == 0 else -1]:
@@ -507,7 +513,11 @@ def resume_point(spark, rounds: int = 5) -> dict:
     return {"iters": iters,
             "result": {"n_docs": n_docs, "buckets": 8, "sec": sec,
                        "docs_per_sec": {name: round(n_docs / v["median"], 1)
-                                        for name, v in sec.items()}}}
+                                        for name, v in sec.items()},
+                       "jobs_per_bucket": {
+                           f"k{k}": statistics.median(
+                               jobs[f"r{r}k{k}"] for r in range(rounds)) / 8
+                           for k in RESUME_KS}}}
 
 
 def _ingest_batch(spark, epoch: int, n: int):

@@ -11,16 +11,19 @@ Usage (cluster):
         [--derive-from-documents]  # input is a documents.parquet dir instead
 
 The job is resumable: each doc bucket commits one icelite snapshot with
-one lineage row per written data file; re-running with the same --output
-skips committed buckets (plans/checkpoint.py).  On a real cluster, point
---output at shared storage.  A bucket is the work a kill can lose, so
-raise --buckets to bound it; nothing is cached, so bucket size is not
-bounded by executor memory.  Each bucket scans the input again and runs
-one wave of ``defaultParallelism`` kernel tasks (``operators/skew.py::
-repartition_salted``), so raising --buckets multiplies input scans and
-kernel tasks, and the fixed per-task cost with them.  --concurrency bucket jobs run at once, so
-one bucket's driver-only time overlaps another's stages; it defaults to
-``run_resumable``'s default.
+the bucket's totals and one lineage row per written data file; re-running
+with the same --output skips committed buckets (plans/checkpoint.py).  A
+bucket's commit runs one plan, its write: the totals ride the write as an
+Observation and each file's doc count is its Parquet footer's row count.
+On a real cluster, point --output at shared storage.  A bucket is the
+work a kill can lose, so raise --buckets to bound it; nothing is cached,
+so bucket size is not bounded by executor memory.  Each bucket scans the
+input again and runs one wave of ``defaultParallelism`` kernel tasks
+(``operators/skew.py::repartition_salted``), so raising --buckets
+multiplies input scans and kernel tasks, and the fixed per-task cost with
+them.  --concurrency bucket jobs run at once, so one bucket's driver-only
+time overlaps another's stages; it defaults to ``run_resumable``'s
+default.
 """
 
 from __future__ import annotations

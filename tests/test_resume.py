@@ -56,12 +56,13 @@ def test_kill_and_resume(spark, tmp_path):
         assert s["summary"]["docs_in"] > 0
         assert len(s["lineage"]) >= 1
         for row in s["lineage"]:
-            assert {"run_id", "stage", "bucket", "partition_id", "doc_count",
-                    "span_count", "bytes", "wall_ms"} <= set(row)
+            assert set(row) == {"run_id", "stage", "bucket", "partition_id",
+                                "doc_count", "wall_ms"}
 
     # lineage equals the committed files: each row names exactly one part
-    # file of its data dir and holds that file's footer row count, and the
-    # snapshot's span totals are the oracle's for the docs the dir holds
+    # file of its data dir and holds that file's footer row count, their
+    # sum is docs_in, and the summary's span totals are the oracle's for
+    # the docs the dir holds
     for s in snaps:
         (data_dir,) = s["data_dirs"]
         files = glob.glob(os.path.join(res["table"].path, data_dir,
@@ -75,9 +76,10 @@ def test_kill_and_resume(spark, tmp_path):
         ids = [d for f in files
                for d in pq.read_table(f, columns=["doc_id"])["doc_id"]
                .to_pylist()]
-        assert s["summary"]["docs_in"] == len(ids)
+        assert (sum(r["doc_count"] for r in s["lineage"])
+                == s["summary"]["docs_in"] == len(ids))
         spans = [sp for d in ids for sp in golden[d]]
-        totals = {k: sum(r[k] for r in s["lineage"])
+        totals = {k: s["summary"][k]
                   for k in ("span_count", "bytes", "ocr_span_count")}
         assert totals == {
             "span_count": len(spans),
@@ -85,10 +87,43 @@ def test_kill_and_resume(spark, tmp_path):
             "ocr_span_count": sum(kind == "ocr_text" for kind, *_ in spans)}
 
 
+def test_commit_unit_runs_one_plan(spark, tmp_path):
+    """A bucket's commit runs the write and nothing else: its totals ride
+    the write as an Observation and each file's row count comes from its
+    footer, so no job reads the written dir back.  An empty unit commits
+    no lineage row and integer-0 totals."""
+    from apple_ocr_backend_spark.plans.checkpoint import (bucket_of,
+                                                          commit_extracted)
+    from apple_ocr_backend_spark.plans.pipeline import extract_docs
+    from apple_ocr_backend_spark.sources.icelite import Table
+    from pyspark.sql import functions as F
+    sc = spark.sparkContext
+    docs = _to_spark_docs(spark, make_corpus(40, seed=13))
+    t = Table(str(tmp_path / "t"))
+    sc.setJobGroup("one_bucket_commit", "one bucket's commit")
+    try:
+        commit_extracted(t, extract_docs(
+            docs.filter(bucket_of(F.col("doc_id"), 4) == 0), CFG),
+            "extract/bucket=0", {"bucket": 0, "run_id": "r"})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    jobs = sc.statusTracker().getJobIdsForGroup("one_bucket_commit")
+    assert 1 <= len(jobs) <= 3, sorted(jobs)
+    assert t.snapshots()[-1]["summary"]["docs_in"] > 0
+
+    empty = commit_extracted(t, extract_docs(docs.filter(F.lit(False)), CFG),
+                             "extract/bucket=1", {"bucket": 1})
+    snap = t.snapshots()[-1]
+    assert snap["summary"] == empty and snap["lineage"] == []
+    for k in ("docs_in", "span_count", "bytes", "ocr_span_count"):
+        assert type(empty[k]) is int and empty[k] == 0, (k, empty[k])
+
+
 def test_resumable_run_caches_nothing_and_coalesces_writes(
         spark, tmp_path, monkeypatch):
     """No RDD is persisted while a bucket commits: the input is filtered
-    per bucket and the lineage is read back from the written files.  So
+    per bucket and the lineage comes from the written files' footers.  So
     AQE may coalesce each bucket's write, and a small bucket writes fewer
     part files than the merge's ``spark.sql.shuffle.partitions``."""
     from apple_ocr_backend_spark.plans import checkpoint

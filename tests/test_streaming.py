@@ -46,9 +46,8 @@ def test_stream_extract_matches_batch(spark, tmp_path):
     snaps = t.snapshots()
     assert sum(s["summary"]["docs_in"] > 0 for s in snaps) >= 2
     for s in snaps:
-        assert all({"epoch_key", "run_id", "partition_id", "doc_count",
-                    "span_count", "bytes", "wall_ms"} <= set(r)
-                   for r in s["lineage"])
+        assert all(set(r) == {"epoch_key", "epoch", "run_id", "partition_id",
+                              "doc_count", "wall_ms"} for r in s["lineage"])
         written = spark.read.schema(t.read(spark).schema).parquet(
             os.path.join(t.path, s["data_dirs"][-1])).count()
         assert (sum(r["doc_count"] for r in s["lineage"])
