@@ -10,12 +10,15 @@ codec handles, minus the BITMAPFILEHEADER).
 
 Scope, like its siblings: uncompressed only (biCompression 0, 24-bit).
 Compressed streams ('00dc' with a real fourcc, MJPG/H264/...) genuinely
-need an external codec and raise NotImplementedError — callers catch and
-fall back to the signature extractor.
+need an external codec and raise NotImplementedError; the media shell
+(``operators/multimodal.py::decode_media``) rejects such a payload.
 
 The decoder walks the chunk tree properly (nested LISTs, RIFF odd-size
 pad bytes, foreign chunks like 'JUNK'/'idx1' skipped), so a reader that
 hardcodes offsets fails on the synthetic corpus while this one does not.
+LIST nesting is capped at ``MAX_LIST_DEPTH``: a real AVI nests two LISTs
+deep (hdrl > strl), and an uncapped walk would recurse once per level of
+a hostile payload.
 """
 
 from __future__ import annotations
@@ -25,6 +28,8 @@ import struct
 import numpy as np
 
 from .wav_codec import iter_riff_chunks, riff_chunk
+
+MAX_LIST_DEPTH = 8
 
 
 def _list(list_type: bytes, payload: bytes) -> bytes:
@@ -75,8 +80,9 @@ def decode_avi_gray(data: bytes) -> tuple[list[np.ndarray], int]:
 
     Walks the nested LIST tree, validates the uncompressed 24-bit DIB
     stream via 'strf', and reads each '00db' frame with numpy row ops —
-    no per-pixel Python.  ValueError on malformed containers,
-    NotImplementedError on compressed streams or other bit depths."""
+    no per-pixel Python.  ValueError on malformed containers (LISTs nested
+    deeper than ``MAX_LIST_DEPTH`` included), NotImplementedError on
+    compressed streams or other bit depths."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not a RIFF/AVI payload")
     riff_size = struct.unpack_from("<I", data, 4)[0]
@@ -86,11 +92,14 @@ def decode_avi_gray(data: bytes) -> tuple[list[np.ndarray], int]:
     usec_per_frame = 100_000
     frames: list[np.ndarray] = []
 
-    def walk(pos: int, stop: int) -> None:
+    def walk(pos: int, stop: int, depth: int) -> None:
         nonlocal dims, bits, compression, bottom_up, usec_per_frame
         for cid, at, size in iter_riff_chunks(data, pos, stop):
             if cid == b"LIST":
-                walk(at + 4, at + size)  # skip the 4-byte list type
+                if depth == MAX_LIST_DEPTH:
+                    raise ValueError(
+                        f"LIST nested deeper than {MAX_LIST_DEPTH}")
+                walk(at + 4, at + size, depth + 1)  # skip the list type
             elif cid == b"avih":
                 if size < 40:
                     raise ValueError("avih chunk too short")
@@ -116,6 +125,8 @@ def decode_avi_gray(data: bytes) -> tuple[list[np.ndarray], int]:
                 if dims is None:
                     raise ValueError("frame chunk before headers")
                 h, w = dims
+                if h <= 0 or w <= 0:
+                    raise ValueError(f"empty AVI frame ({w}x{h})")
                 stride = (w * 3 + 3) & ~3
                 if size != stride * h:
                     raise ValueError("frame size does not match headers")
@@ -126,7 +137,7 @@ def decode_avi_gray(data: bytes) -> tuple[list[np.ndarray], int]:
                 # gray was replicated to B=G=R on encode
                 frames.append(np.ascontiguousarray(rows[:, :w * 3:3]))
 
-    walk(12, end)
+    walk(12, end, 0)
     if not frames:
         raise ValueError("no frame chunks found")
     return frames, round(1_000_000 / usec_per_frame)

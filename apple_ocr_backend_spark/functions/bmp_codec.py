@@ -41,7 +41,8 @@ def encode_bmp_gray(img: np.ndarray) -> bytes:
 def decode_bmp_gray(data: bytes) -> np.ndarray:
     """BMP bytes -> uint8 (h, w) luma plane.  Supports uncompressed 8-bit
     paletted and 24-bit BGR, positive (bottom-up) or negative (top-down)
-    height."""
+    height.  A zero-area or negative-width header raises ValueError, as
+    in ``png_codec``: no image kernel is defined on an empty page."""
     if data[:2] != b"BM":
         raise ValueError("not a BMP stream")
     try:
@@ -49,13 +50,15 @@ def decode_bmp_gray(data: bytes) -> np.ndarray:
         (hdr_size, w, h, planes, bpp, compression, _, _, _, n_colors,
          _) = _INFO_HDR.unpack_from(data, _FILE_HDR.size)
     except struct.error as e:
-        # decode_image's contract: malformed input raises ValueError so
-        # callers can catch and fall back (operators/multimodal.py)
+        # decode_image's contract: malformed input raises ValueError, so
+        # the media shell rejects the payload (multimodal.decode_media)
         raise ValueError(f"truncated BMP header: {e}") from e
     if compression != 0:
         raise NotImplementedError(f"compressed BMP (method {compression})")
     if bpp not in (8, 24):
         raise NotImplementedError(f"{bpp}-bit BMP")
+    if w <= 0 or h == 0:
+        raise ValueError(f"empty BMP ({w}x{h})")
     top_down = h < 0
     h = abs(h)
     stride = ((w * bpp // 8) + 3) & ~3

@@ -95,10 +95,14 @@ def decode_png_gray(data: bytes) -> np.ndarray:
 
     Every malformed input (bad signature, truncated chunk or stream,
     header sizes that disagree with the pixel data) raises ``ValueError``,
-    so a caller can drop one bad payload without failing its task."""
+    so a caller can drop one bad payload without failing its task.  The
+    inflate stops one byte past the size the header implies, so a forged
+    header never makes it allocate more than that (a size past
+    ``Py_ssize_t`` is an ``OverflowError``, turned into ``ValueError``
+    like the others)."""
     try:
         return _decode_png_gray(data)
-    except (struct.error, zlib.error) as e:
+    except (struct.error, zlib.error, OverflowError) as e:
         raise ValueError(f"corrupt PNG: {e}") from e
 
 
@@ -126,8 +130,13 @@ def _decode_png_gray(data: bytes) -> np.ndarray:
         raise ValueError(f"unsupported PNG (depth={depth}, color={ctype}, "
                          f"interlace={interlace})")
     bpp = 1 if ctype == 0 else 3
-    raw = np.frombuffer(zlib.decompress(b"".join(idat)), dtype=np.uint8)
-    raw = raw.reshape(h, 1 + w * bpp)
+    size = h * (1 + w * bpp)
+    inflate = zlib.decompressobj()
+    raw = inflate.decompress(b"".join(idat), size + 1)
+    if len(raw) != size or not inflate.eof:
+        raise ValueError(f"PNG pixel data is not the {size} bytes its "
+                         "header implies")
+    raw = np.frombuffer(raw, dtype=np.uint8).reshape(h, 1 + w * bpp)
     px = _unfilter(raw, h, w, bpp)
     if ctype == 0:
         return px.reshape(h, w)

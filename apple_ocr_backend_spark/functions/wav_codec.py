@@ -10,8 +10,9 @@ this is the audio twin of that boundary.
 
 Scope (deliberately minimal, like the BMP codec): uncompressed PCM
 (format tag 1), 16-bit, mono.  Anything else raises — compressed or
-float WAV genuinely needs an external codec, and callers catch and fall
-back to the signature extractor exactly as they do for JPEG images.
+float WAV genuinely needs an external codec — and the media shell
+(``operators/multimodal.py::decode_media``) rejects the payload exactly
+as it does a JPEG image.
 
 Format notes the decoder actually honors (the parts naive offset-44
 readers get wrong):
@@ -82,9 +83,9 @@ def decode_wav_pcm16(data: bytes) -> tuple[np.ndarray, int]:
 
     Walks the chunk list (odd sizes padded per RIFF), validates PCM16
     mono, and reads 'data' with ``np.frombuffer`` — no per-sample Python.
-    Raises ValueError on malformed containers and NotImplementedError on
-    valid-but-unsupported encodings (compressed, float, multi-channel,
-    other bit depths)."""
+    Raises ValueError on malformed containers (a sample rate of 0
+    included) and NotImplementedError on valid-but-unsupported encodings
+    (compressed, float, multi-channel, other bit depths)."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     riff_size = struct.unpack_from("<I", data, 4)[0]
@@ -102,6 +103,8 @@ def decode_wav_pcm16(data: bytes) -> tuple[np.ndarray, int]:
             if channels != 1 or bits != 16:
                 raise NotImplementedError(
                     f"{channels}-channel {bits}-bit WAV (only 16-bit mono)")
+            if not sample_rate:
+                raise ValueError("WAV sample rate 0")
             fmt_seen = True
         elif cid == b"data":
             if not fmt_seen:

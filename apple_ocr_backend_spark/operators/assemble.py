@@ -68,7 +68,7 @@ def extract_text_spans(df: pd.DataFrame) -> pd.DataFrame:
 def extract_span_rows(rows: pd.DataFrame, cfg) -> pd.DataFrame:
     """Span rows -> extracted rows: each kind's rows go to its kernel and
     the outputs are concatenated (text, html, pdf, image).  The image
-    kernel reads the PNG ``payload`` when the frame carries one, else the
+    kernel reads the image ``payload`` when the frame carries one, else the
     token stream.  Shared by the Spark kernel (per Arrow batch) and the
     pandas oracle."""
     # imported here: the kind kernels import ``spans_out`` from this module

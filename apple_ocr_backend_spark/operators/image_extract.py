@@ -1,16 +1,20 @@
 """Image-payload extraction stages: decode -> preprocess -> ROI -> orient.
 
 These are the real (non-stubbed) versions of the reference's image path,
-built on the from-scratch PNG codec (``functions/png_codec.py``) and the
-numpy kernel suite (``functions/image_kernels.py``) — no cv2/pillow.
-Each stage is a row function over the one Arrow-batch shell of the media
-operators (``operators/multimodal.py::map_media``): the shell iterates
-documents within a batch exactly like the reference's per-image cv2 calls
-(``app/pipeline/ocr_adapter_improved.py:1346-1471``), the row function
-turns one document into its output rows, and every pixel loop is
-vectorized numpy.  At scale the binary column arrives from the table scan
-(these stages never shuffle — they are map-only over whatever partitioning
-the scan produced); ``render_media`` exists because this sandbox has to
+built on the from-scratch PNG and BMP codecs (``functions/png_codec.py``,
+``functions/bmp_codec.py``) and the numpy kernel suite
+(``functions/image_kernels.py``) — no cv2/pillow.  Each stage is a row
+function over the one Arrow-batch shell of the media operators
+(``operators/multimodal.py::map_media``): the shell iterates documents
+within a batch exactly like the reference's per-image cv2 calls
+(``app/pipeline/ocr_adapter_improved.py:1346-1471``) and decodes each
+payload through ``decode_image`` (PNG or BMP), the row function turns one
+document's pixels into its output rows, and every pixel loop is
+vectorized numpy.  A null, malformed or unsupported payload is rejected
+by the shell and costs its document's rows, never the task.  At scale
+the binary column arrives from the table scan (these stages never
+shuffle — they are map-only over whatever partitioning the scan
+produced); ``render_media`` exists because this sandbox has to
 synthesize its own payloads (md5-derived geometry, see
 ``sources/image_corpus.py``), standing in for the scan.
 
@@ -25,9 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..functions import image_kernels as K
-from ..functions.png_codec import decode_png_gray, encode_png_gray
+from ..functions.png_codec import encode_png_gray
 from ..sources.image_corpus import render_doc_image
-from .multimodal import map_media, render_media_column
+from .multimodal import decode_image, map_media, render_media_column
 
 
 def render_media(df: DataFrame, rotate: bool = False,
@@ -48,12 +52,11 @@ def decode_stats(df: DataFrame, bg_ref: int = 215) -> DataFrame:
     (S1 + A8): decoded dimensions, count of rows carrying any ink, and a
     saturation(glare) flag — the stats the reference derives before
     choosing preprocessing parameters (``ocr_adapter_improved.py:843-869``)."""
-    def row(doc, media):
-        img = decode_png_gray(bytes(media))
+    def row(doc, img):
         ink_rows = int((K.ink_image(img, bg_ref).sum(axis=1) > 0).sum())
         return [(doc, img.shape[0], img.shape[1], ink_rows,
                  bool((img >= 250).any()))]
-    return map_media(df, DECODE_STATS_DDL, row)
+    return map_media(df, decode_image, DECODE_STATS_DDL, row)
 
 
 ROI_DDL = "doc_id bigint, roi_idx int, y0 int, y1 int"
@@ -67,11 +70,11 @@ def _default_bands(h: int) -> list[tuple[int, int, int]]:
     return [(third, 2 * third, 0), (2 * third, h, 0), (0, third, 0)]
 
 
-def _roi_mask(media: bytes):
-    """The preprocess chain both ROI detectors share: decode PNG ->
-    glare-reduce -> CLAHE -> bilateral -> adaptive threshold -> row
-    projection.  Returns ((h, w), binary mask, row profile)."""
-    img, _method = K.reduce_glare(decode_png_gray(bytes(media)))
+def _roi_mask(img):
+    """The preprocess chain both ROI detectors share: glare-reduce ->
+    CLAHE -> bilateral -> adaptive threshold -> row projection.  Returns
+    ((h, w), binary mask, row profile)."""
+    img, _method = K.reduce_glare(img)
     binm = K.adaptive_threshold(K.bilateral5(K.clahe(img)))
     return img.shape, binm, K.row_projection(binm)
 
@@ -84,8 +87,8 @@ def extract_rois(df: DataFrame, top_k: int = 4,
     filters -> energy top-k, emitted in position order; documents where
     nothing survives fall back to the reference's 3 fixed bands.
     1 -> N Arrow batch contract."""
-    def row(doc, media):
-        (h, w), binm, profile = _roi_mask(media)
+    def row(doc, img):
+        (h, w), binm, profile = _roi_mask(img)
         bands = K.find_bands(profile, h)
         widths = [max(x1 - x0, 1) for x0, x1 in
                   (K.band_x_extent(binm, b0, b1) for b0, b1, _ in bands)]
@@ -93,7 +96,7 @@ def extract_rois(df: DataFrame, top_k: int = 4,
         if not rois and fallback:
             rois = _default_bands(h)
         return [(doc, i, y0, y1) for i, (y0, y1, _energy) in enumerate(rois)]
-    return map_media(df, ROI_DDL, row)
+    return map_media(df, decode_image, ROI_DDL, row)
 
 
 def extract_rois_nms(df: DataFrame, top_k: int = 4,
@@ -118,8 +121,8 @@ def extract_rois_nms(df: DataFrame, top_k: int = 4,
     proposals are listed first and win exact ties.  Energy top-k of the
     survivors, emitted in position order; the empty-proposal fallback is
     the reference's 3 fixed bands (P5)."""
-    def row(doc, media):
-        (h, w), binm, profile = _roi_mask(media)
+    def row(doc, img):
+        (h, w), binm, profile = _roi_mask(img)
         proposals = []
         for refine in (True, False):  # refined first: wins ties
             cand = K.find_bands(profile, h, refine=refine)
@@ -142,7 +145,7 @@ def extract_rois_nms(df: DataFrame, top_k: int = 4,
         else:
             rois = []
         return [(doc, i, y0, y1) for i, (y0, y1, _energy) in enumerate(rois)]
-    return map_media(df, ROI_DDL, row)
+    return map_media(df, decode_image, ROI_DDL, row)
 
 
 ORIENT_DDL = "doc_id bigint, angle int"
@@ -151,8 +154,8 @@ ORIENT_DDL = "doc_id bigint, angle int"
 def detect_orientations(df: DataFrame) -> DataFrame:
     """df(doc_id, media) -> (doc_id, angle in {0,90,180,270}) via projection
     variance + thickest-band position (P6)."""
-    return map_media(df, ORIENT_DDL, lambda doc, media: [
-        (doc, K.detect_orientation(decode_png_gray(bytes(media))))])
+    return map_media(df, decode_image, ORIENT_DDL, lambda doc, img: [
+        (doc, K.detect_orientation(img))])
 
 
 RESIZE_DDL = ("doc_id bigint, h_in int, w_in int, h_out int, w_out int, "
@@ -161,15 +164,14 @@ RESIZE_DDL = ("doc_id bigint, h_in int, w_in int, h_out int, w_out int, "
 
 def resize_images(df: DataFrame, scale: int = 2) -> DataFrame:
     """df(doc_id, media) -> bilinear downscale by ``scale`` + re-encode
-    (X10 resize on real pixels; replaces the byte-decimation stand-in for
-    PNG payloads)."""
-    def row(doc, media):
-        img = decode_png_gray(bytes(media))
+    (X10 resize on real pixels, re-encoded as PNG; replaces the
+    byte-decimation stand-in for image payloads)."""
+    def row(doc, img):
         h, w = img.shape
         out = K.resize_bilinear(img, h // scale, w // scale)
         return [(doc, h, w, out.shape[0], out.shape[1],
                  len(encode_png_gray(out)))]
-    return map_media(df, RESIZE_DDL, row)
+    return map_media(df, decode_image, RESIZE_DDL, row)
 
 
 def render_serial_media(df: DataFrame) -> DataFrame:
@@ -186,18 +188,17 @@ OCR_DDL = "doc_id bigint, text string, conf double"
 
 def ocr_serials(df: DataFrame, expect_chars: int = 12) -> DataFrame:
     """df(doc_id, media) -> (doc_id, text, conf): real OCR on real pixels —
-    decode PNG, adaptive-threshold binarize, glyph segmentation,
+    adaptive-threshold binarize the decoded page, glyph segmentation,
     nearest-template Hamming match (``functions/glyph_ocr.py``; the
     EasyOCR-readtext analog, ``ocr_adapter_improved.py:639-811``).
     ``conf`` is the worst per-glyph template similarity."""
     from ..functions.glyph_ocr import recognize_text
 
-    def row(doc, media):
-        img = decode_png_gray(bytes(media))
+    def row(doc, img):
         text, conf = recognize_text(K.adaptive_threshold(img),
                                     expect_chars=expect_chars)
         return [(doc, text, conf)]
-    return map_media(df, OCR_DDL, row)
+    return map_media(df, decode_image, OCR_DDL, row)
 
 
 def render_degraded_serial_media(df: DataFrame) -> DataFrame:
@@ -251,8 +252,8 @@ def ocr_serials_fallback(df: DataFrame, expect_chars: int = 12) -> DataFrame:
     """
     from ..functions.glyph_ocr import recognize_text
 
-    def row(doc, media):
-        base = K.adaptive_threshold(decode_png_gray(bytes(media)))
+    def row(doc, img):
+        base = K.adaptive_threshold(img)
         masks = {0: base}
         cands: dict[str, tuple[float, str, int]] = {}
         tried = 0
@@ -280,4 +281,4 @@ def ocr_serials_fallback(df: DataFrame, expect_chars: int = 12) -> DataFrame:
         else:
             text, conf, variant = "", 0.0, "none"
         return [(doc, text, conf, variant, tried)]
-    return map_media(df, FALLBACK_DDL, row)
+    return map_media(df, decode_image, FALLBACK_DDL, row)

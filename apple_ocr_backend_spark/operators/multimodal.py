@@ -4,14 +4,19 @@ Every media operator here and in ``operators/image_extract.py`` is a row
 function over one Arrow-batch shell, ``map_rows``: the shell selects the
 columns the row function reads, runs one ``mapInPandas`` over them and
 builds one output frame per input batch; the row function turns one
-input row into 0..N output tuples.  The decode step is real for PNG and
-BMP images via the from-scratch codecs (``functions/png_codec.py``,
-``functions/bmp_codec.py``) and for PCM16 WAV audio
-(``functions/wav_codec.py``, chunk-walking RIFF parse; see
-``audio_decode_stats`` below); formats that genuinely need an external
-library (JPEG/WebP/compressed audio/video) raise ``NotImplementedError``
-and the shipping path falls back to the deterministic signature
-extractor.
+input row into 0..N output tuples.  ``map_media`` adds the one decode
+step: each operator names its decoder and its row function receives the
+decoded value (pixels, frames, samples, or the raw bytes for the
+byte-level stand-ins), never the payload.  The decoders are the
+from-scratch codecs: PNG and BMP images through ``decode_image``
+(``functions/png_codec.py``, ``functions/bmp_codec.py``), PCM16 WAV
+audio (``functions/wav_codec.py``) and uncompressed AVI video
+(``functions/avi_codec.py``).  ``decode_media`` decodes or rejects one
+payload: a null, malformed (``ValueError``) or unsupported
+(``NotImplementedError``, e.g. JPEG/WebP or compressed audio/video)
+payload costs its row, never the task.  The pixel branch of the
+extraction kernel (``operators/ocr_extract.py::recover_pixels``) decodes
+through the same helper.
 
 Reference analog: raw request bytes decoded per image
 (``cv2.imdecode(np.frombuffer(...))``, ``app/pipeline/ocr_adapter.py:105-108``).
@@ -30,6 +35,11 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from ..functions.avi_codec import decode_avi_gray
+from ..functions.bmp_codec import decode_bmp_gray
+from ..functions.png_codec import decode_png_gray
+from ..functions.wav_codec import decode_wav_pcm16
 
 
 def map_rows(df: DataFrame, cols: tuple[str, ...], ddl: str,
@@ -52,10 +62,31 @@ def map_rows(df: DataFrame, cols: tuple[str, ...], ddl: str,
     return df.select(*cols).mapInPandas(fn, schema=ddl)
 
 
-def map_media(df: DataFrame, ddl: str,
+def decode_media(decode: Callable[[bytes], object], media):
+    """One payload -> ``decode(payload)``, or None when it is rejected: the
+    one decode-or-reject step of the media path (``map_media`` and the
+    extraction kernel's pixel branch).  A null payload never reaches a
+    codec: raw bytes (``decode=bytes``, the byte-level stand-ins) read it
+    as b"", any other decoder rejects it.  A codec's ValueError
+    (malformed) or NotImplementedError (unsupported format) rejects the
+    payload."""
+    if media is None:
+        return b"" if decode is bytes else None
+    try:
+        return decode(bytes(media))
+    except (ValueError, NotImplementedError):
+        return None
+
+
+def map_media(df: DataFrame, decode: Callable[[bytes], object], ddl: str,
               row_fn: Callable[..., Iterable[tuple]]) -> DataFrame:
-    """``map_rows`` over ``(doc_id, media)``: a decode/feature stage."""
-    return map_rows(df, ("doc_id", "media"), ddl, row_fn)
+    """``map_rows`` over ``(doc_id, media)`` with the decode step in the
+    shell: ``row_fn(doc_id, decoded value)``.  A payload ``decode_media``
+    rejects yields no rows; its batch neighbours keep theirs."""
+    def row(doc, media):
+        value = decode_media(decode, media)
+        return () if value is None else row_fn(doc, value)
+    return map_rows(df, ("doc_id", "media"), ddl, row)
 
 
 RENDER_DDL = "doc_id bigint, media binary"
@@ -71,16 +102,15 @@ def render_media_column(df: DataFrame,
 
 
 def decode_image(data: bytes):
-    """bytes -> uint8 grayscale ndarray (cv2.imdecode analog).  Real for
+    """bytes -> uint8 grayscale ndarray (cv2.imdecode analog): the one
+    image decoder of the media operators and the pixel branch.  Real for
     PNG and BMP payloads (from-scratch codecs, ``functions/png_codec.py``
-    and ``functions/bmp_codec.py``); raises
-    ValueError/NotImplementedError for formats the environment has no
-    codec for — callers catch and fall back."""
+    and ``functions/bmp_codec.py``); a malformed payload raises ValueError
+    and a format the environment has no codec for raises
+    NotImplementedError, so ``decode_media`` rejects either."""
     if data[:8] == b"\x89PNG\r\n\x1a\n":
-        from ..functions.png_codec import decode_png_gray
         return decode_png_gray(data)
     if data[:2] == b"BM":
-        from ..functions.bmp_codec import decode_bmp_gray
         return decode_bmp_gray(data)
     raise NotImplementedError(
         "only PNG/BMP payloads decode in this environment; install "
@@ -92,15 +122,13 @@ MEDIA_META_DDL = "doc_id bigint, n_bytes bigint, sig string"
 
 def media_signatures(df: DataFrame) -> DataFrame:
     """df(doc_id, media: binary) -> (doc_id, n_bytes, sig): the
-    deterministic fallback feature extractor, byte length + md5 hex (the
-    only per-item work is hashlib over the raw buffer, no decode).  A
-    null buffer reads as empty, as in ``resize_media`` and
-    ``sample_frames``.  A decode + feature-extract kernel is another row
-    function over the same ``map_media`` shell."""
-    def row(doc, media):
-        media = media or b""  # null buffer -> empty, not a crash
-        return [(doc, len(media), hashlib.md5(media).hexdigest())]
-    return map_media(df, MEDIA_META_DDL, row)
+    deterministic signature feature extractor, byte length + md5 hex (the
+    only per-item work is hashlib over the raw buffer, no decode).  Its
+    decoder is raw bytes, so a null buffer reads as empty, as in
+    ``resize_media`` and ``sample_frames``.  A decode + feature-extract
+    kernel is another row function over the same ``map_media`` shell."""
+    return map_media(df, bytes, MEDIA_META_DDL, lambda doc, media: [
+        (doc, len(media), hashlib.md5(media).hexdigest())])
 
 
 RESIZE_DDL = ("doc_id bigint, n_bytes_in bigint, n_bytes_out bigint, "
@@ -117,12 +145,11 @@ def resize_media(df: DataFrame, target_bytes: int = 64) -> DataFrame:
     the reference caps inputs the same way,
     ``ocr_adapter_improved.py:647-655``)."""
     def row(doc, media):
-        media = media or b""  # null buffer -> empty, not a crash
         n = len(media)
         stride = max(1, -(-n // target_bytes))
         out = media[::stride]
         return [(doc, n, len(out), hashlib.md5(out).hexdigest())]
-    return map_media(df, RESIZE_DDL, row)
+    return map_media(df, bytes, RESIZE_DDL, row)
 
 
 FRAME_DDL = "doc_id bigint, frame_idx int, n_frame_bytes bigint, frame_sig string"
@@ -139,14 +166,13 @@ def sample_frames(df: DataFrame, max_frames: int = 4) -> DataFrame:
     per-frame decode work); ``video_frame_stats`` is the same contract
     with a real codec behind it."""
     def row(doc, media):
-        media = media or b""  # null buffer -> empty, not a crash
         n = len(media)
         nf = min(max_frames, 1 + n // 64)
         stride = -(-n // nf)
         for k in range(nf):
             chunk = media[k * stride:(k + 1) * stride]
             yield doc, k, len(chunk), hashlib.md5(chunk).hexdigest()
-    return map_media(df, FRAME_DDL, row)
+    return map_media(df, bytes, FRAME_DDL, row)
 
 
 # ---------------------------------------------------- audio / video paths
@@ -177,14 +203,12 @@ def video_frame_stats(df: DataFrame, background: int = 200) -> DataFrame:
     (``functions/avi_codec.py``); the 1->N frame fan-out is the same
     Arrow-batch contract ``sample_frames`` stubs with byte slices — this
     is that contract with an actual codec behind it."""
-    from ..functions.avi_codec import decode_avi_gray
-
-    def row(doc, media):
-        frames, _fps = decode_avi_gray(bytes(media))
+    def row(doc, clip):
+        frames, _fps = clip
         for k, fr in enumerate(frames):
             ink_rows = int((fr.min(axis=1) < background).sum())
             yield doc, k, fr.shape[0], fr.shape[1], ink_rows, int(fr.min())
-    return map_media(df, VIDEO_STATS_DDL, row)
+    return map_media(df, decode_avi_gray, VIDEO_STATS_DDL, row)
 
 
 def render_serial_video_media(df: DataFrame) -> DataFrame:
@@ -209,16 +233,15 @@ def video_frame_ocr(df: DataFrame, expect_chars: int = 12) -> DataFrame:
     ``max_by`` aggregation: frames are data, not control flow, so Spark
     gets a combinable per-doc reduction instead of a Python fold."""
     from ..functions import image_kernels as K
-    from ..functions.avi_codec import decode_avi_gray
     from ..functions.glyph_ocr import recognize_text
 
-    def row(doc, media):
-        frames, _fps = decode_avi_gray(bytes(media))
+    def row(doc, clip):
+        frames, _fps = clip
         for k, fr in enumerate(frames):
             text, conf = recognize_text(K.adaptive_threshold(fr),
                                         expect_chars=expect_chars)
             yield doc, k, text, conf
-    return map_media(df, VIDEO_OCR_DDL, row)
+    return map_media(df, decode_avi_gray, VIDEO_OCR_DDL, row)
 
 
 AUDIO_STATS_DDL = ("doc_id bigint, n_samples int, sample_rate int, "
@@ -234,14 +257,12 @@ def audio_decode_stats(df: DataFrame) -> DataFrame:
     int16 buffer — no per-sample Python.  The stats the audio analog of
     the reference's pre-OCR image profiling (``ocr_adapter_improved.py:
     843-869``) would key preprocessing on."""
-    from ..functions.wav_codec import decode_wav_pcm16
-
-    def row(doc, media):
-        samples, rate = decode_wav_pcm16(bytes(media))
+    def row(doc, pcm):
+        samples, rate = pcm
         s = samples.astype(np.int64)
         n = len(s)
         peak = int(np.abs(s).max()) if n else 0
         rms = float(np.sqrt(np.mean(s * s))) if n else 0.0
         zero_crossings = int(np.count_nonzero(s[1:] * s[:-1] < 0))
         return [(doc, n, rate, n * 1000.0 / rate, peak, rms, zero_crossings)]
-    return map_media(df, AUDIO_STATS_DDL, row)
+    return map_media(df, decode_wav_pcm16, AUDIO_STATS_DDL, row)

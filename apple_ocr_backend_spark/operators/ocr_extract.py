@@ -37,7 +37,7 @@ before, and A1/A2 group and rank codes.  The per-pass chain
 `recover_ocr` runs A1/A2 and the per-span early stop over it inside the
 Spark pipeline's one extraction kernel (and in the pandas oracle), so both
 paths share the exact same code, and decodes strings once, for the spans
-it emits.  When a media store joins PNG payloads, `recover_pixels` reads
+it emits.  When a media store joins image payloads, `recover_pixels` reads
 the serial off the pixels instead.
 """
 
@@ -190,10 +190,12 @@ def recover_ocr(df: pd.DataFrame,
 
 def recover_pixels(df: pd.DataFrame,
                    cfg: ExtractConfig = DEFAULT_CONFIG) -> pd.DataFrame:
-    """image rows carrying a PNG ``payload`` -> validated ocr_text rows.
+    """image rows carrying an image ``payload`` -> validated ocr_text rows.
 
     Real OCR on real pixels (the image branch when a media store is
-    joined): decode PNG -> adaptive-threshold binarize -> glyph
+    joined): decode (``multimodal.decode_media`` with ``decode_image``: PNG
+    or BMP; a missing, malformed or unsupported payload costs its span,
+    never the task) -> adaptive-threshold binarize -> glyph
     segmentation -> nearest-template Hamming match
     (``functions/glyph_ocr.py``), then the SAME extended validation +
     confidence gate the token path applies
@@ -202,15 +204,11 @@ def recover_pixels(df: pd.DataFrame,
     exact on this corpus), so A1/A2 collapse to out_rank 0."""
     from ..functions import image_kernels as IK
     from ..functions.glyph_ocr import recognize_text
-    from ..functions.png_codec import decode_png_gray
+    from .multimodal import decode_image, decode_media
 
     texts, confs = [], []
     for p in df["payload"]:
-        # a missing or corrupt payload costs its span, never the task
-        try:
-            img = None if p is None else decode_png_gray(bytes(p))
-        except ValueError:
-            img = None
+        img = decode_media(decode_image, p)
         t, c = (("", 0.0) if img is None else
                 recognize_text(IK.adaptive_threshold(img), expect_chars=12))
         texts.append(t)

@@ -14,7 +14,7 @@ re-expression):
 
 One ``documents`` scan: every doc reaches the merge through its null-span
 row.  The plan picks the image branch: with a media store the kernel OCRs
-the decoded PNG payload (``operators.ocr_extract.recover_pixels``); without
+the decoded image payload (``operators.ocr_extract.recover_pixels``); without
 one it resolves the span's token stream (``recover_ocr``), whose
 progressive passes stop per span once a pass's best candidate is confident
 enough (reference P9, early stop inside the kernel).

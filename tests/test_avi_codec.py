@@ -4,9 +4,11 @@ pad bytes, unsupported-encoding gates, planted-stat recovery."""
 from __future__ import annotations
 
 import struct
+import time
 
 import numpy as np
 import pytest
+from hostile_media import nested_list_avi
 
 from apple_ocr_backend_spark.functions.avi_codec import (decode_avi_gray,
                                                          encode_avi_gray)
@@ -96,3 +98,22 @@ def test_planted_stats_recovered_from_bytes(doc_id):
         # the band sits exactly where it was planted
         rows = np.where(fr.min(axis=1) < BACKGROUND)[0]
         assert rows[0] == want["y0"] and rows[-1] == want["y0"] + want["bh"] - 1
+
+
+def test_nested_list_bomb_raises_valueerror_fast():
+    """A 36 KB payload of 3,000 nested LISTs is refused at the depth cap
+    with ValueError, not RecursionError, and at once."""
+    data = nested_list_avi(3000)
+    assert len(data) < 40_000
+    t = time.perf_counter()
+    with pytest.raises(ValueError, match="nested"):
+        decode_avi_gray(data)
+    assert time.perf_counter() - t < 1.0
+
+
+@pytest.mark.parametrize("shape", [(0, 0), (3, 0), (0, 5)])
+def test_zero_area_frames_raise_valueerror(shape):
+    """Frames with no pixels are malformed: the frame operators reduce
+    over each frame, which an empty one fails."""
+    with pytest.raises(ValueError, match="empty"):
+        decode_avi_gray(encode_avi_gray([np.zeros(shape, dtype=np.uint8)]))

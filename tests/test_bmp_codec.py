@@ -93,3 +93,37 @@ def test_out_of_palette_indices_decode_to_black():
     struct.pack_into("<I", data, 14 + 32, 2)  # biClrUsed = 2
     got = decode_bmp_gray(bytes(data))
     assert got[0, 0] == 1 and got[0, 1] == 0
+
+
+def test_pixel_branch_reads_bmp_like_png():
+    """The extraction kernel's pixel branch decodes through the same
+    ``decode_image`` as the media operators: a BMP plate reads the serial
+    its PNG twin reads, and a null or unsupported payload costs only its
+    span."""
+    import pandas as pd
+
+    from apple_ocr_backend_spark.functions.png_codec import encode_png_gray
+    from apple_ocr_backend_spark.operators.ocr_extract import recover_pixels
+    from apple_ocr_backend_spark.sources.image_corpus import (
+        planted_serial, render_serial_image)
+    plate = render_serial_image(1)  # its serial passes validation
+    payloads = [encode_png_gray(plate), encode_bmp_gray(plate), None,
+                b"\xff\xd8\xff\xe0 jpeg soi header"]
+    n = len(payloads)
+    spans = pd.DataFrame({"doc_id": range(n), "span_pos": [0] * n,
+                          "offset": [0] * n, "kind": ["image"] * n,
+                          "media_ref": [f"m{i}" for i in range(n)],
+                          "text": [""] * n, "payload": payloads})
+    out = recover_pixels(spans)
+    assert out["doc_id"].tolist() == [0, 1]
+    assert out["text"].tolist() == [planted_serial(1)] * 2
+
+
+@pytest.mark.parametrize("w,h", [(0, 4), (4, 0), (-5, 4)])
+def test_zero_area_header_raises_valueerror(w, h):
+    """A header with no pixels is malformed: it would reach the image
+    kernels as an empty page, where glare reduction and orientation fail."""
+    data = bytearray(encode_bmp_gray(np.zeros((4, 4), dtype=np.uint8)))
+    struct.pack_into("<ii", data, 18, w, h)
+    with pytest.raises(ValueError, match="empty"):
+        decode_bmp_gray(bytes(data))

@@ -4,12 +4,20 @@ partitioning invariance, decode-scan contract."""
 from __future__ import annotations
 
 import pytest
+from hostile_media import nested_list_avi, rate0_wav
 from pyspark.sql import functions as F
 
+from apple_ocr_backend_spark.functions.png_codec import encode_png_gray
 from apple_ocr_backend_spark.operators.image_extract import (
-    decode_stats, detect_orientations, extract_rois, render_media,
-    resize_images)
-from apple_ocr_backend_spark.sources.image_corpus import planted_geometry
+    decode_stats, detect_orientations, extract_rois, extract_rois_nms,
+    ocr_serials, ocr_serials_fallback, render_media, resize_images)
+from apple_ocr_backend_spark.operators.multimodal import (
+    audio_decode_stats, video_frame_ocr, video_frame_stats)
+from apple_ocr_backend_spark.sources.audio_corpus import render_doc_audio
+from apple_ocr_backend_spark.sources.image_corpus import (
+    planted_geometry, render_doc_image, render_serial_image)
+from apple_ocr_backend_spark.sources.video_corpus import (
+    render_doc_serial_video, render_doc_video)
 
 N_DOCS = 60
 
@@ -278,3 +286,59 @@ def test_fallback_confident_nonlength_read_does_not_abort_sweep(spark):
     assert r.n_tried == 5          # no early abort on the non-candidate
     assert len(r.text) == 12       # fixed-pitch candidates still recorded
     assert r.conf < 1.0
+
+
+def _page(d):
+    return encode_png_gray(render_doc_image(d))
+
+
+def _plate(d):
+    return encode_png_gray(render_serial_image(d))
+
+
+# every operator that decodes its payload, with a renderer of good ones
+DECODE_OPS = [(decode_stats, _page), (extract_rois, _page),
+              (extract_rois_nms, _page), (detect_orientations, _page),
+              (resize_images, _page), (ocr_serials, _plate),
+              (ocr_serials_fallback, _plate),
+              (video_frame_stats, render_doc_video),
+              (video_frame_ocr, render_doc_serial_video),
+              (audio_decode_stats, render_doc_audio)]
+
+
+@pytest.mark.parametrize("op,render", DECODE_OPS,
+                         ids=[op.__name__ for op, _ in DECODE_OPS])
+def test_bad_payloads_cost_their_row_not_the_job(spark, op, render):
+    """Null, empty, truncated, garbage, JPEG, nested-LIST AVI and rate-0
+    WAV payloads planted among good ones in one batch: the job succeeds,
+    the bad docs yield no rows and the good docs yield exactly what they
+    yield alone."""
+    import numpy as np
+    good = {d: render(d) for d in range(3)}
+    bad = {100: None, 101: b"", 102: good[0][:len(good[0]) // 2],
+           103: np.random.default_rng(0).bytes(512),
+           104: b"\xff\xd8\xff\xe0\x00\x10JFIF\x00" + bytes(64),
+           105: nested_list_avi(), 106: rate0_wav()}
+
+    def run(items):
+        df = spark.createDataFrame(
+            [(d, None if p is None else bytearray(p)) for d, p in items],
+            "doc_id long, media binary").coalesce(1)
+        return sorted(tuple(r) for r in op(df).collect())
+    alone = run(good.items())
+    assert {r[0] for r in alone} == set(good)
+    planted = [*bad.items()]
+    assert run(planted[:4] + [*good.items()] + planted[4:]) == alone
+
+
+def test_bmp_page_decodes_like_its_png_twin(spark):
+    """``decode_image`` is the operators' one image decoder: a BMP page and
+    its PNG twin give the same decode row."""
+    from apple_ocr_backend_spark.functions.bmp_codec import encode_bmp_gray
+    img = render_doc_image(5, rotate=True)
+    df = spark.createDataFrame(
+        [(0, bytearray(encode_png_gray(img))),
+         (1, bytearray(encode_bmp_gray(img)))],
+        "doc_id long, media binary").coalesce(1)
+    rows = {r.doc_id: tuple(r)[1:] for r in decode_stats(df).collect()}
+    assert rows[0] == rows[1]

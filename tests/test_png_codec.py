@@ -3,10 +3,13 @@
 from __future__ import annotations
 
 import struct
+import time
+import tracemalloc
 import zlib
 
 import numpy as np
 import pytest
+from hostile_media import forged_png
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -118,3 +121,27 @@ def test_every_malformed_input_raises_valueerror():
     for b in bad:
         with pytest.raises(ValueError):
             decode_png_gray(b)
+
+
+def test_forged_header_never_inflates_past_it():
+    """A 51 KB PNG whose IHDR says 1x1 over a 50 MiB zlib stream: the
+    inflate stops one byte past the 2 bytes the header implies, so the
+    decoder refuses it with ValueError at once and never allocates the
+    stream's size."""
+    data = forged_png(1, 1, mib=50)
+    assert len(data) < 60_000
+    tracemalloc.start()
+    try:
+        t = time.perf_counter()
+        with pytest.raises(ValueError, match="header implies"):
+            decode_png_gray(data)
+        wall = time.perf_counter() - t
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak <= 2 << 20, peak
+    assert wall < 1.0
+    # a header whose implied size does not fit a C size is refused alike
+    with pytest.raises(ValueError):
+        decode_png_gray(forged_png(2**32 - 1, 2**32 - 1, mib=1))
+

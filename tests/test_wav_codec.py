@@ -4,9 +4,11 @@ RIFF pad bytes, unsupported-encoding gates, planted-stat recovery."""
 from __future__ import annotations
 
 import struct
+import time
 
 import numpy as np
 import pytest
+from hostile_media import rate0_wav
 
 from apple_ocr_backend_spark.functions.wav_codec import (decode_wav_pcm16,
                                                          encode_wav_pcm16)
@@ -75,3 +77,12 @@ def test_planted_stats_recovered_from_bytes(doc_id):
     # the sums stay inside float64's exact-integer range)
     assert float(np.sqrt(np.mean(a * a))) == float(g["amplitude"])
     assert int(np.count_nonzero(a[1:] * a[:-1] < 0)) == g["zero_crossings"]
+
+
+def test_rejects_sample_rate_zero():
+    """A rate of 0 is malformed, not a clip of infinite duration: the
+    decoder refuses it, so no caller divides by it."""
+    t = time.perf_counter()
+    with pytest.raises(ValueError, match="rate"):
+        decode_wav_pcm16(rate0_wav())
+    assert time.perf_counter() - t < 1.0
