@@ -21,7 +21,7 @@ Reference analog: time-budgeted stage caps (``ocr_adapter_improved.py:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..config import ExtractConfig, DEFAULT_CONFIG
 
@@ -38,22 +38,20 @@ def explode_salted(docs: DataFrame,
     it to the merge (``plans.pipeline.reassemble_partials``), which emits
     it with ``spans = []``.
     """
-    n_salts = F.greatest(
-        F.lit(1),
-        F.ceil(F.size("spans") / F.lit(cfg.salt_span_budget)).cast("int"))
+    # SQL strings, each parsed JVM-side in one call.  n_salts keeps a
+    # step of its own: computed in the Generate's select, it would move
+    # above the Generate and change the plan
     rows = (docs
-            .withColumn("n_salts", n_salts)
-            .select("doc_id", "n_salts",
-                    F.posexplode_outer("spans").alias("span_pos", "span"))
-            .select(
+            .selectExpr("*", "greatest(1, CAST(ceil(size(spans) / "
+                        f"{int(cfg.salt_span_budget)}) AS INT)) AS n_salts")
+            .selectExpr("doc_id", "n_salts",
+                        "posexplode_outer(spans) AS (span_pos, span)")
+            .selectExpr(
                 "doc_id",
-                F.coalesce(F.pmod("span_pos", "n_salts"), F.lit(0))
-                 .cast("int").alias("salt"),
-                F.col("span_pos").cast("int").alias("span_pos"),
-                F.col("span.kind").alias("kind"),
-                F.col("span.text").alias("text"),
-                F.col("span.media_ref").alias("media_ref"),
-                F.col("span.offset").alias("offset")))
+                "CAST(coalesce(pmod(span_pos, n_salts), 0) AS INT) AS salt",
+                "CAST(span_pos AS INT) AS span_pos",
+                "span.kind AS kind", "span.text AS text",
+                "span.media_ref AS media_ref", "span.offset AS `offset`"))
     return rows
 
 
@@ -87,8 +85,9 @@ def repartition_salted(rows: DataFrame, num_partitions: int | None = None) -> Da
 
     The count is explicit because AQE sizes by shuffle bytes, not kernel
     rows (round 5: it coalesced this exchange to 1.5 waves at local[8]).
-    A caller that splits one input into several jobs
-    (``plans.checkpoint.run_resumable``) gives each job one wave too."""
+    A caller that runs several jobs at once
+    (``plans.checkpoint.run_resumable``'s overlapped buckets) gives them
+    one wave between them: each job gets its share of the cores."""
     if not num_partitions:
         num_partitions = rows.sparkSession.sparkContext.defaultParallelism
     return rows.repartition(num_partitions, "doc_id", "salt")

@@ -9,8 +9,10 @@ bucket is one commit unit.  A run processes only buckets absent from the
 results table's committed snapshot summaries (the anti-join resume set —
 reference analog: progressive early-stop skipping, SURVEY.md §3.3).  Each
 bucket filters the input by its hash and runs the one extraction plan; no
-input or output is cached.  Each commit runs one plan, the write of the
-unit's output, and carries
+input or output is cached.  The buckets in flight at once share one wave
+of kernel tasks, so a unit's Python-worker fixed cost does not grow with
+the overlap.  Each commit runs one plan, the write of the unit's output,
+and carries
 
 * lineage: one row per data file the write produced, which is one
   partition of the write (``partition_id`` is the file's ``part-NNNNN``),
@@ -44,8 +46,9 @@ from ..sources.icelite import Table
 from .pipeline import check_mode, extract_docs
 
 
-def bucket_of(doc_id_col, n_buckets: int):
-    return F.pmod(F.xxhash64(doc_id_col), F.lit(n_buckets)).cast("int")
+def bucket_of(doc_id: str, n_buckets: int) -> str:
+    """The bucket rule as a SQL expression over the column ``doc_id``."""
+    return f"CAST(pmod(xxhash64({doc_id}), {int(n_buckets)}) AS INT)"
 
 
 def commit_extracted(table: Table, extracted: DataFrame, operation: str,
@@ -65,14 +68,12 @@ def commit_extracted(table: Table, extracted: DataFrame, operation: str,
     and ``wall_ms``, which covers the write and the footer reads."""
     t0 = time.time()
     totals = Observation()
-    data_dir = table.write(extracted.observe(
-        totals, F.count("*").alias("docs_in"),
-        F.sum(F.size("spans")).alias("span_count"),
-        F.sum(F.aggregate("spans", F.lit(0),
-                          lambda acc, s: acc + F.length(s["text"])))
-        .alias("bytes"),
-        F.sum(F.size(F.filter("spans", lambda s: s["kind"] == "ocr_text")))
-        .alias("ocr_span_count")))
+    data_dir = table.write(extracted.observe(totals, *map(F.expr, (
+        "count(*) AS docs_in",
+        "sum(size(spans)) AS span_count",
+        "sum(aggregate(spans, 0, (acc, s) -> acc + length(s.text))) AS bytes",
+        "sum(size(filter(spans, s -> s.kind = 'ocr_text')))"
+        " AS ocr_span_count"))))
     # a part file's part-NNNNN is the partition of the task that wrote it
     files = glob.glob(os.path.join(table.path, data_dir, "part-*.parquet"))
     counts = sorted(
@@ -104,10 +105,18 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     ``mode`` accepts only ``"fused"`` and is kept for callers that still
     pass it.
 
-    Each bucket job's kernel exchange takes the default of
-    ``operators.skew.repartition_salted``: one wave of
-    ``defaultParallelism`` tasks, so every bucket pays the fixed
-    Python-worker cost once per core and no more.
+    The buckets in flight share one wave of kernel tasks: each bucket
+    job's kernel exchange (``operators.skew.repartition_salted``) has
+    ``ceil(defaultParallelism / in_flight)`` partitions, ``in_flight``
+    being ``min(concurrency, buckets to run)``.  So the Python kernel's
+    fixed cost per task and per Arrow batch is paid about once per core
+    across the overlapped buckets, not once per core per bucket.  Salting
+    still spreads a giant doc over its bucket's partitions, but with
+    fewer of them (one at local[4] with four buckets in flight), so a
+    giant doc's kernel time lands on fewer tasks (PLANS.md "Overlapped
+    units share one kernel wave").  The bucket filter, like the plan,
+    is built from SQL strings (``bucket_of``), a few JVM calls per
+    bucket.
 
     Buckets run on a pool of ``concurrency`` threads, so one bucket's
     driver-only time (plan build, footer reads, commit) overlaps
@@ -132,11 +141,15 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     done = table.committed_units("bucket")
     skipped = [b for b in range(n_buckets) if b in done]
     processed = [b for b in range(n_buckets) if b not in done][:fail_after]
+    # each bucket in flight gets its share of one wave of kernel tasks
+    in_flight = min(concurrency, len(processed)) or 1
+    share = -(-spark.sparkContext.defaultParallelism // in_flight)
 
     def work(b: int) -> None:
         try:
-            sub = docs.filter(bucket_of(F.col("doc_id"), n_buckets) == b)
-            commit_extracted(table, extract_docs(sub, cfg),
+            sub = docs.where(f"{bucket_of('doc_id', n_buckets)} = {b}")
+            commit_extracted(table,
+                             extract_docs(sub, cfg, num_partitions=share),
                              f"extract/bucket={b}",
                              {"bucket": b, "run_id": run_id, "stage": "extract"})
         except BaseException:
@@ -148,7 +161,7 @@ def run_resumable(spark: SparkSession, docs: DataFrame, table_dir: str,
     # object, and concurrent SQL executions then overwrite each other's
     # execution id
     targets = [inheritable_thread_target(spark)(work) for _ in processed]
-    with ThreadPoolExecutor(min(concurrency, len(processed)) or 1) as pool:
+    with ThreadPoolExecutor(in_flight) as pool:
         for f in [pool.submit(t, b) for t, b in zip(targets, processed)]:
             f.result()  # re-raises the first bucket error
     if len(processed) == fail_after:  # all of them committed: the kill

@@ -112,16 +112,12 @@ def reassemble_partials(spans: DataFrame) -> DataFrame:
     map-side partial aggregate sees about one group per doc."""
     return (spans
             .groupBy("doc_id")
-            .agg(F.array_sort(F.collect_list("span")).alias("ordered"))
-            .select(
+            .agg(F.expr("array_sort(collect_list(span)) AS ordered"))
+            .selectExpr(
                 "doc_id",
-                F.transform(
-                    "ordered",
-                    lambda s, i: F.struct(
-                        s["kind"].alias("kind"),
-                        s["text"].alias("text"),
-                        s["media_ref"].alias("media_ref"),
-                        i.cast("int").alias("order"))).alias("spans")))
+                "transform(ordered, (s, i) -> struct(s.kind AS kind, "
+                "s.text AS text, s.media_ref AS media_ref, "
+                "CAST(i AS INT) AS `order`)) AS spans"))
 
 
 def media_join_key() -> Column:
@@ -187,7 +183,7 @@ def extract_docs(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
                 .join(media.withColumnRenamed("media_ref", "__mkey"),
                       "__mkey", "left")
                 .select("salt", *cols))
-    spans = (repartition_salted(rows, num_partitions).select(*cols)
+    spans = (repartition_salted(rows, num_partitions).selectExpr(*cols)
              .mapInArrow(_mono_partial_kernel(cfg.as_dict()),
                          schema=SPAN_ROW_SCHEMA))
     return reassemble_partials(spans)

@@ -30,7 +30,8 @@ kernel stage's fixed per-task cost (an empty kernel, one wave).  Every
 point of both runs in a fresh process (``fresh_jvm``), and each run
 appends ONE sorted-key JSON record to ``BENCH.jsonl``: study, the point specs
 (``params``), each point's resolved session config and per-iteration
-seconds and steal ticks, the result, UTC time, git sha and sf_dir.
+seconds and steal ticks, the result, UTC time, git sha, a digest of the
+package sources and sf_dir.
 ``BENCH.md`` is the frozen prose history of earlier rounds; no code writes
 it.
 
@@ -45,8 +46,11 @@ from __future__ import annotations
 
 import argparse
 import datetime
+import glob
+import hashlib
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -462,6 +466,23 @@ def worker_point(spark) -> dict:
                        "task_ms_median": statistics.median(timed_ms)}}
 
 
+def _kernel_partitions(spark) -> dict[str, set[int]]:
+    """The kernel exchange's partition counts of every SQL execution the
+    session has run, by execution description: each ``hashpartitioning(
+    doc_id, salt, N)`` read off the plans in the SQL status store.  A
+    one-partition exchange prints as ``SinglePartition``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    seq = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    out = {}
+    for e in seq.asJava(store.executionsList()):
+        out.setdefault(e.description(), set()).update(
+            int(n or 1) for n in re.findall(
+                r"hashpartitioning\(doc_id#\d+, salt#\d+, (\d+)\)"
+                r"|SinglePartition, REPARTITION_BY_NUM",
+                e.physicalPlanDescription()))
+    return out
+
+
 def resume_point(spark, rounds: int = 5) -> dict:
     """Bucket overlap in a resumable run: ``run_resumable`` (8 buckets, no
     kill) into a fresh table at each ``concurrency`` of ``RESUME_KS``, on
@@ -471,7 +492,8 @@ def resume_point(spark, rounds: int = 5) -> dict:
     warming JVM or a steal spike does not favour one k.  Median and
     quartiles of seconds per k; every run's steal ticks are in the
     record.  Each run is one job group, so the record also gives each
-    k's Spark jobs per bucket (median over the rounds)."""
+    k's Spark jobs per bucket (median over the rounds) and the kernel
+    partitions of its bucket jobs, read off their plans."""
     import tempfile
     from pyspark.sql import functions as F
     from apple_ocr_backend_spark.plans.checkpoint import run_resumable
@@ -505,6 +527,7 @@ def resume_point(spark, rounds: int = 5) -> dict:
         for r in range(rounds):
             for k in RESUME_KS[::1 if r % 2 == 0 else -1]:
                 iters[f"k{k}"] += timed(lambda: run(k, f"r{r}k{k}"), 1)
+    parts = _kernel_partitions(spark)
     sec = {}
     for name, its in iters.items():
         q1, med, q3 = statistics.quantiles([s for s, _ in its], n=4)
@@ -517,6 +540,9 @@ def resume_point(spark, rounds: int = 5) -> dict:
                        "jobs_per_bucket": {
                            f"k{k}": statistics.median(
                                jobs[f"r{r}k{k}"] for r in range(rounds)) / 8
+                           for k in RESUME_KS},
+                       "kernel_partitions": {
+                           f"k{k}": sorted(parts.get(f"resume k={k}", ()))
                            for k in RESUME_KS}}}
 
 
@@ -795,6 +821,20 @@ def _git_rev() -> str | None:
     return rev.stdout.strip() + ("-dirty" if dirty.stdout.strip() else "")
 
 
+def _source_sha256() -> str:
+    """A digest of the package sources (each ``.py`` file's path and
+    bytes, in path order), the recipe of perfbench's ``source_identity``:
+    two records ran the same package code exactly when their digests
+    match, whatever the working tree or checkout they ran in."""
+    h = hashlib.sha256()
+    for p in sorted(glob.glob(os.path.join(REPO, "apple_ocr_backend_spark",
+                                           "**", "*.py"), recursive=True)):
+        h.update(os.path.relpath(p, REPO).encode())
+        with open(p, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
 def append_record(path: str, rec: dict) -> None:
     """Append ``rec`` as one sorted-key JSON line; earlier lines are never
     rewritten."""
@@ -807,6 +847,7 @@ def run_study(study: str, specs: list[dict], reduce) -> dict:
     points = [fresh_jvm(s) for s in specs]
     rec = {"study": study, "params": specs, "points": points,
            "result": reduce(points), "sf_dir": SF_DIR, "git": _git_rev(),
+           "source_sha256": _source_sha256(),
            "utc": datetime.datetime.now(datetime.timezone.utc)
            .isoformat(timespec="seconds")}
     append_record(RECORDS, rec)

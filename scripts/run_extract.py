@@ -18,12 +18,13 @@ Observation and each file's doc count is its Parquet footer's row count.
 On a real cluster, point --output at shared storage.  A bucket is the
 work a kill can lose, so raise --buckets to bound it; nothing is cached,
 so bucket size is not bounded by executor memory.  Each bucket scans the
-input again and runs one wave of ``defaultParallelism`` kernel tasks
-(``operators/skew.py::repartition_salted``), so raising --buckets
-multiplies input scans and kernel tasks, and the fixed per-task cost with
-them.  --concurrency bucket jobs run at once, so one bucket's driver-only
-time overlaps another's stages; it defaults to ``run_resumable``'s
-default.
+input again, so raising --buckets multiplies input scans.  --concurrency
+bucket jobs run at once, so one bucket's driver-only time overlaps
+another's stages; it defaults to ``run_resumable``'s default.  The
+buckets in flight share one wave of ``defaultParallelism`` kernel tasks
+(each gets ``ceil(defaultParallelism / in flight)``,
+``operators/skew.py::repartition_salted``), so a run's kernel tasks
+come to about --buckets / --concurrency waves, not one wave per bucket.
 """
 
 from __future__ import annotations

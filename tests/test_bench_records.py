@@ -112,3 +112,28 @@ def test_git_rev_ignores_bench_records(tmp_path, monkeypatch):
     assert bench._git_rev() == clean
     (tmp_path / "mod.py").write_text("x = 2\n")
     assert bench._git_rev() == clean + "-dirty"
+
+
+def test_source_digest_names_the_package_code(tmp_path, monkeypatch):
+    """A record's ``source_sha256`` digests the package sources by
+    perfbench's recipe, so a bench record and a perfbench record of the
+    same code carry the same digest.  A study's own append to
+    ``BENCH.jsonl`` leaves it as it was; an edit to a package file moves
+    it."""
+    import importlib.util
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_run", REPO / "perfbench" / "run.py")
+    perfbench_run = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(perfbench_run)
+    assert bench._source_sha256() == \
+        perfbench_run.source_identity()["source_sha256"]
+
+    pkg = tmp_path / "apple_ocr_backend_spark"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text("x = 1\n")
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    before = bench._source_sha256()
+    bench.append_record(str(tmp_path / "BENCH.jsonl"), {"study": "resume"})
+    assert bench._source_sha256() == before
+    (pkg / "mod.py").write_text("x = 2\n")
+    assert bench._source_sha256() != before

@@ -103,7 +103,7 @@ def test_commit_unit_runs_one_plan(spark, tmp_path):
     sc.setJobGroup("one_bucket_commit", "one bucket's commit")
     try:
         commit_extracted(t, extract_docs(
-            docs.filter(bucket_of(F.col("doc_id"), 4) == 0), CFG),
+            docs.where(f"{bucket_of('doc_id', 4)} = 0"), CFG),
             "extract/bucket=0", {"bucket": 0, "run_id": "r"})
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -149,10 +149,11 @@ def test_resumable_run_caches_nothing_and_coalesces_writes(
 
 
 def test_bucket_kernel_partitions(spark, tmp_path, monkeypatch):
-    """Every bucket job's kernel exchange has defaultParallelism
-    partitions (one task wave), whatever the bucket count.  Buckets run on
-    a thread pool, so one run may capture a plan from each bucket already
-    in flight when the first raises."""
+    """The buckets in flight share one wave of kernel tasks: each bucket
+    job's kernel exchange has ceil(defaultParallelism / in flight)
+    partitions, where in flight is min(concurrency, buckets to run).
+    Buckets run on a thread pool, so one run may capture a plan from each
+    bucket already in flight when the first raises."""
     from apple_ocr_backend_spark.plans import checkpoint
 
     class Captured(Exception):
@@ -164,19 +165,81 @@ def test_bucket_kernel_partitions(spark, tmp_path, monkeypatch):
         plan = extracted._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode
             .fromString("simple"))
-        seen.append((n_buckets, re.findall(
-            r"hashpartitioning\(doc_id#\d+, salt#\d+, (\d+)\)", plan)))
+        seen.append(re.findall(
+            r"hashpartitioning\(doc_id#\d+, salt#\d+, (\d+)\)", plan))
         raise Captured
 
     monkeypatch.setattr(checkpoint, "commit_extracted", capture)
     sdf = _to_spark_docs(spark, make_corpus(8, seed=3))
-    cores = spark.sparkContext.defaultParallelism
-    for n_buckets in (1, 3, 4, 8):
+    assert spark.sparkContext.defaultParallelism == 8  # local[8]
+    # (concurrency, n_buckets, fail_after) -> kernel partitions per bucket
+    want = {(1, 1, None): 8, (1, 3, None): 8, (1, 4, None): 8,
+            (1, 8, None): 8,
+            (2, 1, None): 8, (2, 3, None): 4, (2, 4, None): 4,
+            (2, 8, None): 4,
+            (4, 1, None): 8, (4, 3, None): 3, (4, 4, None): 2,
+            (4, 8, None): 2,
+            (4, 8, 2): 4}  # a killed run: only 2 buckets ever in flight
+    for i, ((c, n, fail_after), parts) in enumerate(want.items()):
+        seen.clear()
         with pytest.raises(Captured):
-            run_resumable(spark, sdf, str(tmp_path / f"t{n_buckets}"), CFG,
-                          n_buckets=n_buckets)
-    assert {n for n, _ in seen} == {1, 3, 4, 8}
-    assert all(parts == [str(cores)] for _, parts in seen)
+            run_resumable(spark, sdf, str(tmp_path / f"t{i}"), CFG,
+                          n_buckets=n, concurrency=c, fail_after=fail_after)
+        assert seen and all(p == [str(parts)] for p in seen), \
+            ((c, n, fail_after), seen)
+
+
+def test_plan_build_round_trips(spark, tmp_path, monkeypatch):
+    """The extraction plan and one bucket's commit plan build in a few
+    JVM round trips: the explode, the merge, the bucket filter and the
+    commit totals are SQL strings, each parsed JVM-side in one call.
+    Round trips are counted at py4j's ``send_command``, as the warm median
+    of 5 builds.  py4j's finalizer thread sends the deletes of collected
+    Java references whenever garbage is collected, which can double a
+    reading in a long session, so its calls are not counted."""
+    import statistics
+    import threading
+    import py4j.clientserver
+    import py4j.java_gateway
+    from apple_ocr_backend_spark.plans.pipeline import extract_docs
+    from apple_ocr_backend_spark.sources.icelite import Table
+
+    class Built(Exception):
+        pass
+
+    trips = [0]
+    real = py4j.java_gateway.GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        if not isinstance(threading.current_thread(),
+                          py4j.clientserver.FinalizerWorker):
+            trips[0] += 1
+        return real(self, *args, **kwargs)
+
+    def write(table, df):  # the commit plan is built: stop before any job
+        raise Built(trips[0])
+
+    monkeypatch.setattr(py4j.java_gateway.GatewayClient, "send_command",
+                        counting)
+    monkeypatch.setattr(Table, "write", write)
+    docs = _to_spark_docs(spark, make_corpus(8, seed=3))
+
+    def build_extract() -> int:
+        trips[0] = 0
+        extract_docs(docs, CFG)
+        return trips[0]
+
+    def build_bucket() -> int:
+        trips[0] = 0
+        with pytest.raises(Built) as e:
+            run_resumable(spark, docs, str(tmp_path / "t"), CFG,
+                          n_buckets=4, fail_after=1)
+        return e.value.args[0]
+
+    for build, bound in ((build_extract, 200), (build_bucket, 250)):
+        build()  # warm
+        counts = [build() for _ in range(5)]
+        assert statistics.median(counts) <= bound, (build.__name__, counts)
 
 
 def test_concurrent_buckets_match_serial_golden(spark, tmp_path):
@@ -255,7 +318,7 @@ def test_first_bucket_error_stops_the_run(spark, tmp_path, monkeypatch):
 
     table = checkpoint.Table(tdir)
     assert [s["summary"]["bucket"] for s in table.snapshots()] == [1]
-    bucket = checkpoint.bucket_of(F.col("doc_id"), 4).alias("b")
+    bucket = F.expr(checkpoint.bucket_of("doc_id", 4)).alias("b")
     got = {r["doc_id"] for r in table.read(spark).select("doc_id").collect()}
     assert got == {r["doc_id"] for r in
                    sdf.select("doc_id", bucket).where("b = 1").collect()}
